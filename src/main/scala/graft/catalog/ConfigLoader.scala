@@ -80,10 +80,8 @@ final class ConfigLoader(meta: MetaStore,
       insertDefaults = Map("CreatedDateTime" -> lit(now), "LastUpdatedDateTime" -> lit(now)))
 
     // control rows: insert-only seed (insert_config.py:443-468)
-    val control = feeds.map(f =>
-      ControlRow(f.HeaderID.toLong, 0, 0, None, 0, None, now)).toDS().toDF()
-    meta.control.overwrite(
-      Merge.insertWhenNotMatched(meta.control.read(), control, Seq("HeaderID")))
+    meta.insertWhenNotMatched(meta.control,
+      feeds.map(f => ControlRow(f.HeaderID.toLong, 0, 0, None, 0, None, now)), "HeaderID")
 
     // OPTIMIZE ZORDER BY (HeaderID) on the hot tables (insert_config.py:476-480)
     meta.header.compact(Seq("HeaderID"))

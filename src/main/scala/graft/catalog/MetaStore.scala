@@ -1,8 +1,7 @@
 package graft.catalog
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
 import graft.model.Catalog
 
 /** The metadata catalog: seven parquet-backed tables under one root
@@ -13,7 +12,10 @@ import graft.model.Catalog
   * All tables are tiny relative to the data being ingested (one row per
   * feed / per column / per log line), so every join from data-plane
   * queries against them must broadcast — the query layer does so
-  * explicitly.
+  * explicitly. Bookkeeping rows the driver already holds (log lines,
+  * the control state machine, the status seed) are written from the
+  * driver ([[ParquetTable.appendRows]] / [[ParquetTable.overwriteRows]]),
+  * never through a Spark job.
   */
 final class MetaStore(val spark: SparkSession, val root: String) {
   import Catalog._
@@ -32,13 +34,23 @@ final class MetaStore(val spark: SparkSession, val root: String) {
     * dimension (insert-only MERGE, insert_config.py:146-161). */
   def bootstrap(): this.type = {
     all.foreach(_.createIfNotExists())
-    import spark.implicits._
-    val seed = statusSeed.toDS().toDF()
-    status.overwrite(Merge.insertWhenNotMatched(status.read(), seed, Seq("StatusID")))
+    insertWhenNotMatched(status, statusSeed, "StatusID")
     this
   }
 
   def registerViews(): this.type = { all.foreach(_.registerView()); this }
+
+  /** Insert-only MERGE of driver-held `seed` rows on one key column,
+    * applied to the table's rows on the driver. No-op when every key is
+    * already present. */
+  private[catalog] def insertWhenNotMatched(
+      table: ParquetTable, seed: Seq[Product], key: String): Unit = {
+    val cur = table.readRows()
+    val present = cur.map(_.getAs[Any](key)).toSet
+    val i = table.schema.fieldIndex(key)
+    val missing = seed.filterNot(p => present(p.productElement(i)))
+    if (missing.nonEmpty) table.overwriteRows(cur ++ missing.map(Row.fromTuple))
+  }
 
   private val logSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -56,36 +68,43 @@ final class MetaStore(val spark: SparkSession, val root: String) {
       Seq((entryType, description, statusId, error)), jobId, now)
 
   /** Batched variant: N log rows in ONE append, control updated ONCE
-    * (to the last entry's status). A micro-batch logs 2+ entries; at a
-    * sub-second trigger the per-entry read-rewrite of the control table
-    * is pure driver job churn, so callers pass the batch's entries
-    * together. LogID is unique within this store instance even when
-    * many rows share a timestamp (millis × 10^6 + in-process
+    * (to the last entry's status). Called once per micro-batch and for
+    * every START/END/retry line, so it runs no Spark job: the log rows
+    * are one driver-written file, and the control state machine is
+    * applied on the driver to the control table's rows (one per feed) —
+    * a feed's first entry inserts its row with `PreviousBatchID` null,
+    * every later one shifts `LatestBatchID` into `PreviousBatchID` —
+    * and swapped in whole. LogID is unique within this store instance
+    * even when many rows share a timestamp (millis × 10^6 + in-process
     * sequence). */
   def logAndControlMany(
       headerId: Long, sourcePath: String, batchId: Int,
       entries: Seq[LogEntry], jobId: Option[String] = None,
       now: Timestamp = new Timestamp(System.currentTimeMillis())): Unit = {
-    import spark.implicits._
     require(entries.nonEmpty, "logAndControlMany needs at least one entry")
-    val rows = entries.map { case (entryType, description, statusId, error) =>
+    logs.appendRows(entries.map { case (entryType, description, statusId, error) =>
       val logId = now.getTime * 1000000L + (logSeq.incrementAndGet() % 1000000L)
-      LogRow(logId, headerId, sourcePath, batchId, jobId,
-        entryType, description, error, statusId, now)
-    }
-    logs.append(rows.toDS().toDF())
+      Row.fromTuple(LogRow(logId, headerId, sourcePath, batchId, jobId,
+        entryType, description, error, statusId, now))
+    })
 
     val statusId = entries.last._3
-    val existing = control.read().filter(col("HeaderID") === headerId).limit(1).count() > 0
-    if (existing) {
-      control.update(col("HeaderID") === headerId, Map(
-        "StatusID" -> lit(statusId),
-        "PreviousBatchID" -> col("LatestBatchID"),
-        "LatestBatchID" -> lit(batchId),
-        "LastUpdateTime" -> lit(now)))
-    } else {
-      control.append(Seq(ControlRow(headerId, statusId, 0, None, batchId, None, now))
-        .toDS().toDF())
-    }
+    val cur = control.readRows()
+    def isFeed(r: Row) = r.getAs[Long]("HeaderID") == headerId
+    val next =
+      if (cur.exists(isFeed)) cur.map { r =>
+        if (!isFeed(r)) r
+        else set(r, "StatusID" -> statusId, "PreviousBatchID" -> r.getAs[Any]("LatestBatchID"),
+          "LatestBatchID" -> batchId, "LastUpdateTime" -> now)
+      }
+      else cur :+ Row.fromTuple(ControlRow(headerId, statusId, 0, None, batchId, None, now))
+    control.overwriteRows(next)
+  }
+
+  /** `r` with the named columns replaced. */
+  private def set(r: Row, values: (String, Any)*): Row = {
+    val out = r.toSeq.toArray
+    values.foreach { case (c, v) => out(r.fieldIndex(c)) = v }
+    Row.fromSeq(out.toSeq)
   }
 }

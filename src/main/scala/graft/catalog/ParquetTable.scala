@@ -1,7 +1,13 @@
 package graft.catalog
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -40,6 +46,13 @@ import org.apache.spark.sql.types.StructType
   * stream batches does not reset the stream's dedup state. The leading
   * underscore keeps the sidecar invisible to parquet readers (same
   * convention as `_SUCCESS`).
+  *
+  * ==Driver-side rows==
+  * Small unpartitioned tables whose rows the caller already holds — the
+  * catalog's bookkeeping — also append, overwrite and read rows on the
+  * driver ([[appendRows]], [[overwriteRows]], [[readRows]]): Spark's
+  * own parquet writer and reader without a Spark job, through the same
+  * swap.
   */
 final class ParquetTable(
     val spark: SparkSession,
@@ -75,7 +88,8 @@ final class ParquetTable(
     * it (half-written stages, trash parked by [[deletePartitions]]) is
     * garbage from an interrupted op — single-writer means no other op
     * is mid-flight when recover() runs — and left alone it accumulates
-    * dead bytes forever at 100 TB scale. */
+    * dead bytes forever at 100 TB scale. The `.tmp-` files of an
+    * interrupted [[appendRows]] go the same way. */
   private def recover(): Unit = {
     val f = fs
     if (!f.exists(dest) && f.exists(oldPath) && !f.rename(oldPath, dest))
@@ -104,6 +118,10 @@ final class ParquetTable(
     }
     if (partitionCols.nonEmpty && f.exists(partStageRoot))
       f.delete(partStageRoot, true)
+    // a `.tmp-` file is an [[appendRows]] that never reached its rename
+    if (partitionCols.isEmpty && f.exists(dest))
+      f.listStatus(dest).filter(_.getPath.getName.startsWith(ParquetTable.TmpPrefix))
+        .foreach(st => f.delete(st.getPath, false))
     checkLayout(f)
   }
 
@@ -232,7 +250,13 @@ final class ParquetTable(
     * [[overwritePartition]] already keep. A partition the rewrite
     * dropped entirely takes its marker with it (its data is explicitly
     * gone; there is no state left to protect). */
-  def overwrite(df: DataFrame, txn: Option[(String, Long)]): Unit = {
+  def overwrite(df: DataFrame, txn: Option[(String, Long)]): Unit =
+    swapIn(txn)(stage => writer(df).mode("overwrite").parquet(stage.toString))
+
+  /** The one whole-table swap protocol: `fill` writes the new contents
+    * into the (possibly stale) stage directory, then the markers are
+    * carried forward and the stage is parked → renamed → reclaimed. */
+  private def swapIn(txn: Option[(String, Long)])(fill: Path => Unit): Unit = {
     recover()
     val f = fs
     val carried = readTxns(dest) // before any mutation of dest
@@ -242,7 +266,7 @@ final class ParquetTable(
         val marks = readTxns(live)
         if (marks.isEmpty) None else Some(partitionRelOf(live) -> marks)
       }
-    writer(df).mode("overwrite").parquet(stagePath.toString)
+    fill(stagePath)
     val txns = txn.fold(carried)(carried + _)
     if (txns.nonEmpty) writeTxns(stagePath, txns)
     partCarried.foreach { case (rel, marks) =>
@@ -255,6 +279,90 @@ final class ParquetTable(
     if (!f.rename(stagePath, dest))
       throw new java.io.IOException(s"atomic swap failed for $path")
     f.delete(oldPath, true)
+  }
+
+  // Driver-side rows. Catalog bookkeeping (log lines, the per-feed
+  // control row) is a few rows written once per micro-batch; as a
+  // DataFrame write each costs a Spark job — scheduling, a task, a
+  // commit protocol — for a few hundred bytes.
+
+  /** Append `rows` (values in [[schema]] order; `Option` fields may be
+    * `None`/`Some`) as ONE parquet file. The file is written under a
+    * `.tmp-` name, invisible to every reader, and renamed in; [[recover]]
+    * sweeps a temp file an interrupted append left behind. */
+  def appendRows(rows: Seq[Row]): Unit = {
+    requireUnpartitioned("appendRows")
+    recover()
+    if (rows.nonEmpty) {
+      val f = fs
+      f.mkdirs(dest)
+      val part = writeRowsFile(rows, dest, ParquetTable.TmpPrefix)
+      if (!f.rename(new Path(dest, ParquetTable.TmpPrefix + part), new Path(dest, part)))
+        throw new java.io.IOException(s"append rename failed for $path")
+    }
+  }
+
+  /** Replace the table's contents with `rows` through the same
+    * stage → park → rename → reclaim swap as [[overwrite]], carrying
+    * `_graft_txn` markers forward. */
+  def overwriteRows(rows: Seq[Row]): Unit = {
+    requireUnpartitioned("overwriteRows")
+    swapIn(None) { stage =>
+      val f = fs
+      f.delete(stage, true) // a stale stage from an interrupted swap
+      f.mkdirs(stage)
+      if (rows.nonEmpty) writeRowsFile(rows, stage, "")
+    }
+  }
+
+  /** The table's rows on the driver, in [[schema]] order (`null` for a
+    * missing value, like `read().collect()`). For tables whose size the
+    * caller bounds — one row per feed, per status. */
+  def readRows(): Seq[Row] = {
+    requireUnpartitioned("readRows")
+    if (!exists) return Nil
+    val files = fs.listStatus(dest).filter(st => st.isFile && isDataFile(st.getPath))
+    if (files.isEmpty) return Nil
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    files.toSeq.flatMap { st =>
+      val it = reader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath),
+        0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
+      // rows come from a reused column batch: convert each before the next
+      try it.map(r => toScala(r).asInstanceOf[Row]).toVector
+      finally it match { case c: java.io.Closeable => c.close(); case _ => () }
+    }
+  }
+
+  private def requireUnpartitioned(op: String): Unit =
+    require(partitionCols.isEmpty, s"$op is for unpartitioned tables; $name is partitioned")
+
+  /** Writes `rows` as one parquet file `dir/<prefix><part name>` with
+    * the writer a Spark write task would open (`ParquetUtils.prepareWrite`
+    * → `OutputWriterFactory`), and returns the part name. */
+  private def writeRowsFile(rows: Seq[Row], dir: Path, prefix: String): String = {
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(writeOptions))
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(writeOptions, sqlConf))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val part = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val required = schema.fields.indices.filterNot(schema.fields(_).nullable)
+    val internal = rows.map { r =>
+      require(r.length == schema.length,
+        s"row of ${r.length} values for the ${schema.length}-column table $name")
+      val row = toCatalyst(r).asInstanceOf[InternalRow]
+      require(!required.exists(row.isNullAt), s"null in a non-nullable column of $name")
+      row
+    } // all rows convert before the file is opened: a bad row writes nothing
+    val out = factory.newInstance(new Path(dir, prefix + part).toString, schema, ctx)
+    try internal.foreach(out.write) finally out.close()
+    part
   }
 
   /** `a=1/b=2` relative path of a full partition directory — the last
@@ -836,6 +944,10 @@ object ParquetTable {
             partitionCols: Seq[String] = Nil,
             writeOptions: Map[String, String] = Map.empty): ParquetTable =
     new ParquetTable(spark, name, path, schema, partitionCols, writeOptions)
+
+  /** Name prefix of an [[ParquetTable.appendRows]] file before its
+    * rename: dot-prefixed, so no reader lists it. */
+  private val TmpPrefix = ".tmp-"
 
   /** Write options for a stored SECONDARY INDEX (band buckets, seed
     * postings): 1 MiB row groups instead of the 128 MiB data default.

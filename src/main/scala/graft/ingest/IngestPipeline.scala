@@ -1,7 +1,7 @@
 package graft.ingest
 
 import java.sql.{Date, Timestamp}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.{MetaStore, ParquetTable}
 import graft.model.FeedConfig.{ColumnSpec, Feed}
@@ -22,8 +22,10 @@ import graft.model.FeedConfig.{ColumnSpec, Feed}
   * ride the sink write as observe() metrics instead of separate count
   * jobs (the reference pays 2-3 scans per batch). The rare corrupt
   * batch pays a compensating delete of its own just-appended rows
-  * before quarantining. Catalog lookups are driver-side reads of tiny
-  * tables, batched to one control update per micro-batch.
+  * before quarantining. The catalog bookkeeping is batched to one
+  * [[MetaStore.logAndControlMany]] per micro-batch — one driver-written
+  * log file and one driver-side control swap, no Spark job — so a clean
+  * batch submits only its sink writes.
   */
 final class IngestPipeline(
     val spark: SparkSession,
@@ -92,13 +94,12 @@ final class IngestPipeline(
     if (extras.nonEmpty) {
       columns = SchemaTools.evolve(columns, extras)
       driftEvents = driftEvents ++ extras.map(_.name)
-      import spark.implicits._
       val maxOrder = columns.map(_.ColumnOrder).max
-      meta.columns.append(
+      meta.columns.appendRows(
         extras.zipWithIndex.map { case (f, i) =>
-          graft.model.Catalog.ColumnConfig(feed.HeaderID, f.name, f.name,
-            "string", maxOrder - extras.size + i + 1, 0, 0, 1, now, now)
-        }.toDS().toDF())
+          Row.fromTuple(graft.model.Catalog.ColumnConfig(feed.HeaderID, f.name, f.name,
+            "string", maxOrder - extras.size + i + 1, 0, 0, 1, now, now))
+        })
       log(batchId, "AUTO_LOADER", "New column(s) detected and added.", 1)
     }
 

@@ -133,22 +133,26 @@ object DailyLogReport {
       .distinct()
 
   /** Idempotent daily persist (sql:237-277): DELETE today's rows, then
-    * INSERT the fresh report into the catalog's daily_log_report. */
+    * INSERT the fresh report into the catalog's daily_log_report. The
+    * report is one row per feed, so the INSERT fetches it to the driver
+    * and appends it as one driver-written file. */
   def persist(meta: graft.catalog.MetaStore, report: DataFrame,
               reportDate: java.sql.Date): Unit = {
-    val rows = report.select(
+    // cast to daily_log_report's column types: the rows go to the
+    // writer as they are
+    val rows = graft.plans.Materialize.modelState(report.select(
       col("HeaderID").cast("long").as("HeaderID"),
-      (if (report.columns.contains("FeedName")) col("FeedName")
+      (if (report.columns.contains("FeedName")) col("FeedName").cast("string")
        else lit("")).as("FeedName"),
       col("Parquet_Row_Count").cast("long").as("SourceRowCount"),
       col("Delta_Count").cast("long").as("TargetRowCount"),
       col("LogRowCount").cast("long").as("LoggedRowCount"),
-      col("Job_Start_Time").as("StartTime"),
-      col("Process_End").as("EndTime"),
+      col("Job_Start_Time").cast("timestamp").as("StartTime"),
+      col("Process_End").cast("timestamp").as("EndTime"),
       col("Total_Job_Duration_Min").cast("long").as("DurationMinutes"),
-      col("RowCountMatchFlag").as("Verdict"),
-      lit(reportDate).as("ReportDate"))
+      col("RowCountMatchFlag").cast("string").as("Verdict"),
+      lit(reportDate).as("ReportDate")), "daily report: one row per feed")
     meta.report.deleteWhere(col("ReportDate") === lit(reportDate))
-    meta.report.append(rows)
+    meta.report.appendRows(rows.toSeq)
   }
 }

@@ -259,6 +259,61 @@ class IngestSpec extends AnyFunSuite {
     assert(scanned.value == 2, s"batch scanned ${scanned.value / 2} times")
   }
 
+  /** Spark jobs `body` submits from this thread, by SQL execution
+    * description. Exact, not sampled: the jobs carry a job group, and a
+    * sentinel job after `body` proves every earlier job-start event
+    * reached the listener (the bus delivers in order). */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).map(_.getProperty(k)).orNull
+        prop("spark.jobGroup.id") match {
+          case `group` => seen.add(String.valueOf(prop("spark.job.description")))
+          case g if g == group + "-sentinel" => drained.countDown()
+          case _ => ()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsDuring")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("catalog bookkeeping submits no Spark job; a happy-path batch submits only its sink write") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("ing-nojobs")
+    val meta = new MetaStore(spark, tmp.resolve("meta").toString).bootstrap()
+    val pipe = new IngestPipeline(spark, feed(tmp.resolve("src").toString), meta,
+      tmp.resolve("target").toString, clock = () => now)
+    pipe.createTargets()
+    // START line (inserts the control row) and a later batch's entries
+    // (shifts it): the per-batch bookkeeping runs on the driver
+    assert(jobsDuring(meta.logAndControl(7, "/src", -1, "START", "Job started", 1, now = now)) === Nil)
+    assert(jobsDuring(meta.logAndControlMany(7, "/src", 0,
+      Seq(("ROW_COUNT", "2", 1, None), ("AUTO_LOADER", "Batch 0 loaded", 1, None)), now = now)) === Nil)
+    // a clean batch: exactly one job, the target append; the log rows
+    // and the control update it writes ride no job of their own
+    val batch = Seq((1, "ann", 1.5), (2, "bob", 2.5)).toDF("id", "name", "score")
+    val jobs = jobsDuring(assert(pipe.processBatch(batch, batchId = 1) === 2))
+    assert(jobs.size === 1, jobs)
+    assert(pipe.target.read().count() === 2)
+    val ctl = meta.control.read().filter(col("HeaderID") === 7).collect()
+    assert(ctl.length === 1 && ctl.head.getAs[Int]("LatestBatchID") === 1 &&
+      ctl.head.getAs[Int]("PreviousBatchID") === 0)
+  }
+
   test("append-mode corrupt batch: compensating delete leaves target empty, notifier fires") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("ing-comp")

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{Merge, ParquetTable}
@@ -151,17 +152,46 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("ParquetTable: interrupted swap recovers the pre-swap contents") {
-    val dir = Files.createTempDirectory("pt-crash")
-    val pt = ParquetTable(spark, "cr", s"$dir/cr", target.schema)
+    // the same swap protocol behind the DataFrame overwrite and the
+    // driver-side overwriteRows
+    val swaps = Seq[(String, ParquetTable => Unit)](
+      "overwrite" -> (_.overwrite(target)),
+      "overwriteRows" -> (_.overwriteRows(target.collect().toSeq)))
+    swaps.foreach { case (how, fill) =>
+      val dir = Files.createTempDirectory("pt-crash")
+      val pt = ParquetTable(spark, "cr", s"$dir/cr", target.schema)
+      fill(pt)
+      // simulate a crash BETWEEN the two swap renames: the live dir has
+      // been set aside, the stage was never published
+      Files.move(dir.resolve("cr"), dir.resolve("cr.__old"))
+      Files.createDirectories(dir.resolve("cr.__stage"))
+      assert(pt.read().count() === 3, how) // recover() rolled the swap back
+      assert(Files.exists(dir.resolve("cr")) && !Files.exists(dir.resolve("cr.__old")), how)
+      // and the table stays fully functional after recovery
+      pt.deleteWhere(col("id") === 1)
+      assert(pt.read().count() === 2, how)
+      pt.overwriteRows(pt.readRows().filter(_.getInt(0) != 2))
+      assert(pt.read().select("id").as[Int].collect().toSeq === Seq(3), how)
+    }
+  }
+
+  test("appendRows: an orphaned .tmp- file is invisible to read() and recover() sweeps it") {
+    val dir = Files.createTempDirectory("pt-tmp")
+    val pt = ParquetTable(spark, "tm", s"$dir/tm", target.schema)
     pt.overwrite(target)
-    // simulate a crash BETWEEN the two swap renames: the live dir has
-    // been set aside, the stage was never published
-    Files.move(dir.resolve("cr"), dir.resolve("cr.__old"))
-    assert(pt.read().count() === 3) // recover() rolled the swap back
-    assert(Files.exists(dir.resolve("cr")) && !Files.exists(dir.resolve("cr.__old")))
-    // and the table stays fully functional after recovery
-    pt.deleteWhere(col("id") === 1)
-    assert(pt.read().count() === 2)
+    pt.appendRows(Seq(Row(4, "d", 40.0, 1)))
+    // an append interrupted before its rename: a complete file still
+    // under its temp name (a copy of a real data file, so a reader that
+    // listed it would count its rows)
+    import scala.jdk.CollectionConverters._
+    val data = Files.list(dir.resolve("tm")).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val orphan = dir.resolve("tm/.tmp-" + data.getFileName)
+    Files.copy(data, orphan)
+    assert(spark.read.schema(target.schema).parquet(s"$dir/tm").count() === 4)
+    assert(pt.read().count() === 4)
+    assert(!Files.exists(orphan), "recover() left the orphaned temp file")
+    assert(pt.readRows().size === 4)
   }
 
   test("partitioned ParquetTable: interrupted partition swap recovers") {
@@ -251,6 +281,12 @@ class MergeSpec extends AnyFunSuite {
     assert(pt.lastTxn("app") === Some(5L))
     pt.update(col("id") === 2, Map("bal" -> lit(0.0)))
     assert(pt.lastTxn("app") === Some(5L))
+    // the driver-side swap carries markers the same way
+    val rows = pt.readRows()
+    pt.overwriteRows(rows.reverse)
+    assert(pt.lastTxn("app") === Some(5L) && pt.read().count() === rows.size)
+    pt.overwriteRows(Nil)
+    assert(pt.lastTxn("app") === Some(5L) && pt.read().count() === 0)
   }
 
   test("ParquetTable.compact sizes its output from the table bytes") {
