@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** INCREMENTAL connected components — day-2 maintenance for the stored
   * duplicate-cluster labels, completing the maintenance pattern the
@@ -54,10 +55,10 @@ object IncrementalComponents {
     *
     * The forwards relation is churn-sized (one row per component root
     * ever merged since the last fold), so up to `maxDriverEdges` the
-    * closure runs as a DRIVER union-find labeled by component min —
-    * the same bounded model-state stance as [[batchAppends]]'
-    * endpoint fetch. This is not a micro-optimization: the composed
-    * pipeline resolves per micro-batch, and the r15 instrumented probe
+    * closure runs as a DRIVER union-find labeled by component min,
+    * fetched through [[DriverFetch]] (so also under its byte cap).
+    * This is not a micro-optimization: the composed pipeline resolves
+    * per micro-batch, and the r15 instrumented probe
     * measured the distributed star-CC at >1 s of pure driver-round/job
     * overhead on a TWO-ROW relation — per-batch serve cost jumped the
     * moment the first merge landed. Above the cap (≈1 MiB of edges)
@@ -65,57 +66,25 @@ object IncrementalComponents {
     * answer (spec-pinned equal on chain + multi-merge fixtures),
     * O(log diameter) rounds. */
   def resolveForwards(fwd: DataFrame, maxDriverEdges: Int = 1 << 16)
-      : DataFrame = {
-    val spark = fwd.sparkSession
-    val edgeRows = Materialize.modelState(
-      fwd.limit(maxDriverEdges + 1),
-      "forwarding-closure edges (merge churn, pre-limited to cap + 1)",
-      maxDriverEdges + 1)
-    if (edgeRows.length > maxDriverEdges)
-      graft.text.Dedup.connectedComponentsStar(
-        fwd.select(col("old_root").as("id_a"), col("new_root").as("id_b")),
-        // this caller already proved the relation exceeds ITS driver
-        // cap — skip the kernel's own (bounded) re-probe job
-        maxDriverEdges = 0)
-        .select(col("id").as("old_root"), col("comp").as("final_root"))
-    else {
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("old_root",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("final_root",
-          org.apache.spark.sql.types.LongType)))
-      if (edgeRows.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-      else {
-        // union-find with min-id roots + path compression — exactly
-        // star-CC's labeling (union handles even a degenerate
-        // double-forwarded root a replayed batch could leave, where a
-        // pure chain-follow would pick one target arbitrarily)
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val n = parent(c); parent(c) = r; c = n
-          }
-          r
-        }
-        val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
-        edgeRows.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          nodes += a; nodes += b
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        val out = nodes.iterator.map(n =>
-          org.apache.spark.sql.Row(n, find(n))).toSeq
-        spark.createDataFrame(
-          java.util.Arrays.asList(out: _*), outSchema)
+      : DataFrame =
+    DriverFetch("forwarding closure",
+        Seq(fwd.select(col("old_root"), col("new_root"))), maxDriverEdges)
+      .map { case Seq(edgeRows) =>
+        // union handles even a degenerate double-forwarded root a
+        // replayed batch could leave, where a pure chain-follow would
+        // pick one target arbitrarily
+        val uf = UnionFind.of(edgeRows.iterator.map(r => (r.getLong(0), r.getLong(1))))
+        DriverFetch.local(fwd, uf.nodes.map(n => Row(n, uf.find(n))).toSeq, ForwardSchema)
       }
-    }
-  }
+      .getOrElse(graft.text.Dedup.connectedComponentsStar(
+          fwd.select(col("old_root").as("id_a"), col("new_root").as("id_b")),
+          // this caller already proved the relation exceeds ITS driver
+          // cap — skip the kernel's own (bounded) re-probe job
+          maxDriverEdges = 0)
+        .select(col("id").as("old_root"), col("comp").as("final_root")))
+
+  private val ForwardSchema = StructType(Seq(
+    StructField("old_root", LongType), StructField("final_root", LongType)))
 
   /** The serving view: stored labels with comp_id resolved through the
     * stored forwards. No hint on the resolution join — its build side
@@ -145,9 +114,77 @@ object IncrementalComponents {
     * 2 × batch pairs) reused as the pushed labels filter AND the local
     * lookup relation — the hybrid-index stance; a batch wider than
     * `maxBatchIds` falls back to a distributed lookup join (the one
-    * full labels scan such a bulk batch amortizes). */
+    * full labels scan such a bulk batch amortizes).
+    *
+    * Batch-sized inputs run on the DRIVER ([[driverAppends]]): the
+    * pairs and the forwards come back concurrently, then the endpoint
+    * labels, each at most 2^16 rows and each call at most 64 MiB
+    * ([[DriverFetch]]); both appends return as local relations. Larger
+    * inputs run the distributed body. */
   def batchAppends(labels: DataFrame, fwd: DataFrame, pairs: DataFrame,
                    maxBatchIds: Int = 1 << 20)
+      : (DataFrame, DataFrame) =
+    driverAppends(labels, fwd, pairs)
+      .getOrElse(batchAppendsDistributed(labels, fwd, pairs, maxBatchIds))
+
+  /** The driver path of [[batchAppends]]: the root resolution through
+    * the forwards, the root-pair closure, the losing roots' forwards and
+    * the new nodes' labels, each through a [[UnionFind]] — the same
+    * rows the distributed body appends (a repeated label row for an
+    * endpoint yields one current-root row each, as the lookup join
+    * does). Long ids only; None above the fetch caps. */
+  private def driverAppends(labels: DataFrame, fwd: DataFrame, pairs: DataFrame)
+      : Option[(DataFrame, DataFrame)] = {
+    def longs(df: DataFrame, cols: String*) = {
+      val t = df.schema.fields.map(f => f.name -> f.dataType).toMap
+      cols.forall(c => t.get(c).contains(LongType))
+    }
+    if (!longs(pairs, "id_a", "id_b") || !longs(labels, "doc_id", "comp_id") ||
+        !longs(fwd, "old_root", "new_root")) return None
+    val nullable = pairs.schema("id_a").nullable || pairs.schema("id_b").nullable
+    def schema(a: String, b: String) = StructType(Seq(
+      StructField(a, LongType, nullable), StructField(b, LongType, nullable)))
+    DriverFetch("incremental components: pairs and forwards",
+        Seq(pairs.select(col("id_a"), col("id_b")),
+          fwd.select(col("old_root"), col("new_root"))))
+      .flatMap { case Seq(pairRows, fwdRows) =>
+        val live = pairRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        val endpoints = scala.collection.mutable.LinkedHashSet.empty[Long]
+        live.foreach(r => endpoints ++= Seq(r.getLong(0), r.getLong(1)))
+        (if (endpoints.isEmpty) Some(IndexedSeq(Array.empty[Row]))
+         else DriverFetch("incremental components: endpoint labels",
+           Seq(labels.filter(org.apache.spark.sql.graft.ColumnBridge.inSet(
+               "doc_id", endpoints.map(Long.box(_): Any).toSet))
+             .select(col("doc_id"), col("comp_id")))))
+          .map { case Seq(labelRows) =>
+            val res = UnionFind.of(fwdRows.iterator.map(r => (r.getLong(0), r.getLong(1))))
+            val stored = labelRows.toSeq.groupMap(_.getLong(0))(r =>
+              if (r.isNullAt(1)) None else Some(r.getLong(1)))
+            // (doc_id, current root, known): the stored label (own id if
+            // unseen) resolved through the forwards
+            val cur = endpoints.toSeq.flatMap(e => stored.getOrElse(e, Seq(None))
+              .map(c => (e, res.find(c.getOrElse(e)), c.isDefined)))
+            val roots = cur.groupMap(_._1)(_._2)
+            val merged = UnionFind.of(for {
+              p <- live.iterator
+              ra <- roots(p.getLong(0)).iterator
+              rb <- roots(p.getLong(1)).iterator if ra != rb
+            } yield (ra, rb))
+            val knownRoots = cur.collect { case (_, r, true) => r }.toSet
+            val newFwd = merged.nodes
+              .filter(r => merged.find(r) != r && knownRoots(r))
+              .map(r => Row(r, merged.find(r))).toSeq
+            val newLabels = cur.collect { case (e, r, false) => Row(e, merged.find(r)) }
+            (DriverFetch.local(pairs, newLabels, schema("doc_id", "comp_id")),
+              DriverFetch.local(pairs, newFwd, schema("old_root", "new_root")))
+          }
+      }
+  }
+
+  /** The distributed body of [[batchAppends]] — the path for inputs
+    * over the driver caps. */
+  private[graft] def batchAppendsDistributed(labels: DataFrame, fwd: DataFrame,
+                                             pairs: DataFrame, maxBatchIds: Int)
       : (DataFrame, DataFrame) = {
     val spark = pairs.sparkSession
     val endpoints = pairs.select(col("id_a").as("doc_id"))

@@ -95,16 +95,27 @@ object IndexMaintenance {
     if (fire) {
       import org.apache.spark.sql.functions._
       val fwd = forwards.read()
-      if (!fwd.isEmpty) {
-        // depth probe: one churn-sized self-join — an edge whose
-        // target is itself forwarded means a chain exists. Skip the
-        // closure rewrite when every edge already points at a terminal
-        // root (the steady state between merges; the r15 instrumented
-        // probe measured the unconditional rewrite at >1 s of job
-        // overhead on a two-row relation).
-        val deep = !fwd.select(col("new_root")).join(
-          fwd.select(col("old_root")),
-          col("new_root") === col("old_root"), "left_semi").isEmpty
+      // ONE fetch of the churn-sized forwards answers the emptiness
+      // check and the depth probe (an edge whose target is itself
+      // forwarded means a chain exists); forwards over the DriverFetch
+      // caps probe with two jobs. Skip the closure rewrite when every
+      // edge already points at a terminal root (the steady state
+      // between merges; the r15 instrumented probe measured the
+      // unconditional rewrite at >1 s of job overhead on a two-row
+      // relation).
+      val (empty, deep) = graft.plans.DriverFetch("components maintenance: forwards",
+          Seq(fwd.select(col("old_root"), col("new_root"))))
+        .map { case Seq(rows) =>
+          val olds = rows.iterator.map(_.getLong(0)).toSet
+          (rows.isEmpty, rows.exists(r => olds(r.getLong(1))))
+        }
+        .getOrElse {
+          val empty = fwd.isEmpty
+          (empty, !empty && !fwd.select(col("new_root")).join(
+            fwd.select(col("old_root")),
+            col("new_root") === col("old_root"), "left_semi").isEmpty)
+        }
+      if (!empty) {
         if (deep) {
           val closed = graft.plans.IncrementalComponents.resolveForwards(fwd)
             .filter(col("old_root") =!= col("final_root"))

@@ -359,11 +359,130 @@ object StreamNearDup {
     * out). Salvaged buckets are logged (never silent). Note the
     * contrast with [[StreamSeedGram.hybridSeedPairs]]'s maxDf, which is
     * NOT salvaged: that cap is the batch detector's semantic stop-gram
-    * `HAVING df <= maxDf` (oracle-pinned), not an operational bound. */
+    * `HAVING df <= maxDf` (oracle-pinned), not an operational bound.
+    *
+    * Batch-sized inputs run on the DRIVER ([[driverHybrid]]): the
+    * batch's band rows and the matching index rows each come back in
+    * one job when each holds at most 2^16 rows and 64 MiB
+    * ([[graft.plans.DriverFetch]]), and the key set is within
+    * `pruneKeyCap`; the same pairs return as a local relation instead
+    * of a chain of ~17 single-task jobs. Larger inputs run the
+    * distributed body described above. Selection is by size only. */
   def hybridCandidates(newBands: DataFrame, index: DataFrame,
                        threshold: Double = 0.7, k: Int = 64,
                        maxBucket: Int = 10000,
-                       pruneKeyCap: Int = 8192): DataFrame = {
+                       pruneKeyCap: Int = 8192): DataFrame =
+    driverHybrid(newBands, index, threshold, k, maxBucket, pruneKeyCap)
+      .getOrElse(hybridCandidatesDistributed(newBands, index, threshold, k,
+        maxBucket, pruneKeyCap))
+
+  /** Salvaged buckets are NEVER silent: a salvaged bucket still trades
+    * SOME recall in its band (near-identical signatures may split). */
+  private def warnSalvaged(hot: Long, maxBucket: Int): Unit =
+    if (hot > 0)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"hybridCandidates: $hot hot (band, bh) bucket(s) at/past " +
+          s"maxBucket=$maxBucket salvaged via salted sub-bucketing — " +
+          "identical-signature pairs keep full recall; near-identical " +
+          "pairs may split in this band (other bands still carry them)")
+
+  /** Per-bucket sub-bucket count g for a bucket of total membership `t`:
+    * ceil(t / maxBucket) for a hot bucket — floored at 2, so the hot
+    * predicate (t >= maxBucket) and the split agree at the boundary: a
+    * bucket AT the cap is counted hot and actually sub-buckets (plain
+    * ceil would give g = 1 there, logging a salvage that never
+    * happened) — so each sub-bucket's EXPECTED size stays under the cap
+    * and per-bucket compare fan-out drops from T² to ~T·maxBucket. */
+  private def gOf(t: Long, maxBucket: Int): Int =
+    if (t < maxBucket) 1
+    else math.max(2, math.ceil(t.toDouble / maxBucket).toInt)
+
+  /** The driver path of [[hybridCandidates]]: one fetch of the batch's
+    * band rows with `hash(sig)`, the bucket keys derived on the driver,
+    * one fetch of the matching index rows through the pushed `bh`
+    * InSet (the exact (band, bh) match is checked on the driver — bh
+    * hashes the band number, so the two differ only on a 64-bit
+    * collision), then bucket counts, hot-bucket g, salted sub-buckets
+    * and the cross/within pairs on the driver, the estimate through
+    * [[agreement]] (the JVM mirror of `graft_sig_agreement`). None —
+    * the distributed body serves — when a fetch is over the
+    * [[graft.plans.DriverFetch]] caps, the key set is over
+    * `pruneKeyCap` (the full-scan regime), the column types are not
+    * (int band, long bh, long doc_id, array<long> sig), or a signature
+    * is empty or holds a null slot (never produced by `graft_minhash`,
+    * where the mirror's arithmetic would differ). */
+  private def driverHybrid(newBands: DataFrame, index: DataFrame,
+                           threshold: Double, k: Int, maxBucket: Int,
+                           pruneKeyCap: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def typed(df: DataFrame) = {
+      val t = df.schema.fields.map(f => f.name -> f.dataType).toMap
+      t.get("band").contains(IntegerType) && t.get("bh").contains(LongType) &&
+        t.get("doc_id").contains(LongType) &&
+        t.get("sig").exists { case ArrayType(LongType, _) => true; case _ => false }
+    }
+    if (!typed(newBands) || !typed(index)) return None
+    val cutoff = math.max(0.0, threshold - 2.0 / math.sqrt(k.toDouble))
+    val nullable = newBands.schema("doc_id").nullable || index.schema("doc_id").nullable
+    val outSchema = StructType(Seq(StructField("id_a", LongType, nullable),
+      StructField("id_b", LongType, nullable)))
+    def rowsOf(df: DataFrame) = df.select(col("band"), col("bh"), col("doc_id"),
+      col("sig"), hash(col("sig")).as("h"))
+    // a band row: bucket key, salt hash, and (id, signature) when both
+    // are non-null — a null id or signature never pairs, but counts
+    final case class Band(key: (Int, Long), h: Int, member: Option[(Long, Array[Long])])
+    def bandsOf(rows: Array[Row]): Option[Array[Band]] = {
+      val sigs = rows.map(r => if (r.isNullAt(3)) null else r.getSeq[Any](3))
+      if (sigs.exists(s => s != null && (s.isEmpty || s.contains(null)))) None
+      else Some(rows.zip(sigs).map { case (r, s) =>
+        Band((r.getInt(0), r.getLong(1)), r.getInt(4),
+          if (r.isNullAt(2) || s == null) None
+          else Some((r.getLong(2), s.map(_.asInstanceOf[Long]).toArray)))
+      })
+    }
+    graft.plans.DriverFetch("hybrid serve: batch band rows", Seq(rowsOf(newBands)))
+      .flatMap { case Seq(batchRows) => bandsOf(batchRows) }
+      .flatMap { batch =>
+        val keys = batch.iterator.map(_.key).toSet
+        if (keys.size > pruneKeyCap) None
+        else if (keys.isEmpty) Some(graft.plans.DriverFetch.local(newBands, Nil, outSchema))
+        else graft.plans.DriverFetch("hybrid serve: matching index rows",
+            Seq(rowsOf(index.filter(org.apache.spark.sql.graft.ColumnBridge
+              .inSet("bh", keys.map(kv => Long.box(kv._2): Any))))))
+          .flatMap { case Seq(storedRows) => bandsOf(storedRows) }
+          .map { storedAll =>
+            val stored = storedAll.filter(b => keys.contains(b.key))
+            // per-bucket TOTAL membership (stored + this batch); hot
+            // buckets split into g salted sub-buckets, cold ones stay whole
+            val total = (batch.iterator ++ stored.iterator).toSeq
+              .groupMapReduce(_.key)(_ => 1L)(_ + _)
+            val g = total.collect { case (key, t) if t >= maxBucket => key -> gOf(t, maxBucket) }
+            warnSalvaged(g.size.toLong, maxBucket)
+            def grouped(bands: Array[Band]) = bands.toSeq
+              .flatMap(b => b.member.map(m =>
+                (b.key, g.get(b.key).fold(0)(Math.floorMod(b.h, _))) -> m))
+              .groupMap(_._1)(_._2)
+            val (nb, ix) = (grouped(batch), grouped(stored))
+            val out = scala.collection.mutable.LinkedHashSet.empty[Row]
+            nb.foreach { case (bucket, members) =>
+              for ((id, sig) <- members; (oId, oSig) <- ix.getOrElse(bucket, Nil)
+                   if oId != id && agreement(sig, oSig) >= cutoff)
+                out += Row(math.min(id, oId), math.max(id, oId))
+              for ((id, sig) <- members; (oId, oSig) <- members
+                   if id < oId && agreement(sig, oSig) >= cutoff)
+                out += Row(id, oId)
+            }
+            graft.plans.DriverFetch.local(newBands, out.toSeq, outSchema)
+          }
+      }
+  }
+
+  /** The distributed body of [[hybridCandidates]] — the path for inputs
+    * over the driver caps. */
+  private[graft] def hybridCandidatesDistributed(
+      newBands: DataFrame, index: DataFrame, threshold: Double, k: Int,
+      maxBucket: Int, pruneKeyCap: Int): DataFrame = {
     val cutoff = math.max(0.0, threshold - 2.0 / math.sqrt(k.toDouble))
     // ONE distinct job computes the batch's bucket-key set; below the
     // cap the driver-held rows then serve BOTH pruning consumers — the
@@ -420,30 +539,12 @@ object StreamNearDup {
       .join(storedCnt, Seq("band", "bh"), "left")
       .select(col("band"), col("bh"),
         (col("__nn") + coalesce(col("__sn"), lit(0L))).as("__t"))
-    def warnSalvaged(hot: Long): Unit =
-      // NEVER silent: a salvaged bucket still trades SOME recall in
-      // this band (near-identical signatures may split) — surface it
-      if (hot > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"hybridCandidates: $hot hot (band, bh) bucket(s) at/past " +
-            s"maxBucket=$maxBucket salvaged via salted sub-bucketing — " +
-            "identical-signature pairs keep full recall; near-identical " +
-            "pairs may split in this band (other bands still carry them)")
-    // per-bucket sub-bucket count g: ceil(T / maxBucket) for a hot
-    // bucket — floored at 2, so the hot predicate (T >= maxBucket) and
-    // the split agree at the boundary: a bucket AT the cap is counted
-    // hot and actually sub-buckets (plain ceil would give g = 1 there,
-    // logging a salvage that never happened) — so each sub-bucket's
-    // EXPECTED size stays under the cap and per-bucket compare fan-out
-    // drops from T² to ~T·maxBucket. ONE definition serves both key-cap
-    // regimes: only the HOT rows of the counts relation come to the
-    // driver (structurally tiny — #hot ≤ total membership / maxBucket,
-    // so the 1<<20 bound implies a 10^10-member batch+index join
-    // before it fails, loudly) and gOf is applied there; cold buckets
-    // default to g = 1 through the left join below.
-    def gOf(t: Long): Int =
-      if (t < maxBucket) 1
-      else math.max(2, math.ceil(t.toDouble / maxBucket).toInt)
+    // per-bucket sub-bucket count g ([[gOf]]), ONE definition for both
+    // key-cap regimes: only the HOT rows of the counts relation come to
+    // the driver (structurally tiny — #hot ≤ total membership /
+    // maxBucket, so the 1<<20 bound implies a 10^10-member batch+index
+    // join before it fails, loudly) and gOf is applied there; cold
+    // buckets default to g = 1 through the left join below.
     val gSchema = org.apache.spark.sql.types.StructType(
       keySchema.fields :+ org.apache.spark.sql.types.StructField(
         "__g", org.apache.spark.sql.types.IntegerType, nullable = false))
@@ -461,12 +562,12 @@ object StreamNearDup {
         graft.plans.Materialize.modelState(countsRel,
           "hybrid bucket membership counts (≤ batch bucket keys)",
           pruneKeyCap + 1).filter(_.getLong(2) >= maxBucket)
-    warnSalvaged(hotRows.length.toLong)
+    warnSalvaged(hotRows.length.toLong, maxBucket)
     val bucketG: Option[DataFrame] =
       if (hotRows.isEmpty) None
       else Some(newBands.sparkSession.createDataFrame(
         java.util.Arrays.asList(hotRows.map(r => org.apache.spark.sql.Row(
-          r.get(0), r.get(1), gOf(r.getLong(2)))): _*), gSchema))
+          r.get(0), r.get(1), gOf(r.getLong(2), maxBucket))): _*), gSchema))
     // the salt rides each side map-side: a Murmur3 hash of the full
     // k-slot signature mod the bucket's g (deterministic, partition-
     // independent — identical signatures always land together). The

@@ -452,10 +452,78 @@ object Dedup {
     * instead of text, and the gram relation is cached across both join
     * sides for one eager build ([[withGramSets]]). `pairs` is consumed
     * three times (both verify sides + the semi-join reduction) — pass
-    * a materialized relation, or the plan recomputes it per reference. */
+    * a materialized relation, or the plan recomputes it per reference.
+    *
+    * Batch-sized inputs run on the DRIVER ([[driverVerify]]): the pairs
+    * come back in one job, then their endpoints' gram sets in one
+    * map-only job, each at most 2^16 rows and at most 64 MiB
+    * ([[graft.plans.DriverFetch]]); the same rows return as a local
+    * relation. Larger inputs run the distributed body. */
   def verifyPairsJaccard(df: DataFrame, idCol: String, textCol: String,
                          pairs: DataFrame, threshold: Double,
-                         w: Int = 3): DataFrame = {
+                         w: Int = 3): DataFrame =
+    driverVerify(df, idCol, textCol, pairs, threshold, w)
+      .getOrElse(verifyPairsJaccardDistributed(df, idCol, textCol, pairs,
+        threshold, w))
+
+  /** The driver path of [[verifyPairsJaccard]]: exact Jaccard of sorted
+    * gram-hash arrays, with the join's multiplicity (a repeated pair or
+    * a repeated document id multiplies output rows) and the same double
+    * arithmetic as the plan (`inter / ((|ga| + |gb|) − inter)`, 0 for an
+    * empty union). Long ids only; None above the fetch caps. */
+  private def driverVerify(df: DataFrame, idCol: String, textCol: String,
+                           pairs: DataFrame, threshold: Double,
+                           w: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val types = pairs.schema.fields.map(f => f.name -> f.dataType).toMap
+    if (!types.get("id_a").contains(LongType) || !types.get("id_b").contains(LongType) ||
+        !df.schema.find(_.name == idCol).exists(_.dataType == LongType)) return None
+    val outSchema = StructType(Seq(
+      StructField("id_a", LongType, pairs.schema("id_a").nullable),
+      StructField("id_b", LongType, pairs.schema("id_b").nullable),
+      StructField("jaccard", DoubleType, nullable = true)))
+    def jaccard(ga: Array[Long], gb: Array[Long]): Double = {
+      var (i, j, inter) = (0, 0, 0)
+      while (i < ga.length && j < gb.length) {
+        if (ga(i) < gb(j)) i += 1
+        else if (ga(i) > gb(j)) j += 1
+        else { inter += 1; i += 1; j += 1 }
+      }
+      val union = (ga.length + gb.length).toDouble - inter.toDouble
+      if (union == 0) 0.0 else inter.toDouble / union
+    }
+    graft.plans.DriverFetch("exact Jaccard verify: pairs",
+        Seq(pairs.select(col("id_a"), col("id_b"))))
+      .flatMap { case Seq(pairRows) =>
+        val live = pairRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        val ids = live.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toSet
+        if (ids.isEmpty) Some(graft.plans.DriverFetch.local(pairs, Nil, outSchema))
+        else graft.plans.DriverFetch("exact Jaccard verify: gram sets", Seq(
+            df.filter(org.apache.spark.sql.graft.ColumnBridge.inSet(idCol,
+                ids.map(Long.box(_): Any)))
+              .select(col(idCol).as("id"), tokenHashes(col(textCol)).as("th"))
+              .select(col("id"),
+                array_distinct(shingleHashesFromTokenHashes(col("th"), w)).as("g"))))
+          .map { case Seq(setRows) =>
+            val sets = setRows.toSeq.groupMap(_.getLong(0))(r =>
+              r.getSeq[Long](1).toArray.sorted)
+            val out = for {
+              p <- live.toSeq
+              ga <- sets.getOrElse(p.getLong(0), Nil)
+              gb <- sets.getOrElse(p.getLong(1), Nil)
+              j = jaccard(ga, gb) if j >= threshold
+            } yield Row(p.getLong(0), p.getLong(1), j)
+            graft.plans.DriverFetch.local(pairs, out, outSchema)
+          }
+      }
+  }
+
+  /** The distributed body of [[verifyPairsJaccard]] — the path for
+    * inputs over the driver caps. */
+  private[graft] def verifyPairsJaccardDistributed(
+      df: DataFrame, idCol: String, textCol: String, pairs: DataFrame,
+      threshold: Double, w: Int): DataFrame = {
     val p = pairs.select(col("id_a"), col("id_b"))
     val inPairs = p.select(col("id_a").as("id"))
       .union(p.select(col("id_b").as("id"))).distinct()
@@ -481,9 +549,9 @@ object Dedup {
   private[graft] val DefaultMaxDriverEdges: Int = 1 << 16
 
   /** Bounded DRIVER fast path shared by both component kernels: when
-    * the pair relation fits under `maxDriverEdges` (checked with one
-    * CollectLimit job — the driver never buffers more than the cap),
-    * the closure runs as a driver union-find labeled by component min
+    * the pair relation fits under `maxDriverEdges` and the byte cap
+    * ([[graft.plans.DriverFetch]] — the driver never buffers more than
+    * the cap), the closure runs as a driver union-find labeled by component min
     * and returns a LocalRelation of (id, comp) — replacing the
     * 2-jobs-per-round distributed loop (checkpoint + convergence
     * check), which the r15 composed-pipeline probe measured at >1 s of
@@ -498,45 +566,24 @@ object Dedup {
     * through. */
   private[graft] def driverComponents(pairs: DataFrame,
                                       maxDriverEdges: Int): Option[DataFrame] = {
-    val spark = pairs.sparkSession
     val byName = pairs.schema.fields.map(f => f.name -> f.dataType).toMap
     val longIds = Seq("id_a", "id_b").forall(c =>
       byName.get(c).contains(org.apache.spark.sql.types.LongType))
     if (maxDriverEdges <= 0 || !longIds) return None
-    val edgeRows = graft.plans.Materialize.modelState(
-      pairs.select(col("id_a"), col("id_b")).limit(maxDriverEdges + 1),
-      "component edges (pre-limited to cap + 1)", maxDriverEdges + 1)
-    if (edgeRows.length > maxDriverEdges) None
-    else {
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("comp",
-          org.apache.spark.sql.types.LongType)))
-      // union-find with min-id roots + path compression — exactly the
-      // same labeling as the distributed kernels
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
+    graft.plans.DriverFetch("connected components",
+      Seq(pairs.select(col("id_a"), col("id_b"))), maxDriverEdges)
+      .map { case Seq(edgeRows) =>
+        val outSchema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("comp",
+            org.apache.spark.sql.types.LongType)))
+        val uf = graft.plans.UnionFind.of(
+          edgeRows.iterator.map(r => (r.getLong(0), r.getLong(1))))
+        graft.plans.DriverFetch.local(pairs,
+          uf.nodes.map(n => org.apache.spark.sql.Row(n, uf.find(n))).toSeq,
+          outSchema)
       }
-      val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
-      edgeRows.foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        nodes += a; nodes += b
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val out = nodes.iterator.map(n =>
-        org.apache.spark.sql.Row(n, find(n))).toSeq
-      Some(spark.createDataFrame(
-        java.util.Arrays.asList(out: _*), outSchema))
-    }
   }
 
   /** Connected components over an undirected pair graph (id_a, id_b)

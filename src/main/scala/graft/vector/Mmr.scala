@@ -48,7 +48,8 @@ object Mmr {
 
   /** Bounded DRIVER fast path (the driverComponents pattern): the MMR
     * inputs are candidate-sized — k-bounded per query — so under
-    * `maxDriverRows` both relations are collected once and the greedy
+    * `maxDriverRows` (and the [[graft.plans.DriverFetch]] byte cap)
+    * both relations are fetched once, concurrently, and the greedy
     * loop runs on the driver, replacing ~9 single-task jobs per round
     * (stage pin, max-sim join, anti join, argmax aggregate). The picks
     * are identical: scores are the same IEEE-754 double expressions
@@ -76,16 +77,11 @@ object Mmr {
       pT.get("b").contains(LongType) && pT.get("sim").contains(DoubleType)
     if (!typed) return None
     val spark = cands.sparkSession
-    val cRows = graft.plans.Materialize.modelState(
-      cands.select(col(qidCol), col(idCol), col("rel"))
-        .limit(maxDriverRows + 1),
-      "MMR candidates (pre-limited to cap + 1)", maxDriverRows + 1)
-    if (cRows.length > maxDriverRows) return None
-    val pRows = graft.plans.Materialize.modelState(
-      pairs.select(col(qidCol), col("a"), col("b"), col("sim"))
-        .limit(maxDriverRows + 1),
-      "MMR pair sims (pre-limited to cap + 1)", maxDriverRows + 1)
-    if (pRows.length > maxDriverRows) return None
+    // the two inputs are independent: fetched concurrently
+    val Seq(cRows, pRows) = graft.plans.DriverFetch("MMR rerank", Seq(
+        cands.select(col(qidCol), col(idCol), col("rel")),
+        pairs.select(col(qidCol), col("a"), col("b"), col("sim"))),
+      maxDriverRows).getOrElse(return None)
     // Spark double semantics: NaN largest, -0.0 < 0.0 — exactly
     // java.lang.Double.compare
     def dGt(a: Double, b: Double) = java.lang.Double.compare(a, b) > 0

@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   *
   *  - '''Driver fast path''' (the [[Mmr]] / driverComponents pattern):
   *    both inputs are rank LISTS — bounded by batch × k, never
-  *    corpus-sized — so under `maxDriverRows` they collect once and
+  *    corpus-sized — so under `maxDriverRows` they are fetched once,
+  *    CONCURRENTLY ([[graft.plans.DriverFetch]]: a sequential fetch
+  *    pair lost an interleaved A/B to the distributed form, whose AQE
+  *    runs the two sub-plans in parallel), and
   *    the join + score + per-query top-k run on the driver, replacing
   *    a full-outer sort-merge join, a window and a global sort (~4
   *    exchanges of single-task AQE jobs for a few thousand rows).
@@ -75,11 +78,9 @@ object RrfFuse {
       t.get(d).contains(LongType) && t.get(r).contains(IntegerType)
     }
     if (!typed(bm, "doc_id", "rb") || !typed(cs, "vec_id", "rc")) return None
-    val (bRows, cRows) = collectBoth(
-      bm.select(col("doc_id"), col("rb")),
-      cs.select(col("vec_id"), col("rc")), maxDriverRows)
-    if (bRows.length > maxDriverRows || cRows.length > maxDriverRows)
-      return None
+    val Seq(bRows, cRows) = graft.plans.DriverFetch("RRF fusion", Seq(
+        bm.select(col("doc_id"), col("rb")), cs.select(col("vec_id"), col("rc"))),
+      maxDriverRows).getOrElse(return None)
     val m = new scala.collection.mutable.HashMap[
       Long, (Option[Int], Option[Int])]
     bRows.foreach { r =>
@@ -135,29 +136,6 @@ object RrfFuse {
       .orderBy(col("qid"), col("rrf").desc, col("doc_id"))
   }
 
-  /** The two rank-list fetches are independent jobs — run them
-    * CONCURRENTLY (guide §2.6 "overlap independent jobs"): the
-    * distributed fallback's AQE materializes the two sub-plans in
-    * parallel, and a sequential collect pair measurably gave that
-    * advantage back (interleaved A/B: sequential driver fuse LOST
-    * ~0.3 s to the distributed form; concurrent collects win). Job
-    * descriptions/groups are thread-local, so the spawned fetch is
-    * deliberately description-free. */
-  private def collectBoth(bmSel: DataFrame, csSel: DataFrame,
-                          maxDriverRows: Int)
-      : (Array[Row], Array[Row]) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bF = Future(graft.plans.Materialize.modelState(
-      bmSel.limit(maxDriverRows + 1),
-      "RRF lexical rank list (pre-limited to cap + 1)", maxDriverRows + 1))
-    val cF = Future(graft.plans.Materialize.modelState(
-      csSel.limit(maxDriverRows + 1),
-      "RRF dense rank list (pre-limited to cap + 1)", maxDriverRows + 1))
-    (Await.result(bF, Duration.Inf), Await.result(cF, Duration.Inf))
-  }
-
   private def driverFuse(bm: DataFrame, cs: DataFrame, k: Int,
                          maxDriverRows: Int): Option[DataFrame] = {
     import org.apache.spark.sql.types._
@@ -169,11 +147,10 @@ object RrfFuse {
     }
     if (!typed(bm, "qid", "doc_id", "rb") ||
         !typed(cs, "cqid", "vec_id", "rc")) return None
-    val (bRows, cRows) = collectBoth(
-      bm.select(col("qid"), col("doc_id"), col("rb")),
-      cs.select(col("cqid"), col("vec_id"), col("rc")), maxDriverRows)
-    if (bRows.length > maxDriverRows || cRows.length > maxDriverRows)
-      return None
+    val Seq(bRows, cRows) = graft.plans.DriverFetch("RRF fusion", Seq(
+        bm.select(col("qid"), col("doc_id"), col("rb")),
+        cs.select(col("cqid"), col("vec_id"), col("rc"))),
+      maxDriverRows).getOrElse(return None)
     // full-outer on (qid, doc): ranks meet in one hash map
     val m = new scala.collection.mutable.HashMap[
       (Long, Long), (Option[Int], Option[Int])]

@@ -83,15 +83,16 @@ class IncrementalComponentsSpec extends AnyFunSuite {
   }
 
   test("wide-batch fallback (endpoint cap exceeded) lands on the same labels") {
-    // a batch wider than maxBatchIds routes through the distributed
-    // lookup join instead of the driver-held InSet — same answer
+    // a batch wider than maxBatchIds routes the distributed body through
+    // its distributed lookup join instead of the driver-held InSet —
+    // same answer (batch-sized inputs never reach that body on their own)
     val hist = Seq((1L, 2L), (10L, 11L))
     val b = Seq((2L, 10L), (30L, 31L))
     val labels0 = graft.plans.Materialize.stage(
       graft.text.Dedup.connectedComponents(hist.toDF("id_a", "id_b"))
         .select(col("id").as("doc_id"), col("comp").as("comp_id")))
     val fwd0 = Seq.empty[(Long, Long)].toDF("old_root", "new_root")
-    val (nl, nf) = IncrementalComponents.batchAppends(
+    val (nl, nf) = IncrementalComponents.batchAppendsDistributed(
       labels0, fwd0, b.toDF("id_a", "id_b"), maxBatchIds = 1)
     val resolved = labelsOf(IncrementalComponents.resolvedLabels(
       labels0.unionByName(nl), fwd0.unionByName(nf)))

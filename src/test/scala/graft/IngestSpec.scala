@@ -259,37 +259,7 @@ class IngestSpec extends AnyFunSuite {
     assert(scanned.value == 2, s"batch scanned ${scanned.value / 2} times")
   }
 
-  /** Spark jobs `body` submits from this thread, by SQL execution
-    * description. Exact, not sampled: the jobs carry a job group, and a
-    * sentinel job after `body` proves every earlier job-start event
-    * reached the listener (the bus delivers in order). */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        def prop(k: String) = Option(j.properties).map(_.getProperty(k)).orNull
-        prop("spark.jobGroup.id") match {
-          case `group` => seen.add(String.valueOf(prop("spark.job.description")))
-          case g if g == group + "-sentinel" => drained.countDown()
-          case _ => ()
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "jobsDuring")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-sentinel", "sentinel")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Seq[String] = TestSpark.jobsDuring(spark)(body)
 
   test("catalog bookkeeping submits no Spark job; a happy-path batch submits only its sink write") {
     import spark.implicits._

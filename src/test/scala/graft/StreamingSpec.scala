@@ -1219,6 +1219,52 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("one batch of the dedup body runs a bounded number of Spark jobs") {
+    // the per-batch body of the dedup pipeline (band, serve, endpoint
+    // fetch, verify, component appends) against stored tables; its
+    // batch-sized steps run on the driver, so a chain of single-task
+    // jobs per step (~48 a batch before) must not grow back unnoticed
+    import graft.streaming.StreamNearDup
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-jobs")
+    // twelve words of its own per document; a tail word makes a
+    // near-duplicate (10 of 11 trigrams shared)
+    def text(i: Int, tail: String = "") = (0 until 12).map(j => s"t${i}w$j").mkString(" ") + tail
+    val base = (1 to 12).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
+    def table(name: String, schema: StructType) = graft.catalog.ParquetTable(spark,
+      s"jobs_$name", s"$tmp/$name", schema,
+      writeOptions = graft.catalog.ParquetTable.IndexWriteOptions).createIfNotExists()
+    val idx = table("idx", StreamNearDup.bandRelation(base, "doc_id", "text").schema)
+    val txt = table("txt", StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    val labels = table("labels", StructType(Seq(StructField("doc_id", LongType), StructField("comp_id", LongType))))
+    val fwd = table("fwd", StructType(Seq(StructField("old_root", LongType), StructField("new_root", LongType))))
+    idx.append(StreamNearDup.bandRelation(base, "doc_id", "text").sortWithinPartitions("bh"))
+    txt.append(base)
+    labels.append(Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L)).toDF("doc_id", "comp_id"))
+    fwd.append(Seq((2L, 1L)).toDF("old_root", "new_root"))
+    val batch = Seq((101L, text(1, " x")), (102L, text(5, " y")), (103L, text(6, " z")),
+      (104L, text(40))).toDF("doc_id", "text")
+    var appended = 0L
+    val jobs = TestSpark.jobsDuring(spark) {
+      val nb = graft.plans.Materialize.stage(StreamNearDup.bandRelation(batch, "doc_id", "text"))
+      val cands = graft.plans.Materialize.stage(StreamNearDup.hybridCandidates(nb, idx.read(),
+        threshold = 0.5, pruneKeyCap = StreamNearDup.adaptiveKeyCap(idx.tableBytes)))
+      val eps = graft.plans.Materialize.modelState(cands.select(col("id_a").as("doc_id"))
+        .unionByName(cands.select(col("id_b").as("doc_id"))).distinct(), "endpoints")
+      val texts = txt.read().filter(org.apache.spark.sql.graft.ColumnBridge.inSet("doc_id",
+        eps.map(r => Long.box(r.getLong(0)): Any).toSet)).unionByName(batch)
+      val verified = graft.plans.Materialize.stage(graft.text.Dedup.verifyPairsJaccard(texts,
+        "doc_id", "text", cands, threshold = 0.5).select(col("id_a"), col("id_b")))
+      val (nl, nf) = graft.plans.IncrementalComponents.batchAppends(labels.read(), fwd.read(), verified)
+      appended = graft.plans.Materialize.stage(nl).count() + graft.plans.Materialize.stage(nf).count()
+    }
+    // the batch's three near-duplicates each land one label row
+    assert(appended == 3, s"appended $appended rows")
+    info(s"${jobs.size} jobs for one batch")
+    assert(jobs.size <= 20, s"${jobs.size} jobs for one batch:\n${jobs.mkString("\n")}")
+    graft.ingest.FileOps.deleteRecursively(tmp)
+  }
+
   test("adaptive prune-key cap scales with the stored index, both regimes serve correctly") {
     // the r12 residue: pruneKeyCap was a constant 8192, so a wide batch
     // against a truly huge index fell back to the full scan unless the
@@ -1250,10 +1296,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(cap == 8192, s"small index must land on the floor, got $cap")
     val nb = graft.plans.Materialize.stage(StreamNearDup.bandRelation(
       Seq((2L, a + " trailing")).toDF("doc_id", "text"), "doc_id", "text"))
-    val pruned = StreamNearDup.hybridCandidates(nb, idx.read(),
-      threshold = 0.5, pruneKeyCap = cap)
-    assert(pruned.queryExecution.executedPlan.toString
-      .contains("PushedFilters: [In(bh"))
+    // the narrow batch serves on the driver; its index fetch carries
+    // the pushed filter
+    var pruned: org.apache.spark.sql.DataFrame = null
+    val fetches = TestSpark.plansDuring(spark) {
+      pruned = StreamNearDup.hybridCandidates(nb, idx.read(),
+        threshold = 0.5, pruneKeyCap = cap)
+    }
+    assert(fetches.exists(_.contains("PushedFilters: [In(bh")),
+      fetches.mkString("\n"))
     // regime 2 (batch keys exceed the cap — the wide-bulk fallback):
     // full bucket join, identical answer
     val full = StreamNearDup.hybridCandidates(nb, idx.read(),

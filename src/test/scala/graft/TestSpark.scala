@@ -6,4 +6,68 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = Tables.session("graft-test", cpus = "4")
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` submits from this thread, by SQL execution
+    * description. Exact, not sampled: the jobs carry a job group (which
+    * concurrent driver fetches inherit), and a sentinel job after
+    * `body` proves every earlier job-start event reached the listener
+    * (the bus delivers in order). */
+  def jobsDuring(spark: SparkSession)(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).map(_.getProperty(k)).orNull
+        prop("spark.jobGroup.id") match {
+          case `group` => seen.add(String.valueOf(prop("spark.job.description")))
+          case g if g == group + "-sentinel" => drained.countDown()
+          case _ => ()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsDuring")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The executed plans of every SQL execution `body` runs, as their
+    * `toString` — what a `QueryExecutionListener` sees, so a driver
+    * path's own fetches are inspectable even when its result is a
+    * local relation. */
+  def plansDuring(spark: SparkSession)(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = s"plans-during-${java.util.UUID.randomUUID()}"
+    val sentinel = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains(marker)) sentinel.set(true) else plans.add(plan)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!sentinel.get()) {
+        assert(System.nanoTime() < deadline, "listener bus never delivered the sentinel")
+        Thread.sleep(10)
+      }
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
