@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   * The statistics are MODEL-sized (models² pairs at most), so under
   * `maxDriverRows` the loop runs on the DRIVER over hash maps (the
   * driverComponents pattern) — replacing ~8 single-task jobs per
-  * round (stage pin, two joins, union aggregate) with two bounded
-  * CollectLimits. An over-cap leaderboard falls back to the
-  * distributed rounds unchanged. AnnotationSpec pins driver ≡
-  * distributed and the fallback. */
+  * round (stage pin, two joins, union aggregate) with one concurrent
+  * [[DriverFetch]] of both inputs, bounded in rows and bytes. An
+  * over-cap leaderboard falls back to the distributed rounds
+  * unchanged. EvalOpsSpec pins driver ≡ distributed and the
+  * fallback. */
 object BradleyTerry {
 
   val Unit2: Long = 1000000000000L // 1e6 (units) · 1e6 (rating 1.0)
@@ -33,15 +34,11 @@ object BradleyTerry {
   private def driverRatings(n: DataFrame, w: DataFrame, rounds: Int,
                             maxDriverRows: Int): Option[DataFrame] = {
     if (maxDriverRows <= 0) return None
-    val spark = n.sparkSession
-    val nRows = Materialize.modelState(
-      n.select(col("i"), col("j"), col("nij")).limit(maxDriverRows + 1),
-      "BT pair statistics (pre-limited to cap + 1)", maxDriverRows + 1)
-    if (nRows.length > maxDriverRows) return None
-    val wRows = Materialize.modelState(
-      w.select(col("m"), col("w")).limit(maxDriverRows + 1),
-      "BT win statistics (pre-limited to cap + 1)", maxDriverRows + 1)
-    if (wRows.length > maxDriverRows) return None
+    // the two inputs are independent: fetched concurrently
+    val Seq(nRows, wRows) = DriverFetch("Bradley-Terry statistics", Seq(
+        n.select(col("i"), col("j"), col("nij")),
+        w.select(col("m"), col("w"))),
+      maxDriverRows).getOrElse(return None)
     val pairs = nRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val wins = wRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     // participant set = models appearing in a pair, exactly the
@@ -63,10 +60,9 @@ object BradleyTerry {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("r",
         org.apache.spark.sql.types.LongType)))
-    val outRows = models.iterator
-      .map(m => org.apache.spark.sql.Row(m, r(m))).toSeq
-    Some(spark.createDataFrame(
-      java.util.Arrays.asList(outRows: _*), outSchema))
+    Some(DriverFetch.local(n,
+      models.iterator.map(m => org.apache.spark.sql.Row(m, r(m))).toSeq,
+      outSchema))
   }
 
   private[graft] def mmRatingsDistributed(n: DataFrame, w: DataFrame,

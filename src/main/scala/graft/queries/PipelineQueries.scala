@@ -505,60 +505,25 @@ object PipelineQueries {
         StreamFixtures.writeBatch(tmp, src, planted, "b",
           parts = 1, mtimeMs = 1000000060000L)
         val ss = StreamFixtures.childSession(s, 4)
-        import graft.streaming.StreamNearDup
-        val bandSchema = StreamNearDup.bandRelation(
-          graft.Tables.load(ss, dir, "documents").limit(0),
-          "doc_id", "text").schema
-        // leveled run tables (r15): per-batch writes are atomic
-        // batch-id partition swaps (idempotent under replay — the pair
-        // log no longer duplicates rows when a crashed batch replays)
-        // and cadence maintenance pays O(new rows), not O(index)
-        val idxTable = graft.streaming.LeveledIndex.create(
-          ss, "ndh_idx", s"$tmp/idx", bandSchema, "bh")
-        val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("id_b",
-            org.apache.spark.sql.types.LongType)))
-        val pairTable = graft.streaming.LeveledIndex.create(
-          ss, "ndh_pairs", s"$tmp/pairs", pairSchema, "id_a")
-        val raw = ss.readStream
+        // graft.streaming.HybridNearDup: leveled band index and pair
+        // log, maintained on the production cadence (every 8 batches —
+        // a 2-batch fixture never pays a merge; StreamingSpec pins pair
+        // byte-identity across it and the long-run StreamProbe row
+        // measures bounded files + flat serve AND flat maintenance)
+        val p = graft.streaming.HybridNearDup.create(ss, "ndh", tmp.toString)
+        val q = ss.readStream
           .schema(ss.read.parquet(src.toString).schema)
           .option("maxFilesPerTrigger", "8")
           .parquet(src.toString)
-        val q = raw.writeStream
+          .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // sign once, consume twice (candidate joins + index append)
-            val nb = graft.plans.Materialize.stage(
-              StreamNearDup.bandRelation(batch, "doc_id", "text"))
-            // candidates are served against the STORED index → the
-            // pair landing is skip-if-landed (a replay that sees its
-            // own bands in the index recomputes a slightly different
-            // pair set; the first attempt's atomic swap is the record)
-            pairTable.writeBatchIfAbsent(bid,
-              StreamNearDup.hybridCandidates(nb, idxTable.read(),
-                threshold = 0.5,
-                // fallback threshold scales with the measured index,
-                // not a constant: wide batches against a huge index
-                // still prune, narrow-vs-small skips the plumbing
-                pruneKeyCap = StreamNearDup.adaptiveKeyCap(
-                  idxTable.table.tableBytes)))
-            // key-sorted runs keep footer stats tight for the next
-            // batch's pushed IN filter; maintenance fires on the
-            // production CADENCE (every 8 batches — a 2-batch fixture
-            // never pays a merge; StreamingSpec pins pair byte-identity
-            // across it and the long-run StreamProbe row measures
-            // bounded files + flat serve AND flat maintenance under it)
-            idxTable.writeBatch(bid, nb)
-            idxTable.maintain(bid)
-            pairTable.maintain(bid)
-            ()
+            p.perBatch(batch, bid); ()
           }
           .option("checkpointLocation", s"$tmp/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        val cands = pairTable.read().distinct()
+        val cands = p.pairs.read().distinct()
           .transform(graft.plans.Materialize.stage)
         graft.ingest.FileOps.deleteRecursively(tmp)
         val docsB = graft.Tables.load(ss, dir, "documents")
@@ -691,59 +656,22 @@ object PipelineQueries {
           dups(10, 20).select(col("doc_id"), col("text"), at(t0 + 10800000L)),
           "c", parts = 1, mtimeMs = 1000000180000L)
         val ss = StreamFixtures.childSession(s, 4)
-        import graft.streaming.StreamNearDup
         def raw() = ss.readStream
           .schema(ss.read.parquet(src.toString).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(src.toString)
-        // tier B: pending (band rows still inside the horizon) + bulk
-        // index (aged-out rows, bh-sorted for the pushed IN filter),
-        // glued by TieredIndex's EXACTLY-ONCE aging: both tables are
-        // mig-partitioned and every per-batch write is an atomic
-        // partition overwrite, so a crash anywhere in the age →
-        // serve → writePending sequence replays without ever
-        // duplicating an index row (StreamingSpec injects the crash
-        // in the exact append/delete window and pins this)
-        val pendSchema = StreamNearDup.bandRelationWithTs(
-          graft.Tables.load(ss, dir, "documents").limit(0)
-            .select(col("doc_id"), col("text"), at(t0)),
-          "doc_id", "text", "arrival").schema
-        val tier = graft.streaming.TieredIndex.create(
-          ss, "ndtt", tmp.toString, pendSchema, sortKey = "bh")
-        val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("id_b",
-            org.apache.spark.sql.types.LongType)))
-        // pair log as a leveled run table (r15): the candidate serve
-        // reads tier state the batch itself mutates, so the landing is
-        // skip-if-landed — a crashed batch's replay no longer appends
-        // a second copy of its pairs (previously absorbed only by the
-        // downstream distinct)
-        val pairT = graft.streaming.LeveledIndex.create(
-          ss, "ndtt_pairs", s"$tmp/pairs", pairSchema, "id_a")
+        // tier B (graft.streaming.TwoTierNearDup): pending (band rows
+        // still inside the horizon) + bulk index (aged-out rows),
+        // glued by TieredIndex's EXACTLY-ONCE aging — a crash anywhere
+        // in the age → serve → writePending sequence replays without
+        // ever duplicating an index row (StreamingSpec injects the
+        // crash in the exact append/delete window and pins this) — and
+        // a skip-if-landed pair log
+        val tierB = graft.streaming.TwoTierNearDup.create(ss, "ndtt",
+          tmp.toString, ttlMs)
         val qb = raw().writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // horizon for this batch: max arrival − TTL (O3 scalar);
-            // AGE first — pending rows past the horizon migrate to the
-            // bulk index (horizon-bounded rewrite, skipped when nothing
-            // aged)
-            val cutoff = batch.agg(max(col("arrival"))).head().getTimestamp(0)
-              .getTime - ttlMs
-            tier.age(bid, cutoff)
-            // serve the batch against the BULK tier only — the recent
-            // window is tier A's job
-            val nb = graft.plans.Materialize.stage(
-              StreamNearDup.bandRelationWithTs(batch, "doc_id", "text",
-                "arrival"))
-            pairT.writeBatchIfAbsent(bid, StreamNearDup.hybridCandidates(
-              nb.drop("ts"), tier.bulk(), threshold = 0.5,
-              pruneKeyCap = StreamNearDup.adaptiveKeyCap(
-                tier.idxT.tableBytes)))
-            tier.writePending(bid, nb)
-            tier.maintain(bid)
-            pairT.maintain(bid)
-            ()
+            tierB.perBatch(batch, bid); ()
           }
           .option("checkpointLocation", s"$tmp/ckptB")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -751,7 +679,7 @@ object PipelineQueries {
         qb.awaitTermination()
         // tier A: the TTL'd stateful window over the same arrivals
         val name = s"stream_ndtt_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
-        val qa = StreamNearDup
+        val qa = graft.streaming.StreamNearDup
           .candidateStream(raw(), "doc_id", "text", threshold = 0.5,
             stateTtlMs = Some(ttlMs), eventTimeCol = Some("arrival"))(ss)
           .writeStream.format("memory").queryName(name)
@@ -760,7 +688,7 @@ object PipelineQueries {
           .start()
         qa.awaitTermination()
         val cands = ss.table(name)
-          .unionByName(pairT.read())
+          .unionByName(tierB.pairs.read())
           .distinct()
           .transform(graft.plans.Materialize.stage)
         graft.ingest.FileOps.deleteRecursively(tmp)

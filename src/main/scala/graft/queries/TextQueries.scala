@@ -2455,16 +2455,10 @@ object TextQueries {
       // operator's cadence, amortized across the batches between runs)
       bench = false),
 
-    // The STREAMING DEDUP PIPELINE end to end — the round's pieces
-    // composed into the production shape: per micro-batch, (1) the
-    // zero-state stored-index hybrid emits candidate pairs (pushed
-    // bucket-key IN filter, hot buckets capped), (2) candidates
-    // exact-verify against the LANDED corpus — endpoint texts come
-    // from a doc-id-InSet-pruned read of the text stage table plus the
-    // batch itself, never a corpus scan — and (3) verified pairs feed
-    // INCREMENTAL component maintenance (append-only labels +
-    // forwards). Stream state is EMPTY throughout; every relation the
-    // batch touches is bounded by the batch and its candidate fan-out.
+    // The STREAMING DEDUP PIPELINE end to end — the library body
+    // graft.streaming.DedupPipeline per micro-batch: stored-index
+    // hybrid serve → endpoint-pruned exact verify → INCREMENTAL
+    // component maintenance, with stream state EMPTY throughout.
     // Output: every document's final cluster label (singletons = own
     // id) — gated by the SAME from-scratch oracle as
     // q_neardup_components (all-pairs trigram-Jaccard verify +
@@ -2486,86 +2480,16 @@ object TextQueries {
         StreamFixtures.writeBatch(tmp, src, planted, "b",
           parts = 1, mtimeMs = 1000000060000L)
         val ss = StreamFixtures.childSession(s, 4)
-        import graft.streaming.StreamNearDup
-        val bandSchema = StreamNearDup.bandRelation(
-          Tables.load(ss, dir, "documents").limit(0),
-          "doc_id", "text").schema
-        // stored relations are LEVELED run tables (r15): per-batch
-        // writes land as atomic batch-id partitions (idempotent under
-        // replay) and the cadence pays O(new rows), not O(table)
-        val idxT = graft.streaming.LeveledIndex.create(
-          ss, "ddp_idx", s"$tmp/idx", bandSchema, "bh")
-        val txtT = graft.streaming.LeveledIndex.create(
-          ss, "ddp_txt", s"$tmp/txt", docs.schema, "doc_id")
-        def longField(n: String) = org.apache.spark.sql.types.StructField(
-          n, org.apache.spark.sql.types.LongType)
-        val labelsT = graft.streaming.LeveledIndex.create(
-          ss, "ddp_labels", s"$tmp/labels",
-          org.apache.spark.sql.types.StructType(
-            Seq(longField("doc_id"), longField("comp_id"))),
-          "doc_id")
-        val fwdT = graft.catalog.ParquetTable(
-          ss, "ddp_fwd", s"$tmp/fwd",
-          org.apache.spark.sql.types.StructType(
-            Seq(longField("old_root"), longField("new_root"))))
-          .createIfNotExists()
-        val raw = ss.readStream
+        // production maintenance cadence (every 8 batches — a 2-batch
+        // fixture never pays it)
+        val p = graft.streaming.DedupPipeline.create(ss, "ddp", tmp.toString)
+        val q = ss.readStream
           .schema(ss.read.parquet(src.toString).schema)
           .option("maxFilesPerTrigger", "8")
           .parquet(src.toString)
-        val q = raw.writeStream
+          .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val nb = graft.plans.Materialize.stage(
-              StreamNearDup.bandRelation(batch, "doc_id", "text"))
-            val cands = graft.plans.Materialize.stage(
-              StreamNearDup.hybridCandidates(nb, idxT.read(),
-                threshold = 0.5,
-                pruneKeyCap = StreamNearDup.adaptiveKeyCap(
-                  idxT.table.tableBytes)))
-            // endpoint texts: pruned stored read + the batch itself
-            // (batch docs land in the text table only AFTER verify)
-            val eps = graft.plans.Materialize.modelState(
-              cands.select(col("id_a").as("doc_id"))
-                .unionByName(cands.select(col("id_b").as("doc_id")))
-                .distinct(),
-              "dedup-pipeline candidate endpoints (batch × fan-out, " +
-                "hot-bucket-capped)", 1 << 20)
-            val texts =
-              (if (eps.isEmpty) txtT.read().filter(lit(false))
-               else txtT.read().filter(
-                 org.apache.spark.sql.graft.ColumnBridge.inSet("doc_id",
-                   eps.map(r => Long.box(r.getLong(0)): Any).toSet)))
-                .unionByName(batch.select(col("doc_id"), col("text")))
-            val verified = graft.plans.Materialize.stage(
-              graft.text.Dedup.verifyPairsJaccard(texts, "doc_id",
-                  "text", cands, threshold = 0.5)
-                .select(col("id_a"), col("id_b")))
-            val (nl, nf) = graft.plans.IncrementalComponents
-              .batchAppends(labelsT.read(), fwdT.read(), verified)
-            val (pl, pf) = (graft.plans.Materialize.stage(nl),
-              graft.plans.Materialize.stage(nf))
-            // labels are recomputed from stored state → skip-if-landed
-            // (a replay's recompute is empty; overwriting would delete
-            // the first attempt's rows — see writeBatchIfAbsent)
-            labelsT.writeBatchIfAbsent(bid, pl)
-            fwdT.append(pf)
-            txtT.writeBatch(bid, batch.select(col("doc_id"), col("text")))
-            idxT.writeBatch(bid, nb)
-            // production maintenance cadence (a 2-batch fixture never
-            // pays it), INCREMENTAL since r15: band/text runs fold
-            // through the size-tiered LeveledIndex merge (O(new rows)
-            // per cadence — the r14 full-table rewrite left cumulative
-            // maintenance quadratic, measured 3.0 → 6.9 s over 40
-            // batches), and the LABEL pair gets bounded semantic
-            // maintenance — the forwarding relation is CLOSED in place
-            // (O(merge churn); chains deepening was the original 2.9 →
-            // 5.4 s/batch growth) with the full label fold demoted to
-            // a size-triggered escape hatch
-            graft.streaming.IndexMaintenance.maintainComponents(
-              labelsT, fwdT, bid)
-            idxT.maintain(bid)
-            txtT.maintain(bid)
-            ()
+            p.perBatch(batch, bid); ()
           }
           .option("checkpointLocation", s"$tmp/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -2577,7 +2501,7 @@ object TextQueries {
           docsB.filter(col("doc_id") < 20)
             .select((col("doc_id") + 100000).as("doc_id")))
         val resolved = graft.plans.IncrementalComponents
-          .resolvedLabels(labelsT.read(), fwdT.read())
+          .resolvedLabels(p.labels.read(), p.fwd.read())
         val out = graft.plans.Materialize.stage(
           allIds.join(resolved, Seq("doc_id"), "left")
             .select(col("doc_id"),

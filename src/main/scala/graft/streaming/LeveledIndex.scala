@@ -81,10 +81,16 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
     * lands inside maintain AFTER that fold committed, the redelivered
     * batch's writeBatch would re-create the level-0 partition whose
     * rows already live in the fold — and the next cadence would merge
-    * them AGAIN. The fold's destination marker is the proof the rows
-    * landed: its partition embeds this very batch id, so a marker
-    * ≥ `bid` there means this batch's rows are in the level-1 run and
-    * the write must be skipped.
+    * them AGAIN. The fold's destination is the proof the rows landed:
+    * its partition embeds this very batch id and commits in one atomic
+    * swap, so its presence means this batch's rows are in the level-1
+    * run and the write must be skipped. Presence rather than the fold's
+    * marker, because the components fold of
+    * [[IndexMaintenance.maintainComponents]] rewrites a label table
+    * into that same run without one; a replay past it would otherwise
+    * land a level-0 run that the replayed maintenance folds OVER the
+    * folded labels. (Batch 0's fold destination would be the base
+    * run, which the guard below covers.)
     *
     * A second guard covers the CROSS-GENERATION replay (r15 review
     * finding): when the batch itself triggered a rebuild that
@@ -98,8 +104,7 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
   def writeBatch(bid: Long, df: DataFrame): Unit = {
     val foldDest = Seq("mig" -> LeveledIndex.migFor(1, bid).toString)
     val base = Seq("mig" -> LeveledIndex.migFor(1, 0L).toString)
-    if (!table.lastTxnInPartition(foldDest, LeveledIndex.FoldApp)
-          .exists(bid <= _) &&
+    if (!(foldDest != base && table.partitionExists(foldDest)) &&
         !table.lastTxnInPartition(base, LeveledIndex.BaseApp)
           .exists(bid <= _))
       table.overwritePartition(Seq("mig" -> bid.toString),

@@ -42,6 +42,22 @@ object StreamProbe {
       if (ops.isEmpty) 0L else ops.map(_.memoryUsedBytes).max)
   }
 
+  /** A file-source stream over `src` (`filesPerTrigger` files a
+    * micro-batch) through the per-batch `body`, to completion. */
+  private def drive(ss: SparkSession, src: java.nio.file.Path,
+                    filesPerTrigger: Int, ckpt: java.nio.file.Path)(
+      body: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ss.readStream
+      .schema(ss.read.parquet(src.toString).schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString)
+      .parquet(src.toString)
+      .writeStream
+      .foreachBatch(body)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+
   /** q_stream_neardup's machinery: LSH bucket state over the corpus
     * (batch 1, 8 files) + planted copies (batch 2). */
   def nearDup(s: SparkSession, dir: String): Probe = {
@@ -120,11 +136,12 @@ object StreamProbe {
     probe
   }
 
-  /** q_stream_neardup_hybrid's machinery: the band index in a stage
-    * table, candidates via per-batch bucket joins, stream state ZERO at
-    * every scale — the second bounded-state answer. Per arriving batch
-    * the cost is one broadcast-join scan of the stored index (the
-    * arriving side's bucket keys broadcast; the index never shuffles). */
+  /** q_stream_neardup_hybrid's body ([[graft.streaming.HybridNearDup]]):
+    * the band index in a leveled stage table, candidates via per-batch
+    * bucket joins, stream state ZERO at every scale — the second
+    * bounded-state answer. Per arriving batch the cost is one pruned
+    * read of the stored index (the arriving side's bucket keys pushed
+    * as an IN filter; the index never shuffles). */
   def nearDupHybrid(s: SparkSession, dir: String): Probe = {
     val tmp = Files.createTempDirectory("graft-sprobe-ndh")
     val src = Files.createDirectories(tmp.resolve("src"))
@@ -136,40 +153,16 @@ object StreamProbe {
     graft.queries.StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
     graft.queries.StreamFixtures.writeBatch(tmp, src, planted, "b", 1, 1000000060000L)
     val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    import graft.streaming.StreamNearDup
-    val bandSchema = StreamNearDup.bandRelation(
-      graft.Tables.load(ss, dir, "documents").limit(0), "doc_id", "text").schema
-    val idxTable = graft.catalog.ParquetTable(
-      ss, "sprobe_ndh_idx", s"$tmp/idx", bandSchema,
-      writeOptions = graft.catalog.ParquetTable.IndexWriteOptions)
-      .createIfNotExists()
-    val out = tmp.resolve("pairs").toString
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "8")
-      .parquet(src.toString)
+    val p = graft.streaming.HybridNearDup.create(ss, "sprobe_ndh", tmp.toString)
     val probe = withStream {
-      raw.writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val nb = graft.plans.Materialize.stage(
-            StreamNearDup.bandRelation(batch, "doc_id", "text"))
-          StreamNearDup.hybridCandidates(nb, idxTable.read(), threshold = 0.5,
-              pruneKeyCap = StreamNearDup.adaptiveKeyCap(idxTable.tableBytes))
-            .write.mode("append").parquet(out)
-          idxTable.append(nb.sortWithinPartitions("bh"))
-          // compact after the bulk batch only: the probe has two
-          // batches, and a production cadence amortizes the rewrite
-          if (bid == 0L) idxTable.compact(Seq("bh"))
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 8, tmp.resolve("ckpt")) { (b, bid) => p.perBatch(b, bid); () }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
     probe
   }
 
-  /** TWO-TIER composition (q_stream_neardup_twotier's machinery) under
+  /** TWO-TIER composition (q_stream_neardup_twotier's machinery, tier B
+    * through [[graft.streaming.TwoTierNearDup]]) under
     * the fixed-rate growth model: tier A = the TTL'd stateful window
     * (1.5 event-hours), tier B = pending→bulk aging + pruned stored-
     * index serves. The probe's claims: tier A's state stays BOUNDED by
@@ -209,41 +202,14 @@ object StreamProbe {
       parts = 1, mtimeMs = 1000000000000L + waves * 60000L)
     val ss = graft.queries.StreamFixtures.childSession(s, 8)
     import graft.streaming.StreamNearDup
-    val pendSchema = StreamNearDup.bandRelationWithTs(
-      graft.Tables.load(ss, dir, "documents").limit(0)
-        .select(col("doc_id"), col("text"),
-          lit(new java.sql.Timestamp(t0)).as("arrival")),
-      "doc_id", "text", "arrival").schema
-    val tier = graft.streaming.TieredIndex.create(
-      ss, "sprobe_ndtt", tmp.toString, pendSchema, sortKey = "bh")
-    val out = tmp.resolve("pairs").toString
+    val p = graft.streaming.TwoTierNearDup.create(ss, "sprobe_ndtt",
+      tmp.toString, ttlMs)
     def raw() = ss.readStream
       .schema(ss.read.parquet(src.toString).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(src.toString)
     val probeB = withStream {
-      raw().writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val cutoff = batch.agg(max(col("arrival"))).head()
-            .getTimestamp(0).getTime - ttlMs
-          // exactly-once aging via atomic partition overwrites (the
-          // entry's TieredIndex machinery); skipped when nothing aged
-          tier.age(bid, cutoff)
-          val nb = graft.plans.Materialize.stage(
-            StreamNearDup.bandRelationWithTs(batch, "doc_id", "text",
-              "arrival"))
-          StreamNearDup.hybridCandidates(nb.drop("ts"), tier.bulk(),
-              threshold = 0.5,
-              pruneKeyCap = StreamNearDup.adaptiveKeyCap(
-                tier.idxT.tableBytes))
-            .write.mode("append").parquet(out)
-          tier.writePending(bid, nb)
-          tier.maintain(bid)
-          ()
-        }
-        .option("checkpointLocation", tmp.resolve("ckptB").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 1, tmp.resolve("ckptB")) { (b, bid) => p.perBatch(b, bid); () }
     }
     val name = s"sprobe_ndtt_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
     val probeA = withStream {
@@ -256,7 +222,7 @@ object StreamProbe {
         .start()
     }
     val tierA = ss.table(name).select(col("id_a"), col("id_b"))
-    val tierB = ss.read.parquet(out).select(col("id_a"), col("id_b"))
+    val tierB = p.pairs.read()
     // recall counted against the EXACT planted set — (original id,
     // original id + offset) for the 10 wave-0 docs actually copied —
     // not any coincidental candidate pair whose id delta happens to
@@ -359,27 +325,19 @@ object StreamProbe {
       writeOptions = graft.catalog.ParquetTable.IndexWriteOptions)
       .createIfNotExists()
     val out = tmp.resolve("pairs").toString
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "8")
-      .parquet(src.toString)
     val probe = withStream {
-      raw.writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val nb = graft.plans.Materialize.stage(
-            StreamSeedGram.seedRelation(batch, "doc_id", "text",
-              w = 3, seedMod = 8,
-              gramFn = Some(graft.text.Dedup.portableGramHashes(_, 3))))
-          StreamSeedGram.hybridSeedPairs(nb, idxTable.read(), maxDf = 1000,
-              pruneKeyCap = graft.streaming.StreamNearDup
-                .adaptiveKeyCap(idxTable.tableBytes))
-            .write.mode("append").parquet(out)
-          idxTable.append(nb.sortWithinPartitions("h"))
-          if (bid == 0L) idxTable.compact(Seq("h"))
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 8, tmp.resolve("ckpt")) { (batch, bid) =>
+        val nb = graft.plans.Materialize.stage(
+          StreamSeedGram.seedRelation(batch, "doc_id", "text",
+            w = 3, seedMod = 8,
+            gramFn = Some(graft.text.Dedup.portableGramHashes(_, 3))))
+        StreamSeedGram.hybridSeedPairs(nb, idxTable.read(), maxDf = 1000,
+            pruneKeyCap = graft.streaming.StreamNearDup
+              .adaptiveKeyCap(idxTable.tableBytes))
+          .write.mode("append").parquet(out)
+        idxTable.append(nb.sortWithinPartitions("h"))
+        if (bid == 0L) idxTable.compact(Seq("h"))
+      }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
     probe
@@ -428,9 +386,10 @@ object StreamProbe {
     * footer/metadata reads grow with file count), and without cadence
     * compaction a long-running serve degrades even though every other
     * per-batch cost is batch-bounded. 40 single-file micro-batches
-    * (the corpus split into 40 waves) run the EXACT entry foreachBatch
-    * shape — sign, pruned serve, pair append, leveled batch-run write,
-    * [[graft.streaming.LeveledIndex.maintain]] every 8 — and
+    * (the corpus split into 40 waves) run the entry's library body
+    * ([[graft.streaming.HybridNearDup]]: sign, pruned serve,
+    * skip-if-landed pair run, leveled batch-run write,
+    * [[graft.streaming.LeveledIndex.maintain]] every 8) — and
     * the probe records per-batch serve seconds and the index's data-
     * file count after each batch. The claims under test: file count
     * stays BOUNDED (sawtooth, reset by each compaction — never
@@ -449,36 +408,14 @@ object StreamProbe {
         parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
     }
     val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    import graft.streaming.StreamNearDup
-    val bandSchema = StreamNearDup.bandRelation(
-      graft.Tables.load(ss, dir, "documents").limit(0), "doc_id", "text").schema
-    val idxTable = graft.streaming.LeveledIndex.create(
-      ss, "sprobe_ndhl_idx", s"$tmp/idx", bandSchema, "bh")
-    val out = tmp.resolve("pairs").toString
+    val p = graft.streaming.HybridNearDup.create(ss, "sprobe_ndhl", tmp.toString)
     val perBatch = scala.collection.mutable.ArrayBuffer[(Long, Double, Int)]()
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
     val probe = withStream {
-      raw.writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val t0 = System.nanoTime()
-          val nb = graft.plans.Materialize.stage(
-            StreamNearDup.bandRelation(batch, "doc_id", "text"))
-          StreamNearDup.hybridCandidates(nb, idxTable.read(), threshold = 0.5,
-              pruneKeyCap = StreamNearDup.adaptiveKeyCap(
-                idxTable.table.tableBytes))
-            .write.mode("append").parquet(out)
-          idxTable.writeBatch(bid, nb)
-          idxTable.maintain(bid)
-          perBatch += ((bid, (System.nanoTime() - t0) / 1e9,
-            idxTable.table.dataFileCount))
-          ()
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 1, tmp.resolve("ckpt")) { (b, bid) =>
+        val r = p.perBatch(b, bid)
+        perBatch += ((bid, r.serveSec + r.maintSec, p.idx.table.dataFileCount))
+        ()
+      }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
     val sorted = perBatch.sortBy(_._1)
@@ -550,26 +487,22 @@ object StreamProbe {
       .option("maxFilesPerTrigger", "1")
       .parquet(src.toString)
     val probeB = withStream {
-      raw().writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val cutoff = batch.agg(max(col("arrival"))).head()
-            .getTimestamp(0).getTime - ttlMs
-          tier.age(bid, cutoff)
-          val nb = graft.plans.Materialize.stage(
-            StreamSeedGram.seedRelationWithTs(batch, "doc_id", "text",
-              "arrival", w = 3, seedMod = 8, gramFn = gramFn))
-          StreamSeedGram.hybridSeedPairs(nb.drop("ts"), tier.bulk(),
-              maxDf = 1000,
-              pruneKeyCap = graft.streaming.StreamNearDup
-                .adaptiveKeyCap(tier.idxT.tableBytes))
-            .write.mode("append").parquet(out)
-          tier.writePending(bid, nb)
-          tier.maintain(bid)
-          ()
-        }
-        .option("checkpointLocation", tmp.resolve("ckptB").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 1, tmp.resolve("ckptB")) { (batch, bid) =>
+        val cutoff = batch.agg(max(col("arrival"))).head()
+          .getTimestamp(0).getTime - ttlMs
+        tier.age(bid, cutoff)
+        val nb = graft.plans.Materialize.stage(
+          StreamSeedGram.seedRelationWithTs(batch, "doc_id", "text",
+            "arrival", w = 3, seedMod = 8, gramFn = gramFn))
+        StreamSeedGram.hybridSeedPairs(nb.drop("ts"), tier.bulk(),
+            maxDf = 1000,
+            pruneKeyCap = graft.streaming.StreamNearDup
+              .adaptiveKeyCap(tier.idxT.tableBytes))
+          .write.mode("append").parquet(out)
+        tier.writePending(bid, nb)
+        tier.maintain(bid)
+        ()
+      }
     }
     val name = s"sprobe_sctt_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
     val probeA = withStream {
@@ -638,30 +571,22 @@ object StreamProbe {
       ss, "sprobe_schl_idx", s"$tmp/idx", seedSchema, "h")
     val out = tmp.resolve("pairs").toString
     val perBatch = scala.collection.mutable.ArrayBuffer[(Long, Double, Int)]()
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
     val probe = withStream {
-      raw.writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val t0 = System.nanoTime()
-          val nb = graft.plans.Materialize.stage(
-            StreamSeedGram.seedRelation(batch, "doc_id", "text",
-              w = 3, seedMod = 8, gramFn = gramFn))
-          StreamSeedGram.hybridSeedPairs(nb, idxTable.read(), maxDf = 1000,
-              pruneKeyCap = graft.streaming.StreamNearDup
-                .adaptiveKeyCap(idxTable.table.tableBytes))
-            .write.mode("append").parquet(out)
-          idxTable.writeBatch(bid, nb)
-          idxTable.maintain(bid)
-          perBatch += ((bid, (System.nanoTime() - t0) / 1e9,
-            idxTable.table.dataFileCount))
-          ()
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 1, tmp.resolve("ckpt")) { (batch, bid) =>
+        val t0 = System.nanoTime()
+        val nb = graft.plans.Materialize.stage(
+          StreamSeedGram.seedRelation(batch, "doc_id", "text",
+            w = 3, seedMod = 8, gramFn = gramFn))
+        StreamSeedGram.hybridSeedPairs(nb, idxTable.read(), maxDf = 1000,
+            pruneKeyCap = graft.streaming.StreamNearDup
+              .adaptiveKeyCap(idxTable.table.tableBytes))
+          .write.mode("append").parquet(out)
+        idxTable.writeBatch(bid, nb)
+        idxTable.maintain(bid)
+        perBatch += ((bid, (System.nanoTime() - t0) / 1e9,
+          idxTable.table.dataFileCount))
+        ()
+      }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
     val sorted = perBatch.sortBy(_._1)
@@ -675,7 +600,8 @@ object StreamProbe {
   }
 
   /** LONG-RUN behavior of the COMPOSED dedup pipeline
-    * (q_stream_dedup_pipeline's foreachBatch: pruned candidate serve →
+    * (q_stream_dedup_pipeline's body, [[graft.streaming.DedupPipeline]]:
+    * pruned candidate serve →
     * endpoint-pruned exact verify → incremental components, FOUR stage
     * tables of which three compact on the cadence): 40 single-file
     * micro-batches; claims: every compacted table's file count stays
@@ -693,106 +619,38 @@ object StreamProbe {
         parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
     }
     val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    import graft.streaming.StreamNearDup
-    val bandSchema = StreamNearDup.bandRelation(
-      graft.Tables.load(ss, dir, "documents").limit(0),
-      "doc_id", "text").schema
-    val idxT = graft.streaming.LeveledIndex.create(
-      ss, "sprobe_ddpl_idx", s"$tmp/idx", bandSchema, "bh")
-    val txtT = graft.streaming.LeveledIndex.create(
-      ss, "sprobe_ddpl_txt", s"$tmp/txt", docs.schema, "doc_id")
-    def longField(n: String) = org.apache.spark.sql.types.StructField(
-      n, org.apache.spark.sql.types.LongType)
-    val labelsT = graft.streaming.LeveledIndex.create(
-      ss, "sprobe_ddpl_labels", s"$tmp/labels",
-      org.apache.spark.sql.types.StructType(
-        Seq(longField("doc_id"), longField("comp_id"))),
-      "doc_id")
-    val fwdT = graft.catalog.ParquetTable(
-      ss, "sprobe_ddpl_fwd", s"$tmp/fwd",
-      org.apache.spark.sql.types.StructType(
-        Seq(longField("old_root"), longField("new_root"))))
-      .createIfNotExists()
+    val p = graft.streaming.DedupPipeline.create(ss, "sprobe_ddpl", tmp.toString)
     val perBatch = scala.collection.mutable
-      .ArrayBuffer[(Long, Double, Double, Int, Int, Int, Boolean)]()
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
+      .ArrayBuffer[(Long, graft.streaming.BatchReport, Int, Int, Int)]()
     val probe = withStream {
-      raw.writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val t0 = System.nanoTime()
-          val nb = graft.plans.Materialize.stage(
-            StreamNearDup.bandRelation(batch, "doc_id", "text"))
-          val cands = graft.plans.Materialize.stage(
-            StreamNearDup.hybridCandidates(nb, idxT.read(),
-              threshold = 0.5,
-              pruneKeyCap = StreamNearDup.adaptiveKeyCap(
-                idxT.table.tableBytes)))
-          val eps = graft.plans.Materialize.modelState(
-            cands.select(col("id_a").as("doc_id"))
-              .unionByName(cands.select(col("id_b").as("doc_id")))
-              .distinct(),
-            "dedup-pipeline candidate endpoints", 1 << 20)
-          val texts =
-            (if (eps.isEmpty) txtT.read().filter(lit(false))
-             else txtT.read().filter(
-               org.apache.spark.sql.graft.ColumnBridge.inSet("doc_id",
-                 eps.map(r => Long.box(r.getLong(0)): Any).toSet)))
-              .unionByName(batch.select(col("doc_id"), col("text")))
-          val verified = graft.plans.Materialize.stage(
-            graft.text.Dedup.verifyPairsJaccard(texts, "doc_id",
-                "text", cands, threshold = 0.5)
-              .select(col("id_a"), col("id_b")))
-          val (nl, nf) = graft.plans.IncrementalComponents
-            .batchAppends(labelsT.read(), fwdT.read(), verified)
-          val (pl, pf) = (graft.plans.Materialize.stage(nl),
-            graft.plans.Materialize.stage(nf))
-          labelsT.writeBatchIfAbsent(bid, pl)
-          fwdT.append(pf)
-          txtT.writeBatch(bid, batch.select(col("doc_id"), col("text")))
-          idxT.writeBatch(bid, nb)
-          // maintenance is timed APART from serving, per cadence: the
-          // r14 full-table rewrite grew 3.0 → 6.9 s over these 40
-          // batches; the leveled fold + in-place forwards closure must
-          // stay FLAT (O(new rows), with geometrically-rarer cascades)
-          val tm = System.nanoTime()
-          val maint = graft.streaming.IndexMaintenance.maintainComponents(
-            labelsT, fwdT, bid)
-          val tc = System.nanoTime()
-          idxT.maintain(bid)
-          txtT.maintain(bid)
-          val tl = System.nanoTime()
-          // the maintenance clock stops at tl — the diagnostic
-          // fwd-count below is its own Spark job and must not inflate
-          // the very series the flat-maintenance claim is read from
-          val maintSec = (tl - tm) / 1e9
-          if (maint) println(f"[ddpl-maint] bid=$bid comp=${(tc - tm) / 1e9}%.2f leveled=${(tl - tc) / 1e9}%.2f fwd_rows=${fwdT.read().count()}")
-          perBatch += ((bid, (System.nanoTime() - t0) / 1e9, maintSec,
-            idxT.table.dataFileCount, txtT.table.dataFileCount,
-            labelsT.table.dataFileCount, maint))
-          ()
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 1, tmp.resolve("ckpt")) { (b, bid) =>
+        // maintenance is timed APART from serving, per cadence: the
+        // r14 full-table rewrite grew 3.0 → 6.9 s over these 40
+        // batches; the leveled fold + in-place forwards closure must
+        // stay FLAT (O(new rows), with geometrically-rarer cascades)
+        val r = p.perBatch(b, bid)
+        // the diagnostic fwd-count is its own Spark job, read after the
+        // batch so it cannot inflate the maintenance series
+        if (r.maintained) println(f"[ddpl-maint] bid=$bid maint=${r.maintSec}%.2f fwd_rows=${p.fwd.read().count()}")
+        perBatch += ((bid, r, p.idx.table.dataFileCount,
+          p.txt.table.dataFileCount, p.labels.table.dataFileCount))
+        ()
+      }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
     val sorted = perBatch.sortBy(_._1)
     def mean(xs: Seq[Double]) = xs.sum / math.max(1, xs.size)
-    val serveOnly = sorted.filterNot(_._7)
-      .map(t => t._2 - t._3) // cadence-off batches: maint is ~0 anyway
+    val serveOnly = sorted.filterNot(_._2.maintained).map(_._2.serveSec)
     val first10 = mean(serveOnly.take(10).toSeq)
     val last10 = mean(serveOnly.takeRight(10).toSeq)
     // the FULL per-cadence maintenance series — the r15 claim is that
     // it is flat (first ≈ last), not just that its endpoints are
-    val maints = sorted.filter(_._7).map(_._3)
-    def fm(get: ((Long, Double, Double, Int, Int, Int, Boolean)) => Int) =
-      (sorted.map(get).max, sorted.last match { case t => get(t) })
-    val (idxMax, idxEnd) = fm(_._4)
-    val (txtMax, txtEnd) = fm(_._5)
-    val (labMax, labEnd) = fm(_._6)
+    val maints = sorted.filter(_._2.maintained).map(_._2.maintSec)
+    def fm(get: ((Long, graft.streaming.BatchReport, Int, Int, Int)) => Int) =
+      (sorted.map(get).max, get(sorted.last))
+    val (idxMax, idxEnd) = fm(_._3)
+    val (txtMax, txtEnd) = fm(_._4)
+    val (labMax, labEnd) = fm(_._5)
     val maintsJson = maints.map(m => f"$m%.3f").mkString("[", ",", "]")
     println(s"""{"pipeline":"stream_dedup_pipeline_longrun","batches":${sorted.size},"files_idx_max":$idxMax,"files_idx_end":$idxEnd,"files_txt_max":$txtMax,"files_txt_end":$txtEnd,"files_labels_max":$labMax,"files_labels_end":$labEnd,"serve_sec_first10":${f"$first10%.3f"},"serve_sec_last10":${f"$last10%.3f"},"maint_sec":$maintsJson,"maint_sec_first":${f"${maints.headOption.getOrElse(0.0)}%.3f"},"maint_sec_last":${f"${maints.lastOption.getOrElse(0.0)}%.3f"}}""")
     Probe(last10, 0L, 0L)
@@ -1247,19 +1105,11 @@ object StreamProbe {
       emb.filter(col("vec_id") % 2 === 1), "b", 4, 1000000060000L)
     val ss = graft.queries.StreamFixtures.childSession(s, 4)
     val out = tmp.resolve("assign").toString
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(src.toString)
     val probe = withStream {
-      raw.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.vector.Ann.ivfAssign(batch, "vec_id", "embedding", centroids)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      drive(ss, src, 4, tmp.resolve("ckpt")) { (batch, _) =>
+        graft.vector.Ann.ivfAssign(batch, "vec_id", "embedding", centroids)
+          .write.mode("append").parquet(out)
+      }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
     probe

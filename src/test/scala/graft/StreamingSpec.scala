@@ -727,27 +727,20 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stored-index hybrid: cross-batch dup found through the stage table, stream state EMPTY") {
-    // q_stream_neardup_hybrid's machinery at unit scale: the band index
-    // lives in a ParquetTable, each batch bucket-joins against it, and
-    // the streaming query carries NO stateful operator at all — the
-    // 100 TB answer to unbounded index state.
+    // q_stream_neardup_hybrid's library body at unit scale: the band
+    // index and the pair log live in leveled run tables, each batch
+    // bucket-joins against the stored index, and the streaming query
+    // carries NO stateful operator at all — the 100 TB answer to
+    // unbounded index state.
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamNearDup
     val input = MemoryStream[(Long, String)]
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     val tmp = java.nio.file.Files.createTempDirectory("graft-ndh-spec")
-    val bandSchema = StreamNearDup.bandRelation(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text").schema
-    val idx = graft.catalog.ParquetTable(
-      spark, "ndh_spec_idx", s"$tmp/idx", bandSchema).createIfNotExists()
-    val found = scala.collection.mutable.Set[(Long, Long)]()
+    val p = graft.streaming.HybridNearDup.create(spark, "ndh_spec", tmp.toString)
+    def found = p.pairs.read().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val q = input.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val nb = graft.plans.Materialize.stage(
-          StreamNearDup.bandRelation(batch, "doc_id", "text"))
-        found ++= StreamNearDup.hybridCandidates(nb, idx.read(), threshold = 0.7)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        idx.append(nb)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+        p.perBatch(batch, bid); ()
       }
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(Trigger.ProcessingTime("100 milliseconds")).start()
@@ -947,25 +940,28 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("composed dedup pipeline survives a mid-batch crash: restart lands on the from-scratch answer") {
-    // failure injection for q_stream_dedup_pipeline's foreachBatch —
-    // the composition claim the per-piece replay specs cannot make:
-    // the FOUR appends (labels, forwards, texts, band index) are not
-    // atomic as a group, so a crash between them leaves the stores
+    // failure injection for q_stream_dedup_pipeline's library body
+    // (graft.streaming.DedupPipeline, on its leveled tables) — the
+    // composition claim the per-piece replay specs cannot make: the
+    // FOUR writes (labels, forwards, texts, band index) are not atomic
+    // as a group, so a crash between them leaves the stores
     // inconsistent, and the restarted stream REDELIVERS the whole
-    // micro-batch. Exactly-once here is by ALGEBRA, not markers: label
-    // appends are derived from state-at-read (a redelivered endpoint
-    // is 'known' and appends nothing; an applied merge yields no root
-    // pair; a missing forward is re-detected), and the recall stores
-    // (texts, index) tolerate duplicate rows (duplicate candidates are
-    // distinct'd; duplicate gram sets scale intersection and union
-    // together, preserving every jaccard). Two injection points:
-    //  - between the forwards append and the text append (stores
-    //    inconsistent: labels+fwd landed, texts/index missing), and
-    //  - after ALL appends but before the checkpoint commit (the
-    //    duplicate-append case: replay re-appends texts and bands).
-    // Both restarts must land the final labels exactly on the
+    // micro-batch. Exactly-once here is by ALGEBRA plus the tables'
+    // replay rules: label appends are derived from state-at-read (a
+    // redelivered endpoint is 'known' and appends nothing; an applied
+    // merge yields no root pair; a missing forward is re-detected) and
+    // land skip-if-landed, and the recall stores (texts, index) land by
+    // batch-partition replacement. Three injection points, all on batch
+    // 1, which closes the tables' cadence (every = 2):
+    //  - between the forwards append and the text write (stores
+    //    inconsistent: labels+fwd landed, texts/index missing),
+    //  - after ALL writes but before maintenance and the checkpoint
+    //    commit (the duplicate-write case: replay re-writes texts and
+    //    bands), and
+    //  - after component maintenance committed (forwards closed, label
+    //    runs folded) but before the band/text folds.
+    // Every restart must land the final labels exactly on the
     // from-scratch batch answer.
-    import graft.streaming.StreamNearDup
     val docsLocal = ((0L until 30L).map(i =>
       (i, (0 until 12).map(t => s"w${i}x$t").mkString(" "))) ++
       (0L until 10L).map(i =>
@@ -976,91 +972,30 @@ class StreamingSpec extends AnyFunSuite {
     val expected = graft.text.Dedup
       .nearDupComponents(docsLocal, "doc_id", "text", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (crashPoint <- Seq("between-appends", "after-appends")) {
+    for (crashPoint <- Seq("between-appends", "after-appends", "after-components")) {
       val tmp = java.nio.file.Files.createTempDirectory(s"graft-ddp-fi")
       val src = java.nio.file.Files.createDirectories(tmp.resolve("src"))
-      def writeOne(df: org.apache.spark.sql.DataFrame, name: String,
-                   mtime: Long): Unit = {
-        val stage = tmp.resolve(s"stage_$name")
-        df.coalesce(1).write.parquet(stage.toString)
-        val part = graft.ingest.FileOps.listDir(stage)
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = src.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(mtime))
-      }
-      writeOne(originals, "a", 1000000000000L)
-      writeOne(planted, "b", 1000000060000L)
+      graft.queries.StreamFixtures.writeBatch(tmp, src, originals, "a",
+        parts = 1, mtimeMs = 1000000000000L)
+      graft.queries.StreamFixtures.writeBatch(tmp, src, planted, "b",
+        parts = 1, mtimeMs = 1000000060000L)
       val ss = graft.queries.StreamFixtures.childSession(spark, 4)
-      val bandSchema = StreamNearDup.bandRelation(
-        docsLocal.limit(0), "doc_id", "text").schema
-      def longField(n: String) = org.apache.spark.sql.types.StructField(
-        n, org.apache.spark.sql.types.LongType)
-      val idxT = graft.catalog.ParquetTable(ss, "fi_idx", s"$tmp/idx",
-        bandSchema,
-        writeOptions = graft.catalog.ParquetTable.IndexWriteOptions)
-        .createIfNotExists()
-      val txtT = graft.catalog.ParquetTable(ss, "fi_txt", s"$tmp/txt",
-        org.apache.spark.sql.types.StructType(
-          Seq(longField("doc_id"),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))),
-        writeOptions = graft.catalog.ParquetTable.IndexWriteOptions)
-        .createIfNotExists()
-      val labelsT = graft.catalog.ParquetTable(ss, "fi_labels",
-        s"$tmp/labels", org.apache.spark.sql.types.StructType(
-          Seq(longField("doc_id"), longField("comp_id"))),
-        writeOptions = graft.catalog.ParquetTable.IndexWriteOptions)
-        .createIfNotExists()
-      val fwdT = graft.catalog.ParquetTable(ss, "fi_fwd", s"$tmp/fwd",
-        org.apache.spark.sql.types.StructType(
-          Seq(longField("old_root"), longField("new_root"))))
-        .createIfNotExists()
+      val p = graft.streaming.DedupPipeline.create(ss, "fi", tmp.toString,
+        every = 2)
       val injected = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def body(inject: Boolean)(batch: org.apache.spark.sql.DataFrame,
-                                bid: Long): Unit = {
-        val nb = graft.plans.Materialize.stage(
-          StreamNearDup.bandRelation(batch, "doc_id", "text"))
-        val cands = graft.plans.Materialize.stage(
-          StreamNearDup.hybridCandidates(nb, idxT.read(), threshold = 0.5))
-        val eps = graft.plans.Materialize.modelState(
-          cands.select(col("id_a").as("doc_id"))
-            .unionByName(cands.select(col("id_b").as("doc_id"))).distinct(),
-          "failure-injection endpoints", 1 << 20)
-        val texts =
-          (if (eps.isEmpty) txtT.read().filter(lit(false))
-           else txtT.read().filter(
-             org.apache.spark.sql.graft.ColumnBridge.inSet("doc_id",
-               eps.map(r => Long.box(r.getLong(0)): Any).toSet)))
-            .unionByName(batch.select(col("doc_id"), col("text")))
-        val verified = graft.plans.Materialize.stage(
-          graft.text.Dedup.verifyPairsJaccard(texts, "doc_id", "text",
-              cands, threshold = 0.5)
-            .select(col("id_a"), col("id_b")))
-        val (nl, nf) = graft.plans.IncrementalComponents
-          .batchAppends(labelsT.read(), fwdT.read(), verified)
-        val (pl, pf) = (graft.plans.Materialize.stage(nl),
-          graft.plans.Materialize.stage(nf))
-        labelsT.append(pl.sortWithinPartitions("doc_id"))
-        fwdT.append(pf)
-        if (inject && crashPoint == "between-appends" && bid == 1L &&
-            !injected.getAndSet(true))
-          throw new RuntimeException("injected crash between appends")
-        txtT.append(batch.select(col("doc_id"), col("text"))
-          .sortWithinPartitions("doc_id"))
-        idxT.append(nb.sortWithinPartitions("bh"))
-        if (inject && crashPoint == "after-appends" && bid == 1L &&
-            !injected.getAndSet(true))
-          throw new RuntimeException("injected crash after all appends")
-      }
       def run(inject: Boolean): Unit = {
         val q = ss.readStream
           .schema(ss.read.parquet(src.toString).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(src.toString)
           .writeStream
-          .foreachBatch(body(inject) _)
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+            p.perBatch(batch, bid, point =>
+              if (inject && point == crashPoint && bid == 1L &&
+                  !injected.getAndSet(true))
+                throw new RuntimeException(s"injected crash at $point"))
+            ()
+          }
           .option("checkpointLocation", s"$tmp/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
@@ -1074,11 +1009,11 @@ class StreamingSpec extends AnyFunSuite {
       // restart from the checkpoint: batch 1 is redelivered whole
       run(inject = false)
       // the label algebra must not have double-applied anything
-      val labelRows = labelsT.read().collect()
+      val labelRows = p.labels.read().collect()
       assert(labelRows.map(_.getLong(0)).distinct.length == labelRows.length,
         s"[$crashPoint] duplicate label rows after replay")
       val resolved = graft.plans.IncrementalComponents
-        .resolvedLabels(labelsT.read(), fwdT.read())
+        .resolvedLabels(p.labels.read(), p.fwd.read())
       val allIds = docsLocal.select(col("doc_id"))
       val got = allIds.join(resolved, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1219,44 +1154,67 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a cadence batch replayed after the components fold keeps every label") {
+    // the size-triggered fold of IndexMaintenance.maintainComponents
+    // rewrites the whole label table into the level-1 run keyed by the
+    // cadence batch; a crash after it (the dedup pipeline's
+    // "after-components" seam) replays the batch, whose labels,
+    // recomputed against the stored state, are empty. That replayed
+    // write must not land a level-0 run the replayed maintenance would
+    // fold OVER the folded labels.
+    import graft.streaming.{IndexMaintenance, LeveledIndex}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fold-replay")
+    def longs(names: String*) = StructType(names.map(StructField(_, LongType)))
+    val labels = LeveledIndex.create(spark, "fold_replay_labels", s"$tmp/labels",
+      longs("doc_id", "comp_id"), "doc_id", every = 2)
+    val fwd = graft.catalog.ParquetTable(spark, "fold_replay_fwd", s"$tmp/fwd",
+      longs("old_root", "new_root")).createIfNotExists()
+    // one file per write, so the forwards outgrow the fold trigger
+    // (a quarter of the label bytes)
+    labels.writeBatch(0L, Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L)).toDF("doc_id", "comp_id")
+      .coalesce(1))
+    // batch 1 merges the two components through a new node 3
+    def batch1(newLabels: Seq[(Long, Long)], newFwd: Seq[(Long, Long)]): Boolean = {
+      labels.writeBatchIfAbsent(1L, newLabels.toDF("doc_id", "comp_id").coalesce(1))
+      fwd.append(newFwd.toDF("old_root", "new_root").coalesce(1))
+      IndexMaintenance.maintainComponents(labels, fwd, 1L)
+    }
+    def resolved() = graft.plans.IncrementalComponents
+      .resolvedLabels(labels.read(), fwd.read()).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(batch1(Seq((3L, 1L)), Seq((5L, 1L))))
+    assert(fwd.read().isEmpty, "the size-triggered fold did not fire")
+    val folded = resolved()
+    assert(folded == Set((1L, 1L), (2L, 1L), (3L, 1L), (5L, 1L), (6L, 1L)), folded)
+    // the replay: nothing new to append
+    batch1(Nil, Nil)
+    assert(resolved() == folded, s"replay lost labels: ${resolved()}")
+    graft.ingest.FileOps.deleteRecursively(tmp)
+  }
+
   test("one batch of the dedup body runs a bounded number of Spark jobs") {
-    // the per-batch body of the dedup pipeline (band, serve, endpoint
-    // fetch, verify, component appends) against stored tables; its
-    // batch-sized steps run on the driver, so a chain of single-task
-    // jobs per step (~48 a batch before) must not grow back unnoticed
+    // the batch-sized steps of the dedup pipeline's library body (band,
+    // serve, endpoint fetch, verify, component appends) against stored
+    // tables; they run on the driver, so a chain of single-task jobs
+    // per step (~48 a batch before) must not grow back unnoticed
     import graft.streaming.StreamNearDup
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-jobs")
     // twelve words of its own per document; a tail word makes a
     // near-duplicate (10 of 11 trigrams shared)
     def text(i: Int, tail: String = "") = (0 until 12).map(j => s"t${i}w$j").mkString(" ") + tail
     val base = (1 to 12).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
-    def table(name: String, schema: StructType) = graft.catalog.ParquetTable(spark,
-      s"jobs_$name", s"$tmp/$name", schema,
-      writeOptions = graft.catalog.ParquetTable.IndexWriteOptions).createIfNotExists()
-    val idx = table("idx", StreamNearDup.bandRelation(base, "doc_id", "text").schema)
-    val txt = table("txt", StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
-    val labels = table("labels", StructType(Seq(StructField("doc_id", LongType), StructField("comp_id", LongType))))
-    val fwd = table("fwd", StructType(Seq(StructField("old_root", LongType), StructField("new_root", LongType))))
-    idx.append(StreamNearDup.bandRelation(base, "doc_id", "text").sortWithinPartitions("bh"))
-    txt.append(base)
-    labels.append(Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L)).toDF("doc_id", "comp_id"))
-    fwd.append(Seq((2L, 1L)).toDF("old_root", "new_root"))
+    val p = graft.streaming.DedupPipeline.create(spark, "jobs", tmp.toString)
+    p.idx.writeBase(StreamNearDup.bandRelation(base, "doc_id", "text"))
+    p.txt.writeBase(base)
+    p.labels.writeBase(Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L)).toDF("doc_id", "comp_id"))
+    p.fwd.append(Seq((2L, 1L)).toDF("old_root", "new_root"))
     val batch = Seq((101L, text(1, " x")), (102L, text(5, " y")), (103L, text(6, " z")),
       (104L, text(40))).toDF("doc_id", "text")
     var appended = 0L
     val jobs = TestSpark.jobsDuring(spark) {
-      val nb = graft.plans.Materialize.stage(StreamNearDup.bandRelation(batch, "doc_id", "text"))
-      val cands = graft.plans.Materialize.stage(StreamNearDup.hybridCandidates(nb, idx.read(),
-        threshold = 0.5, pruneKeyCap = StreamNearDup.adaptiveKeyCap(idx.tableBytes)))
-      val eps = graft.plans.Materialize.modelState(cands.select(col("id_a").as("doc_id"))
-        .unionByName(cands.select(col("id_b").as("doc_id"))).distinct(), "endpoints")
-      val texts = txt.read().filter(org.apache.spark.sql.graft.ColumnBridge.inSet("doc_id",
-        eps.map(r => Long.box(r.getLong(0)): Any).toSet)).unionByName(batch)
-      val verified = graft.plans.Materialize.stage(graft.text.Dedup.verifyPairsJaccard(texts,
-        "doc_id", "text", cands, threshold = 0.5).select(col("id_a"), col("id_b")))
-      val (nl, nf) = graft.plans.IncrementalComponents.batchAppends(labels.read(), fwd.read(), verified)
-      appended = graft.plans.Materialize.stage(nl).count() + graft.plans.Materialize.stage(nf).count()
+      val (_, nl, nf) = p.batchSteps(batch)
+      appended = nl.count() + nf.count()
     }
     // the batch's three near-duplicates each land one label row
     assert(appended == 3, s"appended $appended rows")
@@ -1473,7 +1431,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("two-tier late arrivals: dropped by tier A's watermark, served against the bulk tier, migrated next batch, findable ever after") {
     // END-TO-END late-arrival semantics of the q_stream_neardup_twotier
-    // composition — the r13 verdict's open question. A row arriving
+    // composition (tier B through its library body) — the r13 verdict's open question. A row arriving
     // with an event time already BEHIND the horizon:
     //  (a) is DROPPED by tier A (0 ms-slack watermark — consistent
     //      with candidateStream's documented stance), so it pairs with
@@ -1489,7 +1447,7 @@ class StreamingSpec extends AnyFunSuite {
     //      original it missed is still paired by tier A for those
     //      future arrivals. Net: only the (late row ↔ recent window)
     //      pairs are traded away, exactly once, never silently growing.
-    import graft.streaming.{StreamNearDup, TieredIndex}
+    import graft.streaming.StreamNearDup
     val tmp = java.nio.file.Files.createTempDirectory("graft-ndtt-late")
     val src = java.nio.file.Files.createDirectories(tmp.resolve("src"))
     val t0 = 1700000000000L
@@ -1521,24 +1479,11 @@ class StreamingSpec extends AnyFunSuite {
       .schema(ss.read.parquet(src.toString).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(src.toString)
-    val rowSchema = StreamNearDup.bandRelationWithTs(
-      docs(Seq(1L -> xText), t0).limit(0), "doc_id", "text", "arrival").schema
-    val tier = TieredIndex.create(ss, "ndtt_late", tmp.toString,
-      rowSchema, sortKey = "bh")
-    val out = tmp.resolve("pairs").toString
+    val p = graft.streaming.TwoTierNearDup.create(ss, "ndtt_late",
+      tmp.toString, ttlMs)
     val qb = raw().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        val cutoff = batch.agg(max(col("arrival"))).head()
-          .getTimestamp(0).getTime - ttlMs
-        tier.age(bid, cutoff)
-        val nb = graft.plans.Materialize.stage(
-          StreamNearDup.bandRelationWithTs(batch, "doc_id", "text", "arrival"))
-        StreamNearDup.hybridCandidates(nb.drop("ts"), tier.bulk(),
-            threshold = 0.5)
-          .write.mode("append").parquet(out)
-        tier.writePending(bid, nb)
-        tier.maintain(bid)
-        ()
+        p.perBatch(batch, bid); ()
       }
       .option("checkpointLocation", s"$tmp/ckptB")
       .trigger(Trigger.AvailableNow()).start()
@@ -1553,7 +1498,7 @@ class StreamingSpec extends AnyFunSuite {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select(col("id_a"), col("id_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val tierB = pairSet(ss.read.parquet(out))
+    val tierB = pairSet(p.pairs.read())
     val tierA = pairSet(ss.table("ndtt_late_a"))
     // (b) late dup of the AGED original found through tier B on arrival
     assert(tierB.contains((1L, 11L)), s"tierB=$tierB")
@@ -1564,7 +1509,7 @@ class StreamingSpec extends AnyFunSuite {
       s"late-vs-recent pair should be the documented miss: A=$tierA B=$tierB")
     // (c) the late row MIGRATED on the next batch's aging (it is in the
     // bulk index) and a FUTURE dup finds it through tier B...
-    assert(tier.bulk().filter(col("doc_id") === 12L).count() > 0,
+    assert(p.tier.bulk().filter(col("doc_id") === 12L).count() > 0,
       "late row did not migrate into the bulk index")
     assert(tierB.contains((12L, 13L)), s"tierB=$tierB")
     // ...while tier A still pairs that future dup with the in-window

@@ -10,9 +10,16 @@ all columns. Not part of the library (driver-side tooling only).
 """
 import json
 import math
+import os
 import sys
+import tempfile
 
 import duckdb
+
+# DuckDB's default limit is 80 % of physical memory, which the wider
+# oracles (q_pca_power's covariance self-join) fill; a capped limit
+# with a spill directory makes them spill to disk instead.
+MEMORY_LIMIT = "4GB"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -38,6 +45,9 @@ def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
+    con.execute("SET temp_directory = '%s'"
+                % os.path.join(tempfile.gettempdir(), "graft-check-duckdb"))
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
