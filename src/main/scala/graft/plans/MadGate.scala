@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * median cumulation, the deviation re-histogram, the MAD cumulation
   * and the gate each planned their own exchanges over an enum-sized
   * relation. Under a row cap the tail instead collects the histogram
-  * once (Materialize.modelState — bounded, named) and replays the
+  * once ([[DriverFetch]] — bounded in rows and bytes) and replays the
   * exact integer arithmetic on the driver, returning a LocalRelation
   * (the driverComponents / waterfill pattern, guide §1.2: per-round
   * scheduler overhead dwarfs enum-sized compute). Everything is exact
@@ -46,12 +46,11 @@ object MadGate {
       fields(1).name == "len" && fields(1).dataType == LongType &&
       fields(2).name == "cnt" && fields(2).dataType == LongType
     if (!onContract) return gateDistributed(h)
-    val rows = Materialize.modelState(h.limit(maxDriverRows + 1),
-      "mad-gate length histogram (pre-limited to cap + 1)",
-      maxDriverRows + 1)
-    if (rows.length > maxDriverRows) gateDistributed(h)
-    else gateDriver(h.sparkSession,
-      rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
+    DriverFetch("mad-gate length histogram", Seq(h), maxDriverRows) match {
+      case Some(Seq(rows)) => gateDriver(h.sparkSession,
+        rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
+      case _ => gateDistributed(h)
+    }
   }
 
   /** The original distributed tail, kept verbatim as the over-cap /

@@ -29,7 +29,7 @@ object PageRank {
 
   /** Bounded DRIVER fast path (the [[graft.text.Dedup.driverComponents]]
     * pattern): under `maxDriverEdges` the fixed-iteration recurrence
-    * runs as one CollectLimit + a driver loop over hash maps and
+    * runs as one [[DriverFetch]] + a driver loop over hash maps and
     * returns a LocalRelation — replacing ~18 single-task jobs per
     * iteration (stage pin, dangling broadcast, contribution join
     * stages) of pure scheduling overhead on a small graph. The ranks
@@ -38,7 +38,7 @@ object PageRank {
     * so the driver loop reproduces the distributed result bit for bit
     * (PageRankSpec pins equality on random graphs, both variants, and
     * the above-cap fallback). Cap: O((|E|+|V|)·iterations) driver work,
-    * ≤ ~16 MiB collected at the model-state-aligned 2²⁰ bound. Long
+    * ~24 MiB fetched at the 2²⁰ bound, under the fetch's byte cap. Long
     * ids only; other types fall through. */
   private def driverRanks(edges: DataFrame, iterations: Int,
                           dangling: Boolean,
@@ -48,10 +48,9 @@ object PageRank {
     val longIds = Seq("src", "dst").forall(c =>
       byName.get(c).contains(org.apache.spark.sql.types.LongType))
     if (maxDriverEdges <= 0 || !longIds) return None
-    val rows = Materialize.modelState(
-      edges.select(col("src"), col("dst")).limit(maxDriverEdges + 1),
-      "pagerank edges (pre-limited to cap + 1)", maxDriverEdges + 1)
-    if (rows.length > maxDriverEdges) return None
+    val Seq(rows) = DriverFetch("pagerank edges",
+      Seq(edges.select(col("src"), col("dst"))), maxDriverEdges)
+      .getOrElse(return None)
     val e = new scala.collection.mutable.HashSet[(Long, Long)]
     rows.foreach(r => e += ((r.getLong(0), r.getLong(1))))
     val nodes = new scala.collection.mutable.LinkedHashSet[Long]

@@ -44,7 +44,7 @@ object Triangles {
 
   /** Bounded DRIVER fast path (the [[graft.text.Dedup.driverComponents]]
     * pattern applied to this kernel): under `maxDriverEdges` the whole
-    * count runs as one CollectLimit + a driver wedge walk and returns a
+    * count runs as one [[DriverFetch]] + a driver wedge walk and returns a
     * LocalRelation — replacing the 5-relation distributed chain (2
     * stage pins, a wedge self-join, ~20 single-task jobs of pure
     * overhead on a small graph). The cap is set by driver CPU, not
@@ -53,7 +53,7 @@ object Triangles {
     * BREAKEVEN with the distributed kernel at ~72k edges (1.59 s both
     * ways at sf0.1), so the cap sits at 2¹⁶ where the single-core walk
     * (≈17M probes) still clearly beats ~20 single-task jobs; the
-    * collected edges are ~1 MiB, far under the model-state bound.
+    * fetched edges are ~1.5 MiB, far under the fetch's byte cap.
     * Counts are exact integers from the
     * same degree-ordered orientation, so the labels are identical by
     * construction (PlanOpsSpec pins driver ≡ distributed on random
@@ -66,10 +66,9 @@ object Triangles {
     val longIds = Seq("a", "b").forall(c =>
       byName.get(c).contains(org.apache.spark.sql.types.LongType))
     if (maxDriverEdges <= 0 || !longIds) return None
-    val rows = Materialize.modelState(
-      edges.select(col("a"), col("b")).limit(maxDriverEdges + 1),
-      "triangle edges (pre-limited to cap + 1)", maxDriverEdges + 1)
-    if (rows.length > maxDriverEdges) return None
+    val Seq(rows) = DriverFetch("triangle edges",
+      Seq(edges.select(col("a"), col("b"))), maxDriverEdges)
+      .getOrElse(return None)
     val canon = new scala.collection.mutable.HashSet[(Long, Long)]
     rows.foreach { r =>
       val (a, b) = (r.getLong(0), r.getLong(1))

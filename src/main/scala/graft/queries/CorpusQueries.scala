@@ -1222,19 +1222,11 @@ object CorpusQueries {
           ss, "cls_scores", s"$tmp/scores",
           graft.text.Classifier.scoreWith(arriving.limit(0), "doc_id",
             "text", model, buckets = 4096).schema)
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            scoresTable.append(graft.text.Classifier.scoreWith(
-              batch, "doc_id", "text", modelTable.read(), buckets = 4096))
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 1),
+            s"$tmp/ckpt") { (batch, _) =>
+          scoresTable.append(graft.text.Classifier.scoreWith(
+            batch, "doc_id", "text", modelTable.read(), buckets = 4096))
+        }
         scoresTable.read()
           .select(col("id").as("doc_id"), col("mq"), col("n_tok"),
             round(lit(1.0) / (lit(1.0) + exp(-(col("mq").cast("double")
@@ -2783,18 +2775,10 @@ object CorpusQueries {
         val ss = graft.queries.StreamFixtures.childSession(s, 4)
         val resTable = graft.catalog.ParquetTable(
           ss, "drift_res", s"$tmp/res", score(arriving.limit(0)).schema)
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            resTable.append(score(batch))
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 1),
+            s"$tmp/ckpt") { (batch, _) =>
+          resTable.append(score(batch))
+        }
         val out = graft.plans.Materialize.stage(
           resTable.read().orderBy(col("wave")))
         graft.ingest.FileOps.deleteRecursively(tmp)

@@ -441,10 +441,7 @@ object PipelineQueries {
         StreamFixtures.writeBatch(tmp, src, planted, "b",
           parts = 1, mtimeMs = 1000000060000L)
         val ss = StreamFixtures.childSession(s, 4)
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "8")
-          .parquet(src.toString)
+        val raw = StreamFixtures.fileStream(ss, src, 8)
         val name = s"stream_nd_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
         val q = graft.streaming.StreamNearDup
           .candidateStream(raw, "doc_id", "text", threshold = 0.5)(ss)
@@ -511,18 +508,8 @@ object PipelineQueries {
         // byte-identity across it and the long-run StreamProbe row
         // measures bounded files + flat serve AND flat maintenance)
         val p = graft.streaming.HybridNearDup.create(ss, "ndh", tmp.toString)
-        val q = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "8")
-          .parquet(src.toString)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            p.perBatch(batch, bid); ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 8),
+          s"$tmp/ckpt")(p.perBatch(_, _))
         val cands = p.pairs.read().distinct()
           .transform(graft.plans.Materialize.stage)
         graft.ingest.FileOps.deleteRecursively(tmp)
@@ -566,10 +553,7 @@ object PipelineQueries {
           planted.select(col("doc_id"), col("text"), at(t0 + 3600000L)), "b",
           parts = 1, mtimeMs = 1000000060000L)
         val ss = StreamFixtures.childSession(s, 4)
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "8")
-          .parquet(src.toString)
+        val raw = StreamFixtures.fileStream(ss, src, 8)
         val name = s"stream_ndttl_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
         val q = graft.streaming.StreamNearDup
           .candidateStream(raw, "doc_id", "text", threshold = 0.5,
@@ -656,10 +640,7 @@ object PipelineQueries {
           dups(10, 20).select(col("doc_id"), col("text"), at(t0 + 10800000L)),
           "c", parts = 1, mtimeMs = 1000000180000L)
         val ss = StreamFixtures.childSession(s, 4)
-        def raw() = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
+        def raw() = StreamFixtures.fileStream(ss, src, 1)
         // tier B (graft.streaming.TwoTierNearDup): pending (band rows
         // still inside the horizon) + bulk index (aged-out rows),
         // glued by TieredIndex's EXACTLY-ONCE aging — a crash anywhere
@@ -669,14 +650,8 @@ object PipelineQueries {
         // a skip-if-landed pair log
         val tierB = graft.streaming.TwoTierNearDup.create(ss, "ndtt",
           tmp.toString, ttlMs)
-        val qb = raw().writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            tierB.perBatch(batch, bid); ()
-          }
-          .option("checkpointLocation", s"$tmp/ckptB")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        qb.awaitTermination()
+        StreamFixtures.runBatches(raw(),
+          s"$tmp/ckptB")(tierB.perBatch(_, _))
         // tier A: the TTL'd stateful window over the same arrivals
         val name = s"stream_ndtt_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
         val qa = graft.streaming.StreamNearDup
@@ -747,10 +722,7 @@ object PipelineQueries {
         StreamFixtures.writeBatch(tmp, src, buried(docs), "b",
           parts = 1, mtimeMs = 1000000060000L)
         val ss = StreamFixtures.childSession(s, 8)
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "8")
-          .parquet(src.toString)
+        val raw = StreamFixtures.fileStream(ss, src, 8)
         val name = s"stream_sc_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
         val q = graft.streaming.StreamSeedGram
           .seedPairStream(raw, "doc_id", "text", w = 3, seedMod = 8,
@@ -784,9 +756,9 @@ object PipelineQueries {
       Some(streamContainmentOracleSql)),
 
     // The ZERO-STATE hybrid of q_stream_containment — the
-    // q_stream_neardup_hybrid pattern applied to the containment
-    // family's posting index: seed publications land in a ParquetTable
-    // stage table, each micro-batch joins its own (batch-broadcast)
+    // q_stream_neardup_hybrid body over the containment family's
+    // posting index: seed publications land in a leveled run table,
+    // each micro-batch joins its own (batch-broadcast)
     // seed hashes against the STORED postings (new-vs-bulk) and itself
     // (new-vs-new), emits one row per shared seed, and appends its
     // publications — no flatMapGroupsWithState anywhere, state EMPTY
@@ -812,51 +784,12 @@ object PipelineQueries {
         StreamFixtures.writeBatch(tmp, src, buried(docs), "b",
           parts = 1, mtimeMs = 1000000060000L)
         val ss = StreamFixtures.childSession(s, 8)
-        import graft.streaming.StreamSeedGram
-        val seedSchema = StreamSeedGram.seedRelation(
-          graft.Tables.load(ss, dir, "documents").limit(0),
-          "doc_id", "text").schema
-        // leveled run tables (r15): atomic per-batch partition swaps
-        // (replay-idempotent pair log) + O(new rows) cadence merges
-        val idxTable = graft.streaming.LeveledIndex.create(
-          ss, "sch_idx", s"$tmp/idx", seedSchema, "h")
-        val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("id_b",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.LongType)))
-        val pairTable = graft.streaming.LeveledIndex.create(
-          ss, "sch_pairs", s"$tmp/pairs", pairSchema, "id_a")
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "8")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val nb = graft.plans.Materialize.stage(
-              StreamSeedGram.seedRelation(batch, "doc_id", "text",
-                w = 3, seedMod = 8,
-                gramFn = Some(graft.text.Dedup.portableGramHashes(_, 3))))
-            // pairs are served against the STORED index → skip-if-
-            // landed (see q_stream_neardup_hybrid)
-            pairTable.writeBatchIfAbsent(bid, StreamSeedGram.hybridSeedPairs(
-              nb, idxTable.read(), maxDf = 1000,
-              pruneKeyCap = graft.streaming.StreamNearDup.adaptiveKeyCap(
-                idxTable.table.tableBytes)))
-            // h-sorted runs: the layout the pushed seed-key IN filter
-            // prunes against; cadence merges as above
-            idxTable.writeBatch(bid, nb)
-            idxTable.maintain(bid)
-            pairTable.maintain(bid)
-            ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val cands = pairTable.read()
+        // the library body (graft.streaming.HybridNearDup over seed-gram
+        // postings): leveled posting index, skip-if-landed pair log
+        val p = graft.streaming.HybridNearDup.containment(ss, "sch", tmp.toString)
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 8),
+          s"$tmp/ckpt")(p.perBatch(_, _))
+        val cands = p.pairs.read()
           .groupBy(col("id_a"), col("id_b"))
           // DISTINCT seeds, not rows: idempotent under batch replay
           .agg(countDistinct(col("h")).as("shared"))
@@ -882,7 +815,8 @@ object PipelineQueries {
     // in-memory recent window (tier A — StreamSeedGram.seedPairStreamTtl,
     // bounded state, emits one (pair, h) row per shared seed) plus the
     // stored h-sorted bulk posting index for everything older (tier B —
-    // hybridSeedPairs, zero stream state), glued by TieredIndex's
+    // the two-tier library body over seed grams, zero stream state),
+    // glued by TieredIndex's
     // EXACTLY-ONCE aging (mig-partitioned atomic overwrites — the same
     // machinery, crash-spec'd once, reused). Candidates = tier A ∪
     // tier B with the min-shared-seeds rule counting DISTINCT seeds
@@ -929,56 +863,20 @@ object PipelineQueries {
           buried(docs, 5, 10).select(col("doc_id"), col("text"),
             at(t0 + 10800000L)), "c", parts = 1, mtimeMs = 1000000180000L)
         val ss = StreamFixtures.childSession(s, 4)
-        import graft.streaming.{StreamSeedGram, TieredIndex}
         val gramFn = Some(
           graft.text.Dedup.portableGramHashes(_: org.apache.spark.sql.Column, 3))
-        def raw() = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-        val rowSchema = StreamSeedGram.seedRelationWithTs(
-          graft.Tables.load(ss, dir, "documents").limit(0)
-            .select(col("doc_id"), col("text"), at(t0)),
-          "doc_id", "text", "arrival", w = 3, seedMod = 8,
-          gramFn = gramFn).schema
-        val tier = TieredIndex.create(ss, "sctt", tmp.toString,
-          rowSchema, sortKey = "h")
-        val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("id_b",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.LongType)))
-        // leveled pair log: skip-if-landed under replay (see
-        // q_stream_neardup_twotier)
-        val pairT = graft.streaming.LeveledIndex.create(
-          ss, "sctt_pairs", s"$tmp/pairs", pairSchema, "id_a")
-        val qb = raw().writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val cutoff = batch.agg(max(col("arrival"))).head()
-              .getTimestamp(0).getTime - ttlMs
-            tier.age(bid, cutoff)
-            val nb = graft.plans.Materialize.stage(
-              StreamSeedGram.seedRelationWithTs(batch, "doc_id", "text",
-                "arrival", w = 3, seedMod = 8, gramFn = gramFn))
-            pairT.writeBatchIfAbsent(bid, StreamSeedGram.hybridSeedPairs(
-              nb.drop("ts"), tier.bulk(), maxDf = 1000,
-              pruneKeyCap = graft.streaming.StreamNearDup.adaptiveKeyCap(
-                tier.idxT.tableBytes)))
-            tier.writePending(bid, nb)
-            tier.maintain(bid)
-            pairT.maintain(bid)
-            ()
-          }
-          .option("checkpointLocation", s"$tmp/ckptB")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        qb.awaitTermination()
+        def raw() = StreamFixtures.fileStream(ss, src, 1)
+        // tier B (graft.streaming.TwoTierNearDup over seed-gram
+        // postings): pending + bulk postings glued by TieredIndex's
+        // exactly-once aging, and a skip-if-landed pair log
+        val tierB = graft.streaming.TwoTierNearDup.containment(ss, "sctt",
+          tmp.toString, ttlMs)
+        StreamFixtures.runBatches(raw(),
+          s"$tmp/ckptB")(tierB.perBatch(_, _))
         // tier A: the TTL'd stateful posting window over the same
         // arrivals, emitting (pair, h)
         val name = s"stream_sctt_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
-        val qa = StreamSeedGram
+        val qa = graft.streaming.StreamSeedGram
           .seedPairStreamTtl(raw(), "doc_id", "text",
             stateTtlMs = ttlMs, eventTimeCol = "arrival",
             w = 3, seedMod = 8, maxDf = 1000, gramFn = gramFn)(ss)
@@ -988,7 +886,7 @@ object PipelineQueries {
           .start()
         qa.awaitTermination()
         val cands = ss.table(name)
-          .unionByName(pairT.read())
+          .unionByName(tierB.pairs.read())
           .groupBy(col("id_a"), col("id_b"))
           .agg(countDistinct(col("h")).as("shared"))
           .filter(col("shared") >= 2)
@@ -1104,10 +1002,7 @@ object PipelineQueries {
             java.nio.file.attribute.FileTime.fromMillis(
               1000000000000L + i * 60000L))
         }
-        val stream = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
+        val stream = StreamFixtures.fileStream(ss, src, 1)
         val name = s"stream_late_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
         val q = stream
           .withWatermark("ts", "1 day")
@@ -1242,10 +1137,7 @@ object PipelineQueries {
           java.nio.file.Files.setLastModifiedTime(src.resolve(s"$n.parquet"),
             java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
         }
-        val stream = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
+        val stream = StreamFixtures.fileStream(ss, src, 1)
           .as[graft.streaming.EventStream.Event]
         val name = s"stream_se_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
         val q = graft.streaming.EventStream
@@ -1395,10 +1287,7 @@ object PipelineQueries {
               1000000000000L + i * 60000L))
         }
         import ss.implicits._
-        val stream = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
+        val stream = StreamFixtures.fileStream(ss, src, 1)
           .as[graft.streaming.EventStream.Event]
         val name = s"stream_fn_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
         val q = graft.streaming.EventStream
@@ -1459,15 +1348,7 @@ object PipelineQueries {
         val ckpt = tmp.resolve("ckpt").toString
         val sink = new graft.streaming.UpsertSink(table, Seq("s_suppkey"),
           Map("bal" -> graft.catalog.Merge.src("bal")), ckpt)
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-          .writeStream
-          .foreachBatch(sink.apply _)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 1), ckpt)(sink.apply _)
         // redeliver batch 0: the marker makes this a committed no-op —
         // if it re-applied, every %2 key's bal would regress to wave-0
         sink.apply(ss.read.parquet(s"$src/a_0.parquet"), 0L)

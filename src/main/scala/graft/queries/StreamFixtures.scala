@@ -69,6 +69,28 @@ object StreamFixtures {
     ss
   }
 
+  /** The parquet file-source stream over `src`, `filesPerTrigger` files
+    * a micro-batch. */
+  def fileStream(ss: org.apache.spark.sql.SparkSession, src: Path,
+                 filesPerTrigger: Int): DataFrame =
+    ss.readStream
+      .schema(ss.read.parquet(src.toString).schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString)
+      .parquet(src.toString)
+
+  /** Run `body` over every micro-batch of `stream` to the end of its
+    * input, checkpointed at `ckpt`; returns the finished query. */
+  def runBatches(stream: DataFrame, ckpt: String)(
+      body: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    val q = stream.writeStream
+      .foreachBatch(body)
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
+
   /** Write `df` as `parts` files `name_0..name_{parts-1}` in `src`, all
     * stamped `mtimeMs`. `tmp` hosts the write staging dir. */
   def writeBatch(tmp: Path, src: Path, df: DataFrame, name: String,

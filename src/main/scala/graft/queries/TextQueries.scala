@@ -1036,26 +1036,18 @@ object TextQueries {
           ss, "bm25s_postings", s"$tmp/postings", p0.schema, "tok")
         val dTable = graft.streaming.LeveledIndex.create(
           ss, "bm25s_doclen", s"$tmp/doclen", d0.schema, "doc_id")
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val (p, d, _) = graft.text.Bm25.buildIndex(batch, "doc_id", "text")
-            // tok-sorted runs with small row groups: the pushed
-            // term-IN filter prunes each run by footer stats, so the
-            // bulk batch no longer needs its out-of-cadence compact
-            pTable.writeBatch(bid, p)
-            dTable.writeBatch(bid, d)
-            pTable.maintain(bid)
-            dTable.maintain(bid)
-            ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 4),
+            s"$tmp/ckpt") { (batch, bid) =>
+          val (p, d, _) = graft.text.Bm25.buildIndex(batch, "doc_id", "text")
+          // tok-sorted runs with small row groups: the pushed
+          // term-IN filter prunes each run by footer stats, so the
+          // bulk batch no longer needs its out-of-cadence compact
+          pTable.writeBatch(bid, p)
+          dTable.writeBatch(bid, d)
+          pTable.maintain(bid)
+          dTable.maintain(bid)
+          ()
+        }
         val doclen = s.read.parquet(s"$tmp/doclen").drop("mig")
         val stats = doclen.agg(count(lit(1)).as("n_docs"),
           avg(col("dl")).as("avgdl"))
@@ -2483,18 +2475,8 @@ object TextQueries {
         // production maintenance cadence (every 8 batches — a 2-batch
         // fixture never pays it)
         val p = graft.streaming.DedupPipeline.create(ss, "ddp", tmp.toString)
-        val q = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "8")
-          .parquet(src.toString)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            p.perBatch(batch, bid); ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 8),
+          s"$tmp/ckpt")(p.perBatch(_, _))
         val docsB = Tables.load(ss, dir, "documents")
           .select(col("doc_id"), col("text"))
         val allIds = docsB.select(col("doc_id")).unionByName(

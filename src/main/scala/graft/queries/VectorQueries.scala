@@ -541,12 +541,7 @@ object VectorQueries {
     val queries = graft.plans.Materialize.stage(
       emb.filter(col("vec_id") % qMod === 0)
         .select(col("vec_id").as("qid"), col("embedding")))
-    val cands = Ann.ivfCandidates(s.read.parquet(s"$stage/assign"), queries,
-      "vec_id", "qid", "embedding", s.read.parquet(s"$stage/centroids"),
-      nprobe = 4)
-    graft.vector.Pq.adcTopKWithinIndexed(s.read.parquet(s"$stage/codes"),
-        cands, queries, "vec_id", "embedding", "qid", m = 8, dim = 64,
-        s.read.parquet(s"$stage/codebooks"), k = 5)
+    graft.vector.IndexRetrain.serveStage(s, stage, queries)
       .select(col("qid"), col("vec_id"), cast_rank, col("adc"))
       .orderBy(col("qid"), col("rank"))
   }
@@ -1131,23 +1126,15 @@ object VectorQueries {
           .select(col("vec_id"), col("sub"), col("code")).schema
         val codesTable = graft.catalog.ParquetTable(
           ss, "ins_codes", s"$tmp/codes", codesSchema).createIfNotExists()
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val sb = batch.sparkSession
-            assignTable.append(Ann.ivfAssign(batch, "vec_id", "embedding",
-              sb.read.parquet(s"$tmp/centroids")))
-            codesTable.append(graft.vector.Pq
-              .encode(batch, "vec_id", "embedding", 8, 64, storedBooks)
-              .select(col("vec_id"), col("sub"), col("code")))
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 1),
+            s"$tmp/ckpt") { (batch, _) =>
+          val sb = batch.sparkSession
+          assignTable.append(Ann.ivfAssign(batch, "vec_id", "embedding",
+            sb.read.parquet(s"$tmp/centroids")))
+          codesTable.append(graft.vector.Pq
+            .encode(batch, "vec_id", "embedding", 8, 64, storedBooks)
+            .select(col("vec_id"), col("sub"), col("code")))
+        }
         // serve from the streamed index; pin, reclaim
         val out = graft.plans.Materialize.stage(
           serveIvfpqStage(s, dir, tmp.toString))
@@ -1284,17 +1271,10 @@ object VectorQueries {
           pop, "vec_id", "embedding")
         require(swapped, "planted drift did not trigger the retrain")
         // serve from whatever generation the pointer names now
-        val stage = idx.currentDir()
         val queries = pop.filter(col("vec_id") % 25 === 0)
           .select(col("vec_id").as("qid"), col("embedding"))
-        val cands = Ann.ivfCandidates(s.read.parquet(s"$stage/assign"),
-          queries, "vec_id", "qid", "embedding",
-          s.read.parquet(s"$stage/centroids"), nprobe = 4)
         val out = graft.plans.Materialize.stage(
-          graft.vector.Pq.adcTopKWithinIndexed(
-              s.read.parquet(s"$stage/codes"), cands, queries,
-              "vec_id", "embedding", "qid", m = 8, dim = 64,
-              s.read.parquet(s"$stage/codebooks"), k = 5)
+          graft.vector.IndexRetrain.serveStage(s, idx.currentDir(), queries)
             .select(col("qid"), col("vec_id"), cast_rank, col("adc"))
             .orderBy(col("qid"), col("rank")))
         graft.ingest.FileOps.deleteRecursively(tmp)
@@ -1354,169 +1334,20 @@ object VectorQueries {
         StreamFixtures.writeBatch(tmp, src, arrivals, "b",
           parts = 1, mtimeMs = 1000000060000L)
         val ss = StreamFixtures.childSession(s, 4)
-        import graft.vector.{GenerationalIndex, IndexHealth, IndexRetrain}
-        // generation 0: quantizers trained on the HISTORICAL corpus,
-        // index relations EMPTY (they fill by streaming encode-append)
-        val idx = new GenerationalIndex(ss, s"$tmp/index")
-        IndexRetrain.buildGeneration(ss, idx.genDir(idx.nextGen()),
-          hist, reference.limit(0), "vec_id", "embedding")
-        idx.publish(0L)
-        // landed vectors (what retraining trains on and re-encodes) and
-        // the monitor's scored-assignment relation; generation 0's
-        // assign/codes relations start EMPTY (directories without
-        // files), so their schemas are declared rather than inferred
-        import org.apache.spark.sql.types.{IntegerType, LongType,
-          StringType, StructField, StructType}
-        // the landed vector table rides the same leveled machinery as
-        // every other per-batch write in this entry (r15 review): a
-        // plain append would land a replayed batch's vectors twice,
-        // and the NEXT retrain's re-encode would then double those
-        // vectors' codes — and break the spec-pinned reservoir
-        // equality (the reservoir write is idempotent; the corpus
-        // write must be too)
-        val vecsT = graft.streaming.LeveledIndex.create(ss, "annm_vecs",
-          s"$tmp/vecs", reference.schema, sortKey = "vec_id")
-        // TRAINING RESERVOIR: each batch banks its hash-sampled
-        // training rows at ingest (map-side filter, replay-idempotent
-        // leveled write), so the retrain's quantizer fit reads the
-        // bounded reservoir — never a corpus scan (re-encode is the
-        // only remaining corpus pass, and that one is inherent). The
-        // keep is pinned to the oracle's (5000/10000), so the banked
-        // set IS trainSample(vecsT, 5000) bit for bit (AnnSpec pins
-        // the equality through growth, thinning, and replay).
-        val resv = graft.vector.TrainReservoir(ss, "annm_resv",
-          s"$tmp/resv", reference.schema, "vec_id",
-          fixedKeep = Some(5000))
-        // the monitor's state is the SUFFICIENT-STATISTICS relation
-        // (cid, gen) → (n, ssimq) — k × generations ROWS maintained by
-        // an additive exactly-once MERGE per batch (UpsertSink's
-        // txn-marker machinery), NOT the per-row scored history:
-        // per-batch monitor cost is O(k) at any history length, and a
-        // redelivered batch can neither double-count a cell's stats
-        // nor re-fire a retrain (the replayed merge is marker-skipped,
-        // so a post-rebase replay sees the EMPTY rebased stats)
-        val statsT = graft.catalog.ParquetTable(ss, "annm_stats",
-          s"$tmp/stats", StructType(Seq(
-            StructField("cid", LongType), StructField("gen", StringType),
-            StructField("n", LongType), StructField("ssimq", LongType))))
-          .createIfNotExists()
-        val statsSink = new graft.streaming.UpsertSink(statsT,
-          Seq("cid", "gen"),
-          Map("n" -> (graft.catalog.Merge.tgt("n") +
-                graft.catalog.Merge.src("n")),
-            "ssimq" -> (graft.catalog.Merge.tgt("ssimq") +
-              graft.catalog.Merge.src("ssimq"))),
-          s"$tmp/ckpt")
-        val assignSchema = StructType(Seq(
-          StructField("vec_id", LongType), StructField("cid", LongType)))
-        val codesSchema = StructType(Seq(
-          StructField("vec_id", LongType), StructField("sub", IntegerType),
-          StructField("code", LongType)))
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val sb = batch.sparkSession
-            val stage = idx.currentDir()
-            val cents = sb.read.parquet(s"$stage/centroids")
-            // (1) encode-append into the CURRENT generation (stored
-            // quantizers only — no training lineage per batch) through
-            // the generation relations' LEVELED writes (r15): a plain
-            // append would land a replayed batch's rows twice — and
-            // duplicated codes rows literally DOUBLE a vector's ADC
-            // sum, corrupting ranks, not just counts — and would grow
-            // the serve path's file count by one per batch forever;
-            // the leveled write is an atomic per-batch partition
-            // overwrite with cadence folds (exactly-once, bounded runs)
-            val assignIdx = graft.vector.IndexRetrain.genRelation(sb,
-              "annm_assign", s"$stage/assign", assignSchema, "vec_id")
-            assignIdx.writeBatch(bid,
-              Ann.ivfAssign(batch, "vec_id", "embedding", cents))
-            val books = graft.vector.Pq.booksFrom(
-              sb.read.parquet(s"$stage/codebooks"))
-            val codesIdx = graft.vector.IndexRetrain.genRelation(sb,
-              "annm_codes", s"$stage/codes", codesSchema, "vec_id")
-            codesIdx.writeBatch(bid, graft.vector.Pq
-              .encode(batch, "vec_id", "embedding", 8, 64, books)
-              .select(col("vec_id"), col("sub"), col("code")))
-            assignIdx.maintain(bid)
-            codesIdx.maintain(bid)
-            vecsT.writeBatch(bid, batch)
-            vecsT.maintain(bid)
-            resv.append(bid, batch)
-            // fold the reservoir's runs on its cadence too — the keep
-            // is fixed here (no thinning), but the run/file count must
-            // stay bounded exactly like every other leveled table
-            resv.index.maintain(bid)
-            // (2) scored at assign time, folded into the stats table:
-            // the first window into an EMPTY monitor relation becomes
-            // the held-out reference generation — true at bootstrap
-            // AND after every rebase, which is what keeps the loop
-            // re-armed for the NEXT drift wave (a batch-id-based tag
-            // would retrain at most once: post-truncate windows would
-            // all land 'new' with nothing to compare against, and the
-            // monitor would go silent forever; AnnSpec proves a second
-            // wave retrains again)
-            // post-baseline windows are ROTATED (w<batch>), not pooled
-            // under one 'new' tag: the decision compares the TRAILING
-            // window — full accumulated drift — against the fixed
-            // baseline, so a slow drift is never averaged away by its
-            // own healthy early windows (IndexHealth.cellHealthTrailing;
-            // AnnSpec pins the accumulated-vs-rotated contrast)
-            val tag = if (statsT.read().isEmpty) "train" else s"w$bid"
-            // age the superseded window BEFORE merging this one —
-            // monitor state stays ≤ 2k rows (train + trailing); the
-            // rewrite carries the sink's txn markers, and a replayed
-            // batch just re-keeps its own window
-            if (tag != "train")
-              statsT.overwrite(statsT.read().filter(
-                col("gen") === "train" || col("gen") === lit(tag)))
-            statsSink.apply(IndexHealth.scoredStats(IndexHealth
-              .assignScored(batch, "vec_id", "embedding", cents)
-              .withColumn("gen", lit(tag))
-              .select(col("cid").cast("long").as("cid"),
-                col("simq"), col("gen"))), bid)
-            // (3) monitor → decision → machinery, every batch (the
-            // cadence); minCellN gates the single-generation state
-            val decision = IndexHealth.cellHealthTrailing(
-              statsT.read(), tag, minCellN = 8L)
-            // training population = the banked reservoir (≡ the
-            // deterministic hash sample of the LANDED table at keep
-            // 5000 — the oracle trains on the same keep); re-encode =
-            // the full landed table, the one inherent corpus pass
-            if (IndexRetrain.retrainIfDrifted(idx, decision,
-                resv.trainPop(), vecsT.read(), "vec_id", "embedding",
-                // the rebuild reads the corpus THROUGH this batch; the
-                // marker makes this batch's replay skip re-landing its
-                // rows beside the new generation's base run
-                throughBid = Some(bid)))
-              // baseline REBASE: flags mean stale quantizer; the
-              // retrained generation starts a fresh monitoring regime
-              // (truncate carries the txn markers forward, so a
-              // replayed pre-rebase batch stays marker-skipped)
-              statsT.truncate()
-            ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        require(idx.currentGen().contains(1L),
+        // the library body (graft.streaming.AnnMaintain): generation 0
+        // trained on the HISTORICAL corpus with empty index relations;
+        // the training reservoir's keep pinned to the oracle's
+        // (5000/10000), so the banked set IS trainSample(landed, 5000)
+        val p = graft.streaming.AnnMaintain.create(ss, "annm", tmp.toString,
+          hist, graft.vector.TrainReservoir.Fixed(5000))
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 1),
+          p.checkpoint)(p.perBatch(_, _))
+        require(p.index.currentGen().contains(1L),
           "planted drift did not retrain through the streaming cadence")
         // serve from whatever generation the pointer names now
-        val stage = idx.currentDir()
-        val queries = vecsT.read().filter(col("vec_id") % 25 === 0)
-          .select(col("vec_id").as("qid"), col("embedding"))
-        val cands = Ann.ivfCandidates(ss.read.parquet(s"$stage/assign"),
-          queries, "vec_id", "qid", "embedding",
-          ss.read.parquet(s"$stage/centroids"), nprobe = 4)
         val out = graft.plans.Materialize.stage(
-          graft.vector.Pq.adcTopKWithinIndexed(
-              ss.read.parquet(s"$stage/codes"), cands, queries,
-              "vec_id", "embedding", "qid", m = 8, dim = 64,
-              ss.read.parquet(s"$stage/codebooks"), k = 5)
+          p.serve(p.vecs.read().filter(col("vec_id") % 25 === 0)
+              .select(col("vec_id").as("qid"), col("embedding")))
             .select(col("qid"), col("vec_id"), cast_rank, col("adc"))
             .orderBy(col("qid"), col("rank")))
         graft.ingest.FileOps.deleteRecursively(tmp)
@@ -1577,84 +1408,18 @@ object VectorQueries {
             .select(col("vec_id"), col("embedding"), at(t0 + 10800000L)),
           "c", parts = 1, mtimeMs = 1000000120000L)
         val ss = StreamFixtures.childSession(s, 4)
-        import graft.vector.IndexRetrain
-        // generation 0: quantizers trained on the historical window —
-        // the frozen side state the aging transform encodes against
-        val idx = new graft.vector.GenerationalIndex(ss, s"$tmp/index")
-        IndexRetrain.buildGeneration(ss, idx.genDir(idx.nextGen()),
-          hist, emb.limit(0), "vec_id", "embedding")
-        idx.publish(0L)
-        import org.apache.spark.sql.types.{ArrayType, DoubleType,
-          IntegerType, LongType, StructField, StructType, TimestampType}
-        val pendSchema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(DoubleType)),
-          StructField("ts", TimestampType)))
-        val bulkSchema = StructType(Seq(
-          StructField("vec_id", LongType), StructField("cid", LongType),
-          StructField("sub", IntegerType), StructField("code", LongType)))
-        val tier = graft.streaming.TieredIndex.create(ss, "anntt",
-          s"$tmp/tier", pendSchema, sortKey = "vec_id",
-          bulkSchema = Some(bulkSchema))
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val sb = batch.sparkSession
-            val stage = idx.currentDir()
-            val cents = sb.read.parquet(s"$stage/centroids")
-            val books = graft.vector.Pq.booksFrom(
-              sb.read.parquet(s"$stage/codebooks"))
-            val cutoff = batch.agg(max(col("ts"))).head().getTimestamp(0)
-              .getTime - ttlMs
-            // ENCODE AT AGING: a vector leaves the raw window as
-            // (cid, sub, code) rows only — a pure function of the aged
-            // rows and the published generation, so the migration's
-            // exactly-once protocol is untouched by the transform
-            tier.age(bid, cutoff, transform = aged => {
-              val vecs = aged.select(col("vec_id"), col("embedding"))
-              graft.vector.Pq
-                .encode(vecs, "vec_id", "embedding", 8, 64, books)
-                .select(col("vec_id"), col("sub"), col("code"))
-                .join(Ann.ivfAssign(vecs, "vec_id", "embedding", cents),
-                  Seq("vec_id"))
-                .select(col("vec_id"), col("cid"), col("sub"), col("code"))
-            })
-            tier.writePending(bid, batch)
-            tier.maintain(bid)
-            ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // serve: union the bulk codes with the pending window encoded
-        // on the fly, then the one standard staged IVF-PQ serve
-        val stage = idx.currentDir()
-        val cents = ss.read.parquet(s"$stage/centroids")
-        val booksDf = ss.read.parquet(s"$stage/codebooks")
-        val books = graft.vector.Pq.booksFrom(booksDf)
-        val bulk = tier.bulk()
-        val pend = tier.pendT.read()
-          .select(col("vec_id"), col("embedding"))
-        require(!bulk.isEmpty && !pend.isEmpty,
+        // the library body (graft.streaming.AnnTwoTier): generation 0's
+        // quantizers, trained on the historical window, are the frozen
+        // side state the aging transform encodes against
+        val p = graft.streaming.AnnTwoTier.create(ss, "anntt", tmp.toString,
+          hist, ttlMs)
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 1),
+          s"$tmp/ckpt")(p.perBatch(_, _))
+        require(!p.tier.bulk().isEmpty && !p.tier.pendT.read().isEmpty,
           "two-tier ANN fixture degenerate: one tier is empty")
-        val assign = bulk.filter(col("sub") === 0)
-          .select(col("vec_id"), col("cid"))
-          .unionByName(Ann.ivfAssign(pend, "vec_id", "embedding", cents))
-        val codes = bulk.select(col("vec_id"), col("sub"), col("code"))
-          .unionByName(graft.vector.Pq
-            .encode(pend, "vec_id", "embedding", 8, 64, books)
-            .select(col("vec_id"), col("sub"), col("code")))
-        val queries = emb.filter(col("vec_id") % 25 === 0)
-          .select(col("vec_id").as("qid"), col("embedding"))
-        val cands = Ann.ivfCandidates(assign, queries, "vec_id", "qid",
-          "embedding", cents, nprobe = 4)
         val out = graft.plans.Materialize.stage(
-          graft.vector.Pq.adcTopKWithinIndexed(codes, cands, queries,
-              "vec_id", "embedding", "qid", m = 8, dim = 64, booksDf, k = 5)
+          p.serve(emb.filter(col("vec_id") % 25 === 0)
+              .select(col("vec_id").as("qid"), col("embedding")))
             .select(col("qid"), col("vec_id"), cast_rank, col("adc"))
             .orderBy(col("qid"), col("rank")))
         graft.ingest.FileOps.deleteRecursively(tmp)
@@ -1711,19 +1476,11 @@ object VectorQueries {
         val assignTable = graft.catalog.ParquetTable(
           ss, "sv_assign", s"$tmp/assign",
           Ann.ivfAssign(emb.limit(0), "vec_id", "embedding", centroids).schema)
-        val raw = ss.readStream
-          .schema(ss.read.parquet(src.toString).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-        val q = raw.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            assignTable.append(Ann.ivfAssign(
-              batch, "vec_id", "embedding", centTable.read()))
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, 1),
+            s"$tmp/ckpt") { (batch, _) =>
+          assignTable.append(Ann.ivfAssign(
+            batch, "vec_id", "embedding", centTable.read()))
+        }
         val queries = emb.filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("qid"), col("embedding"))
         Ann.ivfTopKIndexed(emb, assignTable.read(), queries,

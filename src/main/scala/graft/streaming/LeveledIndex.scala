@@ -103,13 +103,16 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
     * write must be skipped. */
   def writeBatch(bid: Long, df: DataFrame): Unit = {
     val foldDest = Seq("mig" -> LeveledIndex.migFor(1, bid).toString)
-    val base = Seq("mig" -> LeveledIndex.migFor(1, 0L).toString)
-    if (!(foldDest != base && table.partitionExists(foldDest)) &&
-        !table.lastTxnInPartition(base, LeveledIndex.BaseApp)
-          .exists(bid <= _))
+    if (!(foldDest != LeveledIndex.BaseRun && table.partitionExists(foldDest)) &&
+        !builtThrough.exists(bid <= _))
       table.overwritePartition(Seq("mig" -> bid.toString),
         df.sortWithinPartitions(sortKey))
   }
+
+  /** The stream batch id the base run's corpus was read through
+    * ([[writeBase]]'s `throughBid`), if it records one. */
+  def builtThrough: Option[Long] =
+    table.lastTxnInPartition(LeveledIndex.BaseRun, LeveledIndex.BaseApp)
 
   /** [[writeBatch]] for payloads RECOMPUTED FROM STORED STATE the
     * batch itself mutates (the incremental-components labels, pair
@@ -141,8 +144,7 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
     * not append them again. Omit for builds outside any stream (the
     * initial generation). */
   def writeBase(df: DataFrame, throughBid: Option[Long] = None): Unit =
-    table.overwritePartition(
-      Seq("mig" -> LeveledIndex.migFor(1, 0L).toString),
+    table.overwritePartition(LeveledIndex.BaseRun,
       df.sortWithinPartitions(sortKey),
       txn = throughBid.map(b => (LeveledIndex.BaseApp, b)))
 
@@ -222,6 +224,9 @@ object LeveledIndex {
   private[streaming] val BaseApp = "_graft_leveled_base"
 
   def migFor(level: Int, seq: Long): Long = -(level * LevelBase + seq)
+
+  /** The base run's partition: level 1, seq 0. */
+  private val BaseRun = Seq("mig" -> migFor(1, 0L).toString)
 
   /** Level of a `mig` value: non-negative = level-0 batch run;
     * [[TieredIndex.Folded]] (the pre-r15 single folded partition) reads

@@ -1,14 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 import graft.catalog.ParquetTable
 import graft.plans.Materialize
 
-/** What one micro-batch of a near-duplicate pipeline cost: seconds up
-  * to maintenance (serve, verify, the stored writes), seconds of the
-  * cadence maintenance, and whether the cadence fired. */
+/** What one micro-batch of a streaming body cost: seconds up to
+  * maintenance (serve, verify, the stored writes), seconds of the
+  * maintenance, and whether it fired (a cadence fold, or for
+  * [[AnnMaintain]] a retrain). */
 final case class BatchReport(serveSec: Double, maintSec: Double,
                              maintained: Boolean)
 
@@ -21,7 +22,8 @@ final case class BatchReport(serveSec: Double, maintSec: Double,
   * a batch touches is bounded by the batch and its candidate fan-out.
   *
   * Input rows carry `doc_id` (Long) and `text`; the two-tier pipeline
-  * also carries the event time `arrival`. */
+  * also carries the event time `arrival`. The ANN bodies follow the
+  * same shape ([[AnnPipelines]]). */
 object NearDupPipelines {
 
   /** The candidate threshold (estimated Jaccard for the serve, exact
@@ -34,14 +36,6 @@ object NearDupPipelines {
   private[streaming] def longs(names: String*): StructType =
     StructType(names.map(StructField(_, LongType)))
 
-  private[streaming] def bandSchema(spark: SparkSession,
-                                    tsCol: Option[String] = None): StructType = {
-    val docs = spark.createDataFrame(java.util.Collections.emptyList[Row](),
-      tsCol.fold(DocSchema)(DocSchema.add(_, TimestampType)))
-    tsCol.fold(StreamNearDup.bandRelation(docs, "doc_id", "text"))(
-      StreamNearDup.bandRelationWithTs(docs, "doc_id", "text", _)).schema
-  }
-
   /** The hybrid serve against a stored index; the prune-key cap scales
     * with the measured index (wide batches against a huge index still
     * prune, narrow-vs-small skips the plumbing). */
@@ -50,12 +44,69 @@ object NearDupPipelines {
     StreamNearDup.hybridCandidates(newBands, index, threshold = Threshold,
       pruneKeyCap = StreamNearDup.adaptiveKeyCap(indexBytes))
 
-  private[streaming] def timed(body: => Unit)(maintain: => Boolean): BatchReport = {
+  /** Time a batch: `body` (serve and stored writes), then `maintain`
+    * given the body's result, which reports whether the cadence fired. */
+  private[streaming] def timed[A](body: => A)(maintain: A => Boolean): BatchReport = {
     val t0 = System.nanoTime()
-    body
+    val a = body
     val t1 = System.nanoTime()
-    val fired = maintain
+    val fired = maintain(a)
     BatchReport((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9, fired)
+  }
+
+  /** The pair log of a stored-index body: `<name>_pairs` under `root`. */
+  private[streaming] def pairLog(spark: SparkSession, name: String, root: String,
+                                 family: IndexFamily): LeveledIndex =
+    LeveledIndex.create(spark, s"${name}_pairs", s"$root/pairs",
+      longs(family.pairCols: _*), "id_a")
+}
+
+/** An index family of the stored-index bodies ([[HybridNearDup]],
+  * [[TwoTierNearDup]]): how a batch of documents signs into index rows
+  * (with their event time as `ts` when `withTs`), how those rows serve
+  * against the stored index of a measured size, the index's sort key
+  * and the pair log's columns. */
+final case class IndexFamily(
+    sortKey: String, pairCols: Seq[String],
+    sign: (DataFrame, Boolean) => DataFrame,
+    serve: (DataFrame, DataFrame, Long) => DataFrame) {
+
+  /** The schema of the index rows, `ts` included when `withTs`. */
+  def rowSchema(spark: SparkSession, withTs: Boolean): StructType = {
+    val docs = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      if (withTs) NearDupPipelines.DocSchema.add("arrival", TimestampType)
+      else NearDupPipelines.DocSchema)
+    sign(docs, withTs).schema
+  }
+}
+
+object IndexFamily {
+
+  /** MinHash-LSH band buckets keyed by `bh`; the estimated-Jaccard
+    * hybrid serve emits one `(id_a, id_b)` row per candidate pair. */
+  val Bands: IndexFamily = IndexFamily("bh", Seq("id_a", "id_b"),
+    (docs, withTs) =>
+      if (withTs) StreamNearDup.bandRelationWithTs(docs, "doc_id", "text", "arrival")
+      else StreamNearDup.bandRelation(docs, "doc_id", "text"),
+    NearDupPipelines.serve)
+
+  /** Winnowing seed grams keyed by `h` (the containment family): word
+    * trigrams under the portable gram hash the oracle replays, one in
+    * eight kept as seeds, seeds carried by more than 1000 documents
+    * dropped. The serve emits one `(id_a, id_b, h)` row per shared
+    * seed; callers count distinct `h` per pair, which a replayed batch
+    * cannot inflate. */
+  val Seeds: IndexFamily = {
+    val gram = Some(graft.text.Dedup.portableGramHashes(_: Column, 3))
+    IndexFamily("h", Seq("id_a", "id_b", "h"),
+      (docs, withTs) =>
+        if (withTs) StreamSeedGram.seedRelationWithTs(docs, "doc_id", "text",
+          "arrival", w = 3, seedMod = 8, gramFn = gram)
+        else StreamSeedGram.seedRelation(docs, "doc_id", "text", w = 3,
+          seedMod = 8, gramFn = gram),
+      (seeds, index, indexBytes) => StreamSeedGram.hybridSeedPairs(seeds,
+        index, maxDf = 1000,
+        pruneKeyCap = StreamNearDup.adaptiveKeyCap(indexBytes)))
   }
 }
 
@@ -105,7 +156,7 @@ final class DedupPipeline(val idx: LeveledIndex, val txt: LeveledIndex,
       txt.writeBatch(bid, docs)
       idx.writeBatch(bid, nb)
       interruptAfter("after-appends")
-    } {
+    } { _ =>
       val fired = IndexMaintenance.maintainComponents(labels, fwd, bid)
       if (fired) interruptAfter("after-components")
       idx.maintain(bid)
@@ -148,7 +199,7 @@ object DedupPipeline {
   def create(spark: SparkSession, name: String, root: String,
              every: Int = 8): DedupPipeline = new DedupPipeline(
     LeveledIndex.create(spark, s"${name}_idx", s"$root/idx",
-      bandSchema(spark), "bh", every = every),
+      IndexFamily.Bands.rowSchema(spark, withTs = false), "bh", every = every),
     LeveledIndex.create(spark, s"${name}_txt", s"$root/txt", DocSchema,
       "doc_id", every = every),
     LeveledIndex.create(spark, s"${name}_labels", s"$root/labels",
@@ -157,24 +208,26 @@ object DedupPipeline {
       longs("old_root", "new_root")).createIfNotExists())
 }
 
-/** The stored-index near-duplicate hybrid (`q_stream_neardup_hybrid`):
-  * the band index lives in a leveled run table, not the state store.
-  * Per micro-batch: sign the documents, serve them against the stored
-  * index (new-vs-stored and new-vs-new bucket joins), land the
-  * candidate pairs, then land the batch's own band rows. Candidates
-  * are served against state the batch itself mutates, so the pair
-  * landing is skip-if-landed (a replay that sees its own bands in the
-  * index recomputes a slightly different pair set; the first attempt's
-  * atomic swap is the record). Recall is full at any horizon — nothing
-  * ever evicts — and per-batch cost is sized by the batch. */
-final class HybridNearDup(val idx: LeveledIndex, val pairs: LeveledIndex) {
+/** The stored-index hybrid (`q_stream_neardup_hybrid`, and over seed
+  * grams `q_stream_containment_hybrid`): the index lives in a leveled
+  * run table, not the state store. Per micro-batch: sign the
+  * documents, serve them against the stored index (new-vs-stored and
+  * new-vs-new key joins), land the candidate pairs, then land the
+  * batch's own index rows. Candidates are served against state the
+  * batch itself mutates, so the pair landing is skip-if-landed (a
+  * replay that sees its own rows in the index recomputes a different
+  * pair set; the first attempt's atomic swap is the record). Recall is
+  * full at any horizon — nothing ever evicts — and per-batch cost is
+  * sized by the batch. */
+final class HybridNearDup(family: IndexFamily, val idx: LeveledIndex,
+                          val pairs: LeveledIndex) {
 
   def perBatch(batch: DataFrame, bid: Long): BatchReport = timed {
     // sign once, consume twice (serve + index write)
-    val nb = Materialize.stage(StreamNearDup.bandRelation(batch, "doc_id", "text"))
-    pairs.writeBatchIfAbsent(bid, serve(nb, idx.read(), idx.table.tableBytes))
+    val nb = Materialize.stage(family.sign(batch, false))
+    pairs.writeBatchIfAbsent(bid, family.serve(nb, idx.read(), idx.table.tableBytes))
     idx.writeBatch(bid, nb)
-  } {
+  } { _ =>
     val fired = idx.maintain(bid)
     pairs.maintain(bid)
     fired
@@ -182,37 +235,44 @@ final class HybridNearDup(val idx: LeveledIndex, val pairs: LeveledIndex) {
 }
 
 object HybridNearDup {
-  /** The band index `<name>_idx` and the pair log `<name>_pairs`. */
+  /** Over band buckets: the index `<name>_idx` and the pair log
+    * `<name>_pairs` under `root`. */
   def create(spark: SparkSession, name: String, root: String): HybridNearDup =
-    new HybridNearDup(
-      LeveledIndex.create(spark, s"${name}_idx", s"$root/idx",
-        bandSchema(spark), "bh"),
-      LeveledIndex.create(spark, s"${name}_pairs", s"$root/pairs",
-        longs("id_a", "id_b"), "id_a"))
+    of(IndexFamily.Bands, spark, name, root)
+
+  /** [[create]] over seed-gram postings (the containment family). */
+  def containment(spark: SparkSession, name: String, root: String): HybridNearDup =
+    of(IndexFamily.Seeds, spark, name, root)
+
+  private def of(family: IndexFamily, spark: SparkSession, name: String,
+                 root: String) = new HybridNearDup(family,
+    LeveledIndex.create(spark, s"${name}_idx", s"$root/idx",
+      family.rowSchema(spark, withTs = false), family.sortKey),
+    pairLog(spark, name, root, family))
 }
 
-/** Tier B of the two-tier near-duplicate pipeline
-  * (`q_stream_neardup_twotier`): the stored side that keeps recall full
-  * beyond tier A's TTL'd stateful window
-  * ([[StreamNearDup.candidateStream]], a separate query over the same
+/** Tier B of the two-tier pipelines (`q_stream_neardup_twotier`, and
+  * over seed grams `q_stream_containment_twotier`): the stored side
+  * that keeps recall full beyond tier A's TTL'd stateful window
+  * ([[StreamNearDup.candidateStream]] or
+  * [[StreamSeedGram.seedPairStreamTtl]], a separate query over the same
   * arrivals). Per micro-batch, in [[TieredIndex]]'s call order: the
   * horizon is the batch's max `arrival` minus `ttlMs`; pending rows
   * behind it age into the bulk index exactly once; the batch is served
   * against the bulk tier only (the recent window is tier A's job); the
-  * pairs land skip-if-landed; the batch's band rows land in pending. */
-final class TwoTierNearDup(val tier: TieredIndex, val pairs: LeveledIndex,
-                           ttlMs: Long) {
+  * pairs land skip-if-landed; the batch's index rows land in pending. */
+final class TwoTierNearDup(family: IndexFamily, val tier: TieredIndex,
+                           val pairs: LeveledIndex, ttlMs: Long) {
 
   def perBatch(batch: DataFrame, bid: Long): BatchReport = timed {
     val cutoff = batch.agg(max(col("arrival"))).head().getTimestamp(0)
       .getTime - ttlMs
     tier.age(bid, cutoff)
-    val nb = Materialize.stage(
-      StreamNearDup.bandRelationWithTs(batch, "doc_id", "text", "arrival"))
+    val nb = Materialize.stage(family.sign(batch, true))
     pairs.writeBatchIfAbsent(bid,
-      serve(nb.drop("ts"), tier.bulk(), tier.idxT.tableBytes))
+      family.serve(nb.drop("ts"), tier.bulk(), tier.idxT.tableBytes))
     tier.writePending(bid, nb)
-  } {
+  } { _ =>
     val fired = tier.maintain(bid)
     pairs.maintain(bid)
     fired
@@ -220,14 +280,21 @@ final class TwoTierNearDup(val tier: TieredIndex, val pairs: LeveledIndex,
 }
 
 object TwoTierNearDup {
-  /** The tier tables `<name>_pend` and `<name>_idx` and the pair log
-    * `<name>_pairs` under `root`, aging rows `ttlMs` behind the newest
-    * arrival of each batch. */
+  /** Over band buckets: the tier tables `<name>_pend` and `<name>_idx`
+    * and the pair log `<name>_pairs` under `root`, aging rows `ttlMs`
+    * behind the newest arrival of each batch. */
   def create(spark: SparkSession, name: String, root: String,
-             ttlMs: Long): TwoTierNearDup = new TwoTierNearDup(
-    TieredIndex.create(spark, name, root, bandSchema(spark, Some("arrival")),
-      sortKey = "bh"),
-    LeveledIndex.create(spark, s"${name}_pairs", s"$root/pairs",
-      longs("id_a", "id_b"), "id_a"),
-    ttlMs)
+             ttlMs: Long): TwoTierNearDup =
+    of(IndexFamily.Bands, spark, name, root, ttlMs)
+
+  /** [[create]] over seed-gram postings (the containment family). */
+  def containment(spark: SparkSession, name: String, root: String,
+                  ttlMs: Long): TwoTierNearDup =
+    of(IndexFamily.Seeds, spark, name, root, ttlMs)
+
+  private def of(family: IndexFamily, spark: SparkSession, name: String,
+                 root: String, ttlMs: Long) = new TwoTierNearDup(family,
+    TieredIndex.create(spark, name, root, family.rowSchema(spark, withTs = true),
+      sortKey = family.sortKey),
+    pairLog(spark, name, root, family), ttlMs)
 }

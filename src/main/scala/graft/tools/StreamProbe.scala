@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import graft.queries.StreamFixtures
 
 /** Scaling probe for the STREAMING state family — the 100 TB risk the
   * batch [[ScaleProbe]] can't see: state-store growth. Each probed
@@ -48,15 +49,42 @@ object StreamProbe {
                     filesPerTrigger: Int, ckpt: java.nio.file.Path)(
       body: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(src.toString)
-      .writeStream
-      .foreachBatch(body)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    StreamFixtures.runBatches(StreamFixtures.fileStream(ss, src, filesPerTrigger),
+      ckpt.toString)(body)
+
+  private def mean(xs: Seq[Double]): Double = xs.sum / math.max(1, xs.size)
+
+  /** `"<key>_first<n>":…,"<key>_last<n>":…` — the means of a series'
+    * first and last `n` values. */
+  private def endsJson(key: String, xs: Seq[Double], n: Int): String =
+    f""""${key}_first$n":${mean(xs.take(n))}%.3f,"${key}_last$n":${mean(xs.takeRight(n))}%.3f"""
+
+  /** `"<key>_max":…,"<key>_end":…` — the peak and the final value of a
+    * series of file counts. */
+  private def filesJson(key: String, xs: Seq[Int]): String =
+    s""""${key}_max":${if (xs.isEmpty) 0 else xs.max},"${key}_end":${xs.lastOption.getOrElse(0)}"""
+
+  /** The corpus split into 40 single-file waves under a fresh temp dir
+    * (`prefix`); returns the dir and its source subdir. */
+  private def fortyWaves(s: SparkSession, dir: String, prefix: String)
+      : (java.nio.file.Path, java.nio.file.Path) = {
+    val tmp = Files.createTempDirectory(prefix)
+    val src = Files.createDirectories(tmp.resolve("src"))
+    val docs = graft.Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("text"))
+    (0 until 40).foreach { wv =>
+      StreamFixtures.writeBatch(tmp, src,
+        docs.filter(col("doc_id") % 40 === wv), s"w$wv",
+        parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
+    }
+    (tmp, src)
+  }
+
+  /** The embeddings as the ANN bodies take them (`array<double>`). */
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.load(s, dir, "embeddings")
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
 
   /** q_stream_neardup's machinery: LSH bucket state over the corpus
     * (batch 1, 8 files) + planted copies (batch 2). */
@@ -68,13 +96,10 @@ object StreamProbe {
     val planted = docs.filter(col("doc_id") < 20).select(
       (col("doc_id") + 100000000L).as("doc_id"),
       concat(col("text"), lit(" trailing")).as("text"))
-    graft.queries.StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
-    graft.queries.StreamFixtures.writeBatch(tmp, src, planted, "b", 1, 1000000060000L)
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "8")
-      .parquet(src.toString)
+    StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
+    StreamFixtures.writeBatch(tmp, src, planted, "b", 1, 1000000060000L)
+    val ss = StreamFixtures.childSession(s, 8)
+    val raw = StreamFixtures.fileStream(ss, src, 8)
     val name = s"sprobe_nd_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
     val probe = withStream {
       graft.streaming.StreamNearDup
@@ -113,14 +138,11 @@ object StreamProbe {
         .filter(col("doc_id") % waves === wv)
         .withColumn("arrival",
           lit(new java.sql.Timestamp(t0 + wv * 3600000L)))
-      graft.queries.StreamFixtures.writeBatch(tmp, src, wave, s"w$wv",
+      StreamFixtures.writeBatch(tmp, src, wave, s"w$wv",
         parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
     }
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
+    val ss = StreamFixtures.childSession(s, 8)
+    val raw = StreamFixtures.fileStream(ss, src, 1)
     val name = s"sprobe_ndttl_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
     val probe = withStream {
       graft.streaming.StreamNearDup
@@ -150,9 +172,9 @@ object StreamProbe {
     val planted = docs.filter(col("doc_id") < 20).select(
       (col("doc_id") + 100000000L).as("doc_id"),
       concat(col("text"), lit(" trailing")).as("text"))
-    graft.queries.StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
-    graft.queries.StreamFixtures.writeBatch(tmp, src, planted, "b", 1, 1000000060000L)
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
+    StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
+    StreamFixtures.writeBatch(tmp, src, planted, "b", 1, 1000000060000L)
+    val ss = StreamFixtures.childSession(s, 8)
     val p = graft.streaming.HybridNearDup.create(ss, "sprobe_ndh", tmp.toString)
     val probe = withStream {
       drive(ss, src, 8, tmp.resolve("ckpt")) { (b, bid) => p.perBatch(b, bid); () }
@@ -187,7 +209,7 @@ object StreamProbe {
         .filter(col("doc_id") % waves === wv)
         .withColumn("arrival",
           lit(new java.sql.Timestamp(t0 + wv * 3600000L)))
-      graft.queries.StreamFixtures.writeBatch(tmp, src, wave, s"w$wv",
+      StreamFixtures.writeBatch(tmp, src, wave, s"w$wv",
         parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
     }
     // planted beyond-horizon dups: copies of 10 WAVE-0 docs arriving
@@ -198,16 +220,13 @@ object StreamProbe {
         concat(col("text"), lit(" trailing")).as("text"))
       .withColumn("arrival",
         lit(new java.sql.Timestamp(t0 + waves * 3600000L)))
-    graft.queries.StreamFixtures.writeBatch(tmp, src, planted, "wp",
+    StreamFixtures.writeBatch(tmp, src, planted, "wp",
       parts = 1, mtimeMs = 1000000000000L + waves * 60000L)
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
+    val ss = StreamFixtures.childSession(s, 8)
     import graft.streaming.StreamNearDup
     val p = graft.streaming.TwoTierNearDup.create(ss, "sprobe_ndtt",
       tmp.toString, ttlMs)
-    def raw() = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
+    def raw() = StreamFixtures.fileStream(ss, src, 1)
     val probeB = withStream {
       drive(ss, src, 1, tmp.resolve("ckptB")) { (b, bid) => p.perBatch(b, bid); () }
     }
@@ -301,8 +320,10 @@ object StreamProbe {
     Probe((System.nanoTime() - t0) / 1e9, 0L, 0L)
   }
 
-  /** q_stream_containment_hybrid's machinery: the posting list in a
-    * stage table, per-batch broadcast joins, stream state ZERO. */
+  /** q_stream_containment_hybrid's body
+    * ([[graft.streaming.HybridNearDup]] over seed-gram postings): the
+    * posting list in a leveled run table, per-batch broadcast joins,
+    * stream state ZERO. */
   def containmentHybrid(s: SparkSession, dir: String): Probe = {
     val tmp = Files.createTempDirectory("graft-sprobe-sch")
     val src = Files.createDirectories(tmp.resolve("src"))
@@ -314,30 +335,12 @@ object StreamProbe {
     val buried = docs.filter(col("doc_id") < 10).select(
       (col("doc_id") + 500000000L).as("doc_id"),
       concat(col("text"), lit(" "), pad).as("text"))
-    graft.queries.StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
-    graft.queries.StreamFixtures.writeBatch(tmp, src, buried, "b", 1, 1000000060000L)
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    import graft.streaming.StreamSeedGram
-    val seedSchema = StreamSeedGram.seedRelation(
-      graft.Tables.load(ss, dir, "documents").limit(0), "doc_id", "text").schema
-    val idxTable = graft.catalog.ParquetTable(
-      ss, "sprobe_sch_idx", s"$tmp/idx", seedSchema,
-      writeOptions = graft.catalog.ParquetTable.IndexWriteOptions)
-      .createIfNotExists()
-    val out = tmp.resolve("pairs").toString
+    StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
+    StreamFixtures.writeBatch(tmp, src, buried, "b", 1, 1000000060000L)
+    val ss = StreamFixtures.childSession(s, 8)
+    val p = graft.streaming.HybridNearDup.containment(ss, "sprobe_sch", tmp.toString)
     val probe = withStream {
-      drive(ss, src, 8, tmp.resolve("ckpt")) { (batch, bid) =>
-        val nb = graft.plans.Materialize.stage(
-          StreamSeedGram.seedRelation(batch, "doc_id", "text",
-            w = 3, seedMod = 8,
-            gramFn = Some(graft.text.Dedup.portableGramHashes(_, 3))))
-        StreamSeedGram.hybridSeedPairs(nb, idxTable.read(), maxDf = 1000,
-            pruneKeyCap = graft.streaming.StreamNearDup
-              .adaptiveKeyCap(idxTable.tableBytes))
-          .write.mode("append").parquet(out)
-        idxTable.append(nb.sortWithinPartitions("h"))
-        if (bid == 0L) idxTable.compact(Seq("h"))
-      }
+      drive(ss, src, 8, tmp.resolve("ckpt")) { (b, bid) => p.perBatch(b, bid); () }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
     probe
@@ -354,7 +357,7 @@ object StreamProbe {
     * bulk load every form pays once. */
   def nearDupHybridServe(s: SparkSession, dir: String): Probe = {
     val tmp = Files.createTempDirectory("graft-sprobe-ndhs")
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
+    val ss = StreamFixtures.childSession(s, 8)
     import graft.streaming.StreamNearDup
     val docs = graft.Tables.load(ss, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -396,21 +399,20 @@ object StreamProbe {
     * monotone growth) and serve time stays FLAT (last-10-batch mean ≈
     * first-10-batch mean) while the index grows 40×. Emits one detail
     * JSON line; the returned Probe carries the last-10 mean serve. */
-  def nearDupHybridLongRun(s: SparkSession, dir: String): Probe = {
-    val tmp = Files.createTempDirectory("graft-sprobe-ndhl")
-    val src = Files.createDirectories(tmp.resolve("src"))
-    val docs = graft.Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val waves = 40
-    (0 until waves).foreach { wv =>
-      graft.queries.StreamFixtures.writeBatch(tmp, src,
-        docs.filter(col("doc_id") % waves === wv), s"w$wv",
-        parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
-    }
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    val p = graft.streaming.HybridNearDup.create(ss, "sprobe_ndhl", tmp.toString)
+  def nearDupHybridLongRun(s: SparkSession, dir: String): Probe =
+    hybridLongRun(s, dir, "stream_neardup_hybrid_longrun",
+      graft.streaming.HybridNearDup.create(_, "sprobe_ndhl", _))
+
+  /** A [[nearDupHybridLongRun]]-shaped run of the hybrid body `make`
+    * (given the session and the root): per-batch seconds (serve and
+    * maintenance) and the index's data-file count after each batch. */
+  private def hybridLongRun(s: SparkSession, dir: String, pipeline: String,
+      make: (SparkSession, String) => graft.streaming.HybridNearDup): Probe = {
+    val (tmp, src) = fortyWaves(s, dir, "graft-sprobe-hl")
+    val ss = StreamFixtures.childSession(s, 8)
+    val p = make(ss, tmp.toString)
     val perBatch = scala.collection.mutable.ArrayBuffer[(Long, Double, Int)]()
-    val probe = withStream {
+    withStream {
       drive(ss, src, 1, tmp.resolve("ckpt")) { (b, bid) =>
         val r = p.perBatch(b, bid)
         perBatch += ((bid, r.serveSec + r.maintSec, p.idx.table.dataFileCount))
@@ -418,14 +420,10 @@ object StreamProbe {
       }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
-    val sorted = perBatch.sortBy(_._1)
-    def mean(xs: Seq[Double]) = xs.sum / math.max(1, xs.size)
-    val first10 = mean(sorted.take(10).map(_._2).toSeq)
-    val last10 = mean(sorted.takeRight(10).map(_._2).toSeq)
-    val filesMax = if (sorted.isEmpty) 0 else sorted.map(_._3).max
-    val filesEnd = if (sorted.isEmpty) 0 else sorted.last._3
-    println(s"""{"pipeline":"stream_neardup_hybrid_longrun","batches":${sorted.size},"files_max":$filesMax,"files_end":$filesEnd,"serve_sec_first10":${f"$first10%.3f"},"serve_sec_last10":${f"$last10%.3f"}}""")
-    Probe(last10, 0L, 0L)
+    val sorted = perBatch.sortBy(_._1).toSeq
+    val secs = sorted.map(_._2)
+    println(s"""{"pipeline":"$pipeline","batches":${sorted.size},${filesJson("files", sorted.map(_._3))},${endsJson("serve_sec", secs, 10)}}""")
+    Probe(mean(secs.takeRight(10)), 0L, 0L)
   }
 
   /** TWO-TIER containment (q_stream_containment_twotier's machinery)
@@ -458,7 +456,7 @@ object StreamProbe {
       val wave = (if (wv == 0) base.unionByName(origs) else base)
         .withColumn("arrival",
           lit(new java.sql.Timestamp(t0 + wv * 3600000L)))
-      graft.queries.StreamFixtures.writeBatch(tmp, src, wave, s"w$wv",
+      StreamFixtures.writeBatch(tmp, src, wave, s"w$wv",
         parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
     }
     val pad = array_join(
@@ -469,40 +467,15 @@ object StreamProbe {
         concat(col("text"), lit(" "), pad).as("text"))
       .withColumn("arrival",
         lit(new java.sql.Timestamp(t0 + waves * 3600000L)))
-    graft.queries.StreamFixtures.writeBatch(tmp, src, planted, "wp",
+    StreamFixtures.writeBatch(tmp, src, planted, "wp",
       parts = 1, mtimeMs = 1000000000000L + waves * 60000L)
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    import graft.streaming.{StreamSeedGram, TieredIndex}
-    val rowSchema = StreamSeedGram.seedRelationWithTs(
-      graft.Tables.load(ss, dir, "documents").limit(0)
-        .select(col("doc_id"), col("text"),
-          lit(new java.sql.Timestamp(t0)).as("arrival")),
-      "doc_id", "text", "arrival", w = 3, seedMod = 8,
-      gramFn = gramFn).schema
-    val tier = TieredIndex.create(ss, "sprobe_sctt", tmp.toString,
-      rowSchema, sortKey = "h")
-    val out = tmp.resolve("pairs").toString
-    def raw() = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
+    val ss = StreamFixtures.childSession(s, 8)
+    import graft.streaming.StreamSeedGram
+    val p = graft.streaming.TwoTierNearDup.containment(ss, "sprobe_sctt",
+      tmp.toString, ttlMs)
+    def raw() = StreamFixtures.fileStream(ss, src, 1)
     val probeB = withStream {
-      drive(ss, src, 1, tmp.resolve("ckptB")) { (batch, bid) =>
-        val cutoff = batch.agg(max(col("arrival"))).head()
-          .getTimestamp(0).getTime - ttlMs
-        tier.age(bid, cutoff)
-        val nb = graft.plans.Materialize.stage(
-          StreamSeedGram.seedRelationWithTs(batch, "doc_id", "text",
-            "arrival", w = 3, seedMod = 8, gramFn = gramFn))
-        StreamSeedGram.hybridSeedPairs(nb.drop("ts"), tier.bulk(),
-            maxDf = 1000,
-            pruneKeyCap = graft.streaming.StreamNearDup
-              .adaptiveKeyCap(tier.idxT.tableBytes))
-          .write.mode("append").parquet(out)
-        tier.writePending(bid, nb)
-        tier.maintain(bid)
-        ()
-      }
+      drive(ss, src, 1, tmp.resolve("ckptB")) { (b, bid) => p.perBatch(b, bid); () }
     }
     val name = s"sprobe_sctt_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
     val probeA = withStream {
@@ -518,7 +491,7 @@ object StreamProbe {
     // the min-shared-seeds recovery across BOTH tiers, then exact
     // planted-id matching (the nearDupTwoTier counting fix)
     val cands = ss.table(name).select(col("id_a"), col("id_b"), col("h"))
-      .unionByName(ss.read.parquet(out))
+      .unionByName(p.pairs.read())
       .groupBy(col("id_a"), col("id_b"))
       .agg(countDistinct(col("h")).as("shared"))
       .filter(col("shared") >= 2)
@@ -530,9 +503,7 @@ object StreamProbe {
     // its oracle exactly as here (at sf0.1, doc 0 carries 1 seed) — so
     // recall is counted against what the rule can express, not the raw
     // plant count
-    val expected = graft.streaming.StreamSeedGram
-      .seedRelation(origs, "doc_id", "text", w = 3, seedMod = 8,
-        gramFn = gramFn)
+    val expected = graft.streaming.IndexFamily.Seeds.sign(origs, false)
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("h")).as("n"))
       .filter(col("n") >= 2).count()
@@ -544,60 +515,14 @@ object StreamProbe {
 
   /** LONG-RUN behavior of the containment hybrid under the production
     * maintenance cadence — the [[nearDupHybridLongRun]] measurement for
-    * the posting index: 40 single-file micro-batches run the exact
-    * entry foreachBatch shape (seed-publish, pruned serve, pair append,
-    * h-sorted posting append, compact every 8); claims: file count
-    * bounded (sawtooth), serve flat while the posting index grows
-    * 40×. */
-  def containmentHybridLongRun(s: SparkSession, dir: String): Probe = {
-    val tmp = Files.createTempDirectory("graft-sprobe-schl")
-    val src = Files.createDirectories(tmp.resolve("src"))
-    val docs = graft.Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val waves = 40
-    (0 until waves).foreach { wv =>
-      graft.queries.StreamFixtures.writeBatch(tmp, src,
-        docs.filter(col("doc_id") % waves === wv), s"w$wv",
-        parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
-    }
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    import graft.streaming.StreamSeedGram
-    val gramFn = Some(
-      graft.text.Dedup.portableGramHashes(_: org.apache.spark.sql.Column, 3))
-    val seedSchema = StreamSeedGram.seedRelation(
-      graft.Tables.load(ss, dir, "documents").limit(0),
-      "doc_id", "text").schema
-    val idxTable = graft.streaming.LeveledIndex.create(
-      ss, "sprobe_schl_idx", s"$tmp/idx", seedSchema, "h")
-    val out = tmp.resolve("pairs").toString
-    val perBatch = scala.collection.mutable.ArrayBuffer[(Long, Double, Int)]()
-    val probe = withStream {
-      drive(ss, src, 1, tmp.resolve("ckpt")) { (batch, bid) =>
-        val t0 = System.nanoTime()
-        val nb = graft.plans.Materialize.stage(
-          StreamSeedGram.seedRelation(batch, "doc_id", "text",
-            w = 3, seedMod = 8, gramFn = gramFn))
-        StreamSeedGram.hybridSeedPairs(nb, idxTable.read(), maxDf = 1000,
-            pruneKeyCap = graft.streaming.StreamNearDup
-              .adaptiveKeyCap(idxTable.table.tableBytes))
-          .write.mode("append").parquet(out)
-        idxTable.writeBatch(bid, nb)
-        idxTable.maintain(bid)
-        perBatch += ((bid, (System.nanoTime() - t0) / 1e9,
-          idxTable.table.dataFileCount))
-        ()
-      }
-    }
-    graft.ingest.FileOps.deleteRecursively(tmp)
-    val sorted = perBatch.sortBy(_._1)
-    def mean(xs: Seq[Double]) = xs.sum / math.max(1, xs.size)
-    val first10 = mean(sorted.take(10).map(_._2).toSeq)
-    val last10 = mean(sorted.takeRight(10).map(_._2).toSeq)
-    val filesMax = if (sorted.isEmpty) 0 else sorted.map(_._3).max
-    val filesEnd = if (sorted.isEmpty) 0 else sorted.last._3
-    println(s"""{"pipeline":"stream_containment_hybrid_longrun","batches":${sorted.size},"files_max":$filesMax,"files_end":$filesEnd,"serve_sec_first10":${f"$first10%.3f"},"serve_sec_last10":${f"$last10%.3f"}}""")
-    Probe(last10, 0L, 0L)
-  }
+    * the posting index: 40 single-file micro-batches run the entry's
+    * library body ([[graft.streaming.HybridNearDup]] over seed grams:
+    * seed-publish, pruned serve, skip-if-landed pair run, leveled
+    * posting run, maintenance every 8); claims: file count bounded
+    * (sawtooth), serve flat while the posting index grows 40×. */
+  def containmentHybridLongRun(s: SparkSession, dir: String): Probe =
+    hybridLongRun(s, dir, "stream_containment_hybrid_longrun",
+      graft.streaming.HybridNearDup.containment(_, "sprobe_schl", _))
 
   /** LONG-RUN behavior of the COMPOSED dedup pipeline
     * (q_stream_dedup_pipeline's body, [[graft.streaming.DedupPipeline]]:
@@ -608,17 +533,8 @@ object StreamProbe {
     * bounded and per-batch cost stays flat while all four tables grow
     * 40×. */
   def dedupPipelineLongRun(s: SparkSession, dir: String): Probe = {
-    val tmp = Files.createTempDirectory("graft-sprobe-ddpl")
-    val src = Files.createDirectories(tmp.resolve("src"))
-    val docs = graft.Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val waves = 40
-    (0 until waves).foreach { wv =>
-      graft.queries.StreamFixtures.writeBatch(tmp, src,
-        docs.filter(col("doc_id") % waves === wv), s"w$wv",
-        parts = 1, mtimeMs = 1000000000000L + wv * 60000L)
-    }
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
+    val (tmp, src) = fortyWaves(s, dir, "graft-sprobe-ddpl")
+    val ss = StreamFixtures.childSession(s, 8)
     val p = graft.streaming.DedupPipeline.create(ss, "sprobe_ddpl", tmp.toString)
     val perBatch = scala.collection.mutable
       .ArrayBuffer[(Long, graft.streaming.BatchReport, Int, Int, Int)]()
@@ -638,29 +554,21 @@ object StreamProbe {
       }
     }
     graft.ingest.FileOps.deleteRecursively(tmp)
-    val sorted = perBatch.sortBy(_._1)
-    def mean(xs: Seq[Double]) = xs.sum / math.max(1, xs.size)
+    val sorted = perBatch.sortBy(_._1).toSeq
     val serveOnly = sorted.filterNot(_._2.maintained).map(_._2.serveSec)
-    val first10 = mean(serveOnly.take(10).toSeq)
-    val last10 = mean(serveOnly.takeRight(10).toSeq)
     // the FULL per-cadence maintenance series — the r15 claim is that
     // it is flat (first ≈ last), not just that its endpoints are
     val maints = sorted.filter(_._2.maintained).map(_._2.maintSec)
-    def fm(get: ((Long, graft.streaming.BatchReport, Int, Int, Int)) => Int) =
-      (sorted.map(get).max, get(sorted.last))
-    val (idxMax, idxEnd) = fm(_._3)
-    val (txtMax, txtEnd) = fm(_._4)
-    val (labMax, labEnd) = fm(_._5)
     val maintsJson = maints.map(m => f"$m%.3f").mkString("[", ",", "]")
-    println(s"""{"pipeline":"stream_dedup_pipeline_longrun","batches":${sorted.size},"files_idx_max":$idxMax,"files_idx_end":$idxEnd,"files_txt_max":$txtMax,"files_txt_end":$txtEnd,"files_labels_max":$labMax,"files_labels_end":$labEnd,"serve_sec_first10":${f"$first10%.3f"},"serve_sec_last10":${f"$last10%.3f"},"maint_sec":$maintsJson,"maint_sec_first":${f"${maints.headOption.getOrElse(0.0)}%.3f"},"maint_sec_last":${f"${maints.lastOption.getOrElse(0.0)}%.3f"}}""")
-    Probe(last10, 0L, 0L)
+    println(s"""{"pipeline":"stream_dedup_pipeline_longrun","batches":${sorted.size},${filesJson("files_idx", sorted.map(_._3))},${filesJson("files_txt", sorted.map(_._4))},${filesJson("files_labels", sorted.map(_._5))},${endsJson("serve_sec", serveOnly, 10)},"maint_sec":$maintsJson,"maint_sec_first":${f"${maints.headOption.getOrElse(0.0)}%.3f"},"maint_sec_last":${f"${maints.lastOption.getOrElse(0.0)}%.3f"}}""")
+    Probe(mean(serveOnly.takeRight(10)), 0L, 0L)
   }
 
   /** Steady-state serve cost of the containment hybrid — the
     * [[nearDupHybridServe]] measurement for the posting index. */
   def containmentHybridServe(s: SparkSession, dir: String): Probe = {
     val tmp = Files.createTempDirectory("graft-sprobe-schs")
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
+    val ss = StreamFixtures.childSession(s, 8)
     import graft.streaming.StreamSeedGram
     val docs = graft.Tables.load(ss, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -749,13 +657,10 @@ object StreamProbe {
     val buried = docs.filter(col("doc_id") < 10).select(
       (col("doc_id") + 500000000L).as("doc_id"),
       concat(col("text"), lit(" "), pad).as("text"))
-    graft.queries.StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
-    graft.queries.StreamFixtures.writeBatch(tmp, src, buried, "b", 1, 1000000060000L)
-    val ss = graft.queries.StreamFixtures.childSession(s, 8)
-    val raw = ss.readStream
-      .schema(ss.read.parquet(src.toString).schema)
-      .option("maxFilesPerTrigger", "8")
-      .parquet(src.toString)
+    StreamFixtures.writeBatch(tmp, src, docs, "a", 8, 1000000000000L)
+    StreamFixtures.writeBatch(tmp, src, buried, "b", 1, 1000000060000L)
+    val ss = StreamFixtures.childSession(s, 8)
+    val raw = StreamFixtures.fileStream(ss, src, 8)
     val name = s"sprobe_sc_${tmp.getFileName.toString.replaceAll("[^A-Za-z0-9]", "")}"
     val probe = withStream {
       graft.streaming.StreamSeedGram
@@ -773,135 +678,54 @@ object StreamProbe {
   }
 
   /** LONG-RUN behavior of the ANN maintenance loop
-    * (q_stream_ann_maintain's per-batch work): 20 healthy arrival
-    * waves (the corpus re-landed with fresh ids each wave — no drift,
-    * so no retrain fires and the probe isolates the STEADY-STATE
-    * cost): encode-append against the stored quantizers, fold the
-    * scored assignment into the sufficient-statistics relation
-    * (UpsertSink additive merge), run cellHealthFromStats, decide.
-    * Claims: per-batch cost stays FLAT while the landed index grows
-    * 20× — the monitor reads k × generations STATS rows, never the
-    * scored history — and the decision stays quiet on healthy waves
-    * (zero retrains). */
+    * (q_stream_ann_maintain's body, [[graft.streaming.AnnMaintain]]):
+    * 20 healthy arrival waves (the corpus re-landed with fresh ids each
+    * wave — no drift, so no retrain fires and the probe isolates the
+    * STEADY-STATE cost): encode-append into the current generation,
+    * landed-vector and reservoir writes (1 MiB size target), the
+    * statistics merge, the decision. Claims: per-batch cost stays FLAT
+    * while the landed index grows 20× — the monitor reads k × windows
+    * STATS rows, never the scored history — and the decision stays
+    * quiet on healthy waves (zero retrains). */
   def annMaintainLongRun(s: SparkSession, dir: String): Probe = {
     val tmp = Files.createTempDirectory("graft-sprobe-annm")
-    import graft.vector.{GenerationalIndex, IndexHealth, IndexRetrain}
-    val emb = graft.Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    val hist = emb.filter(col("vec_id") % 2 === 0)
-    val idx = new GenerationalIndex(s, s"$tmp/index")
-    IndexRetrain.buildGeneration(s, idx.genDir(idx.nextGen()),
-      hist, emb.limit(0), "vec_id", "embedding")
-    idx.publish(0L)
-    import org.apache.spark.sql.types.{LongType, StringType,
-      StructField, StructType}
-    val vecsT = graft.streaming.LeveledIndex.create(s, "sprobe_annm_vecs",
-      s"$tmp/vecs", emb.schema, sortKey = "vec_id")
-    val resv = graft.vector.TrainReservoir(s, "sprobe_annm_resv",
-      s"$tmp/resv", emb.schema, "vec_id")
-    val statsT = graft.catalog.ParquetTable(s, "sprobe_annm_stats",
-      s"$tmp/stats", StructType(Seq(
-        StructField("cid", LongType), StructField("gen", StringType),
-        StructField("n", LongType), StructField("ssimq", LongType))))
-      .createIfNotExists()
-    val sink = new graft.streaming.UpsertSink(statsT, Seq("cid", "gen"),
-      Map("n" -> (graft.catalog.Merge.tgt("n") +
-            graft.catalog.Merge.src("n")),
-        "ssimq" -> (graft.catalog.Merge.tgt("ssimq") +
-          graft.catalog.Merge.src("ssimq"))), s"$tmp/ckpt")
-    val assignSchema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("cid", LongType)))
+    val emb = vectors(s, dir)
+    val p = graft.streaming.AnnMaintain.create(s, "sprobe_annm", tmp.toString,
+      emb.filter(col("vec_id") % 2 === 0), graft.vector.TrainReservoir.Target(1L << 20))
     val waves = 20
-    var retrains = 0
-    val perWave = (0 until waves).map { wv =>
-      val batch = graft.plans.Materialize.stage(
+    val reports = (0 until waves).map { wv =>
+      p.perBatch(graft.plans.Materialize.stage(
         emb.select((col("vec_id") + lit(wv * 1000000L)).as("vec_id"),
-          col("embedding")))
-      val t0 = System.nanoTime()
-      val stage = idx.currentDir()
-      val cents = s.read.parquet(s"$stage/centroids")
-      val assignIdx = IndexRetrain.genRelation(s, "sprobe_annm_assign",
-        s"$stage/assign", assignSchema, "vec_id")
-      assignIdx.writeBatch(wv.toLong, graft.vector.Ann.ivfAssign(
-        batch, "vec_id", "embedding", cents))
-      assignIdx.maintain(wv.toLong)
-      vecsT.writeBatch(wv.toLong, batch)
-      vecsT.maintain(wv.toLong)
-      resv.append(wv.toLong, batch)
-      resv.maintain(wv.toLong, vecsT.table.tableBytes, 1L << 20)
-      val tag = if (statsT.read().isEmpty) "train" else s"w$wv"
-      if (tag != "train")
-        statsT.overwrite(statsT.read().filter(
-          col("gen") === "train" || col("gen") === lit(tag)))
-      sink.apply(IndexHealth.scoredStats(IndexHealth
-        .assignScored(batch, "vec_id", "embedding", cents)
-        .withColumn("gen", lit(tag))
-        .select(col("cid").cast("long").as("cid"),
-          col("simq"), col("gen"))), wv.toLong)
-      val decision = IndexHealth.cellHealthTrailing(
-        statsT.read(), tag, minCellN = 8L)
-      if (IndexRetrain.retrainIfDrifted(idx, decision,
-          resv.trainPop(), vecsT.read(), "vec_id", "embedding",
-          throughBid = Some(wv.toLong))) {
-        retrains += 1
-        statsT.truncate()
-      }
-      (System.nanoTime() - t0) / 1e9
+          col("embedding"))), wv.toLong)
     }
-    val statsRows = statsT.read().count()
+    val statsRows = p.stats.read().count()
     graft.ingest.FileOps.deleteRecursively(tmp)
-    def mean(xs: Seq[Double]) = xs.sum / math.max(1, xs.size)
-    val first5 = mean(perWave.take(5))
-    val last5 = mean(perWave.takeRight(5))
-    println(s"""{"pipeline":"ann_maintain_longrun","waves":$waves,"retrains":$retrains,"stats_rows":$statsRows,"sec_first5":${f"$first5%.3f"},"sec_last5":${f"$last5%.3f"}}""")
-    Probe(last5, 0L, 0L)
+    val secs = reports.map(r => r.serveSec + r.maintSec)
+    println(s"""{"pipeline":"ann_maintain_longrun","waves":$waves,"retrains":${reports.count(_.maintained)},"stats_rows":$statsRows,${endsJson("sec", secs, 5)}}""")
+    Probe(mean(secs.takeRight(5)), 0L, 0L)
   }
 
   /** The ANN maintenance loop THROUGH drift waves — the expensive path
     * [[annMaintainLongRun]]'s 20 healthy waves never exercise: drift
     * flags → sampled retrain → re-encode → atomic swap → baseline
-    * rebase → re-arm, measured per PHASE. Two drift waves are planted
-    * (+0.5 on the first 8 coordinates at wave 8, +1.0 from wave 16) so
-    * the second retrain runs against a landed table ~2× the first's —
-    * the r15 claim under test: with the training population banked in
-    * the incremental [[graft.vector.TrainReservoir]] (1 MiB size
-    * target — sample membership evaluated at ingest, so training
-    * never scans the corpus), the TRAINING phases (centroid k-means,
-    * PQ codebooks) stay FLAT across retrains while only the inherent
-    * re-encode passes (assign, codes) grow with the corpus.
-    * Also reported: the monitor re-arms after each rebase (stats rows
-    * return to k×1 'train' then re-split) and the per-wave cost
-    * returns to the healthy band after each swap. */
+    * rebase → re-arm, measured per PHASE through the body's seam. Two
+    * drift waves are planted (+0.5 on the first 8 coordinates at wave
+    * 8, +0.5 more on the next 8 from wave 16) so the second retrain
+    * runs against a landed table ~2× the first's — the r15 claim under
+    * test: with the training population banked in the incremental
+    * [[graft.vector.TrainReservoir]] (1 MiB size target — sample
+    * membership evaluated at ingest, so training never scans the
+    * corpus), the TRAINING phases (centroid k-means, PQ codebooks) stay
+    * FLAT across retrains while only the inherent re-encode passes
+    * (assign, codes) grow with the corpus. Also reported: the monitor
+    * re-arms after each rebase (stats rows return to k×1 'train' then
+    * re-split) and the per-wave cost returns to the healthy band after
+    * each swap. */
   def annMaintainDriftWave(s: SparkSession, dir: String): Probe = {
     val tmp = Files.createTempDirectory("graft-sprobe-annw")
-    import graft.vector.{GenerationalIndex, IndexHealth, IndexRetrain}
-    val emb = graft.Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    val hist = emb.filter(col("vec_id") % 2 === 0)
-    val idx = new GenerationalIndex(s, s"$tmp/index")
-    IndexRetrain.buildGeneration(s, idx.genDir(idx.nextGen()),
-      hist, emb.limit(0), "vec_id", "embedding")
-    idx.publish(0L)
-    import org.apache.spark.sql.types.{LongType, StringType,
-      StructField, StructType}
-    val vecsT = graft.streaming.LeveledIndex.create(s, "sprobe_annw_vecs",
-      s"$tmp/vecs", emb.schema, sortKey = "vec_id")
-    val resv = graft.vector.TrainReservoir(s, "sprobe_annw_resv",
-      s"$tmp/resv", emb.schema, "vec_id")
-    val statsT = graft.catalog.ParquetTable(s, "sprobe_annw_stats",
-      s"$tmp/stats", StructType(Seq(
-        StructField("cid", LongType), StructField("gen", StringType),
-        StructField("n", LongType), StructField("ssimq", LongType))))
-      .createIfNotExists()
-    val sink = new graft.streaming.UpsertSink(statsT, Seq("cid", "gen"),
-      Map("n" -> (graft.catalog.Merge.tgt("n") +
-            graft.catalog.Merge.src("n")),
-        "ssimq" -> (graft.catalog.Merge.tgt("ssimq") +
-          graft.catalog.Merge.src("ssimq"))), s"$tmp/ckpt")
-    val assignSchema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("cid", LongType)))
+    val emb = vectors(s, dir)
+    val p = graft.streaming.AnnMaintain.create(s, "sprobe_annw", tmp.toString,
+      emb.filter(col("vec_id") % 2 === 0), graft.vector.TrainReservoir.Target(1L << 20))
     val waves = 24
     // wave 8: +0.5 on coords [0,8); wave 16: ADDITIONALLY +0.5 on
     // coords [8,16) — the second drift is orthogonal to the first, so
@@ -918,62 +742,25 @@ object StreamProbe {
             (x, i) => x + when(i < lit(8), lit(d1(wv)))
               .when(i < lit(16), lit(d2(wv)))
               .otherwise(lit(0.0))).as("embedding")))
-      val t0 = System.nanoTime()
-      val stage = idx.currentDir()
-      val cents = s.read.parquet(s"$stage/centroids")
-      val assignIdx = IndexRetrain.genRelation(s, "sprobe_annw_assign",
-        s"$stage/assign", assignSchema, "vec_id")
-      assignIdx.writeBatch(wv.toLong, graft.vector.Ann.ivfAssign(
-        batch, "vec_id", "embedding", cents))
-      assignIdx.maintain(wv.toLong)
-      vecsT.writeBatch(wv.toLong, batch)
-      vecsT.maintain(wv.toLong)
-      resv.append(wv.toLong, batch)
-      resv.maintain(wv.toLong, vecsT.table.tableBytes, 1L << 20)
-      val tag = if (statsT.read().isEmpty) "train" else s"w$wv"
-      if (tag != "train")
-        statsT.overwrite(statsT.read().filter(
-          col("gen") === "train" || col("gen") === lit(tag)))
-      sink.apply(IndexHealth.scoredStats(IndexHealth
-        .assignScored(batch, "vec_id", "embedding", cents)
-        .withColumn("gen", lit(tag))
-        .select(col("cid").cast("long").as("cid"),
-          col("simq"), col("gen"))), wv.toLong)
-      val tIngest = System.nanoTime()
-      // the retrainIfDrifted protocol, inlined so each phase of the
-      // expensive path gets its own clock (same public machinery:
-      // k-bounded decision fetch, sampled buildGeneration via the
-      // interrupt seam timestamps, atomic publish, stats rebase)
-      val drifted = graft.plans.Materialize.modelState(
-        IndexHealth.cellHealthTrailing(statsT.read(), tag, minCellN = 8L)
-          .filter(col("drifted")).select(col("cid")),
-        "per-cell retrain decisions (k-bounded)", 1 << 14)
-      val tDecide = System.nanoTime()
-      if (drifted.nonEmpty) {
-        val keep = resv.storedKeep
-        val trainPop = resv.trainPop()
-        val trainRows = trainPop.count()
-        val tableRows = vecsT.read().count()
-        val marks = new Array[Long](5)
-        marks(0) = System.nanoTime()
-        val g = idx.nextGen()
-        IndexRetrain.buildGeneration(s, idx.genDir(g), trainPop,
-          vecsT.read(), "vec_id", "embedding",
-          interrupt = i => marks(i) = System.nanoTime(),
-          throughBid = Some(wv.toLong))
-        idx.publish(g)
-        val tPub = System.nanoTime()
-        statsT.truncate()
-        val tRebase = System.nanoTime()
-        def ph(a: Long, b: Long) = f"${(b - a) / 1e9}%.2f"
-        retrainRows += s"""{"wave":$wv,"gen":$g,"table_rows":$tableRows,"keep_buckets":$keep,"train_rows":$trainRows,"sec_decision":${ph(tIngest, tDecide)},"sec_train_centroids":${ph(marks(0), marks(1))},"sec_encode_assign":${ph(marks(1), marks(2))},"sec_train_codebooks":${ph(marks(2), marks(3))},"sec_encode_codes":${ph(marks(3), marks(4))},"sec_publish":${ph(marks(4), tPub)},"sec_rebase":${ph(tPub, tRebase)},"sec_total":${ph(marks(0), tRebase)}}"""
-      } else healthySecs += ((wv, (System.nanoTime() - t0) / 1e9))
-      ()
+      // phase clocks; a retrain's table and sample sizes are counted
+      // between the decision and the first build phase, on no clock
+      val marks = scala.collection.mutable.Map[String, Long]()
+      var sizes = ""
+      val r = p.perBatch(batch, wv.toLong, { phase =>
+        marks(phase) = System.nanoTime()
+        if (phase == "built-0") {
+          sizes = s""""table_rows":${p.vecs.read().count()},"keep_buckets":${p.resv.storedKeep},"train_rows":${p.resv.trainPop().count()}"""
+          marks("train") = System.nanoTime()
+        }
+      })
+      if (r.maintained) {
+        def ph(a: String, b: String) = f"${(marks(b) - marks(a)) / 1e9}%.2f"
+        retrainRows += s"""{"wave":$wv,"gen":${p.index.currentGen().getOrElse(-1L)},$sizes,"sec_decision":${ph("ingested", "built-0")},"sec_train_centroids":${ph("train", "built-1")},"sec_encode_assign":${ph("built-1", "built-2")},"sec_train_codebooks":${ph("built-2", "built-3")},"sec_encode_codes":${ph("built-3", "built-4")},"sec_publish":${ph("built-4", "published")},"sec_rebase":${ph("published", "rebased")},"sec_total":${ph("train", "rebased")}}"""
+      } else healthySecs += ((wv, r.serveSec + r.maintSec))
     }
-    val statsRows = statsT.read().count()
-    val genEnd = idx.currentGen().getOrElse(-1L)
+    val statsRows = p.stats.read().count()
+    val genEnd = p.index.currentGen().getOrElse(-1L)
     graft.ingest.FileOps.deleteRecursively(tmp)
-    def mean(xs: Seq[Double]) = xs.sum / math.max(1, xs.size)
     val pre = mean(healthySecs.filter(_._1 < 8).map(_._2).toSeq)
     val mid = mean(healthySecs.filter(w => w._1 > 8 && w._1 < 16)
       .map(_._2).toSeq)
@@ -983,56 +770,26 @@ object StreamProbe {
     Probe(post, 0L, 0L)
   }
 
-  /** q_stream_ann_twotier's machinery long-run: 24 arrival waves
-    * against a 4-wave recency horizon. Claims: tier-A state (the raw
-    * pending window) stays BOUNDED at rate × horizon while the landed
-    * corpus grows 24× (everything older lives only as PQ codes in the
-    * bulk tier), and the per-wave cost — age-with-encode + full
-    * two-tier serve + pending write + leveled maintenance — grows only
-    * with the INDEX-side candidate mass (any ANN serve does as the
-    * corpus grows), never with a raw-vector scan. */
+  /** q_stream_ann_twotier's body ([[graft.streaming.AnnTwoTier]])
+    * long-run: 24 arrival waves against a 4-wave recency horizon.
+    * Claims: tier-A state (the raw pending window) stays BOUNDED at
+    * rate × horizon while the landed corpus grows 24× (everything
+    * older lives only as PQ codes in the bulk tier), and the per-wave
+    * cost — age-with-encode + pending write + leveled maintenance +
+    * full two-tier serve — grows only with the INDEX-side candidate
+    * mass (any ANN serve does as the corpus grows), never with a
+    * raw-vector scan. */
   def annTwoTier(s: SparkSession, dir: String): Probe = {
     val tmp = Files.createTempDirectory("graft-sprobe-anntt")
-    import graft.vector.IndexRetrain
-    val emb = graft.Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    val hist = emb.filter(col("vec_id") % 2 === 0)
-    val idx = new graft.vector.GenerationalIndex(s, s"$tmp/index")
-    IndexRetrain.buildGeneration(s, idx.genDir(idx.nextGen()),
-      hist, emb.limit(0), "vec_id", "embedding")
-    idx.publish(0L)
-    val stage = idx.currentDir()
-    val cents = s.read.parquet(s"$stage/centroids")
-    val booksDf = s.read.parquet(s"$stage/codebooks")
-    val books = graft.vector.Pq.booksFrom(booksDf)
-    import org.apache.spark.sql.types.{ArrayType, DoubleType,
-      IntegerType, LongType, StructField, StructType, TimestampType}
-    val pendSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(DoubleType)),
-      StructField("ts", TimestampType)))
-    val bulkSchema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("cid", LongType),
-      StructField("sub", IntegerType), StructField("code", LongType)))
-    val tier = graft.streaming.TieredIndex.create(s, "sprobe_anntt",
-      s"$tmp/tier", pendSchema, sortKey = "vec_id",
-      bulkSchema = Some(bulkSchema))
+    val emb = vectors(s, dir)
+    val hourMs = 3600000L
+    val p = graft.streaming.AnnTwoTier.create(s, "sprobe_anntt", tmp.toString,
+      emb.filter(col("vec_id") % 2 === 0), ttlMs = 4 * hourMs)
     val queries = graft.plans.Materialize.stage(
       emb.filter(col("vec_id") % 50 === 0).limit(40)
         .select(col("vec_id").as("qid"), col("embedding")))
     val t0ms = 1700000000000L
-    val hourMs = 3600000L
-    val horizonMs = 4 * hourMs
     val waves = 24
-    def encodeTx(df: org.apache.spark.sql.DataFrame) = {
-      val vecs = df.select(col("vec_id"), col("embedding"))
-      graft.vector.Pq.encode(vecs, "vec_id", "embedding", 8, 64, books)
-        .select(col("vec_id"), col("sub"), col("code"))
-        .join(graft.vector.Ann.ivfAssign(
-          vecs, "vec_id", "embedding", cents), Seq("vec_id"))
-        .select(col("vec_id"), col("cid"), col("sub"), col("code"))
-    }
     val perWave = (0 until waves).map { wv =>
       val batch = graft.plans.Materialize.stage(
         emb.select((col("vec_id") + lit(wv * 1000000L)).as("vec_id"),
@@ -1040,37 +797,16 @@ object StreamProbe {
           .withColumn("ts",
             lit(new java.sql.Timestamp(t0ms + wv * hourMs))))
       val t0 = System.nanoTime()
-      tier.age(wv.toLong, t0ms + wv * hourMs - horizonMs,
-        transform = encodeTx)
-      val pend = tier.pendT.read().select(col("vec_id"), col("embedding"))
-      val bulk = tier.bulk()
-      val assign = bulk.filter(col("sub") === 0)
-        .select(col("vec_id"), col("cid"))
-        .unionByName(graft.vector.Ann.ivfAssign(
-          pend, "vec_id", "embedding", cents))
-      val codes = bulk.select(col("vec_id"), col("sub"), col("code"))
-        .unionByName(graft.vector.Pq
-          .encode(pend, "vec_id", "embedding", 8, 64, books)
-          .select(col("vec_id"), col("sub"), col("code")))
-      val cands = graft.vector.Ann.ivfCandidates(assign, queries,
-        "vec_id", "qid", "embedding", cents, nprobe = 4)
-      val served = graft.vector.Pq.adcTopKWithinIndexed(codes, cands,
-        queries, "vec_id", "embedding", "qid", m = 8, dim = 64,
-        booksDf, k = 5).count()
-      require(wv == 0 || served > 0,
+      p.perBatch(batch, wv.toLong)
+      require(p.serve(queries).count() > 0,
         "two-tier probe serve came back empty (wave " + wv + ")")
-      tier.writePending(wv.toLong, batch)
-      tier.maintain(wv.toLong)
       (System.nanoTime() - t0) / 1e9
     }
-    val pendRows = tier.pendT.read().count()
-    val bulkVecs = tier.bulk().filter(col("sub") === 0).count()
+    val pendRows = p.tier.pendT.read().count()
+    val bulkVecs = p.tier.bulk().filter(col("sub") === 0).count()
     graft.ingest.FileOps.deleteRecursively(tmp)
-    def mean(xs: Seq[Double]) = xs.sum / math.max(1, xs.size)
-    val first5 = mean(perWave.take(5))
-    val last5 = mean(perWave.takeRight(5))
-    println(s"""{"pipeline":"stream_ann_twotier","waves":$waves,"horizon_waves":4,"tierA_rows":$pendRows,"bulk_vecs":$bulkVecs,"sec_first5":${f"$first5%.3f"},"sec_last5":${f"$last5%.3f"}}""")
-    Probe(last5, pendRows, 0L)
+    println(s"""{"pipeline":"stream_ann_twotier","waves":$waves,"horizon_waves":4,"tierA_rows":$pendRows,"bulk_vecs":$bulkVecs,${endsJson("sec", perWave, 5)}}""")
+    Probe(mean(perWave.takeRight(5)), pendRows, 0L)
   }
 
   /** [[graft.streaming.StreamNearDup.KeyCapCalibration.measure]] on
@@ -1099,11 +835,11 @@ object StreamProbe {
       emb, "vec_id", "embedding", k = 16, iters = 2)
     import s.implicits._
     val centroids = cents.toDF("cid", "embedding")
-    graft.queries.StreamFixtures.writeBatch(tmp, src,
+    StreamFixtures.writeBatch(tmp, src,
       emb.filter(col("vec_id") % 2 === 0), "a", 4, 1000000000000L)
-    graft.queries.StreamFixtures.writeBatch(tmp, src,
+    StreamFixtures.writeBatch(tmp, src,
       emb.filter(col("vec_id") % 2 === 1), "b", 4, 1000000060000L)
-    val ss = graft.queries.StreamFixtures.childSession(s, 4)
+    val ss = StreamFixtures.childSession(s, 4)
     val out = tmp.resolve("assign").toString
     val probe = withStream {
       drive(ss, src, 4, tmp.resolve("ckpt")) { (batch, _) =>

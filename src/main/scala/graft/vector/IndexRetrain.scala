@@ -184,9 +184,9 @@ object IndexRetrain {
     * runs ([[genRelation]]) so day-2 encode-append composes with the
     * same exactly-once, bounded-file-count machinery; the model-sized
     * relations (centroids, codebooks) stay plain one-shot tables.
-    * `interrupt` is the failure-injection seam, called with 1..4 after
-    * each relation lands (the crash-between-swap-steps spec throws
-    * there). */
+    * `interrupt` is the failure-injection seam, called with 0 before
+    * the first relation and with 1..4 after each relation lands (the
+    * crash-between-swap-steps spec throws there). */
   def buildGeneration(spark: SparkSession, dir: String,
                       trainPop: DataFrame, corpus: DataFrame,
                       idCol: String, vecCol: String,
@@ -195,6 +195,7 @@ object IndexRetrain {
                       interrupt: Int => Unit = _ => (),
                       throughBid: Option[Long] = None): Unit = {
     import spark.implicits._
+    interrupt(0)
     val centroids = KMeans.fitCentroids(trainPop, idCol, vecCol, k, iters)
       .toDF("cid", vecCol)
     ParquetTable(spark, "gen_centroids", s"$dir/centroids",
@@ -215,6 +216,25 @@ object IndexRetrain {
       .writeBase(codes, throughBid)
     interrupt(4)
   }
+
+  /** The staged IVF-PQ serve: per query (`qid`, `embedding`), the top 5
+    * ids (`vec_id`) by ADC distance among the vectors in its 4 nearest
+    * cells — routing through the stored `assign` relation and
+    * `centroids`, scoring through the stored `codes` relation and
+    * `codebooks` (m = 8 subspaces of 64 dimensions). No training
+    * lineage enters the plan: every input is a stored relation. */
+  def serve(assign: DataFrame, codes: DataFrame, centroids: DataFrame,
+            codebooks: DataFrame, queries: DataFrame): DataFrame =
+    Pq.adcTopKWithinIndexed(codes,
+      Ann.ivfCandidates(assign, queries, "vec_id", "qid", "embedding",
+        centroids, nprobe = 4),
+      queries, "vec_id", "embedding", "qid", m = 8, dim = 64, codebooks, k = 5)
+
+  /** [[serve]] over the four relations of the generation under `dir`. */
+  def serveStage(spark: SparkSession, dir: String, queries: DataFrame): DataFrame =
+    serve(spark.read.parquet(s"$dir/assign"), spark.read.parquet(s"$dir/codes"),
+      spark.read.parquet(s"$dir/centroids"),
+      spark.read.parquet(s"$dir/codebooks"), queries)
 
   /** Consume a stored [[IndexHealth.cellHealth]] decision relation: if
     * ANY cell is flagged `drifted`, rebuild the index generation on

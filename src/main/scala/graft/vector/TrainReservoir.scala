@@ -53,7 +53,7 @@ import graft.streaming.LeveledIndex
 final class TrainReservoir private (
     val spark: SparkSession, val index: LeveledIndex,
     val idCol: String, root: String,
-    val buckets: Int, seed: String) {
+    val buckets: Int, seed: String, keep: TrainReservoir.Keep) {
 
   private def keepPtr = new HPath(root, "_keep")
   private def fs =
@@ -91,24 +91,28 @@ final class TrainReservoir private (
   def append(bid: Long, batch: DataFrame): Unit =
     index.writeBatch(bid, batch.filter(bucket < lit(storedKeep.toLong)))
 
-  /** Cadence maintenance: shrink the keep toward the size target
-    * (given the CORPUS table's measured bytes — the reservoir must
-    * mirror what [[IndexRetrain.trainKeepBuckets]] would choose over
-    * the full table) and fold the leveled runs. Both ride the SAME
-    * `every` cadence: thinning is an O(reservoir) rewrite, so firing
-    * it per batch would reintroduce the very per-batch table-sized
-    * cost the reservoir exists to remove — between cadences the keep
-    * just rides slightly high (appends bank a superset; `trainPop`'s
-    * read-time filter is what defines the sample). */
-  def maintain(bid: Long, corpusBytes: Long, targetBytes: Long): Unit = {
+  /** Cadence maintenance: under a [[TrainReservoir.Target]] keep,
+    * shrink the keep toward the target (given the CORPUS table's
+    * measured bytes — the reservoir must mirror what
+    * [[IndexRetrain.trainKeepBuckets]] would choose over the full
+    * table); under a [[TrainReservoir.Fixed]] keep, never shrink. Then
+    * fold the leveled runs. Both ride the SAME `every` cadence:
+    * thinning is an O(reservoir) rewrite, so firing it per batch would
+    * reintroduce the very per-batch table-sized cost the reservoir
+    * exists to remove — between cadences the keep just rides slightly
+    * high (appends bank a superset; `trainPop`'s read-time filter is
+    * what defines the sample). */
+  def maintain(bid: Long, corpusBytes: Long): Unit = {
     val every = index.every
-    if (every > 0 && bid % every == (every - 1).toLong) {
-      val kNow =
-        IndexRetrain.trainKeepBuckets(corpusBytes, targetBytes, buckets)
-      if (kNow < storedKeep) {
-        writeKeep(kNow)
-        thin(kNow)
-      }
+    keep match {
+      case TrainReservoir.Target(bytes)
+          if every > 0 && bid % every == (every - 1).toLong =>
+        val kNow = IndexRetrain.trainKeepBuckets(corpusBytes, bytes, buckets)
+        if (kNow < storedKeep) {
+          writeKeep(kNow)
+          thin(kNow)
+        }
+      case _ => ()
     }
     index.maintain(bid)
     ()
@@ -140,22 +144,31 @@ final class TrainReservoir private (
 }
 
 object TrainReservoir {
+  /** How a reservoir's keep is chosen. */
+  sealed trait Keep
+
+  /** Pinned up front at `buckets` (entries whose oracle trains at a
+    * known keep). */
+  final case class Fixed(buckets: Int) extends Keep
+
+  /** Shrunk on the cadence so the sample lands near `bytes` as the
+    * corpus grows ([[IndexRetrain.trainKeepBuckets]]). */
+  final case class Target(bytes: Long) extends Keep
+
   /** Open/create a reservoir under `path` for rows shaped `rowSchema`.
     * `seed` must match the keep the ORACLE replays
-    * ([[IndexRetrain.trainSample]]'s default). `fixedKeep` pins the
-    * keep up front (entries whose oracle trains at a known keep);
-    * size-targeted callers leave it unset and let [[maintain]] shrink
-    * the keep as the corpus grows. */
+    * ([[IndexRetrain.trainSample]]'s default). */
   def apply(spark: SparkSession, name: String, path: String,
             rowSchema: org.apache.spark.sql.types.StructType,
-            idCol: String, every: Int = 8, fixedKeep: Option[Int] = None,
+            idCol: String, keep: Keep, every: Int = 8,
             buckets: Int = 10000,
             seed: String = "annretrain"): TrainReservoir = {
     val idx = LeveledIndex.create(spark, name, path, rowSchema,
       sortKey = idCol, every = every)
-    val r = new TrainReservoir(spark, idx, idCol, path, buckets, seed)
-    fixedKeep.foreach { k =>
-      if (k < r.storedKeep) r.writeKeep(k)
+    val r = new TrainReservoir(spark, idx, idCol, path, buckets, seed, keep)
+    keep match {
+      case Fixed(k) if k < r.storedKeep => r.writeKeep(k)
+      case _ => ()
     }
     r
   }

@@ -344,13 +344,7 @@ class AnnSpec extends AnyFunSuite {
   private def serveFrom(stage: String,
                         queries: org.apache.spark.sql.DataFrame)
       : Seq[(Long, Long, Int, Long)] =
-    graft.vector.Pq.adcTopKWithinIndexed(
-        spark.read.parquet(s"$stage/codes"),
-        Ann.ivfCandidates(spark.read.parquet(s"$stage/assign"), queries,
-          "vec_id", "qid", "embedding",
-          spark.read.parquet(s"$stage/centroids"), nprobe = 4),
-        queries, "vec_id", "embedding", "qid", m = 8, dim = 64,
-        spark.read.parquet(s"$stage/codebooks"), k = 5)
+    graft.vector.IndexRetrain.serveStage(spark, stage, queries)
       .select(col("qid"), col("vec_id"), col("rank").cast("int"), col("adc"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
@@ -609,8 +603,12 @@ class AnnSpec extends AnyFunSuite {
     val vecs = emb.select(col("vec_id"), col("embedding"))
     val corpusT = graft.catalog.ParquetTable(spark, "resv_corpus",
       s"$tmp/corpus", vecs.schema).createIfNotExists()
+    val batches = (0 until 6).map(b => vecs.filter(col("vec_id") % 6 === b))
+    corpusT.append(batches.head)
+    // the target is the first batch's bytes: shrink kicks in as the
+    // corpus grows
     val resv = TrainReservoir(spark, "resv", s"$tmp/resv", vecs.schema,
-      "vec_id", every = 2)
+      "vec_id", TrainReservoir.Target(corpusT.tableBytes), every = 2)
     def check(): Unit = {
       val banked = resv.trainPop().select(col("vec_id"))
         .collect().map(_.getLong(0)).sorted.toSeq
@@ -620,13 +618,10 @@ class AnnSpec extends AnyFunSuite {
       assert(banked == direct,
         s"reservoir diverged from the direct sample at keep ${resv.storedKeep}")
     }
-    var target = 0L
-    (0 until 6).foreach { b =>
-      val batch = vecs.filter(col("vec_id") % 6 === b)
-      corpusT.append(batch)
-      if (b == 0) target = corpusT.tableBytes // shrink kicks in as it grows
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      if (b > 0) corpusT.append(batch)
       resv.append(b.toLong, batch)
-      resv.maintain(b.toLong, corpusT.tableBytes, target)
+      resv.maintain(b.toLong, corpusT.tableBytes)
       check()
     }
     assert(resv.storedKeep < 10000,
@@ -636,7 +631,7 @@ class AnnSpec extends AnyFunSuite {
     check()
     // a fixedKeep reservoir banks exactly the oracle's keep from batch 0
     val fixed = TrainReservoir(spark, "resv_fixed", s"$tmp/resvf",
-      vecs.schema, "vec_id", fixedKeep = Some(5000))
+      vecs.schema, "vec_id", TrainReservoir.Fixed(5000))
     fixed.append(0L, vecs)
     assert(fixed.storedKeep == 5000)
     assert(fixed.trainPop().select(col("vec_id"))
@@ -705,6 +700,39 @@ class AnnSpec extends AnyFunSuite {
     c1.writeBatch(1L, newCodes) // a later batch is new data
     assert(c1.read().count() == n1 + newCodes.count(),
       "the base marker must not block batches after the read-through")
+    graft.ingest.FileOps.deleteRecursively(tmp)
+  }
+
+  test("ANN maintain loop: a batch replayed after its retrain published rebases without retraining again") {
+    // the library body (graft.streaming.AnnMaintain) on the
+    // q_stream_ann_maintain fixture: batch 0 seeds the baseline, batch 1
+    // drifts and retrains. A crash between the publish and the rebase
+    // leaves batch 1's drifted window in the statistics; the replay
+    // must find generation 1 built through batch 1 and only rebase —
+    // a second retrain would publish generation 2.
+    val tmp = java.nio.file.Files.createTempDirectory("graft-annm-replay")
+    val (hist, reference, arrivals, pop) = retrainFixture
+    val p = graft.streaming.AnnMaintain.create(spark, "annm_replay",
+      tmp.toString, hist, graft.vector.TrainReservoir.Fixed(5000))
+    assert(!p.perBatch(reference, 0L).maintained)
+    val boom = intercept[RuntimeException] {
+      p.perBatch(arrivals, 1L, {
+        case "published" => throw new RuntimeException("injected crash after the publish")
+        case _ => ()
+      })
+    }
+    assert(boom.getMessage.contains("injected"))
+    assert(p.index.currentGen().contains(1L))
+    assert(!p.stats.read().isEmpty, "the crash landed after the rebase")
+    assert(p.perBatch(arrivals, 1L).maintained, "the replay did not rebase")
+    assert(p.index.currentGen().contains(1L),
+      s"the replay retrained again: generation ${p.index.currentGen()}")
+    assert(p.stats.read().isEmpty, "the replay left the drifted window behind")
+    // the generation holds each landed vector once
+    val stage = p.index.currentDir()
+    val n = pop.count()
+    assert(spark.read.parquet(s"$stage/assign").count() == n)
+    assert(p.vecs.read().count() == n)
     graft.ingest.FileOps.deleteRecursively(tmp)
   }
 

@@ -810,6 +810,31 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("containment hybrid body: a redelivered batch leaves the pair log and the posting index row-identical") {
+    // graft.streaming.HybridNearDup over seed grams. Batch 1 carries two
+    // copies of batch 0's document; replayed, it would serve against
+    // its own landed postings and emit each (2, 3) seed twice — the pair
+    // log lands skip-if-landed, the posting run is replaced.
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sch-replay")
+    val words = (1 to 120).map(i => s"w$i").mkString(" ")
+    val p = graft.streaming.HybridNearDup.containment(spark, "sch_replay", tmp.toString)
+    p.perBatch(Seq((1L, words)).toDF("doc_id", "text"), 0L)
+    val batch1 = Seq((2L, s"$words copy two"), (3L, s"lead $words")).toDF("doc_id", "text")
+    p.perBatch(batch1, 1L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val pairs = rows(p.pairs.read())
+    val index = rows(p.idx.read())
+    val perPair = p.pairs.read().groupBy(col("id_a"), col("id_b")).count()
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(perPair.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)), perPair)
+    assert(perPair.values.forall(_ >= 2), perPair)
+    p.perBatch(batch1, 1L)
+    assert(rows(p.pairs.read()) == pairs, "the replay changed the pair log")
+    assert(rows(p.idx.read()) == index, "the replay changed the posting index")
+    graft.ingest.FileOps.deleteRecursively(tmp)
+  }
+
   test("hybrid stored-index hot buckets are SALVAGED: planted boilerplate dups are found, fan-out stays bounded") {
     // r13 closes the r12 weak mark this test used to PIN (hot buckets
     // emitted nothing): a (band, bh) bucket at/past maxBucket is now
