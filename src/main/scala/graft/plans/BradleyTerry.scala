@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * driver/distributed split below safe.
   *
   * The statistics are MODEL-sized (models² pairs at most), so under
-  * `maxDriverRows` the loop runs on the DRIVER over hash maps (the
+  * 2¹⁸ rows the loop runs on the DRIVER over hash maps (the
   * driverComponents pattern) — replacing ~8 single-task jobs per
   * round (stage pin, two joins, union aggregate) with one concurrent
   * [[DriverFetch]] of both inputs, bounded in rows and bytes. An
@@ -26,19 +26,17 @@ object BradleyTerry {
 
   /** Ratings after `rounds` MM steps: (m, r) with r in 1e-6 units.
     * `n` carries (i, j, nij), `w` carries (m, w) — both Long. */
-  def mmRatings(n: DataFrame, w: DataFrame, rounds: Int,
-                maxDriverRows: Int = 1 << 18): DataFrame =
-    driverRatings(n, w, rounds, maxDriverRows)
+  def mmRatings(n: DataFrame, w: DataFrame, rounds: Int): DataFrame =
+    driverRatings(n, w, rounds)
       .getOrElse(mmRatingsDistributed(n, w, rounds))
 
-  private def driverRatings(n: DataFrame, w: DataFrame, rounds: Int,
-                            maxDriverRows: Int): Option[DataFrame] = {
-    if (maxDriverRows <= 0) return None
+  private def driverRatings(n: DataFrame, w: DataFrame,
+                            rounds: Int): Option[DataFrame] = {
     // the two inputs are independent: fetched concurrently
     val Seq(nRows, wRows) = DriverFetch("Bradley-Terry statistics", Seq(
         n.select(col("i"), col("j"), col("nij")),
         w.select(col("m"), col("w"))),
-      maxDriverRows).getOrElse(return None)
+      1 << 18).getOrElse(return None)
     val pairs = nRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val wins = wRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     // participant set = models appearing in a pair, exactly the

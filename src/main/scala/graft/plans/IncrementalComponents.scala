@@ -54,7 +54,7 @@ object IncrementalComponents {
     * its component MIN.
     *
     * The forwards relation is churn-sized (one row per component root
-    * ever merged since the last fold), so up to `maxDriverEdges` the
+    * ever merged since the last fold), so up to 2¹⁶ edges the
     * closure runs as a DRIVER union-find labeled by component min,
     * fetched through [[DriverFetch]] (so also under its byte cap).
     * This is not a micro-optimization: the composed pipeline resolves
@@ -65,10 +65,9 @@ object IncrementalComponents {
     * the distributed star-CC kernel takes over: same min-labeled
     * answer (spec-pinned equal on chain + multi-merge fixtures),
     * O(log diameter) rounds. */
-  def resolveForwards(fwd: DataFrame, maxDriverEdges: Int = 1 << 16)
-      : DataFrame =
+  def resolveForwards(fwd: DataFrame): DataFrame =
     DriverFetch("forwarding closure",
-        Seq(fwd.select(col("old_root"), col("new_root"))), maxDriverEdges)
+        Seq(fwd.select(col("old_root"), col("new_root"))), 1 << 16)
       .map { case Seq(edgeRows) =>
         // union handles even a degenerate double-forwarded root a
         // replayed batch could leave, where a pure chain-follow would
@@ -76,11 +75,10 @@ object IncrementalComponents {
         val uf = UnionFind.of(edgeRows.iterator.map(r => (r.getLong(0), r.getLong(1))))
         DriverFetch.local(fwd, uf.nodes.map(n => Row(n, uf.find(n))).toSeq, ForwardSchema)
       }
-      .getOrElse(graft.text.Dedup.connectedComponentsStar(
-          fwd.select(col("old_root").as("id_a"), col("new_root").as("id_b")),
-          // this caller already proved the relation exceeds ITS driver
-          // cap — skip the kernel's own (bounded) re-probe job
-          maxDriverEdges = 0)
+      // over the cap: the distributed star rounds directly — the
+      // kernel's own driver probe would refetch the same relation
+      .getOrElse(graft.text.Dedup.connectedComponentsStarRounds(
+          fwd.select(col("old_root").as("id_a"), col("new_root").as("id_b")), 50)._1
         .select(col("id").as("old_root"), col("comp").as("final_root")))
 
   private val ForwardSchema = StructType(Seq(
@@ -110,22 +108,22 @@ object IncrementalComponents {
     * root's new min; (3) losers' forwarding edges and new nodes'
     * labels (already at their final root) come back as appends.
     *
-    * Endpoint ids are a driver-held model-state fetch (bounded:
-    * 2 × batch pairs) reused as the pushed labels filter AND the local
-    * lookup relation — the hybrid-index stance; a batch wider than
-    * `maxBatchIds` falls back to a distributed lookup join (the one
-    * full labels scan such a bulk batch amortizes).
+    * Endpoint ids are a bounded driver fetch (2 × batch pairs)
+    * reused as the pushed labels filter AND the local
+    * lookup relation — the hybrid-index stance; a batch over 2²⁰
+    * endpoints (or the [[DriverFetch]] byte cap) falls back to a
+    * distributed lookup join (the one full labels scan such a bulk
+    * batch amortizes).
     *
     * Batch-sized inputs run on the DRIVER ([[driverAppends]]): the
     * pairs and the forwards come back concurrently, then the endpoint
     * labels, each at most 2^16 rows and each call at most 64 MiB
     * ([[DriverFetch]]); both appends return as local relations. Larger
     * inputs run the distributed body. */
-  def batchAppends(labels: DataFrame, fwd: DataFrame, pairs: DataFrame,
-                   maxBatchIds: Int = 1 << 20)
+  def batchAppends(labels: DataFrame, fwd: DataFrame, pairs: DataFrame)
       : (DataFrame, DataFrame) =
     driverAppends(labels, fwd, pairs)
-      .getOrElse(batchAppendsDistributed(labels, fwd, pairs, maxBatchIds))
+      .getOrElse(batchAppendsDistributed(labels, fwd, pairs))
 
   /** The driver path of [[batchAppends]]: the root resolution through
     * the forwards, the root-pair closure, the losing roots' forwards and
@@ -135,12 +133,10 @@ object IncrementalComponents {
     * does). Long ids only; None above the fetch caps. */
   private def driverAppends(labels: DataFrame, fwd: DataFrame, pairs: DataFrame)
       : Option[(DataFrame, DataFrame)] = {
-    def longs(df: DataFrame, cols: String*) = {
-      val t = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      cols.forall(c => t.get(c).contains(LongType))
-    }
-    if (!longs(pairs, "id_a", "id_b") || !longs(labels, "doc_id", "comp_id") ||
-        !longs(fwd, "old_root", "new_root")) return None
+    if (!DriverFetch.hasTypes(pairs, "id_a" -> LongType, "id_b" -> LongType) ||
+        !DriverFetch.hasTypes(labels, "doc_id" -> LongType, "comp_id" -> LongType) ||
+        !DriverFetch.hasTypes(fwd, "old_root" -> LongType, "new_root" -> LongType))
+      return None
     val nullable = pairs.schema("id_a").nullable || pairs.schema("id_b").nullable
     def schema(a: String, b: String) = StructType(Seq(
       StructField(a, LongType, nullable), StructField(b, LongType, nullable)))
@@ -184,27 +180,24 @@ object IncrementalComponents {
   /** The distributed body of [[batchAppends]] — the path for inputs
     * over the driver caps. */
   private[graft] def batchAppendsDistributed(labels: DataFrame, fwd: DataFrame,
-                                             pairs: DataFrame, maxBatchIds: Int)
+                                             pairs: DataFrame)
       : (DataFrame, DataFrame) = {
     val spark = pairs.sparkSession
     val endpoints = pairs.select(col("id_a").as("doc_id"))
       .unionByName(pairs.select(col("id_b").as("doc_id"))).distinct()
-    val epSchema = endpoints.schema
-    val epRows = Materialize.modelState(
-      endpoints.limit(maxBatchIds + 1),
-      "incremental-components batch endpoints (2 × batch pairs, " +
-        "pre-limited to maxBatchIds + 1)", maxBatchIds + 1)
     val (epsDf, known) =
-      if (epRows.length > maxBatchIds)
-        // documented wide-batch fallback: distributed lookup join
-        (endpoints, labels.join(endpoints, Seq("doc_id"), "left_semi"))
-      else
-        (spark.createDataFrame(
-          java.util.Arrays.asList(epRows: _*), epSchema),
-          if (epRows.isEmpty) labels.filter(lit(false))
-          else labels.filter(org.apache.spark.sql.graft.ColumnBridge
-            .inSet("doc_id",
-              epRows.map(r => Long.box(r.getLong(0)): Any).toSet)))
+      DriverFetch("incremental components: batch endpoints", Seq(endpoints), 1 << 20) match {
+        case Some(Seq(epRows)) =>
+          (spark.createDataFrame(
+            java.util.Arrays.asList(epRows: _*), endpoints.schema),
+            if (epRows.isEmpty) labels.filter(lit(false))
+            else labels.filter(org.apache.spark.sql.graft.ColumnBridge
+              .inSet("doc_id",
+                epRows.map(r => Long.box(r.getLong(0)): Any).toSet)))
+        case _ =>
+          // documented wide-batch fallback: distributed lookup join
+          (endpoints, labels.join(endpoints, Seq("doc_id"), "left_semi"))
+      }
     val res = resolveForwards(fwd)
     // current root per endpoint: stored label (own id if new), then
     // through the forwarding closure; pin once — three consumers

@@ -30,23 +30,18 @@ import org.apache.spark.sql.types._
   */
 object MadGate {
 
-  /** Histograms up to this many rows run the driver tail. 2¹⁸ rows of
-    * (string, long, long) is a few MB on the driver — model-state
-    * sized; a histogram larger than this is behaving like a corpus
-    * relation and keeps the distributed shape. */
-  val DefaultCap: Int = 1 << 18
-
   /** Gate over a histogram with columns (source: string, len: long,
     * cnt: long). Output: (source, n_docs, median_len, mad, n_outliers)
-    * — UNORDERED; callers sort. */
-  def gate(h: DataFrame, maxDriverRows: Int = DefaultCap): DataFrame = {
-    val fields = h.schema.fields
-    val onContract = fields.length == 3 &&
-      fields(0).name == "source" && fields(0).dataType == StringType &&
-      fields(1).name == "len" && fields(1).dataType == LongType &&
-      fields(2).name == "cnt" && fields(2).dataType == LongType
-    if (!onContract) return gateDistributed(h)
-    DriverFetch("mad-gate length histogram", Seq(h), maxDriverRows) match {
+    * — UNORDERED; callers sort. Histograms up to 2¹⁸ rows run the
+    * driver tail: a few MB of (string, long, long) on the driver —
+    * model-state sized; a histogram larger than this is behaving like
+    * a corpus relation and keeps the distributed shape. */
+  def gate(h: DataFrame): DataFrame = {
+    // exactly these three columns: the distributed tail joins `h` whole
+    if (h.schema.length != 3 || !DriverFetch.hasTypes(h, "source" -> StringType,
+        "len" -> LongType, "cnt" -> LongType)) return gateDistributed(h)
+    DriverFetch("mad-gate length histogram",
+        Seq(h.select(col("source"), col("len"), col("cnt"))), 1 << 18) match {
       case Some(Seq(rows)) => gateDriver(h.sparkSession,
         rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
       case _ => gateDistributed(h)
@@ -55,7 +50,7 @@ object MadGate {
 
   /** The original distributed tail, kept verbatim as the over-cap /
     * off-type fallback and as the spec's equivalence reference. */
-  def gateDistributed(h: DataFrame): DataFrame = {
+  private[graft] def gateDistributed(h: DataFrame): DataFrame = {
     def histMedian(hist: DataFrame, valCol: String): DataFrame = {
       val w = Window.partitionBy(col("source")).orderBy(col(valCol))
       val nTot = hist.groupBy(col("source")).agg(sum(col("cnt")).as("n"))

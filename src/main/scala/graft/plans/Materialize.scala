@@ -34,7 +34,7 @@ object Materialize {
   }
 
   /** Driver-held MODEL-STATE fetch — the one audited idiom for every
-    * bounded `.collect()` in the library (k-means centroids and their
+    * fail-loudly `.collect()` in the library (k-means centroids and their
     * per-round updates, PQ codebook seeds/updates, BPE's per-round
     * top pair, IVF probe centroids). The contract: the relation is
     * MODEL-sized — bounded by k, k·dim, vocab-k or a literal limit,
@@ -48,7 +48,11 @@ object Materialize {
     * corpus-sized collect becomes an immediate, named error instead of
     * a driver OOM minutes later. Row order is whatever collect yields
     * — all callers aggregate/sort driver-side or pre-limit with an
-    * orderBy, so the cap's pass-through is order-agnostic. */
+    * orderBy, so the cap's pass-through is order-agnostic.
+    *
+    * Data that may legitimately outgrow its cap and has a distributed
+    * fallback does not come through here: a driver fast path fetches
+    * through [[DriverFetch]], which returns None above its caps. */
   def modelState(df: DataFrame, what: String,
                  maxRows: Int = 1 << 20): Array[org.apache.spark.sql.Row] = {
     val rows = df.limit(maxRows + 1).collect()

@@ -28,7 +28,7 @@ object PageRank {
   val Unit0: Long = 1000000000L // rank 1.0 in micro-units
 
   /** Bounded DRIVER fast path (the [[graft.text.Dedup.driverComponents]]
-    * pattern): under `maxDriverEdges` the fixed-iteration recurrence
+    * pattern): under 2²⁰ edges the fixed-iteration recurrence
     * runs as one [[DriverFetch]] + a driver loop over hash maps and
     * returns a LocalRelation — replacing ~18 single-task jobs per
     * iteration (stage pin, dangling broadcast, contribution join
@@ -41,15 +41,12 @@ object PageRank {
     * ~24 MiB fetched at the 2²⁰ bound, under the fetch's byte cap. Long
     * ids only; other types fall through. */
   private def driverRanks(edges: DataFrame, iterations: Int,
-                          dangling: Boolean,
-                          maxDriverEdges: Int): Option[DataFrame] = {
+                          dangling: Boolean): Option[DataFrame] = {
+    import org.apache.spark.sql.types.LongType
     val spark = edges.sparkSession
-    val byName = edges.schema.fields.map(f => f.name -> f.dataType).toMap
-    val longIds = Seq("src", "dst").forall(c =>
-      byName.get(c).contains(org.apache.spark.sql.types.LongType))
-    if (maxDriverEdges <= 0 || !longIds) return None
+    if (!DriverFetch.hasTypes(edges, "src" -> LongType, "dst" -> LongType)) return None
     val Seq(rows) = DriverFetch("pagerank edges",
-      Seq(edges.select(col("src"), col("dst"))), maxDriverEdges)
+      Seq(edges.select(col("src"), col("dst"))), 1 << 20)
       .getOrElse(return None)
     val e = new scala.collection.mutable.HashSet[(Long, Long)]
     rows.foreach(r => e += ((r.getLong(0), r.getLong(1))))
@@ -87,10 +84,9 @@ object PageRank {
 
   /** Ranks after `iterations` damped steps. `edges` carries (src, dst);
     * duplicates are collapsed. Returns (node, u) with u in 1e-9 units. */
-  def ranks(edges: DataFrame, iterations: Int = 3,
-            maxDriverEdges: Int = 1 << 20): DataFrame = {
+  def ranks(edges: DataFrame, iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 20, "iterations in [1,20]")
-    driverRanks(edges, iterations, dangling = false, maxDriverEdges)
+    driverRanks(edges, iterations, dangling = false)
       .getOrElse(ranksDistributed(edges, iterations))
   }
 
@@ -125,10 +121,9 @@ object PageRank {
     * [[ranks]]: each node's share is `dang div N` (truncating), so the
     * redistributed mass stays exact integer arithmetic; the < N·1e-9
     * truncation loss per iteration is ranking-irrelevant. */
-  def ranksDangling(edges: DataFrame, iterations: Int = 3,
-                    maxDriverEdges: Int = 1 << 20): DataFrame = {
+  def ranksDangling(edges: DataFrame, iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 20, "iterations in [1,20]")
-    driverRanks(edges, iterations, dangling = true, maxDriverEdges)
+    driverRanks(edges, iterations, dangling = true)
       .getOrElse(ranksDanglingDistributed(edges, iterations))
   }
 

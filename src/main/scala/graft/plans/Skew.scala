@@ -58,8 +58,6 @@ object Skew {
     * untouched. */
   def fanOutSmall(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    if (spark.conf.get("graft.fanout.disable",
-        sys.env.getOrElse("GRAFT_FANOUT_DISABLE", "false")).toBoolean) return df
     val par = spark.sparkContext.defaultParallelism
     val files = df.inputFiles
     if (files.isEmpty || files.length >= par) return df

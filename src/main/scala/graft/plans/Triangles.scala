@@ -37,13 +37,12 @@ object Triangles {
     * @param edges undirected edge list with columns `a`, `b` (any
     *              orientation, self-loops ignored, duplicates collapsed)
     * @return (node, n_tri) — nodes appearing in ≥ 1 triangle */
-  def perNodeCounts(edges: DataFrame,
-                    maxDriverEdges: Int = 1 << 16): DataFrame =
-    driverCounts(edges, maxDriverEdges)
+  def perNodeCounts(edges: DataFrame): DataFrame =
+    driverCounts(edges)
       .getOrElse(perNodeCountsDistributed(edges))
 
   /** Bounded DRIVER fast path (the [[graft.text.Dedup.driverComponents]]
-    * pattern applied to this kernel): under `maxDriverEdges` the whole
+    * pattern applied to this kernel): under 2¹⁶ edges the whole
     * count runs as one [[DriverFetch]] + a driver wedge walk and returns a
     * LocalRelation — replacing the 5-relation distributed chain (2
     * stage pins, a wedge self-join, ~20 single-task jobs of pure
@@ -59,15 +58,12 @@ object Triangles {
     * construction (PlanOpsSpec pins driver ≡ distributed on random
     * graphs and the above-cap fallback). Long ids only; other types
     * fall through. */
-  private def driverCounts(edges: DataFrame,
-                           maxDriverEdges: Int): Option[DataFrame] = {
+  private def driverCounts(edges: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.types.LongType
     val spark = edges.sparkSession
-    val byName = edges.schema.fields.map(f => f.name -> f.dataType).toMap
-    val longIds = Seq("a", "b").forall(c =>
-      byName.get(c).contains(org.apache.spark.sql.types.LongType))
-    if (maxDriverEdges <= 0 || !longIds) return None
+    if (!DriverFetch.hasTypes(edges, "a" -> LongType, "b" -> LongType)) return None
     val Seq(rows) = DriverFetch("triangle edges",
-      Seq(edges.select(col("a"), col("b"))), maxDriverEdges)
+      Seq(edges.select(col("a"), col("b"))), 1 << 16)
       .getOrElse(return None)
     val canon = new scala.collection.mutable.HashSet[(Long, Long)]
     rows.foreach { r =>

@@ -1331,50 +1331,47 @@ object CorpusQueries {
         // java.lang.Math calls codegen emits, max replayed
         // NaN-largest); an over-cap source vocabulary falls back to
         // the distributed shape unchanged
-        val domCap = 1 << 18
-        val domRows = graft.plans.Materialize.modelState(
-          dom.limit(domCap + 1), "domain stats (pre-limited to cap + 1)",
-          domCap + 1)
         val rates =
-          if (domRows.length > domCap) {
-            val tot = dom.groupBy()
-              .agg(sum(col("n")).as("n_all"), sum(col("q4")).as("q4_all"))
-            val wts = dom.crossJoin(broadcast(tot))
-              .select(col("source"), col("n"), col("q4"),
-                exp(col("q4_all").cast("double") / lit(1e4)
-                    / col("n_all").cast("double")
-                  - col("q4").cast("double") / lit(1e4)
-                    / col("n").cast("double")).as("wraw"))
-            val mx = wts.groupBy().agg(max(col("wraw")).as("maxw"))
-            wts.crossJoin(broadcast(mx))
-              .select(col("source"), col("n"), col("q4"),
-                floor(lit(10000.0) * col("wraw") / col("maxw")).cast("long")
-                  .as("rate"))
-          } else {
-            val ds = domRows.map(r =>
-              (r.getString(0), r.getLong(1), r.getLong(2)))
-            val nAll = ds.map(_._2).sum
-            val q4All = ds.map(_._3).sum
-            val wraw = ds.map { case (_, n, q4) =>
-              math.exp(q4All.toDouble / 1e4 / nAll.toDouble
-                - q4.toDouble / 1e4 / n.toDouble)
-            }
-            val maxw = wraw.reduceLeft((a, b) =>
-              if (java.lang.Double.compare(b, a) > 0) b else a)
-            val outSchema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("source",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("n",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("q4",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("rate",
-                org.apache.spark.sql.types.LongType)))
-            val rows = ds.zip(wraw).map { case ((src, n, q4), w) =>
-              org.apache.spark.sql.Row(src, n, q4,
-                math.floor(10000.0 * w / maxw).toLong)
-            }
-            s.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
+          graft.plans.DriverFetch("domain stats", Seq(dom), 1 << 18) match {
+            case Some(Seq(domRows)) =>
+              val ds = domRows.map(r =>
+                (r.getString(0), r.getLong(1), r.getLong(2)))
+              val nAll = ds.map(_._2).sum
+              val q4All = ds.map(_._3).sum
+              val wraw = ds.map { case (_, n, q4) =>
+                math.exp(q4All.toDouble / 1e4 / nAll.toDouble
+                  - q4.toDouble / 1e4 / n.toDouble)
+              }
+              val maxw = wraw.reduceLeft((a, b) =>
+                if (java.lang.Double.compare(b, a) > 0) b else a)
+              val outSchema = org.apache.spark.sql.types.StructType(Seq(
+                org.apache.spark.sql.types.StructField("source",
+                  org.apache.spark.sql.types.StringType),
+                org.apache.spark.sql.types.StructField("n",
+                  org.apache.spark.sql.types.LongType),
+                org.apache.spark.sql.types.StructField("q4",
+                  org.apache.spark.sql.types.LongType),
+                org.apache.spark.sql.types.StructField("rate",
+                  org.apache.spark.sql.types.LongType)))
+              val rows = ds.zip(wraw).map { case ((src, n, q4), w) =>
+                org.apache.spark.sql.Row(src, n, q4,
+                  math.floor(10000.0 * w / maxw).toLong)
+              }
+              s.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
+            case _ =>
+              val tot = dom.groupBy()
+                .agg(sum(col("n")).as("n_all"), sum(col("q4")).as("q4_all"))
+              val wts = dom.crossJoin(broadcast(tot))
+                .select(col("source"), col("n"), col("q4"),
+                  exp(col("q4_all").cast("double") / lit(1e4)
+                      / col("n_all").cast("double")
+                    - col("q4").cast("double") / lit(1e4)
+                      / col("n").cast("double")).as("wraw"))
+              val mx = wts.groupBy().agg(max(col("wraw")).as("maxw"))
+              wts.crossJoin(broadcast(mx))
+                .select(col("source"), col("n"), col("q4"),
+                  floor(lit(10000.0) * col("wraw") / col("maxw")).cast("long")
+                    .as("rate"))
           }
         val kept = docs.select(col("doc_id"), col("source"))
           .join(broadcast(rates.select(col("source"), col("rate"))),

@@ -1146,65 +1146,62 @@ object TextQueries {
         // is plain truncating long division, so the driver loop is bit
         // identical; an over-cap source vocabulary falls back to the
         // unrolled distributed shape unchanged.
-        val statCap = 1 << 18
-        val statRows = graft.plans.Materialize.modelState(
-          stats.limit(statCap + 1),
-          "waterfill source stats (pre-limited to cap + 1)", statCap + 1)
-        if (statRows.length <= statCap) {
-          val ss = statRows.map(r =>
-            (r.getString(0), r.getLong(1), r.getLong(2)))
-          val b = ss.map(_._2).sum / 2
-          var sat = ss.map(_ => false)
-          for (_ <- 1 to 3) {
+        graft.plans.DriverFetch("waterfill source stats", Seq(stats), 1 << 18) match {
+          case Some(Seq(statRows)) =>
+            val ss = statRows.map(r =>
+              (r.getString(0), r.getLong(1), r.getLong(2)))
+            val b = ss.map(_._2).sum / 2
+            var sat = ss.map(_ => false)
+            for (_ <- 1 to 3) {
+              val taken = ss.zip(sat).collect { case ((_, n, _), true) => n }.sum
+              val wsum = ss.zip(sat).collect { case ((_, _, w), false) => w }.sum
+              sat = ss.zip(sat).map { case ((_, n, w), sd) =>
+                sd || (b - taken) * w / math.max(wsum, 1L) >= n
+              }
+            }
             val taken = ss.zip(sat).collect { case ((_, n, _), true) => n }.sum
             val wsum = ss.zip(sat).collect { case ((_, _, w), false) => w }.sum
-            sat = ss.zip(sat).map { case ((_, n, w), sd) =>
-              sd || (b - taken) * w / math.max(wsum, 1L) >= n
+            val outSchema = org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("source",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("n_tokens",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("weight",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("saturated",
+                org.apache.spark.sql.types.BooleanType, nullable = false),
+              org.apache.spark.sql.types.StructField("take_tokens",
+                org.apache.spark.sql.types.LongType)))
+            val rows = ss.zip(sat).map { case ((src, n, w), sd) =>
+              org.apache.spark.sql.Row(src, n, w, sd,
+                if (sd) n else (b - taken) * w / math.max(wsum, 1L))
             }
-          }
-          val taken = ss.zip(sat).collect { case ((_, n, _), true) => n }.sum
-          val wsum = ss.zip(sat).collect { case ((_, _, w), false) => w }.sum
-          val outSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("source",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("n_tokens",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("weight",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("saturated",
-              org.apache.spark.sql.types.BooleanType, nullable = false),
-            org.apache.spark.sql.types.StructField("take_tokens",
-              org.apache.spark.sql.types.LongType)))
-          val rows = ss.zip(sat).map { case ((src, n, w), sd) =>
-            org.apache.spark.sql.Row(src, n, w, sd,
-              if (sd) n else (b - taken) * w / math.max(wsum, 1L))
-          }
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-            .orderBy(col("source"))
-        } else {
-          val budget = stats.agg(expr("sum(n) div 2").as("b"))
-          var cur = stats.crossJoin(broadcast(budget))
-            .withColumn("sat", lit(false))
-          for (_ <- 1 to 3) {
-            val pool = cur.agg(
+            s.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
+              .orderBy(col("source"))
+          case _ =>
+            val budget = stats.agg(expr("sum(n) div 2").as("b"))
+            var cur = stats.crossJoin(broadcast(budget))
+              .withColumn("sat", lit(false))
+            for (_ <- 1 to 3) {
+              val pool = cur.agg(
+                sum(when(col("sat"), col("n")).otherwise(0L)).as("taken"),
+                sum(when(!col("sat"), col("w")).otherwise(0L)).as("wsum"))
+              cur = cur.crossJoin(broadcast(pool))
+                .withColumn("sat",
+                  col("sat") ||
+                    (expr("(b - taken) * w div greatest(wsum, 1L)") >= col("n")))
+                .drop("taken", "wsum")
+            }
+            val fin = cur.agg(
               sum(when(col("sat"), col("n")).otherwise(0L)).as("taken"),
               sum(when(!col("sat"), col("w")).otherwise(0L)).as("wsum"))
-            cur = cur.crossJoin(broadcast(pool))
-              .withColumn("sat",
-                col("sat") ||
-                  (expr("(b - taken) * w div greatest(wsum, 1L)") >= col("n")))
-              .drop("taken", "wsum")
-          }
-          val fin = cur.agg(
-            sum(when(col("sat"), col("n")).otherwise(0L)).as("taken"),
-            sum(when(!col("sat"), col("w")).otherwise(0L)).as("wsum"))
-          cur.crossJoin(broadcast(fin))
-            .select(col("source"), col("n").as("n_tokens"), col("w").as("weight"),
-              col("sat").as("saturated"),
-              when(col("sat"), col("n"))
-                .otherwise(expr("(b - taken) * w div greatest(wsum, 1L)"))
-                .as("take_tokens"))
-            .orderBy(col("source"))
+            cur.crossJoin(broadcast(fin))
+              .select(col("source"), col("n").as("n_tokens"), col("w").as("weight"),
+                col("sat").as("saturated"),
+                when(col("sat"), col("n"))
+                  .otherwise(expr("(b - taken) * w div greatest(wsum, 1L)"))
+                  .as("take_tokens"))
+              .orderBy(col("source"))
         }
       },
       Some {

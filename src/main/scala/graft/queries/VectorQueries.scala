@@ -2986,7 +2986,7 @@ object VectorQueries {
            |cf AS (SELECT a, b, cc FROM cf0
            |  UNION ALL SELECT b AS a, a AS b, cc FROM cf0 WHERE a <> b),
            |rr AS (SELECT greatest(max(abs(cc)) // 1000000000, 1) AS r FROM cf),
-           |cm AS (SELECT a, b, cc // rr.r AS c FROM cf, rr),
+           |cm AS MATERIALIZED (SELECT a, b, cc // rr.r AS c FROM cf, rr),
            |v0 AS (SELECT t1.ia AS a, CAST(1000000 AS BIGINT) AS v
            |       FROM range(0, 64) t1(ia)),
            |$rounds,

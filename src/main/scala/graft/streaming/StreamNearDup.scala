@@ -416,12 +416,8 @@ object StreamNearDup {
                            pruneKeyCap: Int): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    def typed(df: DataFrame) = {
-      val t = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      t.get("band").contains(IntegerType) && t.get("bh").contains(LongType) &&
-        t.get("doc_id").contains(LongType) &&
-        t.get("sig").exists { case ArrayType(LongType, _) => true; case _ => false }
-    }
+    def typed(df: DataFrame) = graft.plans.DriverFetch.hasTypes(df, "band" -> IntegerType,
+      "bh" -> LongType, "doc_id" -> LongType, "sig" -> ArrayType(LongType))
     if (!typed(newBands) || !typed(index)) return None
     val cutoff = math.max(0.0, threshold - 2.0 / math.sqrt(k.toDouble))
     val nullable = newBands.schema("doc_id").nullable || index.schema("doc_id").nullable
@@ -488,12 +484,9 @@ object StreamNearDup {
     // cap the driver-held rows then serve BOTH pruning consumers — the
     // pushed bh IN filter and the (band, bh) key join's broadcast side
     // (a local relation: no second distributed distinct per consumer)
-    val keySchema = newBands.select(col("band"), col("bh")).schema
-    val keyRows = graft.plans.Materialize.modelState(
-      newBands.select(col("band"), col("bh")).distinct()
-        .limit(pruneKeyCap + 1),
-      "hybrid batch bucket keys (band, bh; bounded by batch docs × " +
-        "bands, pre-limited to pruneKeyCap + 1)", pruneKeyCap + 1)
+    val keys = newBands.select(col("band"), col("bh")).distinct()
+    val fetchedKeys = graft.plans.DriverFetch("hybrid serve: batch bucket keys",
+      Seq(keys), pruneKeyCap).map(_.head)
     // restrict the scan through the batch's BUCKET KEYS — the key set
     // broadcasts at any realistic batch size (16 bytes a key, vs
     // ~0.5 KB a full band row, which could blow past the broadcast
@@ -506,17 +499,18 @@ object StreamNearDup {
     // preserves its size estimate so the cross join below broadcasts
     // it (an eagerly staged RDD loses stats and flips the cross join
     // into a full shuffle of the batch — measured 3× slower).
-    val (pruned, batchKeys) =
-      if (keyRows.length > pruneKeyCap)
+    val (pruned, batchKeys) = fetchedKeys match {
+      case Some(rows) =>
+        (if (rows.isEmpty) index.filter(lit(false))
+         else index.filter(org.apache.spark.sql.graft.ColumnBridge
+           .inSet("bh", rows.map(r => Long.box(r.getLong(1))).toSet)),
+          newBands.sparkSession.createDataFrame(
+            java.util.Arrays.asList(rows: _*), keys.schema))
+      case None =>
         // key set too wide to hold driver-side: the documented
         // fallback — full scan, distributed key distinct
-        (index, newBands.select(col("band"), col("bh")).distinct())
-      else
-        (if (keyRows.isEmpty) index.filter(lit(false))
-         else index.filter(org.apache.spark.sql.graft.ColumnBridge
-           .inSet("bh", keyRows.map(r => Long.box(r.getLong(1))).toSet)),
-          newBands.sparkSession.createDataFrame(
-            java.util.Arrays.asList(keyRows: _*), keySchema))
+        (index, keys)
+    }
     // buckets whose TOTAL membership (stored + this batch) is at/over
     // the cap are dropped before either row join multiplies their
     // members — counting the batch side too keeps the WITHIN-batch
@@ -546,10 +540,10 @@ object StreamNearDup {
     // join before it fails, loudly) and gOf is applied there; cold
     // buckets default to g = 1 through the left join below.
     val gSchema = org.apache.spark.sql.types.StructType(
-      keySchema.fields :+ org.apache.spark.sql.types.StructField(
+      keys.schema.fields :+ org.apache.spark.sql.types.StructField(
         "__g", org.apache.spark.sql.types.IntegerType, nullable = false))
     val hotRows: Array[org.apache.spark.sql.Row] =
-      if (keyRows.length > pruneKeyCap)
+      if (fetchedKeys.isEmpty)
         // wide-batch fallback: the counts relation is distributed, but
         // the HOT subset is still driver-sized — one bounded fetch
         // (countsRel has no other consumer since the hot-only refactor:

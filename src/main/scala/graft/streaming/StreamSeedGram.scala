@@ -148,23 +148,20 @@ object StreamSeedGram {
     // one distinct job; below the cap the driver-held keys serve both
     // the pushed IN filter and the posting join's broadcast side (the
     // StreamNearDup.hybridCandidates stance)
-    val keySchema = newSeeds.select(col("h")).schema
-    val keyRows = graft.plans.Materialize.modelState(
-      newSeeds.select(col("h")).distinct().limit(pruneKeyCap + 1),
-      "hybrid batch seed keys (h; bounded by batch docs × seeds/doc, " +
-        "pre-limited to pruneKeyCap + 1)", pruneKeyCap + 1)
+    val keys = newSeeds.select(col("h")).distinct()
     // matching stored postings feed the df count AND the cross join —
     // pin once; the relation is batch-seed-sized, not index-sized
     val matching = graft.plans.Materialize.stage(
-      if (keyRows.length > pruneKeyCap)
-        index.join(broadcast(newSeeds.select(col("h")).distinct()), Seq("h"))
-      else {
-        val pruned =
-          if (keyRows.isEmpty) index.filter(lit(false))
-          else index.filter(org.apache.spark.sql.graft.ColumnBridge
-            .inSet("h", keyRows.map(r => Long.box(r.getLong(0))).toSet))
-        pruned.join(broadcast(newSeeds.sparkSession.createDataFrame(
-          java.util.Arrays.asList(keyRows: _*), keySchema)), Seq("h"))
+      graft.plans.DriverFetch("hybrid seed serve: batch seed keys", Seq(keys),
+          pruneKeyCap) match {
+        case Some(Seq(keyRows)) =>
+          val pruned =
+            if (keyRows.isEmpty) index.filter(lit(false))
+            else index.filter(org.apache.spark.sql.graft.ColumnBridge
+              .inSet("h", keyRows.map(r => Long.box(r.getLong(0))).toSet))
+          pruned.join(broadcast(newSeeds.sparkSession.createDataFrame(
+            java.util.Arrays.asList(keyRows: _*), keys.schema)), Seq("h"))
+        case _ => index.join(broadcast(keys), Seq("h"))
       })
     val newDf = newSeeds.groupBy(col("h")).agg(count(lit(1)).as("ndf"))
     val storedDf = matching.groupBy(col("h")).agg(count(lit(1)).as("sdf"))

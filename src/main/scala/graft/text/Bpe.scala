@@ -38,18 +38,17 @@ object Bpe {
     * break by (freq desc, lhs asc, rhs asc) — deterministic, so the
     * learned table is itself oracle-checkable. */
   def learnMerges(words: DataFrame, wordCol: String, cntCol: String,
-                  rounds: Int,
-                  maxDriverWords: Int = 1 << 18): Seq[(String, String, Long)] = {
+                  rounds: Int): Seq[(String, String, Long)] = {
     require(rounds >= 1 && rounds <= 20, "rounds in [1,20]")
-    driverMerges(words, wordCol, cntCol, rounds, maxDriverWords)
+    driverMerges(words, wordCol, cntCol, rounds)
       .getOrElse(learnMergesDistributed(words, wordCol, cntCol, rounds))
   }
 
   /** Bounded DRIVER fast path (the driverComponents pattern): a
-    * dictionary under `maxDriverWords` rows is collected once and the
-    * whole greedy loop runs on the driver — replacing ~9 jobs per
-    * round (2 stage pins, pair-count aggregate, top-1 fetch, rewrite
-    * windows) with one CollectLimit. The result is identical by
+    * dictionary under 2¹⁸ rows is fetched once ([[graft.plans.DriverFetch]])
+    * and the whole greedy loop runs on the driver — replacing ~9 jobs
+    * per round (2 stage pins, pair-count aggregate, top-1 fetch,
+    * rewrite windows) with one bounded fetch. The result is identical by
     * construction: pair frequencies are exact long sums, the top-pair
     * tie-break replays Spark's binary UTF-8 string order byte for
     * byte, symbols split on CODE POINTS exactly like Spark's
@@ -59,15 +58,11 @@ object Bpe {
     * cap — a genuinely corpus-scale dictionary — the distributed
     * rounds take over unchanged. */
   private def driverMerges(words: DataFrame, wordCol: String,
-                           cntCol: String, rounds: Int,
-                           maxDriverWords: Int)
+                           cntCol: String, rounds: Int)
       : Option[Seq[(String, String, Long)]] = {
-    if (maxDriverWords <= 0) return None
-    val rows = graft.plans.Materialize.modelState(
-      words.select(col(wordCol).cast("string"), col(cntCol).cast("long"))
-        .limit(maxDriverWords + 1),
-      "BPE dictionary (pre-limited to cap + 1)", maxDriverWords + 1)
-    if (rows.length > maxDriverWords) return None
+    val Seq(rows) = graft.plans.DriverFetch("BPE dictionary",
+      Seq(words.select(col(wordCol).cast("string"), col(cntCol).cast("long"))),
+      1 << 18).getOrElse(return None)
     // Spark's substring splits on code points, not UTF-16 chars
     def codePoints(w: String): Array[String] = {
       val b = Array.newBuilder[String]

@@ -476,9 +476,8 @@ object Dedup {
                            w: Int): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val types = pairs.schema.fields.map(f => f.name -> f.dataType).toMap
-    if (!types.get("id_a").contains(LongType) || !types.get("id_b").contains(LongType) ||
-        !df.schema.find(_.name == idCol).exists(_.dataType == LongType)) return None
+    if (!graft.plans.DriverFetch.hasTypes(pairs, "id_a" -> LongType, "id_b" -> LongType) ||
+        !graft.plans.DriverFetch.hasTypes(df, idCol -> LongType)) return None
     val outSchema = StructType(Seq(
       StructField("id_a", LongType, pairs.schema("id_a").nullable),
       StructField("id_b", LongType, pairs.schema("id_b").nullable),
@@ -543,13 +542,11 @@ object Dedup {
     }
   }
 
-  /** Edge cap for [[driverComponents]] — ≈1 MiB of collected edge rows,
-    * the same bound [[graft.plans.IncrementalComponents.resolveForwards]]
-    * uses for its forwarding closure. */
-  private[graft] val DefaultMaxDriverEdges: Int = 1 << 16
-
   /** Bounded DRIVER fast path shared by both component kernels: when
-    * the pair relation fits under `maxDriverEdges` and the byte cap
+    * the pair relation fits under 2¹⁶ edges (≈1 MiB of collected edge
+    * rows, the same bound
+    * [[graft.plans.IncrementalComponents.resolveForwards]] uses for its
+    * forwarding closure) and the byte cap
     * ([[graft.plans.DriverFetch]] — the driver never buffers more than
     * the cap), the closure runs as a driver union-find labeled by component min
     * and returns a LocalRelation of (id, comp) — replacing the
@@ -564,14 +561,12 @@ object Dedup {
     * on chain/multi-merge/self-pair fixtures). Only LONG ids take the
     * fast path (the union-find keys on Long); other id types fall
     * through. */
-  private[graft] def driverComponents(pairs: DataFrame,
-                                      maxDriverEdges: Int): Option[DataFrame] = {
-    val byName = pairs.schema.fields.map(f => f.name -> f.dataType).toMap
-    val longIds = Seq("id_a", "id_b").forall(c =>
-      byName.get(c).contains(org.apache.spark.sql.types.LongType))
-    if (maxDriverEdges <= 0 || !longIds) return None
+  private[graft] def driverComponents(pairs: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.types.LongType
+    if (!graft.plans.DriverFetch.hasTypes(pairs, "id_a" -> LongType, "id_b" -> LongType))
+      return None
     graft.plans.DriverFetch("connected components",
-      Seq(pairs.select(col("id_a"), col("id_b"))), maxDriverEdges)
+      Seq(pairs.select(col("id_a"), col("id_b"))), 1 << 16)
       .map { case Seq(edgeRows) =>
         val outSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id",
@@ -607,9 +602,8 @@ object Dedup {
     * Only ids appearing in a pair participate — callers join the
     * (tiny) result back to the corpus and default singletons to their
     * own id. Returns (id, comp) with comp = min id of the component. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-                          maxDriverEdges: Int = DefaultMaxDriverEdges): DataFrame =
-    driverComponents(pairs, maxDriverEdges)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    driverComponents(pairs)
       .getOrElse(connectedComponentsPropagate(pairs, maxIter))
 
   private[graft] def connectedComponentsPropagate(
@@ -670,9 +664,8 @@ object Dedup {
     * as [[connectedComponents]]: localCheckpoint locally, a reliable
     * `.checkpoint()` when `graft.checkpoint.reliable=true` and a
     * checkpoint dir are set.) */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50,
-                              maxDriverEdges: Int = DefaultMaxDriverEdges): DataFrame =
-    driverComponents(pairs, maxDriverEdges)
+  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    driverComponents(pairs)
       .getOrElse(connectedComponentsStarRounds(pairs, maxIter)._1)
 
   private[graft] def connectedComponentsStarRounds(

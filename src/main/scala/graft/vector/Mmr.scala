@@ -39,16 +39,15 @@ object Mmr {
     *              near-duplicates instead of failing
     * @return (qidCol, idCol, score, rank) — the k MMR picks per query */
   def rerank(cands: DataFrame, pairs: DataFrame, qidCol: String,
-             idCol: String, k: Int, lam: Double = 0.5,
-             maxDriverRows: Int = 1 << 18): DataFrame = {
+             idCol: String, k: Int, lam: Double = 0.5): DataFrame = {
     require(k >= 1, "k must be at least 1")
-    driverRerank(cands, pairs, qidCol, idCol, k, lam, maxDriverRows)
+    driverRerank(cands, pairs, qidCol, idCol, k, lam)
       .getOrElse(rerankDistributed(cands, pairs, qidCol, idCol, k, lam))
   }
 
   /** Bounded DRIVER fast path (the driverComponents pattern): the MMR
     * inputs are candidate-sized — k-bounded per query — so under
-    * `maxDriverRows` (and the [[graft.plans.DriverFetch]] byte cap)
+    * 2¹⁸ rows (and the [[graft.plans.DriverFetch]] byte cap)
     * both relations are fetched once, concurrently, and the greedy
     * loop runs on the driver, replacing ~9 single-task jobs per round
     * (stage pin, max-sim join, anti join, argmax aggregate). The picks
@@ -64,24 +63,20 @@ object Mmr {
     * scores only; other types fall through. */
   private def driverRerank(cands: DataFrame, pairs: DataFrame,
                            qidCol: String, idCol: String, k: Int,
-                           lam: Double, maxDriverRows: Int)
+                           lam: Double)
       : Option[DataFrame] = {
     import org.apache.spark.sql.types.{DoubleType, LongType}
-    if (maxDriverRows <= 0) return None
-    val cT = cands.schema.fields.map(f => f.name -> f.dataType).toMap
-    val pT = pairs.schema.fields.map(f => f.name -> f.dataType).toMap
-    val typed =
-      cT.get(qidCol).contains(LongType) && cT.get(idCol).contains(LongType) &&
-      cT.get("rel").contains(DoubleType) &&
-      pT.get(qidCol).contains(LongType) && pT.get("a").contains(LongType) &&
-      pT.get("b").contains(LongType) && pT.get("sim").contains(DoubleType)
-    if (!typed) return None
+    if (!graft.plans.DriverFetch.hasTypes(cands,
+          qidCol -> LongType, idCol -> LongType, "rel" -> DoubleType) ||
+        !graft.plans.DriverFetch.hasTypes(pairs,
+          qidCol -> LongType, "a" -> LongType, "b" -> LongType, "sim" -> DoubleType))
+      return None
     val spark = cands.sparkSession
     // the two inputs are independent: fetched concurrently
     val Seq(cRows, pRows) = graft.plans.DriverFetch("MMR rerank", Seq(
         cands.select(col(qidCol), col(idCol), col("rel")),
         pairs.select(col(qidCol), col("a"), col("b"), col("sim"))),
-      maxDriverRows).getOrElse(return None)
+      1 << 18).getOrElse(return None)
     // Spark double semantics: NaN largest, -0.0 < 0.0 — exactly
     // java.lang.Double.compare
     def dGt(a: Double, b: Double) = java.lang.Double.compare(a, b) > 0

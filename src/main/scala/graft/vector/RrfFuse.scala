@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   *  - '''Driver fast path''' (the [[Mmr]] / driverComponents pattern):
   *    both inputs are rank LISTS — bounded by batch × k, never
-  *    corpus-sized — so under `maxDriverRows` they are fetched once,
+  *    corpus-sized — so under 2¹⁷ rows they are fetched once,
   *    CONCURRENTLY ([[graft.plans.DriverFetch]]: a sequential fetch
   *    pair lost an interleaved A/B to the distributed form, whose AQE
   *    runs the two sub-plans in parallel), and
@@ -37,29 +37,18 @@ object RrfFuse {
     * @param cs dense ranks (cqid: long, vec_id: long, rc: int)
     * @return (qid, doc_id, rb, rc, rrf) — per-query top-`k` by fused
     *         score, ordered (qid, rrf desc, doc_id) */
-  def fusePerQuery(bm: DataFrame, cs: DataFrame, k: Int = 10,
-                   maxDriverRows: Int = 1 << 17): DataFrame =
-    (if (disabled(bm)) None else driverFuse(bm, cs, k, maxDriverRows))
-      .getOrElse(distributedFuse(bm, cs, k))
-
-  /** Kill switch (session conf) — the `graft.fanout.disable` pattern:
-    * lets plan-gate specs and A/B probes inspect/measure the
-    * distributed composition; answers identical either way
-    * (RrfFuseSpec). */
-  private def disabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("graft.driverfuse.disable", "false").toBoolean
+  def fusePerQuery(bm: DataFrame, cs: DataFrame, k: Int = 10): DataFrame =
+    driverFuse(bm, cs, k).getOrElse(fusePerQueryDistributed(bm, cs, k))
 
   /** Single-query form — no qid: full-outer on doc alone, global
     * top-`k` by (rrf desc, doc id). Same two paths, same exactness
     * story as [[fusePerQuery]].
     * @param bm (doc_id: long, rb: int); @param cs (vec_id: long, rc: int) */
-  def fuseGlobal(bm: DataFrame, cs: DataFrame, k: Int = 20,
-                 maxDriverRows: Int = 1 << 17): DataFrame =
-    (if (disabled(bm)) None else driverFuseGlobal(bm, cs, k, maxDriverRows))
-      .getOrElse(distributedFuseGlobal(bm, cs, k))
+  def fuseGlobal(bm: DataFrame, cs: DataFrame, k: Int = 20): DataFrame =
+    driverFuseGlobal(bm, cs, k).getOrElse(fuseGlobalDistributed(bm, cs, k))
 
-  private def distributedFuseGlobal(bm: DataFrame, cs: DataFrame,
-                                    k: Int): DataFrame =
+  private[graft] def fuseGlobalDistributed(bm: DataFrame, cs: DataFrame,
+                                           k: Int): DataFrame =
     bm.join(cs, bm("doc_id") === cs("vec_id"), "full_outer")
       .select(coalesce(col("doc_id"), col("vec_id")).as("doc_id"),
         col("rb"), col("rc"),
@@ -69,18 +58,15 @@ object RrfFuse {
       .orderBy(col("rrf").desc, col("doc_id"))
       .limit(k)
 
-  private def driverFuseGlobal(bm: DataFrame, cs: DataFrame, k: Int,
-                               maxDriverRows: Int): Option[DataFrame] = {
+  private def driverFuseGlobal(bm: DataFrame, cs: DataFrame,
+                               k: Int): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    if (maxDriverRows <= 0) return None
-    def typed(df: DataFrame, d: String, r: String) = {
-      val t = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      t.get(d).contains(LongType) && t.get(r).contains(IntegerType)
-    }
-    if (!typed(bm, "doc_id", "rb") || !typed(cs, "vec_id", "rc")) return None
+    if (!graft.plans.DriverFetch.hasTypes(bm, "doc_id" -> LongType, "rb" -> IntegerType) ||
+        !graft.plans.DriverFetch.hasTypes(cs, "vec_id" -> LongType, "rc" -> IntegerType))
+      return None
     val Seq(bRows, cRows) = graft.plans.DriverFetch("RRF fusion", Seq(
         bm.select(col("doc_id"), col("rb")), cs.select(col("vec_id"), col("rc"))),
-      maxDriverRows).getOrElse(return None)
+      1 << 17).getOrElse(return None)
     val m = new scala.collection.mutable.HashMap[
       Long, (Option[Int], Option[Int])]
     bRows.foreach { r =>
@@ -118,8 +104,8 @@ object RrfFuse {
       .orderBy(col("rrf").desc, col("doc_id")))
   }
 
-  private def distributedFuse(bm: DataFrame, cs: DataFrame,
-                              k: Int): DataFrame = {
+  private[graft] def fusePerQueryDistributed(bm: DataFrame, cs: DataFrame,
+                                             k: Int): DataFrame = {
     val fused = bm.join(cs,
         bm("qid") === cs("cqid") && bm("doc_id") === cs("vec_id"),
         "full_outer")
@@ -136,21 +122,18 @@ object RrfFuse {
       .orderBy(col("qid"), col("rrf").desc, col("doc_id"))
   }
 
-  private def driverFuse(bm: DataFrame, cs: DataFrame, k: Int,
-                         maxDriverRows: Int): Option[DataFrame] = {
+  private def driverFuse(bm: DataFrame, cs: DataFrame,
+                         k: Int): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    if (maxDriverRows <= 0) return None
-    def typed(df: DataFrame, q: String, d: String, r: String) = {
-      val t = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      t.get(q).contains(LongType) && t.get(d).contains(LongType) &&
-        t.get(r).contains(IntegerType)
-    }
-    if (!typed(bm, "qid", "doc_id", "rb") ||
-        !typed(cs, "cqid", "vec_id", "rc")) return None
+    if (!graft.plans.DriverFetch.hasTypes(bm,
+          "qid" -> LongType, "doc_id" -> LongType, "rb" -> IntegerType) ||
+        !graft.plans.DriverFetch.hasTypes(cs,
+          "cqid" -> LongType, "vec_id" -> LongType, "rc" -> IntegerType))
+      return None
     val Seq(bRows, cRows) = graft.plans.DriverFetch("RRF fusion", Seq(
         bm.select(col("qid"), col("doc_id"), col("rb")),
         cs.select(col("cqid"), col("vec_id"), col("rc"))),
-      maxDriverRows).getOrElse(return None)
+      1 << 17).getOrElse(return None)
     // full-outer on (qid, doc): ranks meet in one hash map
     val m = new scala.collection.mutable.HashMap[
       (Long, Long), (Option[Int], Option[Int])]

@@ -60,8 +60,27 @@ class BpeSpec extends AnyFunSuite {
     val viaDist = graft.text.Bpe.learnMergesDistributed(df, "w", "cnt", 6)
     assert(viaDriver == viaDist)
     // above the cap the distributed rounds take over with equal merges
-    assert(graft.text.Bpe.learnMerges(df, "w", "cnt", 3,
-      maxDriverWords = 2) ==
+    assert(graft.plans.DriverFetch.withCaps(2, graft.plans.DriverFetch.MaxBytes)(
+      graft.text.Bpe.learnMerges(df, "w", "cnt", 3)) ==
       graft.text.Bpe.learnMergesDistributed(df, "w", "cnt", 3))
+  }
+
+  test("an over-cap dictionary spread over many partitions falls back to the " +
+       "distributed rounds") {
+    import spark.implicits._
+    // 32 partitions, each under the byte cap alone and all together over
+    // it: the driver's running sum rejects the fetch
+    val dict = (0 until 2000).map(i => (s"w${i % 7}x$i", (i % 5 + 1).toLong))
+      .toDF("w", "cnt").repartition(32)
+    val want = graft.text.Bpe.learnMergesDistributed(dict, "w", "cnt", 3)
+    var got = Seq.empty[(String, String, Long)]
+    val driverJobs = TestSpark.jobsDuring(spark) {
+      graft.text.Bpe.learnMerges(dict, "w", "cnt", 3) }
+    val capJobs = TestSpark.jobsDuring(spark) {
+      got = graft.plans.DriverFetch.withCaps(graft.plans.DriverFetch.MaxRows, 4L << 10)(
+        graft.text.Bpe.learnMerges(dict, "w", "cnt", 3)) }
+    assert(got == want)
+    // the distributed rounds ran after the rejected fetch
+    assert(capJobs.size > driverJobs.size, s"$capJobs vs $driverJobs")
   }
 }

@@ -111,11 +111,11 @@ class DedupSpec extends AnyFunSuite {
 
   test("connected components: a 30-link chain converges to one component") {
     // diameter 29 — worse than any real dup cluster; min-label needs a
-    // round per hop, so this also guards the maxIter default. Forced
-    // onto the DISTRIBUTED propagation (maxDriverEdges = 0): the
-    // driver fast path has no rounds to guard.
+    // round per hop, so this also guards the maxIter default. Runs the
+    // DISTRIBUTED propagation directly: the driver fast path has no
+    // rounds to guard.
     val chain = (0L until 29L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(chain, maxDriverEdges = 0).collect()
+    val comps = Dedup.connectedComponentsPropagate(chain).collect()
     assert(comps.length == 30 && comps.forall(_.getLong(1) == 0L),
       comps.toSeq.take(5).toString)
   }
@@ -139,16 +139,18 @@ class DedupSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     // above the cap the distributed kernel takes over with equal labels
-    val overCap = Dedup.connectedComponents(pairs, maxDriverEdges = 10)
+    val overCap = graft.plans.DriverFetch.withCaps(10, graft.plans.DriverFetch.MaxBytes)(
+        Dedup.connectedComponents(pairs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(overCap === viaDriver)
-    val overCapPlan = Dedup.connectedComponents(pairs, maxDriverEdges = 10)
+    val overCapPlan = graft.plans.DriverFetch.withCaps(10, graft.plans.DriverFetch.MaxBytes)(
+        Dedup.connectedComponents(pairs))
       .queryExecution.executedPlan.toString
     assert(overCapPlan.contains("Exchange") || overCapPlan.contains("Scan"),
       overCapPlan)
     // non-long ids never take the driver path (union-find keys on Long)
     val strPairs = Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b")
-    assert(Dedup.driverComponents(strPairs, 1 << 16).isEmpty)
+    assert(Dedup.driverComponents(strPairs).isEmpty)
     val strComps = Dedup.connectedComponents(strPairs).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(strComps == Map("a" -> "a", "b" -> "a", "c" -> "a"), strComps)
@@ -194,15 +196,15 @@ class DedupSpec extends AnyFunSuite {
       (20L until 40L).map(i => (i, i + 1))
     val relPairs = rel.createDataFrame(edges).toDF("id_a", "id_b")
     val defPairs = edges.toDF("id_a", "id_b") // default session: local path
-    // maxDriverEdges = 0: the reliable-checkpoint machinery under test
-    // lives in the DISTRIBUTED rounds; the driver fast path would
-    // bypass it (and write no checkpoint files)
-    val viaReliable = Dedup.connectedComponents(relPairs, maxDriverEdges = 0)
+    // the distributed rounds directly: the reliable-checkpoint machinery
+    // under test lives there; the driver fast path would bypass it (and
+    // write no checkpoint files)
+    val viaReliable = Dedup.connectedComponentsPropagate(relPairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLocal = Dedup.connectedComponents(defPairs, maxDriverEdges = 0)
+    val viaLocal = Dedup.connectedComponentsPropagate(defPairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaReliable === viaLocal)
-    val starReliable = Dedup.connectedComponentsStar(relPairs, maxDriverEdges = 0)
+    val starReliable = Dedup.connectedComponentsStarRounds(relPairs, 50)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(starReliable === viaLocal)
     // reliable rounds wrote real checkpoint files

@@ -128,7 +128,7 @@ class DriverPathSpec extends AnyFunSuite {
       Materialize.stage(batch.toDF("id_a", "id_b")))
     def both(r: (DataFrame, DataFrame)) = Seq(r._1, r._2)
     Case(() => both(IncrementalComponents.batchAppends(l, f, p)),
-      () => both(IncrementalComponents.batchAppendsDistributed(l, f, p, 1 << 20)),
+      () => both(IncrementalComponents.batchAppendsDistributed(l, f, p)),
       driver, rows)
   }
 
@@ -153,6 +153,71 @@ class DriverPathSpec extends AnyFunSuite {
       val c = appends(labels, fwd, batch, driver = false)
       c.copy(viaEntry = () => DriverFetch.withCaps(r, b)(c.viaEntry()))
     }}
+
+  test("source guard: paths are chosen by size only — no cap parameter, path " +
+       "conf or hand-rolled cap fetch in src/main") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no sources under ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles.toSeq.flatMap(f =>
+      if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val banned = Seq(
+      "a per-operator cap parameter" -> "maxDriver|maxBatchIds".r,
+      "a path-choice conf" -> "conf\\.get\\(\\s*\"graft\\.[^\"]*disable".r,
+      "a kill-switch env read" -> "(sys\\.env|getenv)[^\\n]*_DISABLE".r,
+      // the one bounded cap + 1 fetch is Materialize.modelState's
+      "a hand-rolled cap fetch" -> "\\.limit\\([^()]*\\+\\s*1\\)".r)
+    val found = for {
+      f <- files(root)
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      (what, re) <- banned
+      m <- re.findAllMatchIn(text)
+      if !(what == "a hand-rolled cap fetch" && f.getName == "Materialize.scala")
+    } yield s"${f.getPath}:${text.take(m.start).count(_ == '\n') + 1}: $what (${m.matched})"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("a rejected fetch stops its job: a many-partition input over the byte " +
+       "cap ships far fewer task results than it has partitions") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val parts = 32
+    // every partition is over the cap alone; all but partition 0 stall
+    // on their first row, so the driver rejects the fetch while they run
+    val row = org.apache.spark.sql.functions.udf { (i: Long) =>
+      if (org.apache.spark.TaskContext.getPartitionId() > 0 && i % 1000 == 0) Thread.sleep(200)
+      "x" * 100
+    }.asNondeterministic()
+    val df = spark.range(0, parts * 1000L, 1, parts).select(row(col("id")).as("s"))
+    val sc = spark.sparkContext
+    val group = s"rejected-fetch-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val succeeded = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => j.stageIds.foreach(stages.add)
+          case Some(g) if g == group + "-sentinel" => drained.countDown()
+          case _ => ()
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.reason == org.apache.spark.Success)
+          succeeded.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "rejected fetch")
+      val got = try org.apache.spark.sql.graft.ExecutionBridge.collectBounded(
+        df, DriverFetch.MaxRows, 16L << 10) finally sc.clearJobGroup()
+      assert(got.isEmpty)
+      // the bus delivers in order: the sentinel's start follows every
+      // task end of the fetch job that had happened before it
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(succeeded.get >= 1 && succeeded.get < parts / 2,
+        s"${succeeded.get} of $parts fetch tasks shipped their results")
+    } finally sc.removeSparkListener(listener)
+  }
 
   for {
     (op, cases) <- Seq("hybridCandidates" -> serveCases,

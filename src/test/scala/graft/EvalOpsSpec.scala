@@ -47,8 +47,8 @@ class EvalOpsSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     // above the cap: distributed rounds, equal ratings
-    val overCap = graft.plans.BradleyTerry
-      .mmRatings(n, w, 3, maxDriverRows = 2)
+    val overCap = graft.plans.DriverFetch.withCaps(2, graft.plans.DriverFetch.MaxBytes)(
+        graft.plans.BradleyTerry.mmRatings(n, w, 3))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(overCap === viaDist)
   }

@@ -83,17 +83,18 @@ class IncrementalComponentsSpec extends AnyFunSuite {
   }
 
   test("wide-batch fallback (endpoint cap exceeded) lands on the same labels") {
-    // a batch wider than maxBatchIds routes the distributed body through
-    // its distributed lookup join instead of the driver-held InSet —
-    // same answer (batch-sized inputs never reach that body on their own)
+    // a batch over the endpoint cap (scoped down to 1 row here) routes
+    // the distributed body through its distributed lookup join instead
+    // of the driver-held InSet — same answer (batch-sized inputs never
+    // reach that body on their own)
     val hist = Seq((1L, 2L), (10L, 11L))
     val b = Seq((2L, 10L), (30L, 31L))
     val labels0 = graft.plans.Materialize.stage(
       graft.text.Dedup.connectedComponents(hist.toDF("id_a", "id_b"))
         .select(col("id").as("doc_id"), col("comp").as("comp_id")))
     val fwd0 = Seq.empty[(Long, Long)].toDF("old_root", "new_root")
-    val (nl, nf) = IncrementalComponents.batchAppendsDistributed(
-      labels0, fwd0, b.toDF("id_a", "id_b"), maxBatchIds = 1)
+    val (nl, nf) = graft.plans.DriverFetch.withCaps(1, graft.plans.DriverFetch.MaxBytes)(
+      IncrementalComponents.batchAppends(labels0, fwd0, b.toDF("id_a", "id_b")))
     val resolved = labelsOf(IncrementalComponents.resolvedLabels(
       labels0.unionByName(nl), fwd0.unionByName(nf)))
     assert(resolved == full(hist ++ b))
@@ -148,9 +149,9 @@ class IncrementalComponentsSpec extends AnyFunSuite {
     def setOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val fast = setOf(IncrementalComponents.resolveForwards(edges))
-    // maxDriverEdges = 0 forces the distributed star-CC path
-    val dist = setOf(IncrementalComponents.resolveForwards(
-      edges, maxDriverEdges = 0))
+    // a one-row cap forces the distributed star-CC path
+    val dist = setOf(graft.plans.DriverFetch.withCaps(1, graft.plans.DriverFetch.MaxBytes)(
+      IncrementalComponents.resolveForwards(edges)))
     assert(fast == dist, s"fast-path closure diverged: " +
       s"only-fast=${fast.diff(dist).take(5)} only-dist=${dist.diff(fast).take(5)}")
     assert(fast.contains((64L, 1L)) && fast.contains((100L, 1L)),

@@ -38,7 +38,7 @@ class MadGateSpec extends AnyFunSuite {
        "fall back") {
     val h = fixture
     val fast = MadGate.gate(h)
-    val slow = MadGate.gate(h, maxDriverRows = 0)
+    val slow = MadGate.gateDistributed(h)
     assert(fast.queryExecution.optimizedPlan.toString
       .contains("LocalRelation"), fast.queryExecution.optimizedPlan)
     assert(slow.queryExecution.optimizedPlan.toString.contains("Window"),
@@ -61,11 +61,11 @@ class MadGateSpec extends AnyFunSuite {
     val tiny = Seq(("a", 7L, 1L), ("b", 3L, 2L), ("b", 9L, 2L))
       .toDF("source", "len", "cnt")
     assert(rows(MadGate.gate(tiny)) ==
-      rows(MadGate.gate(tiny, maxDriverRows = 0)))
+      rows(MadGate.gateDistributed(tiny)))
     // even-count tie: lower median must match on both paths
     val ties = Seq(("t", 1L, 2L), ("t", 2L, 2L), ("t", 3L, 2L),
       ("t", 4L, 2L)).toDF("source", "len", "cnt")
     assert(rows(MadGate.gate(ties)) ==
-      rows(MadGate.gate(ties, maxDriverRows = 0)))
+      rows(MadGate.gateDistributed(ties)))
   }
 }

@@ -70,8 +70,8 @@ class MmrSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     // above the cap: distributed rounds, equal picks
-    val overCap = rows(Mmr.rerank(cands, pairs, "qid", "vec_id", 4, 0.5,
-      maxDriverRows = 3))
+    val overCap = rows(graft.plans.DriverFetch.withCaps(3, graft.plans.DriverFetch.MaxBytes)(
+      Mmr.rerank(cands, pairs, "qid", "vec_id", 4, 0.5)))
     assert(overCap === viaDist)
   }
 }

@@ -92,8 +92,8 @@ class PageRankSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     // above the cap the distributed recurrence takes over, equal ranks
-    val overCap = graft.plans.PageRank
-      .ranksDangling(df, 2, maxDriverEdges = 10)
+    val overCap = graft.plans.DriverFetch.withCaps(10, graft.plans.DriverFetch.MaxBytes)(
+        graft.plans.PageRank.ranksDangling(df, 2))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(overCap === graft.plans.PageRank.ranksDangling(df, 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)

@@ -413,7 +413,7 @@ class PlanSpec extends AnyFunSuite {
     var servedB: org.apache.spark.sql.DataFrame = null
     val fetchB = TestSpark.plansDuring(spark) {
       servedB = StreamNearDup.hybridCandidates(nb, bIdx.read(), threshold = 0.5)
-    }
+    }.map(_.executedPlan.toString)
     assert(fetchB.exists(_.contains("PushedFilters: [In(bh")),
       "bucket-key IN filter not pushed to the band-index fetch:\n" +
         fetchB.mkString("\n"))
@@ -490,6 +490,34 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** The RRF fuse's two fetched rank lists, captured while `body` builds
+    * a hybrid-retrieval entry: the fuse fetches exactly these to the
+    * driver, so their plans are the whole serve lineage below it. Each
+    * list is recognized by its columns. */
+  private def fuseInputs(lists: Seq[String]*)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    val inputs = TestSpark.plansDuring(spark)(body)
+      .filter(qe => lists.contains(qe.analyzed.output.map(_.name)))
+    assert(inputs.map(_.analyzed.output.map(_.name)).sortBy(_.head) ==
+      lists.sortBy(_.head), "the fuse did not fetch its two rank lists")
+    inputs
+  }
+
+  /** The root paths of every file relation the plans read. */
+  private def scansOf(qes: Seq[org.apache.spark.sql.execution.QueryExecution]) =
+    qes.flatMap(_.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.rootPaths.map(_.toString).mkString(",")
+          case other => other.toString
+        }
+    })
+
+  /** The final executed plans, without AQE's initial-plan echo. */
+  private def finalPlans(qes: Seq[org.apache.spark.sql.execution.QueryExecution]) =
+    qes.map(_.executedPlan.toString.split("== Initial Plan ==").head).mkString("\n")
+
   test("staged hybrid retrieval: timed serve reads both stored indexes, never the corpora") {
     // q_hybrid_retrieval's benchFn composes the persisted BM25 postings
     // serve with the persisted IVF-PQ cell-routed serve under the same
@@ -497,28 +525,17 @@ class PlanSpec extends AnyFunSuite {
     // one-row query fetch only: a documents scan means the lexical side
     // regressed to the corpus pass, further embeddings scans mean
     // training or brute-force leaked back in.
-    // The RRF fuse tail normally runs on the driver (RrfFuse), which
-    // would leave only a LocalRelation in the final plan — disable it
-    // so this gate can inspect the full serve lineage (the sub-plans
-    // below the fuse are identical on both paths; RrfFuseSpec pins
-    // row identity).
-    spark.conf.set("graft.driverfuse.disable", "true")
-    try {
-    val df = graft.queries.Registry
-      .benchQueries("q_hybrid_retrieval")(spark, sf)
-    df.collect() // finalize the adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
+    // The RRF fuse runs on the driver (RrfFuse), which leaves only a
+    // LocalRelation in the final plan — so this gate inspects the two
+    // rank lists the fuse fetches, which carry the full serve lineage
+    // (RrfFuseSpec pins row identity with the distributed fuse).
+    val inputs = fuseInputs(Seq("doc_id", "rb"), Seq("vec_id", "rc")) {
+      graft.queries.Registry.benchQueries("q_hybrid_retrieval")(spark, sf).collect()
+    }
+    val plan = finalPlans(inputs)
     assert(plan.contains("graft-hybrid-bench"),
       s"serve plan does not scan the stage tables:\n$plan")
-    val scans = df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString).mkString(",")
-          case other => other.toString
-        }
-    }
+    val scans = scansOf(inputs)
     assert(scans.count(_.contains("documents.parquet")) == 0, scans)
     // the query vector fetch is pinned at plan build (two consumers:
     // probe routing + the ADC lookup table) — same stance as the
@@ -526,7 +543,6 @@ class PlanSpec extends AnyFunSuite {
     assert(scans.count(_.contains("embeddings.parquet")) == 0, scans)
     assert(scans.count(_.contains("graft-hybrid-bench")) >= 3, scans)
     assert(!plan.contains("CartesianProduct"), plan)
-    } finally spark.conf.unset("graft.driverfuse.disable")
   }
 
   test("staged BATCH hybrid retrieval: timed serve reads both stored indexes, never the corpora") {
@@ -536,25 +552,15 @@ class PlanSpec extends AnyFunSuite {
     // query batch is pinned once at plan build (no embeddings scan in
     // the serve lineage); a documents scan means the lexical side
     // regressed to the corpus pass.
-    // Driver fuse disabled for the same reason as the single-query
-    // gate above: inspect the full serve lineage below the fuse.
-    spark.conf.set("graft.driverfuse.disable", "true")
-    try {
-    val df = graft.queries.Registry
-      .benchQueries("q_hybrid_retrieval_batch")(spark, sf)
-    df.collect() // finalize the adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
+    // As in the single-query gate above, the fuse's two fetched rank
+    // lists carry the full serve lineage below the driver fuse.
+    val inputs = fuseInputs(Seq("qid", "doc_id", "rb"), Seq("cqid", "vec_id", "rc")) {
+      graft.queries.Registry.benchQueries("q_hybrid_retrieval_batch")(spark, sf).collect()
+    }
+    val plan = finalPlans(inputs)
     assert(plan.contains("graft-hybrid-bench"),
       s"serve plan does not scan the stage tables:\n$plan")
-    val scans = df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString).mkString(",")
-          case other => other.toString
-        }
-    }
+    val scans = scansOf(inputs)
     assert(scans.count(_.contains("documents.parquet")) == 0, scans)
     // the query batch is pinned at plan build (r15: it used to feed 5
     // subtrees — 3 qterms slot branches + probe routing + the ADC
@@ -565,10 +571,9 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), plan)
     // the postings read must carry the pushed term-set membership —
     // the pruning that keeps the batched serve index-size-independent
-    val optimized = df.queryExecution.optimizedPlan.toString
+    val optimized = inputs.map(_.optimizedPlan.toString).mkString("\n")
     assert(optimized.contains("INSET") || optimized.contains("InSet") ||
       plan.contains("INSET"), s"no InSet term filter in:\n$optimized")
-    } finally spark.conf.unset("graft.driverfuse.disable")
   }
 
   test("corpus pipeline: no join — the dedup consumes the scored pass once") {
@@ -636,16 +641,14 @@ class PlanSpec extends AnyFunSuite {
   test("hybrid retrieval: both lists k-bounded by TakeOrdered, no cartesian") {
     // the corpus sides must reach the fusion join already cut to k by
     // TakeOrdered (never a global Sort of the corpus); the windows that
-    // assign ranks run AFTER the bound, over ≤k rows. Driver fuse
-    // disabled so the gate sees the full composition (the corpus-side
-    // sub-plans are identical on both fuse paths).
-    spark.conf.set("graft.driverfuse.disable", "true")
-    try {
-      val plan = SparkEntry.queries("q_hybrid_retrieval")(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert("TakeOrderedAndProject".r.findAllIn(plan).size >= 2, plan)
-      assert(!plan.contains("CartesianProduct"), plan)
-    } finally spark.conf.unset("graft.driverfuse.disable")
+    // assign ranks run AFTER the bound, over ≤k rows. The gate reads
+    // the two rank lists the driver fuse fetches (the corpus-side
+    // sub-plans, identical on both fuse paths).
+    val plan = finalPlans(fuseInputs(Seq("doc_id", "rb"), Seq("vec_id", "rc")) {
+      SparkEntry.queries("q_hybrid_retrieval")(spark, sf)
+    })
+    assert("TakeOrderedAndProject".r.findAllIn(plan).size >= 2, plan)
+    assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("classifier bucket counts: one shuffle, no join, one corpus scan") {

@@ -42,7 +42,7 @@ class RrfFuseSpec extends AnyFunSuite {
        "above-cap and off-type fall back") {
     val (bm, cs) = fixture
     val fast = RrfFuse.fusePerQuery(bm, cs, k = 10)
-    val slow = RrfFuse.fusePerQuery(bm, cs, k = 10, maxDriverRows = 0)
+    val slow = RrfFuse.fusePerQueryDistributed(bm, cs, k = 10)
     // the driver path must actually be local and the fallback a join
     assert(fast.queryExecution.optimizedPlan.toString
       .contains("LocalRelation"), fast.queryExecution.optimizedPlan)
@@ -77,18 +77,11 @@ class RrfFuseSpec extends AnyFunSuite {
           java.lang.Double.doubleToLongBits(r.getDouble(3)))
       }.toSeq
     val fast = RrfFuse.fuseGlobal(bm, cs, k = 20)
-    val slow = RrfFuse.fuseGlobal(bm, cs, k = 20, maxDriverRows = 0)
+    val slow = RrfFuse.fuseGlobalDistributed(bm, cs, k = 20)
     assert(fast.queryExecution.optimizedPlan.toString
       .contains("LocalRelation"))
     assert(slow.queryExecution.optimizedPlan.toString.contains("Join"))
     assert(rows(fast) == rows(slow))
-    // session kill switch routes to the distributed form
-    spark.conf.set("graft.driverfuse.disable", "true")
-    try {
-      val off = RrfFuse.fuseGlobal(bm, cs, k = 20)
-      assert(off.queryExecution.optimizedPlan.toString.contains("Join"))
-      assert(rows(off) == rows(fast))
-    } finally spark.conf.unset("graft.driverfuse.disable")
   }
 
   test("k cut and tiebreak: equal fused scores order by doc id, " +

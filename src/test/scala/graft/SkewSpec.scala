@@ -42,10 +42,6 @@ class SkewSpec extends AnyFunSuite {
     // a memory-backed relation has no input files → identity plan
     val mem = (1 to 10).map(i => (i, s"m$i")).toDF("id", "text")
     assert(Skew.fanOutSmall(mem) eq mem)
-    // conf kill-switch → identity
-    spark.conf.set("graft.fanout.disable", "true")
-    try assert(Skew.fanOutSmall(scan) eq scan)
-    finally spark.conf.unset("graft.fanout.disable")
   }
 
   test("saltedSum equals the plain aggregate") {

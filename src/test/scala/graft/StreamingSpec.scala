@@ -1285,7 +1285,7 @@ class StreamingSpec extends AnyFunSuite {
     val fetches = TestSpark.plansDuring(spark) {
       pruned = StreamNearDup.hybridCandidates(nb, idx.read(),
         threshold = 0.5, pruneKeyCap = cap)
-    }
+    }.map(_.executedPlan.toString)
     assert(fetches.exists(_.contains("PushedFilters: [In(bh")),
       fetches.mkString("\n"))
     // regime 2 (batch keys exceed the cap — the wide-bulk fallback):

@@ -40,21 +40,21 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** The executed plans of every SQL execution `body` runs, as their
-    * `toString` — what a `QueryExecutionListener` sees, so a driver
-    * path's own fetches are inspectable even when its result is a
-    * local relation. */
-  def plansDuring(spark: SparkSession)(body: => Unit): Seq[String] = {
+  /** Every SQL execution `body` runs, as the `QueryExecution` a
+    * `QueryExecutionListener` sees, so a driver path's own fetches are
+    * inspectable even when its result is a local relation. */
+  def plansDuring(spark: SparkSession)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val marker = s"plans-during-${java.util.UUID.randomUUID()}"
     val sentinel = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        val plan = qe.executedPlan.toString
-        if (plan.contains(marker)) sentinel.set(true) else plans.add(plan)
+        if (qe.executedPlan.toString.contains(marker)) sentinel.set(true)
+        else plans.add(qe)
       }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }

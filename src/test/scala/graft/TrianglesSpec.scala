@@ -81,7 +81,8 @@ class TrianglesSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     // above the cap the distributed kernel takes over with equal counts
-    val overCap = Triangles.perNodeCounts(edges, maxDriverEdges = 10)
+    val overCap = graft.plans.DriverFetch.withCaps(10, graft.plans.DriverFetch.MaxBytes)(
+        Triangles.perNodeCounts(edges))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(overCap === viaDist)
   }
