@@ -172,6 +172,7 @@ final class ParquetTable(
       throw new java.io.IOException(s"swap set-aside failed for $path")
     if (!f.rename(stagePath, dest))
       throw new java.io.IOException(s"atomic swap failed for $path")
+    Commits.committed(name)
     f.delete(oldPath, true)
   }
 
@@ -236,6 +237,7 @@ final class ParquetTable(
   def append(df: DataFrame): Unit = {
     recover()
     writer(df).mode("append").parquet(path)
+    Commits.committed(name)
   }
 
   def overwrite(df: DataFrame): Unit = overwrite(df, None)
@@ -278,6 +280,7 @@ final class ParquetTable(
       throw new java.io.IOException(s"swap set-aside failed for $path")
     if (!f.rename(stagePath, dest))
       throw new java.io.IOException(s"atomic swap failed for $path")
+    Commits.committed(name)
     f.delete(oldPath, true)
   }
 
@@ -299,6 +302,7 @@ final class ParquetTable(
       val part = writeRowsFile(rows, dest, ParquetTable.TmpPrefix)
       if (!f.rename(new Path(dest, ParquetTable.TmpPrefix + part), new Path(dest, part)))
         throw new java.io.IOException(s"append rename failed for $path")
+      Commits.committed(name)
     }
   }
 
@@ -440,6 +444,7 @@ final class ParquetTable(
       f.mkdirs(trash.getParent)
       if (!f.rename(live, trash))
         throw new java.io.IOException(s"partition delete failed for $live")
+      Commits.committed(s"$name/${partitionRel(values)}")
       // sweep the whole stage root: the trash copy plus the now-empty
       // scaffolding dirs (single writer — nothing else is in flight)
       f.delete(partStageRoot, true)
@@ -475,6 +480,7 @@ final class ParquetTable(
     f.mkdirs(live.getParent)
     if (!f.rename(stage, live))
       throw new java.io.IOException(s"partition swap failed for $live")
+    Commits.committed(s"$name/$rel")
     f.delete(parked, true)
   }
 

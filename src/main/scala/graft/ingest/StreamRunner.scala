@@ -192,9 +192,12 @@ final class StreamRunner(val spark: SparkSession, val pipeline: IngestPipeline) 
     * max_retries in create_workflow_jobs.py:278-279): re-run a failed
     * ingest up to Retries extra times. The checkpoint makes replays
     * exactly-once at the source and the BatchId-stamped compensating
-    * delete keeps the target clean, so a retry never double-loads.
-    * Returns the number of retries used; notifies and rethrows when the
-    * attempts are exhausted. */
+    * delete keeps the target clean, so a retry after an IN-PROCESS
+    * failure never double-loads. A process death after the target
+    * commit can: the replay gets a new `ModifiedDateTime`, which the
+    * delete is keyed on (so is the reference's Delta append without
+    * `txnVersion`). Returns the number of retries used; notifies and
+    * rethrows when the attempts are exhausted. */
   def runOnceWithRetry(checkpointDir: String): Int = {
     val max = math.max(feed.JobConfig.Retries, 0)
     var attempt = 0

@@ -94,15 +94,7 @@ final class AnnMaintain(val index: GenerationalIndex, val vecs: LeveledIndex,
       "ssimq" -> (Merge.tgt("ssimq") + Merge.src("ssimq"))), checkpoint)
 
   /** One micro-batch; `maintained` reports a retrain. */
-  def perBatch(batch: DataFrame, bid: Long): BatchReport =
-    perBatch(batch, bid, _ => ())
-
-  /** [[perBatch]] with the seam `at`, called with "ingested" (writes and
-    * statistics landed), then on a retrain "built-0" (decision taken)
-    * to "built-4" (each generation relation landed), "published" (the
-    * new generation serving) and "rebased" (statistics truncated). */
-  private[graft] def perBatch(batch: DataFrame, bid: Long,
-                              at: String => Unit): BatchReport = {
+  def perBatch(batch: DataFrame, bid: Long): BatchReport = {
     val sb = batch.sparkSession
     val vs = batch.select(col("vec_id"), col("embedding"))
     timed {
@@ -131,7 +123,6 @@ final class AnnMaintain(val index: GenerationalIndex, val vecs: LeveledIndex,
         .assignScored(vs, "vec_id", "embedding", cents)
         .withColumn("gen", lit(tag))
         .select(col("cid").cast("long").as("cid"), col("simq"), col("gen"))), bid)
-      at("ingested")
       (tag, assignIdx)
     } { case (tag, assignIdx) =>
       // minCellN keeps the baseline-only first window quiet
@@ -139,14 +130,9 @@ final class AnnMaintain(val index: GenerationalIndex, val vecs: LeveledIndex,
         IndexRetrain.retrainIfDrifted(index,
           IndexHealth.cellHealthTrailing(stats.read(), tag, minCellN = 8L),
           resv.trainPop(), vecs.read(), "vec_id", "embedding",
-          interrupt = i => at(s"built-$i"),
           // the rebuild reads the vectors THROUGH this batch
           throughBid = Some(bid))
-      if (retrained) {
-        at("published")
-        stats.truncate()
-        at("rebased")
-      }
+      if (retrained) stats.truncate()
       retrained
     }
   }

@@ -56,9 +56,8 @@ import graft.catalog.ParquetTable
   *    deleted (the marker commits strictly before the first delete);
   *    the merge recomputes from the full, intact source set.
   *
-  * The spec injects a crash after every destination commit
-  * ([[maintain]]'s `interruptAfterMerge` seam) and proves served rows
-  * bit-identical across the replay.
+  * The commit sweep crashes a cascade after every commit and proves the
+  * replayed rows identical to the crash-free run.
   *
   * Amortization note, honestly: per-cadence cost is O(new data) for
   * the level-0 fold plus a fanout-triggered cascade whose cost is the
@@ -84,8 +83,9 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
     * them AGAIN. The fold's destination is the proof the rows landed:
     * its partition embeds this very batch id and commits in one atomic
     * swap, so its presence means this batch's rows are in the level-1
-    * run and the write must be skipped. Presence rather than the fold's
-    * marker, because the components fold of
+    * run and the write must be skipped — or in the run of any level a
+    * cascade merged it into, keyed by the same batch id. Presence
+    * rather than the fold's marker, because the components fold of
     * [[IndexMaintenance.maintainComponents]] rewrites a label table
     * into that same run without one; a replay past it would otherwise
     * land a level-0 run that the replayed maintenance folds OVER the
@@ -102,9 +102,12 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
     * marker ≥ `bid` proves this batch's rows are in the base and the
     * write must be skipped. */
   def writeBatch(bid: Long, df: DataFrame): Unit = {
-    val foldDest = Seq("mig" -> LeveledIndex.migFor(1, bid).toString)
-    if (!(foldDest != LeveledIndex.BaseRun && table.partitionExists(foldDest)) &&
-        !builtThrough.exists(bid <= _))
+    val folded = table.listPartitions().exists { s =>
+      val mig = s.head._2.toLong
+      mig < 0 && mig != TieredIndex.Folded && s != LeveledIndex.BaseRun &&
+        -mig % LeveledIndex.LevelBase == bid
+    }
+    if (!folded && !builtThrough.exists(bid <= _))
       table.overwritePartition(Seq("mig" -> bid.toString),
         df.sortWithinPartitions(sortKey))
   }
@@ -162,17 +165,17 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
     * then cascade any level holding ≥ [[fanout]] runs into the next.
     * Fires on batch ids `every-1, 2·every-1, …` (the
     * [[IndexMaintenance.maybeCompact]] cadence contract; `every <= 0`
-    * disables). Returns whether the cadence fired.
-    * `interruptAfterMerge(level)` is the failure-injection seam —
-    * called between a destination run's commit and its source runs'
-    * deletes. */
-  def maintain(bid: Long, interruptAfterMerge: Int => Unit = _ => ()): Boolean = {
+    * disables). Returns whether the cadence fired. Every level present
+    * is visited: a replay of a crashed cascade finds its lower levels
+    * merged and must still finish the upper one's deletes. */
+  def maintain(bid: Long): Boolean = {
     val fire = every > 0 && bid % every == (every - 1).toLong
     if (fire) {
+      def top = table.listPartitions()
+        .map(s => LeveledIndex.levelOf(s.head._2.toLong)).maxOption.getOrElse(0)
       var l = 0
-      var merged = true
-      while (merged) {
-        merged = mergeLevel(l, bid, interruptAfterMerge)
+      while (l <= top) {
+        mergeLevel(l, bid)
         l += 1
       }
     }
@@ -181,9 +184,8 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
 
   /** Merge level `l`'s runs into one level-`l+1` run if warranted
     * (level 0 always folds when non-empty; higher levels only at
-    * [[fanout]]); returns whether anything merged (or a crashed merge
-    * was finished), so [[maintain]] checks the next level up. */
-  private def mergeLevel(l: Int, bid: Long, interrupt: Int => Unit): Boolean = {
+    * [[fanout]]), or finish a crashed merge's source deletes. */
+  private def mergeLevel(l: Int, bid: Long): Unit = {
     val destSpec = Seq("mig" -> LeveledIndex.migFor(l + 1, bid).toString)
     val committed =
       table.lastTxnInPartition(destSpec, LeveledIndex.FoldApp).exists(bid <= _)
@@ -195,7 +197,6 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
       // input: the destination's id pins the attempt to THIS bid, and
       // no new run can appear at this level until a later cadence)
       runs.foreach(table.deletePartitions)
-      true
     } else if (runs.nonEmpty && (l == 0 || runs.size >= fanout)) {
       val bytes = runs.map(table.partitionBytes).sum
       val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
@@ -204,10 +205,8 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
           .repartitionByRange(parts, col(sortKey))
           .sortWithinPartitions(sortKey),
         txn = Some((LeveledIndex.FoldApp, bid)))
-      interrupt(l)
       runs.foreach(table.deletePartitions)
-      true
-    } else false
+    }
   }
 }
 

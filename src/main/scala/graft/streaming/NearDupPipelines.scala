@@ -137,28 +137,16 @@ import NearDupPipelines._
 final class DedupPipeline(val idx: LeveledIndex, val txt: LeveledIndex,
                           val labels: LeveledIndex, val fwd: ParquetTable) {
 
-  def perBatch(batch: DataFrame, bid: Long): BatchReport =
-    perBatch(batch, bid, _ => ())
-
-  /** [[perBatch]] with the failure-injection seam `interruptAfter`,
-    * called with "between-appends" (labels and forwards landed, texts
-    * and bands not), "after-appends" (all four writes landed) and, on a
-    * cadence-closing batch, "after-components" (component maintenance
-    * committed, band and text folds not run). */
-  private[graft] def perBatch(batch: DataFrame, bid: Long,
-                              interruptAfter: String => Unit): BatchReport = {
+  def perBatch(batch: DataFrame, bid: Long): BatchReport = {
     val docs = batch.select(col("doc_id"), col("text"))
     timed {
       val (nb, newLabels, newFwd) = batchSteps(docs)
       labels.writeBatchIfAbsent(bid, newLabels)
       fwd.append(newFwd)
-      interruptAfter("between-appends")
       txt.writeBatch(bid, docs)
       idx.writeBatch(bid, nb)
-      interruptAfter("after-appends")
     } { _ =>
       val fired = IndexMaintenance.maintainComponents(labels, fwd, bid)
-      if (fired) interruptAfter("after-components")
       idx.maintain(bid)
       txt.maintain(bid)
       fired

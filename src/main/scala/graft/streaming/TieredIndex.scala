@@ -77,9 +77,6 @@ final class TieredIndex(val pendT: ParquetTable, val idxT: ParquetTable,
     * is horizon-bounded, never corpus-sized — and skipped entirely when
     * nothing aged (a batch arriving faster than the horizon advances
     * would otherwise pay a pointless full pending rewrite).
-    * `interruptAfterMigrate` is the failure-injection seam: the spec
-    * throws there to land a crash in the exact window between the two
-    * table mutations.
     *
     * `transform` re-shapes the aged rows into the bulk tier's schema
     * on their way out of the window — identity for the dedup tiers
@@ -92,7 +89,6 @@ final class TieredIndex(val pendT: ParquetTable, val idxT: ParquetTable,
     * quantizer generation), so a replay recomputes either the
     * identical partition bytes or the empty set. */
   def age(bid: Long, cutoffMs: Long,
-          interruptAfterMigrate: () => Unit = () => (),
           transform: DataFrame => DataFrame = identity): Unit = {
     val aged = graft.plans.Materialize.stage(
       pendT.read().filter(agedPred(bid, cutoffMs)))
@@ -101,7 +97,6 @@ final class TieredIndex(val pendT: ParquetTable, val idxT: ParquetTable,
       // serve's pushed IN filter
       idxT.overwritePartition(Seq("mig" -> bid.toString),
         transform(aged).sortWithinPartitions(sortKey))
-      interruptAfterMigrate()
       pendT.deleteWhere(agedPred(bid, cutoffMs))
     }
   }

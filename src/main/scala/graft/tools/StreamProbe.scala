@@ -708,7 +708,7 @@ object StreamProbe {
   /** The ANN maintenance loop THROUGH drift waves — the expensive path
     * [[annMaintainLongRun]]'s 20 healthy waves never exercise: drift
     * flags → sampled retrain → re-encode → atomic swap → baseline
-    * rebase → re-arm, measured per PHASE through the body's seam. Two
+    * rebase → re-arm, measured per PHASE between the body's commits. Two
     * drift waves are planted (+0.5 on the first 8 coordinates at wave
     * 8, +0.5 more on the next 8 from wave 16) so the second retrain
     * runs against a landed table ~2× the first's — the r15 claim under
@@ -742,20 +742,21 @@ object StreamProbe {
             (x, i) => x + when(i < lit(8), lit(d1(wv)))
               .when(i < lit(16), lit(d2(wv)))
               .otherwise(lit(0.0))).as("embedding")))
-      // phase clocks; a retrain's table and sample sizes are counted
-      // between the decision and the first build phase, on no clock
+      // phase clocks from the commits; the decision commits nothing, so
+      // it falls inside the centroid phase
       val marks = scala.collection.mutable.Map[String, Long]()
-      var sizes = ""
-      val r = p.perBatch(batch, wv.toLong, { phase =>
+      val r = graft.catalog.Commits.during { label =>
+        val phase =
+          if (label == "sprobe_annw_stats")
+            if (marks.contains("published")) "rebased" else "ingested"
+          else if (label.endsWith("/_current")) "published"
+          else label.takeWhile(_ != '/')
         marks(phase) = System.nanoTime()
-        if (phase == "built-0") {
-          sizes = s""""table_rows":${p.vecs.read().count()},"keep_buckets":${p.resv.storedKeep},"train_rows":${p.resv.trainPop().count()}"""
-          marks("train") = System.nanoTime()
-        }
-      })
+      }(p.perBatch(batch, wv.toLong))
       if (r.maintained) {
         def ph(a: String, b: String) = f"${(marks(b) - marks(a)) / 1e9}%.2f"
-        retrainRows += s"""{"wave":$wv,"gen":${p.index.currentGen().getOrElse(-1L)},$sizes,"sec_decision":${ph("ingested", "built-0")},"sec_train_centroids":${ph("train", "built-1")},"sec_encode_assign":${ph("built-1", "built-2")},"sec_train_codebooks":${ph("built-2", "built-3")},"sec_encode_codes":${ph("built-3", "built-4")},"sec_publish":${ph("built-4", "published")},"sec_rebase":${ph("published", "rebased")},"sec_total":${ph("train", "rebased")}}"""
+        val sizes = s""""table_rows":${p.vecs.read().count()},"keep_buckets":${p.resv.storedKeep},"train_rows":${p.resv.trainPop().count()}"""
+        retrainRows += s"""{"wave":$wv,"gen":${p.index.currentGen().getOrElse(-1L)},$sizes,"sec_train_centroids":${ph("ingested", "gen_centroids")},"sec_encode_assign":${ph("gen_centroids", "gen_assign")},"sec_train_codebooks":${ph("gen_assign", "gen_codebooks")},"sec_encode_codes":${ph("gen_codebooks", "gen_codes")},"sec_publish":${ph("gen_codes", "published")},"sec_rebase":${ph("published", "rebased")},"sec_total":${ph("ingested", "rebased")}}"""
       } else healthySecs += ((wv, r.serveSec + r.maintSec))
     }
     val statsRows = p.stats.read().count()

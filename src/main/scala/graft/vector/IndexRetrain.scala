@@ -95,6 +95,7 @@ final class GenerationalIndex(val spark: SparkSession, val root: String) {
     org.apache.hadoop.fs.FileContext
       .getFileContext(ptr.toUri, spark.sparkContext.hadoopConfiguration)
       .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.catalog.Commits.committed(ptr.toString)
     f.listStatus(new HPath(root)).foreach { st =>
       val n = st.getPath.getName
       val gen = if (st.isDirectory && n.startsWith("g"))
@@ -127,8 +128,9 @@ final class GenerationalIndex(val spark: SparkSession, val root: String) {
   * (broadcast model, the q_ann_index_insert shape); the swap is a
   * metadata-only pointer rename. Serving NEVER blocks: every query
   * batch that arrives during the rebuild resolves the pointer to the
-  * complete old generation (AnnSpec injects a crash between the stage
-  * writes and proves the old index serves, never a half-swapped mix). */
+  * complete old generation (AnnSpec lands a crash after each stage
+  * write's commit and proves the old index serves, never a
+  * half-swapped mix). */
 object IndexRetrain {
 
   /** Deterministic hash-sampled TRAINING window over the landed vector
@@ -183,38 +185,29 @@ object IndexRetrain {
     * The corpus-sized relations (assign, codes) land as LEVELED base
     * runs ([[genRelation]]) so day-2 encode-append composes with the
     * same exactly-once, bounded-file-count machinery; the model-sized
-    * relations (centroids, codebooks) stay plain one-shot tables.
-    * `interrupt` is the failure-injection seam, called with 0 before
-    * the first relation and with 1..4 after each relation lands (the
-    * crash-between-swap-steps spec throws there). */
+    * relations (centroids, codebooks) stay plain one-shot tables. */
   def buildGeneration(spark: SparkSession, dir: String,
                       trainPop: DataFrame, corpus: DataFrame,
                       idCol: String, vecCol: String,
                       k: Int = 16, m: Int = 8, dim: Int = 64,
                       ksub: Int = 16, iters: Int = 2,
-                      interrupt: Int => Unit = _ => (),
                       throughBid: Option[Long] = None): Unit = {
     import spark.implicits._
-    interrupt(0)
     val centroids = KMeans.fitCentroids(trainPop, idCol, vecCol, k, iters)
       .toDF("cid", vecCol)
     ParquetTable(spark, "gen_centroids", s"$dir/centroids",
       centroids.schema).overwrite(centroids)
-    interrupt(1)
     val assign = Ann.ivfAssign(corpus, idCol, vecCol, centroids)
     genRelation(spark, "gen_assign", s"$dir/assign", assign.schema, idCol)
       .writeBase(assign, throughBid)
-    interrupt(2)
     val books = Pq.fitCodebooks(trainPop, idCol, vecCol, m, dim, ksub, iters)
     val bookDf = Pq.codebookDf(spark, books)
     ParquetTable(spark, "gen_codebooks", s"$dir/codebooks", bookDf.schema)
       .overwrite(bookDf)
-    interrupt(3)
     val codes = Pq.encode(corpus, idCol, vecCol, m, dim, books)
       .select(col(idCol), col("sub"), col("code"))
     genRelation(spark, "gen_codes", s"$dir/codes", codes.schema, idCol)
       .writeBase(codes, throughBid)
-    interrupt(4)
   }
 
   /** The staged IVF-PQ serve: per query (`qid`, `embedding`), the top 5
@@ -246,7 +239,6 @@ object IndexRetrain {
                        idCol: String, vecCol: String,
                        k: Int = 16, m: Int = 8, dim: Int = 64,
                        ksub: Int = 16, iters: Int = 2,
-                       interrupt: Int => Unit = _ => (),
                        throughBid: Option[Long] = None): Boolean = {
     val drifted = graft.plans.Materialize.modelState(
       decision.filter(col("drifted")).select(col("cid")),
@@ -255,7 +247,7 @@ object IndexRetrain {
     else {
       val g = index.nextGen()
       buildGeneration(index.spark, index.genDir(g), trainPop, corpus,
-        idCol, vecCol, k, m, dim, ksub, iters, interrupt, throughBid)
+        idCol, vecCol, k, m, dim, ksub, iters, throughBid)
       index.publish(g)
       true
     }

@@ -84,6 +84,7 @@ final class TrainReservoir private (
     org.apache.hadoop.fs.FileContext
       .getFileContext(keepPtr.toUri, spark.sparkContext.hadoopConfiguration)
       .rename(tmp, keepPtr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.catalog.Commits.committed(keepPtr.toString)
   }
 
   /** Bank batch `bid`'s sample rows — map-side filter, atomic

@@ -374,12 +374,14 @@ class AnnSpec extends AnyFunSuite {
     val before = serveFrom(idx.currentDir(), queries)
     assert(before.nonEmpty)
     val decision = Seq((0L, true)).toDF("cid", "drifted")
+    val stages = Seq("gen_centroids", "gen_assign", "gen_codebooks", "gen_codes")
     for (step <- 1 to 4) {
       val boom = intercept[RuntimeException] {
-        IndexRetrain.retrainIfDrifted(idx, decision, pop, pop,
-          "vec_id", "embedding", interrupt = i =>
-            if (i == step)
-              throw new RuntimeException(s"injected crash after write $step"))
+        graft.catalog.Commits.during { label =>
+          if (label.takeWhile(_ != '/') == stages(step - 1))
+            throw new RuntimeException(s"injected crash after write $step")
+        }(IndexRetrain.retrainIfDrifted(idx, decision, pop, pop,
+          "vec_id", "embedding"))
       }
       assert(boom.getMessage.contains("injected"))
       assert(idx.currentGen().contains(0L),
@@ -700,39 +702,6 @@ class AnnSpec extends AnyFunSuite {
     c1.writeBatch(1L, newCodes) // a later batch is new data
     assert(c1.read().count() == n1 + newCodes.count(),
       "the base marker must not block batches after the read-through")
-    graft.ingest.FileOps.deleteRecursively(tmp)
-  }
-
-  test("ANN maintain loop: a batch replayed after its retrain published rebases without retraining again") {
-    // the library body (graft.streaming.AnnMaintain) on the
-    // q_stream_ann_maintain fixture: batch 0 seeds the baseline, batch 1
-    // drifts and retrains. A crash between the publish and the rebase
-    // leaves batch 1's drifted window in the statistics; the replay
-    // must find generation 1 built through batch 1 and only rebase —
-    // a second retrain would publish generation 2.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-annm-replay")
-    val (hist, reference, arrivals, pop) = retrainFixture
-    val p = graft.streaming.AnnMaintain.create(spark, "annm_replay",
-      tmp.toString, hist, graft.vector.TrainReservoir.Fixed(5000))
-    assert(!p.perBatch(reference, 0L).maintained)
-    val boom = intercept[RuntimeException] {
-      p.perBatch(arrivals, 1L, {
-        case "published" => throw new RuntimeException("injected crash after the publish")
-        case _ => ()
-      })
-    }
-    assert(boom.getMessage.contains("injected"))
-    assert(p.index.currentGen().contains(1L))
-    assert(!p.stats.read().isEmpty, "the crash landed after the rebase")
-    assert(p.perBatch(arrivals, 1L).maintained, "the replay did not rebase")
-    assert(p.index.currentGen().contains(1L),
-      s"the replay retrained again: generation ${p.index.currentGen()}")
-    assert(p.stats.read().isEmpty, "the replay left the drifted window behind")
-    // the generation holds each landed vector once
-    val stage = p.index.currentDir()
-    val n = pop.count()
-    assert(spark.read.parquet(s"$stage/assign").count() == n)
-    assert(p.vecs.read().count() == n)
     graft.ingest.FileOps.deleteRecursively(tmp)
   }
 

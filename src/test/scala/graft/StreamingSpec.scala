@@ -976,8 +976,10 @@ class StreamingSpec extends AnyFunSuite {
     // redelivered endpoint is 'known' and appends nothing; an applied
     // merge yields no root pair; a missing forward is re-detected) and
     // land skip-if-landed, and the recall stores (texts, index) land by
-    // batch-partition replacement. Three injection points, all on batch
-    // 1, which closes the tables' cadence (every = 2):
+    // batch-partition replacement. Three crash points, each right
+    // after one of batch 1's storage commits (the commit hook's scope
+    // reaches the stream thread), batch 1 closing the tables' cadence
+    // (every = 2):
     //  - between the forwards append and the text write (stores
     //    inconsistent: labels+fwd landed, texts/index missing),
     //  - after ALL writes but before maintenance and the checkpoint
@@ -997,6 +999,13 @@ class StreamingSpec extends AnyFunSuite {
     val expected = graft.text.Dedup
       .nearDupComponents(docsLocal, "doc_id", "text", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // each point is "right after commit X": which labels X may carry,
+    // and which of batch 1's commits with such a label it is
+    val crashPoints = Map(
+      "between-appends" -> (Set("fi_fwd"), 1),
+      "after-appends" -> (Set("fi_idx/mig=1"), 1),
+      // the label write, then the components fold's two run deletes
+      "after-components" -> (Set("fi_labels/mig=0", "fi_labels/mig=1"), 3))
     for (crashPoint <- Seq("between-appends", "after-appends", "after-components")) {
       val tmp = java.nio.file.Files.createTempDirectory(s"graft-ddp-fi")
       val src = java.nio.file.Files.createDirectories(tmp.resolve("src"))
@@ -1008,17 +1017,28 @@ class StreamingSpec extends AnyFunSuite {
       val p = graft.streaming.DedupPipeline.create(ss, "fi", tmp.toString,
         every = 2)
       val injected = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val batchNow = new java.util.concurrent.atomic.AtomicLong(-1L)
+      // the hook's scope reaches the stream thread that runs foreachBatch
       def run(inject: Boolean): Unit = {
+        val (crashLabels, occurrence) = crashPoints(crashPoint)
+        var seen = 0
+        graft.catalog.Commits.during { label =>
+          if (inject && batchNow.get == 1L && crashLabels(label)) {
+            seen += 1
+            if (seen == occurrence && !injected.getAndSet(true))
+              throw new RuntimeException(s"injected crash at $crashPoint")
+          }
+        }(stream())
+      }
+      def stream(): Unit = {
         val q = ss.readStream
           .schema(ss.read.parquet(src.toString).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(src.toString)
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            p.perBatch(batch, bid, point =>
-              if (inject && point == crashPoint && bid == 1L &&
-                  !injected.getAndSet(true))
-                throw new RuntimeException(s"injected crash at $point"))
+            batchNow.set(bid)
+            p.perBatch(batch, bid)
             ()
           }
           .option("checkpointLocation", s"$tmp/ckpt")
@@ -1138,52 +1158,11 @@ class StreamingSpec extends AnyFunSuite {
     graft.ingest.FileOps.deleteRecursively(tmp)
   }
 
-  test("leveled merges replay exactly-once after a crash at every level seam") {
-    // Crash protocol: a merge is (commit destination run with its txn
-    // marker) → [seam] → (delete source runs). Inject the crash at the
-    // seam of EVERY level a run of 8 batches under every=2/fanout=2
-    // reaches (level 0's fold, the 1→2 cascade, the 2→3 cascade), then
-    // replay the batch the way foreachBatch redelivers it — writeBatch
-    // again, maintain again — and require every row exactly once. The
-    // level-0 crash also exercises writeBatch's replay guard: the
-    // folded rows must NOT be re-landed as a fresh level-0 run.
-    import graft.streaming.LeveledIndex
-    (0 to 2).foreach { crashLevel =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-leveled-crash")
-      val idx = LeveledIndex.create(spark, s"lvlc_idx_$crashLevel",
-        s"$tmp/idx", leveledRowSchema, "bh", every = 2, fanout = 2)
-      def rows(bid: Long) = Seq((bid, bid * 10), (bid, bid * 10 + 1))
-        .toDF("bh", "v")
-      var crashed = false
-      (0L until 8L).foreach { bid =>
-        idx.writeBatch(bid, rows(bid))
-        val attempt = scala.util.Try(idx.maintain(bid,
-          interruptAfterMerge = l =>
-            if (l == crashLevel && !crashed) {
-              crashed = true
-              throw new RuntimeException(s"injected crash at level $l")
-            }))
-        if (attempt.isFailure) {
-          // micro-batch redelivery: the whole batch body replays
-          idx.writeBatch(bid, rows(bid))
-          idx.maintain(bid)
-        }
-      }
-      assert(crashed, s"level $crashLevel merge never fired in 8 batches")
-      assert(idx.read().count() == 16,
-        s"[level $crashLevel] rows duplicated or lost: ${idx.read().count()}")
-      assert(idx.read().agg(org.apache.spark.sql.functions.sum(col("v")))
-        .head().getLong(0) == (0L until 8L).map(b => b * 20 + 1).sum,
-        s"[level $crashLevel] content diverged")
-      graft.ingest.FileOps.deleteRecursively(tmp)
-    }
-  }
-
   test("a cadence batch replayed after the components fold keeps every label") {
     // the size-triggered fold of IndexMaintenance.maintainComponents
     // rewrites the whole label table into the level-1 run keyed by the
     // cadence batch; a crash after it (the dedup pipeline's
-    // "after-components" seam) replays the batch, whose labels,
+    // "after-components" crash point) replays the batch, whose labels,
     // recomputed against the stored state, are empty. That replayed
     // write must not land a level-0 run the replayed maintenance would
     // fold OVER the folded labels.
@@ -1550,7 +1529,8 @@ class StreamingSpec extends AnyFunSuite {
     // the two made the replayed batch re-age and re-append — duplicates
     // persisted in the index forever. TieredIndex's mig-partitioned
     // atomic overwrites make every step idempotent; this test lands a
-    // crash in the exact window (via the injection seam), replays, and
+    // crash in the exact window (right after the index partition's
+    // commit), replays, and
     // asserts the index holds each aged row exactly once — plus the
     // late-arrival variant (a replayed batch must not re-age its OWN
     // pending rows) and the fold-compaction content identity.
@@ -1578,8 +1558,10 @@ class StreamingSpec extends AnyFunSuite {
     // pending delete.
     val cutoff1 = t0 + 3600000L
     val boom = intercept[RuntimeException] {
-      tier.age(1L, cutoff1, interruptAfterMigrate =
-        () => throw new RuntimeException("injected crash in the aging window"))
+      graft.catalog.Commits.during { label =>
+        if (label == "ndtt_crash_idx/mig=1")
+          throw new RuntimeException("injected crash in the aging window")
+      }(tier.age(1L, cutoff1))
     }
     assert(boom.getMessage.contains("injected"))
     // crash state: rows in the bulk index AND still in pending
