@@ -6,10 +6,12 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.plans.DriverFetch
 
 /** A parquet-directory-backed mutable table with the DML surface the
   * reference gets from Delta: UPDATE / DELETE / TRUNCATE / MERGE / append
@@ -52,7 +54,13 @@ import org.apache.spark.sql.types.StructType
   * catalog's bookkeeping — also append, overwrite and read rows on the
   * driver ([[appendRows]], [[overwriteRows]], [[readRows]]): Spark's
   * own parquet writer and reader without a Spark job, through the same
-  * swap.
+  * swap. Batch-sized landings take the same road, chosen by size
+  * through [[DriverFetch]]: an unpartitioned [[append]] of a frame
+  * under its caps goes through [[appendRows]], and a partition landing
+  * whose rows the caller fetched ([[overwritePartitionRows]], used by
+  * [[graft.streaming.LeveledIndex]]'s per-batch runs and small folds)
+  * writes one key-sorted file through the same partition swap, with
+  * the same `_graft_txn` markers and commit, as [[overwritePartition]].
   */
 final class ParquetTable(
     val spark: SparkSession,
@@ -234,10 +242,21 @@ final class ParquetTable(
     if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w
   }
 
+  /** Append `df`. On an unpartitioned table a batch-sized frame
+    * ([[DriverFetch]]'s caps) lands from the driver through
+    * [[appendRows]]: one file, no Spark write job, and nothing at all
+    * for an empty frame. */
   def append(df: DataFrame): Unit = {
-    recover()
-    writer(df).mode("append").parquet(path)
-    Commits.committed(name)
+    val held =
+      if (partitionCols.nonEmpty) None
+      else DriverFetch(s"$name append", Seq(align(df)))
+    held match {
+      case Some(Seq(rows)) => appendRows(rows)
+      case _ =>
+        recover()
+        writer(df).mode("append").parquet(path)
+        Commits.committed(name)
+    }
   }
 
   def overwrite(df: DataFrame): Unit = overwrite(df, None)
@@ -299,7 +318,7 @@ final class ParquetTable(
     if (rows.nonEmpty) {
       val f = fs
       f.mkdirs(dest)
-      val part = writeRowsFile(rows, dest, ParquetTable.TmpPrefix)
+      val part = writeRowsFile(rows, schema, dest, ParquetTable.TmpPrefix)
       if (!f.rename(new Path(dest, ParquetTable.TmpPrefix + part), new Path(dest, part)))
         throw new java.io.IOException(s"append rename failed for $path")
       Commits.committed(name)
@@ -315,7 +334,7 @@ final class ParquetTable(
       val f = fs
       f.delete(stage, true) // a stale stage from an interrupted swap
       f.mkdirs(stage)
-      if (rows.nonEmpty) writeRowsFile(rows, stage, "")
+      if (rows.nonEmpty) writeRowsFile(rows, schema, stage, "")
     }
   }
 
@@ -343,29 +362,38 @@ final class ParquetTable(
   private def requireUnpartitioned(op: String): Unit =
     require(partitionCols.isEmpty, s"$op is for unpartitioned tables; $name is partitioned")
 
-  /** Writes `rows` as one parquet file `dir/<prefix><part name>` with
-    * the writer a Spark write task would open (`ParquetUtils.prepareWrite`
-    * → `OutputWriterFactory`), and returns the part name. */
-  private def writeRowsFile(rows: Seq[Row], dir: Path, prefix: String): String = {
+  /** Writes `rows` (values in `fileSchema` order) as one parquet file
+    * `dir/<prefix><part name>` with the writer a Spark write task would
+    * open (`ParquetUtils.prepareWrite` → `OutputWriterFactory`), and
+    * returns the part name. With `sortKey`, the rows are written in
+    * Spark's ascending order of that column, nulls first — the order
+    * `sortWithinPartitions` gives. */
+  private def writeRowsFile(rows: Seq[Row], fileSchema: StructType, dir: Path,
+                            prefix: String, sortKey: Option[String] = None): String = {
     val sqlConf = spark.sessionState.conf
     val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(writeOptions))
     job.setOutputKeyClass(classOf[Void])
     job.setOutputValueClass(classOf[InternalRow])
-    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, fileSchema,
       new ParquetOptions(writeOptions, sqlConf))
     val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
     val part = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-    val required = schema.fields.indices.filterNot(schema.fields(_).nullable)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(fileSchema)
+    val required = fileSchema.fields.indices.filterNot(fileSchema.fields(_).nullable)
     val internal = rows.map { r =>
-      require(r.length == schema.length,
-        s"row of ${r.length} values for the ${schema.length}-column table $name")
+      require(r.length == fileSchema.length,
+        s"row of ${r.length} values for the ${fileSchema.length}-column files of $name")
       val row = toCatalyst(r).asInstanceOf[InternalRow]
       require(!required.exists(row.isNullAt), s"null in a non-nullable column of $name")
       row
     } // all rows convert before the file is opened: a bad row writes nothing
-    val out = factory.newInstance(new Path(dir, prefix + part).toString, schema, ctx)
-    try internal.foreach(out.write) finally out.close()
+    val ordered = sortKey.fold(internal) { k =>
+      val i = fileSchema.fieldIndex(k)
+      val key = BoundReference(i, fileSchema(i).dataType, fileSchema(i).nullable)
+      internal.sorted(new InterpretedOrdering(Seq(SortOrder(key, Ascending))))
+    }
+    val out = factory.newInstance(new Path(dir, prefix + part).toString, fileSchema, ctx)
+    try ordered.foreach(out.write) finally out.close()
     part
   }
 
@@ -460,7 +488,32 @@ final class ParquetTable(
     * stream batches never resets [[upsertInPartitions]]' dedup state —
     * the same contract [[overwrite]] keeps for the table-level marker. */
   def overwritePartition(values: Seq[(String, String)], df: DataFrame,
-                         txn: Option[(String, Long)] = None): Unit = {
+                         txn: Option[(String, Long)] = None): Unit =
+    swapPartition(values, txn)(stage =>
+      dataAligned(df).write.mode("overwrite").parquet(stage.toString))
+
+  /** [[overwritePartition]] for rows the caller holds (values in
+    * [[dataSchema]] order): the same swap and markers, with the
+    * partition written from the driver as ONE file sorted on `sortKey`
+    * (see [[writeRowsFile]]) — no Spark job. No rows publish an empty
+    * partition directory, so [[partitionExists]] still records the
+    * landing. */
+  def overwritePartitionRows(values: Seq[(String, String)], rows: Seq[Row],
+                             sortKey: String, txn: Option[(String, Long)] = None): Unit =
+    swapPartition(values, txn) { stage =>
+      fs.mkdirs(stage)
+      if (rows.nonEmpty) writeRowsFile(rows, dataSchema, stage, "", Some(sortKey))
+    }
+
+  /** `df` as the partition files carry it: [[dataSchema]]'s columns,
+    * in order, at their types. */
+  private[graft] def dataAligned(df: DataFrame): DataFrame = alignTo(dataSchema, df)
+
+  /** The one partition swap protocol: `fill` writes the new contents
+    * into the partition's stage, then the markers are carried forward
+    * and the stage is parked → renamed → reclaimed. */
+  private def swapPartition(values: Seq[(String, String)], txn: Option[(String, Long)])
+                           (fill: Path => Unit): Unit = {
     require(values.size == partitionCols.size,
       "overwritePartition needs the full partition spec")
     recover()
@@ -470,7 +523,7 @@ final class ParquetTable(
     val parked = new Path(partOldRoot, rel)
     val live = new Path(dest, rel)
     val carried = readTxns(live) // before any mutation of the partition
-    alignTo(dataSchema, df).write.mode("overwrite").parquet(stage.toString)
+    fill(stage)
     val txns = txn.fold(carried)(carried + _)
     if (txns.nonEmpty) writeTxns(stage, txns)
     if (f.exists(parked)) f.delete(parked, true)

@@ -25,7 +25,10 @@ import org.apache.spark.sql.DataFrame
   * cluster idiom; no per-operator wiring. */
 object Materialize {
 
+  /** `df` materialized, or `df` itself when it is already a local
+    * relation on the driver (nothing to pin, and no job to run). */
   def stage(df: DataFrame): DataFrame = {
+    if (org.apache.spark.sql.graft.ExecutionBridge.isLocal(df)) return df
     val ss = df.sparkSession
     val reliable =
       ss.conf.get("graft.checkpoint.reliable", "false").toBoolean &&

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.catalog.ParquetTable
+import graft.plans.DriverFetch
 
 /** Size-tiered LEVELED maintenance for a stream-maintained secondary
   * index (band buckets, seed postings, BM25 postings, component
@@ -38,6 +39,13 @@ import graft.catalog.ParquetTable
   * serve reads ~K matching row groups regardless of which level holds
   * them. Byte-identity of served answers across maintenance is pinned
   * in StreamingSpec alongside the old full-compaction test.
+  *
+  * The per-batch landings and the folds whose output fits one file are
+  * written from the driver when their rows are batch-sized
+  * ([[graft.plans.DriverFetch]]): one sorted file through
+  * [[ParquetTable.overwritePartitionRows]], the same partition swap and
+  * markers as the Spark write they replace, and no write job. Larger
+  * runs keep the Spark write.
   *
   * ==Exactly-once merges==
   * A merge is two mutations (write the destination run, delete the
@@ -108,8 +116,25 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
         -mig % LeveledIndex.LevelBase == bid
     }
     if (!folded && !builtThrough.exists(bid <= _))
-      table.overwritePartition(Seq("mig" -> bid.toString),
-        df.sortWithinPartitions(sortKey))
+      land(Seq("mig" -> bid.toString), df, None, driver = true)(
+        _.sortWithinPartitions(sortKey))
+  }
+
+  /** Write `df` as the run `spec`, key-sorted: from the driver
+    * ([[ParquetTable.overwritePartitionRows]]) when `driver` is allowed
+    * and `df` is batch-sized ([[DriverFetch]]'s caps), else as the
+    * Spark write `distributed(df)`. Both go through the same partition
+    * swap and publish the same markers. */
+  private def land(spec: Seq[(String, String)], df: DataFrame,
+                   txn: Option[(String, Long)], driver: Boolean)
+                  (distributed: DataFrame => DataFrame): Unit = {
+    val held =
+      if (driver) DriverFetch(s"${table.name} run ${spec.head._2}", Seq(table.dataAligned(df)))
+      else None
+    held match {
+      case Some(Seq(rows)) => table.overwritePartitionRows(spec, rows, sortKey, txn)
+      case _ => table.overwritePartition(spec, distributed(df), txn)
+    }
   }
 
   /** The stream batch id the base run's corpus was read through
@@ -200,11 +225,9 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
     } else if (runs.nonEmpty && (l == 0 || runs.size >= fanout)) {
       val bytes = runs.map(table.partitionBytes).sum
       val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      table.overwritePartition(destSpec,
-        table.readPartitionsData(runs)
-          .repartitionByRange(parts, col(sortKey))
-          .sortWithinPartitions(sortKey),
-        txn = Some((LeveledIndex.FoldApp, bid)))
+      land(destSpec, table.readPartitionsData(runs), Some((LeveledIndex.FoldApp, bid)),
+          driver = parts == 1)(
+        _.repartitionByRange(parts, col(sortKey)).sortWithinPartitions(sortKey))
       runs.foreach(table.deletePartitions)
     }
   }

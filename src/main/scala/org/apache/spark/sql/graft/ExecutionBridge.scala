@@ -6,7 +6,8 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.SimpleFutureAction
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.execution.{CoalesceExec, LocalTableScanExec, SQLExecution}
 import org.apache.spark.util.ThreadUtils
 
@@ -33,7 +34,7 @@ object ExecutionBridge {
   def collectBounded(df: DataFrame, maxRows: Int, maxBytes: Long)
       : Option[(Array[InternalRow], Long)] = {
     def size(r: InternalRow): Long = r.asInstanceOf[UnsafeRow].getSizeInBytes.toLong
-    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution
+    val qe = queryExecution(df)
     val fetched = SQLExecution.withNewExecutionId(qe, Some("collect")) {
       qe.executedPlan match {
         case local: LocalTableScanExec => Some(local.executeCollect())
@@ -83,6 +84,28 @@ object ExecutionBridge {
       val bytes = rows.iterator.map(size).sum
       if (rows.length > maxRows || bytes > maxBytes) None else Some((rows, bytes))
     }
+  }
+
+  private def queryExecution(df: DataFrame) =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution
+
+  /** Whether `df` is a local relation whose rows are already on the
+    * driver: a `LocalRelation` under coalesces and column selections
+    * only, as [[graft.plans.DriverFetch.local]] returns them. A frame
+    * the optimizer merely folds into a local scan (a projection or
+    * filter over a local relation) does not count: each plan that reads
+    * it evaluates that projection again. */
+  def isLocal(df: DataFrame): Boolean = {
+    def held(plan: LogicalPlan): Boolean = plan match {
+      case _: LocalRelation => true
+      case Repartition(_, false, child) => held(child)
+      case Project(columns, child) => columns.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && held(child)
+      case _ => false
+    }
+    held(queryExecution(df).analyzed)
   }
 
   private lazy val pool =

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +11,10 @@ import graft.catalog.{MetaStore, ParquetTable}
 /** The driver-side catalog path: `ParquetTable.appendRows` /
   * `overwriteRows` / `readRows` are equivalent to the Spark-job writes
   * and reads they replace, and `MetaStore`'s control state machine
-  * keeps its contract when applied on the driver. */
+  * keeps its contract when applied on the driver. The batch-sized
+  * landings (`LeveledIndex` runs and small folds, unpartitioned
+  * `append`) write the rows, markers and key order of the Spark write
+  * they replace. */
 class CatalogRowsSpec extends AnyFunSuite {
   import CatalogRowsSpec.Rec
   lazy val spark = TestSpark.spark
@@ -29,6 +33,10 @@ class CatalogRowsSpec extends AnyFunSuite {
     Rec(Long.MinValue, Int.MinValue, Some(0), "", None, ts("1970-01-01 00:00:00", 0)))
 
   private def table(dir: Path, n: String) = ParquetTable(spark, n, dir.resolve(n).toString, schema)
+  /** `body` with every batch-sized landing of two or more rows forced
+    * onto its Spark write. */
+  private def distributed[T](body: => T): T =
+    graft.plans.DriverFetch.withCaps(1, graft.plans.DriverFetch.MaxBytes)(body)
   private def sorted(rows: Seq[Row]) = rows.sortBy(_.getLong(0))
   private def asRows(recs: Seq[Rec]) = recs.map(r =>
     Row(r.id, r.n, r.opt.orNull, r.s, r.os.orNull, r.ts))
@@ -38,8 +46,10 @@ class CatalogRowsSpec extends AnyFunSuite {
     val spark1 = table(dir, "spark")
     val driver = table(dir, "driver")
     // both tables already hold a Spark-written file
-    Seq(spark1, driver).foreach(_.append(first.toDF()))
-    spark1.append(second.toDF())
+    distributed {
+      Seq(spark1, driver).foreach(_.append(first.toDF()))
+      spark1.append(second.toDF())
+    }
     driver.appendRows(second.map(Row.fromTuple))
     val want = sorted(asRows(first ++ second))
     assert(sorted(spark1.read().collect().toSeq) === want)
@@ -57,7 +67,7 @@ class CatalogRowsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("rows-footer")
     val sparkT = table(dir, "spark")
     val driverT = table(dir, "driver")
-    sparkT.append(second.toDF().coalesce(1))
+    distributed(sparkT.append(second.toDF().coalesce(1)))
     driverT.appendRows(second.map(Row.fromTuple))
     def footer(t: String) = {
       val f = Files.list(dir.resolve(t)).iterator().asScala
@@ -118,6 +128,91 @@ class CatalogRowsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
     assert(got === graft.model.Catalog.statusSeed.map(s => s.StatusID -> s.StatusDescription) :+
       (9L -> "Custom"))
+  }
+
+  /** Every `_graft_txn` marker under `root`, by its directory relative
+    * to `root`. */
+  private def markers(root: Path): Map[String, String] =
+    Files.walk(root).iterator().asScala.filter(_.getFileName.toString == "_graft_txn")
+      .map(f => root.relativize(f.getParent).toString -> Files.readString(f)).toMap
+  private def multiset(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  test("batch-sized landings from the driver equal the Spark write: a run, a fold, an append") {
+    import graft.streaming.LeveledIndex
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val dir = Files.createTempDirectory("rows-landings")
+    val runSchema = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
+    def run(root: Path): (Seq[Int], LeveledIndex, ParquetTable) = {
+      val idx = LeveledIndex.create(spark, "landing_idx", root.resolve("idx").toString,
+        runSchema, "k", every = 2)
+      val log = ParquetTable(spark, "landing_log", root.resolve("log").toString, runSchema)
+      // markers the landings must carry: a replayed run's and the log's
+      distributed {
+        idx.table.overwritePartition(Seq("mig" -> "1"), Seq((9L, 9L), (8L, 8L)).toDF("k", "v"),
+          txn = Some(("app", 3L)))
+        log.overwrite(Seq((0L, 0L), (1L, 1L)).toDF("k", "v"), Some(("app", 4L)))
+      }
+      val jobs = Seq(
+        TestSpark.jobsDuring(spark)(idx.writeBatch(0L, Seq((3L, 30L), (1L, 10L), (2L, 20L))
+          .toDF("k", "v"))).size,
+        TestSpark.jobsDuring(spark)(idx.writeBatch(1L, Seq((5L, 50L), (4L, 40L)).toDF("k", "v")
+          .withColumn("mig", lit(7L)))).size,
+        TestSpark.jobsDuring(spark)(log.append(Seq((2L, 2L), (3L, 3L)).toDF("k", "v"))).size)
+      assert(idx.maintain(1L), "the level-0 fold did not fire")
+      (jobs, idx, log)
+    }
+    val (driverJobs, dIdx, dLog) = run(dir.resolve("driver"))
+    val (sparkJobs, sIdx, sLog) = distributed(run(dir.resolve("spark")))
+    // the driver lands local rows without a job; the forced path writes
+    assert(driverJobs === Seq(0, 0, 0))
+    assert(sparkJobs.forall(_ > 0), sparkJobs)
+    val fold = Seq("mig" -> LeveledIndex.migFor(1, 1L).toString)
+    assert(dIdx.table.listPartitions() === Seq(fold))
+    assert(multiset(dIdx.table.read()) === multiset(sIdx.table.read()))
+    assert(dIdx.table.read().count() === 5)
+    assert(multiset(dLog.read()) === multiset(sLog.read()))
+    assert(markers(dir.resolve("driver")) === markers(dir.resolve("spark")))
+    assert(markers(dir.resolve("driver")).keySet === Set("idx/" + fold.head.productIterator
+      .mkString("="), "log"))
+  }
+
+  test("a driver-written run has the key order of sortWithinPartitions") {
+    import graft.streaming.LeveledIndex
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = Files.createTempDirectory("rows-order")
+    val idx = LeveledIndex.create(spark, "order_idx", dir.resolve("idx").toString,
+      StructType(Seq(StructField("k", StringType), StructField("v", LongType))), "k")
+    val keys = Seq("b", null, "é", "a", "Z", null, "日本", "", "ä", "é", "😀", "aa")
+    val df = keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "v")
+    assert(TestSpark.jobsDuring(spark)(idx.writeBatch(0L, df)).isEmpty)
+    val files = Files.list(dir.resolve("idx/mig=0")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.size === 1)
+    val written = spark.read.parquet(files.head.toString).collect().map(_.getString(0)).toSeq
+    val want = df.coalesce(1).sortWithinPartitions("k").collect().map(_.getString(0)).toSeq
+    assert(written === want)
+    assert(written.take(2) === Seq(null, null))
+  }
+
+  test("an empty landing publishes its partition, and its replay skips") {
+    import graft.streaming.LeveledIndex
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val dir = Files.createTempDirectory("rows-empty")
+    val idx = LeveledIndex.create(spark, "empty_idx", dir.resolve("idx").toString,
+      StructType(Seq(StructField("k", LongType))), "k")
+    val jobs = TestSpark.jobsDuring(spark)(
+      idx.writeBatchIfAbsent(3L, Seq.empty[Long].toDF("k").coalesce(1)))
+    assert(jobs.isEmpty, jobs)
+    assert(idx.table.partitionExists(Seq("mig" -> "3")))
+    idx.writeBatchIfAbsent(3L, Seq(1L, 2L).toDF("k"))
+    assert(idx.read().count() === 0)
+    // an empty unpartitioned append writes nothing and publishes nothing
+    val log = ParquetTable(spark, "empty_log", dir.resolve("log").toString,
+      StructType(Seq(StructField("k", LongType)))).createIfNotExists()
+    val commits = scala.collection.mutable.Buffer.empty[String]
+    graft.catalog.Commits.during(commits += _)(log.append(Seq.empty[Long].toDF("k")))
+    assert(commits.isEmpty && log.dataFileCount === 0)
   }
 }
 
