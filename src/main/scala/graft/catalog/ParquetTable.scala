@@ -6,7 +6,8 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Cast, InterpretedOrdering, Literal, SortOrder}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions._
@@ -56,11 +57,15 @@ import graft.plans.DriverFetch
   * own parquet writer and reader without a Spark job, through the same
   * swap. Batch-sized landings take the same road, chosen by size
   * through [[DriverFetch]]: an unpartitioned [[append]] of a frame
-  * under its caps goes through [[appendRows]], and a partition landing
+  * under its caps goes through [[appendRows]]; a partition landing
   * whose rows the caller fetched ([[overwritePartitionRows]], used by
   * [[graft.streaming.LeveledIndex]]'s per-batch runs and small folds)
   * writes one key-sorted file through the same partition swap, with
-  * the same `_graft_txn` markers and commit, as [[overwritePartition]].
+  * the same `_graft_txn` markers and commit, as [[overwritePartition]];
+  * a partitioned [[appendRows]] (the ingest's batch-sized micro-batches
+  * and their PII shadow) writes one file per partition it touches; and
+  * a [[compactPartition]] into one file rewrites a batch-sized
+  * partition z-sorted from the driver.
   */
 final class ParquetTable(
     val spark: SparkSession,
@@ -309,19 +314,44 @@ final class ParquetTable(
   // commit protocol — for a few hundred bytes.
 
   /** Append `rows` (values in [[schema]] order; `Option` fields may be
-    * `None`/`Some`) as ONE parquet file. The file is written under a
-    * `.tmp-` name, invisible to every reader, and renamed in; [[recover]]
-    * sweeps a temp file an interrupted append left behind. */
+    * `None`/`Some`) as ONE parquet file per partition. On an
+    * unpartitioned table the file is written under a `.tmp-` name,
+    * invisible to every reader, and renamed in; [[recover]] sweeps a
+    * temp file an interrupted append left behind. On a partitioned table
+    * the rows are grouped by their partition values, rendered as the
+    * hive directory name renders them; every partition's file is written
+    * under `_pstage/<partition>/` before the first is renamed into its
+    * live directory, so a bad row or an unrenderable value publishes
+    * nothing, and [[recover]] sweeps the files a crash between two
+    * renames left staged. Each rename commits its own partition. */
   def appendRows(rows: Seq[Row]): Unit = {
-    requireUnpartitioned("appendRows")
     recover()
     if (rows.nonEmpty) {
       val f = fs
-      f.mkdirs(dest)
-      val part = writeRowsFile(rows, schema, dest, ParquetTable.TmpPrefix)
-      if (!f.rename(new Path(dest, ParquetTable.TmpPrefix + part), new Path(dest, part)))
-        throw new java.io.IOException(s"append rename failed for $path")
-      Commits.committed(name)
+      if (partitionCols.isEmpty) {
+        f.mkdirs(dest)
+        val part = writeRowsFile(rows, schema, dest, ParquetTable.TmpPrefix)
+        if (!f.rename(new Path(dest, ParquetTable.TmpPrefix + part), new Path(dest, part)))
+          throw new java.io.IOException(s"append rename failed for $path")
+        Commits.committed(name)
+      } else {
+        val keys = partitionCols.map(c => c -> schema.fieldIndex(c))
+        val data = dataSchema.fieldNames.map(schema.fieldIndex)
+        val staged = rows.groupBy(r => partitionRel(keys.map { case (c, i) =>
+          c -> partitionValue(c, r.get(i)) })).toSeq.sortBy(_._1).map { case (rel, rs) =>
+          val stage = new Path(partStageRoot, rel)
+          f.mkdirs(stage)
+          rel -> writeRowsFile(rs.map(r => Row.fromSeq(data.map(r.get))), dataSchema, stage, "")
+        }
+        staged.foreach { case (rel, part) =>
+          val live = new Path(dest, rel)
+          f.mkdirs(live)
+          if (!f.rename(new Path(new Path(partStageRoot, rel), part), new Path(live, part)))
+            throw new java.io.IOException(s"append rename failed for $live")
+          Commits.committed(s"$name/$rel")
+        }
+        f.delete(partStageRoot, true)
+      }
     }
   }
 
@@ -366,10 +396,10 @@ final class ParquetTable(
     * `dir/<prefix><part name>` with the writer a Spark write task would
     * open (`ParquetUtils.prepareWrite` → `OutputWriterFactory`), and
     * returns the part name. With `sortKey`, the rows are written in
-    * Spark's ascending order of that column, nulls first — the order
+    * Spark's ascending order of those columns, nulls first — the order
     * `sortWithinPartitions` gives. */
   private def writeRowsFile(rows: Seq[Row], fileSchema: StructType, dir: Path,
-                            prefix: String, sortKey: Option[String] = None): String = {
+                            prefix: String, sortKey: Seq[String] = Nil): String = {
     val sqlConf = spark.sessionState.conf
     val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(writeOptions))
     job.setOutputKeyClass(classOf[Void])
@@ -387,11 +417,12 @@ final class ParquetTable(
       require(!required.exists(row.isNullAt), s"null in a non-nullable column of $name")
       row
     } // all rows convert before the file is opened: a bad row writes nothing
-    val ordered = sortKey.fold(internal) { k =>
-      val i = fileSchema.fieldIndex(k)
-      val key = BoundReference(i, fileSchema(i).dataType, fileSchema(i).nullable)
-      internal.sorted(new InterpretedOrdering(Seq(SortOrder(key, Ascending))))
-    }
+    val ordered =
+      if (sortKey.isEmpty) internal
+      else internal.sorted(new InterpretedOrdering(sortKey.map { k =>
+        val i = fileSchema.fieldIndex(k)
+        SortOrder(BoundReference(i, fileSchema(i).dataType, fileSchema(i).nullable), Ascending)
+      }))
     val out = factory.newInstance(new Path(dir, prefix + part).toString, fileSchema, ctx)
     try ordered.foreach(out.write) finally out.close()
     part
@@ -499,15 +530,16 @@ final class ParquetTable(
     * partition directory, so [[partitionExists]] still records the
     * landing. */
   def overwritePartitionRows(values: Seq[(String, String)], rows: Seq[Row],
-                             sortKey: String, txn: Option[(String, Long)] = None): Unit =
+                             sortKey: Seq[String], txn: Option[(String, Long)] = None): Unit =
     swapPartition(values, txn) { stage =>
       fs.mkdirs(stage)
-      if (rows.nonEmpty) writeRowsFile(rows, dataSchema, stage, "", Some(sortKey))
+      if (rows.nonEmpty) writeRowsFile(rows, dataSchema, stage, "", sortKey)
     }
 
   /** `df` as the partition files carry it: [[dataSchema]]'s columns,
     * in order, at their types. */
-  private[graft] def dataAligned(df: DataFrame): DataFrame = alignTo(dataSchema, df)
+  private[graft] def dataAligned(df: DataFrame): DataFrame =
+    ParquetTable.alignTo(dataSchema, df)
 
   /** The one partition swap protocol: `fill` writes the new contents
     * into the partition's stage, then the markers are carried forward
@@ -561,21 +593,29 @@ final class ParquetTable(
     * the same directory. Any other type (e.g. a timestamp literal
     * against a date column, whose equality semantics are NOT
     * date-truncation) refuses to route. */
-  private def litString(
-      c: String,
-      l: org.apache.spark.sql.catalyst.expressions.Literal): Option[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal => CLit}
+  private def litString(c: String, l: Literal): Option[String] = {
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     val colType = schema(c).dataType
     val typed =
       if (l.dataType == colType) Some(l)
       else if (l.dataType == org.apache.spark.sql.types.StringType)
-        Option(Cast(l, colType, tz).eval(null)).map(CLit(_, colType))
+        Option(Cast(l, colType, tz).eval(null)).map(Literal(_, colType))
       else None
-    typed.flatMap(t =>
-      Option(Cast(t, org.apache.spark.sql.types.StringType, tz).eval(null))
-        .map(_.toString))
+    typed.flatMap(rendered)
   }
+
+  /** A literal as the hive directory name renders it (Spark's cast to
+    * string under the session time zone); None for null. */
+  private def rendered(l: Literal): Option[String] =
+    Option(Cast(l, org.apache.spark.sql.types.StringType,
+      Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)).map(_.toString)
+
+  /** The directory value of partition column `c` for the external
+    * value `v`: rendered like [[litString]]'s literals, and null as
+    * Spark's default partition name. */
+  private def partitionValue(c: String, v: Any): String =
+    rendered(Literal(CatalystTypeConverters.convertToCatalyst(v), schema(c).dataType))
+      .getOrElse(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
 
   /** Equality conjuncts on partition columns inside `pred`, extracted
     * so generic DML can prune like Delta does: the reference issues
@@ -979,23 +1019,25 @@ final class ParquetTable(
       // stance.
       if (zorderCols.isEmpty && files.length <= parts) return
       val cur = spark.read.schema(dataSchema).parquet(live.toString)
-      val arranged =
-        if (zorderCols.nonEmpty)
-          cur.repartitionByRange(parts, zorderCols.map(col): _*)
-            .sortWithinPartitions(zorderCols.map(col): _*)
-        else cur.coalesce(parts)
-      overwritePartition(values, arranged)
+      // one output file: a batch-sized partition is rewritten from the
+      // driver, z-sorted; a larger one is sorted in one task — a range
+      // shuffle into one partition would only add a sampling job and an
+      // exchange
+      val held = if (parts == 1) DriverFetch(s"$name compact", Seq(cur)) else None
+      held match {
+        case Some(Seq(rows)) => overwritePartitionRows(values, rows, zorderCols)
+        case _ =>
+          val arranged =
+            if (zorderCols.isEmpty) cur.coalesce(parts)
+            else if (parts == 1) cur.coalesce(1).sortWithinPartitions(zorderCols.map(col): _*)
+            else cur.repartitionByRange(parts, zorderCols.map(col): _*)
+              .sortWithinPartitions(zorderCols.map(col): _*)
+          overwritePartition(values, arranged)
+      }
     }
   }
 
-  private def align(df: DataFrame): DataFrame = alignTo(schema, df)
-
-  private def alignTo(s: StructType, df: DataFrame): DataFrame = {
-    val cols = s.fields.map(f =>
-      (if (df.columns.contains(f.name)) col(f.name) else lit(null))
-        .cast(f.dataType).as(f.name))
-    df.select(cols.toSeq: _*)
-  }
+  private def align(df: DataFrame): DataFrame = ParquetTable.alignTo(schema, df)
 }
 
 object ParquetTable {
@@ -1003,6 +1045,15 @@ object ParquetTable {
             partitionCols: Seq[String] = Nil,
             writeOptions: Map[String, String] = Map.empty): ParquetTable =
     new ParquetTable(spark, name, path, schema, partitionCols, writeOptions)
+
+  /** `df` as a table of schema `s` holds it: `s`'s columns, in order,
+    * at their types; a column `df` lacks reads as null. */
+  private[graft] def alignTo(s: StructType, df: DataFrame): DataFrame = {
+    val cols = s.fields.map(f =>
+      (if (df.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name))
+    df.select(cols.toSeq: _*)
+  }
 
   /** Name prefix of an [[ParquetTable.appendRows]] file before its
     * rename: dot-prefixed, so no reader lists it. */

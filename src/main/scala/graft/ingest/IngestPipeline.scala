@@ -1,9 +1,11 @@
 package graft.ingest
 
 import java.sql.{Date, Timestamp}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 import graft.catalog.{MetaStore, ParquetTable}
+import graft.plans.DriverFetch
 import graft.model.FeedConfig.{ColumnSpec, Feed}
 
 /** The per-micro-batch state machine
@@ -18,14 +20,22 @@ import graft.model.FeedConfig.{ColumnSpec, Feed}
   *
   * Scale notes: every step is a narrow transform over the batch — no
   * shuffle at all on the happy path (select/rename/withColumn/filter),
-  * and the happy path is ONE scan: the row count and the corrupt count
-  * ride the sink write as observe() metrics instead of separate count
-  * jobs (the reference pays 2-3 scans per batch). The rare corrupt
+  * and the happy path is ONE scan (the reference pays 2-3 per batch).
+  * A batch-sized append — a small-file trigger, under
+  * [[graft.plans.DriverFetch]]'s caps — is that scan: its rows are
+  * fetched once, gated on the driver, and the target and the PII shadow
+  * each land as one driver-written parquet file per partition
+  * ([[ParquetTable.appendRows]]), with no Spark write job. A larger
+  * trigger lands as Spark writes of at most `defaultParallelism` files,
+  * with the row count and the corrupt count riding the target write as
+  * observe() metrics instead of separate count jobs; its rare corrupt
   * batch pays a compensating delete of its own just-appended rows
   * before quarantining. The catalog bookkeeping is batched to one
   * [[MetaStore.logAndControlMany]] per micro-batch — one driver-written
-  * log file and one driver-side control swap, no Spark job — so a clean
-  * batch submits only its sink writes.
+  * log file and one driver-side control swap, no Spark job. The
+  * post-load compaction of a day partition that fits one file is
+  * rewritten from the driver as well
+  * ([[ParquetTable.compactPartition]]).
   */
 final class IngestPipeline(
     val spark: SparkSession,
@@ -153,9 +163,15 @@ final class IngestPipeline(
   }
 
   /** load_data (auto_loader_steps.py:323-409): ordered select, rename to
-    * target names, PII fork, append/overwrite sink, row-count log. The
-    * row count and (append mode) the corrupt count are observe() metrics
-    * on the ONE write scan — no separate count jobs. */
+    * target names, PII fork, append/overwrite sink, row-count log.
+    *
+    * A batch-sized append ([[DriverFetch]]'s caps) is fetched ONCE: the
+    * corrupt gate runs on the fetched rows before anything is written,
+    * and the target and its PII shadow land from the driver
+    * ([[ParquetTable.appendRows]]). Above the caps, and in overwrite
+    * mode, the batch lands as Spark writes; the row count and (append
+    * mode) the corrupt count are observe() metrics on the target write's
+    * scan — no separate count jobs. */
   private def loadData(stamped: DataFrame, batchId: Long, now: Timestamp,
                        observeCorrupt: Boolean = false): Long = {
     // Identifies exactly THIS batch's rows for compensation. BatchId
@@ -169,13 +185,6 @@ final class IngestPipeline(
       col("ModifiedDateTime") === lit(now)
     def compensate(): Unit =
       target.deleteWhereInPartition(batchPartition, thisBatch)
-    val obs = org.apache.spark.sql.Observation()
-    val corruptMetric =
-      if (observeCorrupt)
-        sum(when(col(IngestPipeline.RescueColumn).isNotNull, 1L).otherwise(0L))
-      else sum(lit(0L))
-    val watched = stamped.observe(obs,
-      count(lit(1)).as("rows"), corruptMetric.as("corrupt"))
 
     val ordered = columns.sortBy(_.ColumnOrder)
     val selectCols = ordered.map(c => col(c.SourceColumnName)) ++
@@ -183,29 +192,60 @@ final class IngestPipeline(
     val renames = ordered
       .filter(c => c.SourceColumnName != c.TargetColumnName)
       .map(c => c.SourceColumnName -> c.TargetColumnName).toMap
-    val projected = watched.select(selectCols: _*).withColumnsRenamed(renames)
+    def project(df: DataFrame, extra: Column*): DataFrame =
+      df.select(selectCols ++ extra: _*).withColumnsRenamed(renames)
 
     val mode = if (feed.OverWriteFlag == 1) "overwrite" else "append"
-    if (mode == "overwrite") target.overwrite(projected) else target.append(projected)
+    val schema = target.schema
+    // the target's rows plus the corrupt flag, built from the unobserved
+    // batch: a rejected fetch must not fulfil the write's Observation
+    val held =
+      if (mode == "overwrite") None
+      else DriverFetch(s"${feed.TargetTableName} batch $batchId", Seq(ParquetTable.alignTo(
+        schema.add(IngestPipeline.CorruptFlag, BooleanType),
+        project(stamped, (if (observeCorrupt) col(IngestPipeline.RescueColumn).isNotNull
+          else lit(false)).as(IngestPipeline.CorruptFlag)))))
+    val (rows, landShadow) = held match {
+      case Some(Seq(fetched)) =>
+        // gate first: a corrupt batch writes nothing to compensate
+        val corruptRows = fetched.count(_.getBoolean(schema.length)).toLong
+        if (corruptRows > 0) quarantine(stamped, batchId, corruptRows)
+        val landed = fetched.toSeq.map(r => Row.fromSeq(r.toSeq.init))
+        target.appendRows(landed)
+        (landed.size.toLong,
+          (pii: ParquetTable) => pii.appendRows(Masking.maskRows(spark, landed, schema, columns)))
+      case _ =>
+        val obs = org.apache.spark.sql.Observation()
+        val corruptMetric =
+          if (observeCorrupt)
+            sum(when(col(IngestPipeline.RescueColumn).isNotNull, 1L).otherwise(0L))
+          else sum(lit(0L))
+        // at most one file per core, as Delta's optimized writes land a
+        // many-file trigger
+        val projected = project(stamped.observe(obs,
+          count(lit(1)).as("rows"), corruptMetric.as("corrupt")))
+          .coalesce(spark.sparkContext.defaultParallelism)
+        if (mode == "overwrite") target.overwrite(projected) else target.append(projected)
 
-    val metrics = obs.get
-    val rows = metrics("rows").asInstanceOf[Long]
-    val corruptRows = Option(metrics("corrupt")) // sum over empty batch is null
-      .fold(0L)(_.asInstanceOf[Long])
-    if (corruptRows > 0) {
-      // compensate: pull this batch's rows back out of the target, then
-      // quarantine
-      compensate()
-      quarantine(stamped, batchId, corruptRows)
+        val metrics = obs.get
+        val corruptRows = Option(metrics("corrupt")) // sum over empty batch is null
+          .fold(0L)(_.asInstanceOf[Long])
+        if (corruptRows > 0) {
+          // compensate: pull this batch's rows back out of the target,
+          // then quarantine
+          compensate()
+          quarantine(stamped, batchId, corruptRows)
+        }
+        (metrics("rows").asInstanceOf[Long], (pii: ParquetTable) => {
+          val masked = Masking.maskPII(projected, columns)
+          if (mode == "overwrite") pii.overwrite(masked) else pii.append(masked)
+        })
     }
 
     try {
       // PII shadow table with masked values (auto_loader_steps.py:345-375)
       // — written only after the batch is known clean.
-      piiTarget.foreach { pii =>
-        val masked = Masking.maskPII(projected, columns)
-        if (mode == "overwrite") pii.overwrite(masked) else pii.append(masked)
-      }
+      piiTarget.foreach(landShadow)
 
       meta.logAndControlMany(feed.HeaderID, feed.SourceFilePath, batchId.toInt,
         Seq(("ROW_COUNT", rows.toString, 1, None),
@@ -256,4 +296,8 @@ object IngestPipeline {
   /** Rebuild stand-in for Databricks `_rescued_data`: the PERMISSIVE
     * corrupt-record capture column (SURVEY §7.4 risk 3). */
   val RescueColumn = "_rescued_data"
+
+  /** The fetched batch's per-row corrupt flag, after the target's
+    * columns. */
+  private val CorruptFlag = "_graft_corrupt"
 }

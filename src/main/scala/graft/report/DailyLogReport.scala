@@ -104,9 +104,15 @@ object DailyLogReport {
       .withColumn("LogDate", lit(reportDate))
       .orderBy(col("HeaderID"))
 
-  /** Full pipeline: logs + source counts → final report. */
+  /** Full pipeline: logs + source counts → final report, computed once.
+    * The report is one row per feed, so it comes back as a local
+    * relation ([[graft.plans.DriverFetch.local]]): a caller that
+    * collects it and then [[persist]]s it runs the report plan once,
+    * not once per reader. Above the fetch caps it is pinned with
+    * [[graft.plans.Materialize.stage]]. */
   def build(logs: DataFrame, sourceCounts: DataFrame,
             now: Timestamp, reportDate: java.sql.Date): DataFrame = {
+    import graft.plans.{DriverFetch, Materialize}
     val win = runWindows(logs, now)
     // Pinned once: the in-window step relation feeds BOTH the duration
     // pivot and the row-count aggregate, and unstaged each consumer
@@ -114,8 +120,13 @@ object DailyLogReport {
     // scans total for the report; guide §1.2). The pinned relation is
     // one report day's in-window log lines — day-sized, not
     // history-sized.
-    val steps = graft.plans.Materialize.stage(stepsInWindow(logs, win))
-    finalReport(sourceCounts, jobDurations(steps, now), loggedRowCounts(steps), reportDate)
+    val steps = Materialize.stage(stepsInWindow(logs, win))
+    val report =
+      finalReport(sourceCounts, jobDurations(steps, now), loggedRowCounts(steps), reportDate)
+    DriverFetch("daily report", Seq(report)) match {
+      case Some(Seq(rows)) => DriverFetch.local(report, rows.toSeq, report.schema)
+      case _ => Materialize.stage(report)
+    }
   }
 
   /** Source-file inventory for the report's config pane

@@ -132,7 +132,7 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
       if (driver) DriverFetch(s"${table.name} run ${spec.head._2}", Seq(table.dataAligned(df)))
       else None
     held match {
-      case Some(Seq(rows)) => table.overwritePartitionRows(spec, rows, sortKey, txn)
+      case Some(Seq(rows)) => table.overwritePartitionRows(spec, rows, Seq(sortKey), txn)
       case _ => table.overwritePartition(spec, distributed(df), txn)
     }
   }

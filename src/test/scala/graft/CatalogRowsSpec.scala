@@ -214,6 +214,55 @@ class CatalogRowsSpec extends AnyFunSuite {
     graft.catalog.Commits.during(commits += _)(log.append(Seq.empty[Long].toDF("k")))
     assert(commits.isEmpty && log.dataFileCount === 0)
   }
+
+  private def partitioned(dir: Path, n: String) = {
+    import org.apache.spark.sql.types._
+    ParquetTable(spark, n, dir.resolve(n).toString, StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType),
+      StructField("day", DateType), StructField("g", IntegerType))), Seq("day", "g"))
+  }
+  private val dayRows = Seq(
+    Row(1L, "a", java.sql.Date.valueOf("2024-03-01"), 1),
+    Row(2L, null, java.sql.Date.valueOf("2024-03-01"), 2),
+    Row(3L, "c", java.sql.Date.valueOf("2024-03-02"), 1),
+    Row(4L, "d", java.sql.Date.valueOf("2024-03-01"), 1),
+    Row(5L, "e", java.sql.Date.valueOf("2024-03-02"), null))
+
+  test("partitioned appendRows: one file and one commit per partition, read back as a Spark append") {
+    val dir = Files.createTempDirectory("rows-part")
+    val sparkT = partitioned(dir, "pspark")
+    val driverT = partitioned(dir, "pdriver")
+    sparkT.append(spark.createDataFrame(dayRows.asJava, sparkT.schema))
+    val commits = scala.collection.mutable.Buffer.empty[String]
+    val jobs = TestSpark.jobsDuring(spark)(
+      graft.catalog.Commits.during(commits += _)(driverT.appendRows(dayRows)))
+    assert(jobs.isEmpty, jobs)
+    assert(multiset(driverT.read()) === multiset(sparkT.read()))
+    assert(driverT.read().count() === dayRows.size)
+    assert(driverT.listPartitions().toSet === sparkT.listPartitions().toSet)
+    // a null partition value lands in Spark's default partition
+    assert(commits.toSeq === Seq("day=2024-03-01/g=1", "day=2024-03-01/g=2",
+      "day=2024-03-02/g=1", "day=2024-03-02/g=__HIVE_DEFAULT_PARTITION__").map("pdriver/" + _))
+    assert(driverT.dataFileCount === 4)
+    assert(!Files.exists(dir.resolve("pdriver/_pstage")))
+  }
+
+  test("partitioned appendRows: files a crash left staged are swept by the next entry point") {
+    val dir = Files.createTempDirectory("rows-part-crash")
+    val t = partitioned(dir, "pcrash")
+    // the process dies right after the first partition's rename
+    intercept[IllegalStateException] {
+      graft.catalog.Commits.during(l => throw new IllegalStateException(s"crash after $l"))(
+        t.appendRows(dayRows))
+    }
+    val staged = Files.walk(dir.resolve("pcrash/_pstage")).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    assert(staged === 3)
+    val landed = t.read()
+    assert(!Files.exists(dir.resolve("pcrash/_pstage")))
+    assert(landed.select("id").collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 4L))
+    assert(t.dataFileCount === 1)
+  }
 }
 
 object CatalogRowsSpec {

@@ -273,16 +273,26 @@ class IngestSpec extends AnyFunSuite {
     assert(jobsDuring(meta.logAndControl(7, "/src", -1, "START", "Job started", 1, now = now)) === Nil)
     assert(jobsDuring(meta.logAndControlMany(7, "/src", 0,
       Seq(("ROW_COUNT", "2", 1, None), ("AUTO_LOADER", "Batch 0 loaded", 1, None)), now = now)) === Nil)
-    // a clean batch: exactly one job, the target append; the log rows
-    // and the control update it writes ride no job of their own
+    // a clean batch-sized batch of local rows: no job at all — the
+    // fetch of a local relation and the driver landing run none, and
+    // the log rows and the control update ride no job of their own
     val batch = Seq((1, "ann", 1.5), (2, "bob", 2.5)).toDF("id", "name", "score")
     val jobs = jobsDuring(assert(pipe.processBatch(batch, batchId = 1) === 2))
-    assert(jobs.size === 1, jobs)
+    assert(jobs.size === 0, jobs)
     assert(pipe.target.read().count() === 2)
     val ctl = meta.control.read().filter(col("HeaderID") === 7).collect()
     assert(ctl.length === 1 && ctl.head.getAs[Int]("LatestBatchID") === 1 &&
       ctl.head.getAs[Int]("PreviousBatchID") === 0)
+    // over the caps: exactly one job, the target's Spark append
+    val forced = jobsDuring(distributed(assert(pipe.processBatch(batch, batchId = 2) === 2)))
+    assert(forced.size === 1, forced)
+    assert(pipe.target.read().count() === 4)
   }
+
+  /** `body` with every batch of two or more rows over the driver
+    * landing's caps: the batch lands as Spark writes. */
+  private def distributed[T](body: => T): T =
+    graft.plans.DriverFetch.withCaps(1, graft.plans.DriverFetch.MaxBytes)(body)
 
   test("append-mode corrupt batch: compensating delete leaves target empty, notifier fires") {
     import spark.implicits._
@@ -297,12 +307,102 @@ class IngestSpec extends AnyFunSuite {
       (1, "ann", 1.5, null.asInstanceOf[String]),
       (2, "bob", 2.5, "2,bob,oops"))
       .toDF("id", "name", "score", "_rescued_data")
-    intercept[IllegalStateException] { pipe.processBatch(bad, batchId = 0) }
-    // the batch was appended on the single write pass, then pulled back
-    // out by the BatchId-stamped compensating delete
+    val commits = scala.collection.mutable.Buffer.empty[String]
+    graft.catalog.Commits.during(commits += _) {
+      intercept[IllegalStateException] { distributed(pipe.processBatch(bad, batchId = 0)) }
+    }
+    // over the caps, the batch was appended on the single write pass,
+    // then pulled back out by the BatchId-stamped compensating delete
+    assert(commits.filter(_.startsWith("people")) ===
+      Seq("people", "people/InsertDate=2024-03-01"), commits)
     assert(pipe.target.read().count() == 0)
     assert(spark.read.parquet(tmp.resolve("corrupt").toString).count() == 2)
     assert(notifier.events.exists(_._1 == "CORRUPT_BATCH"), notifier.events)
+  }
+
+  test("driver landing: a corrupt batch writes nothing to its target, so nothing is compensated") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("ing-gate")
+    val meta = new MetaStore(spark, tmp.resolve("meta").toString).bootstrap()
+    val notifier = new graft.notify.BufferingNotifier
+    val pipe = new IngestPipeline(spark,
+      feed(tmp.resolve("src").toString).copy(PIITableName = "pii"), meta,
+      tmp.resolve("target").toString, piiPath = Some(tmp.resolve("pii").toString),
+      corruptPath = Some(tmp.resolve("corrupt").toString),
+      clock = () => now, notifier = notifier)
+    pipe.createTargets()
+    val bad = Seq(
+      (1, "ann", 1.5, null.asInstanceOf[String]),
+      (2, "bob", 2.5, "2,bob,oops"))
+      .toDF("id", "name", "score", "_rescued_data")
+    val commits = scala.collection.mutable.Buffer.empty[String]
+    graft.catalog.Commits.during(commits += _) {
+      intercept[IllegalStateException] { pipe.processBatch(bad, batchId = 0) }
+    }
+    // the gate ran on the fetched rows: no append, no compensating
+    // delete, on the target or its shadow
+    assert(commits.filter(c => c.startsWith("people") || c.startsWith("pii")).isEmpty, commits)
+    assert(pipe.target.read().count() == 0 && pipe.piiTarget.get.read().count() == 0)
+    assert(spark.read.parquet(tmp.resolve("corrupt").toString).count() == 2)
+    assert(notifier.events.exists(_._1 == "CORRUPT_BATCH"), notifier.events)
+  }
+
+  test("driver landing equals the Spark landing: target, PII shadow, log and control") {
+    import spark.implicits._
+    // a PII feed whose batch carries a drift column; `piiCol` picks the
+    // masked column: a string, or a double (whose cast of the mask fails
+    // under ANSI, so the batch must fail on both paths alike)
+    def land(root: Path, piiCol: String): (Boolean, Map[String, Seq[String]], Int) = {
+      val meta = new MetaStore(spark, root.resolve("meta").toString).bootstrap()
+      val base = feed("/src")
+      val f = base.copy(PIITableName = "pii", Columns = base.Columns.map(c =>
+        if (c.SourceColumnName == piiCol) c.copy(IsPII = 1) else c))
+      val pipe = new IngestPipeline(spark, f, meta, root.resolve("target").toString,
+        piiPath = Some(root.resolve("pii").toString), clock = () => now)
+      pipe.createTargets()
+      val batch = Seq((3, "cat", 3.0, "rome"), (1, "ann", 1.5, null), (2, null, 2.5, "oslo"))
+        .toDF("id", "name", "score", "city")
+      var failed = false
+      val jobs = jobsDuring { failed = scala.util.Try(pipe.processBatch(batch, batchId = 0)).isFailure }
+      (failed, Map("target" -> pipe.target.read(), "pii" -> pipe.piiTarget.get.read(),
+        "logs" -> meta.logs.read().drop("LogID"), "control" -> meta.control.read())
+        .map { case (t, df) => t -> CommitSweep.rows(df) }, jobs.size)
+    }
+    Seq("name", "score").foreach { piiCol =>
+      val tmp = Files.createTempDirectory(s"ing-paths-$piiCol")
+      val (failed, state, jobs) = land(tmp.resolve("driver"), piiCol)
+      val (sparkFailed, sparkState, sparkJobs) = distributed(land(tmp.resolve("spark"), piiCol))
+      assert(failed === sparkFailed, piiCol)
+      assert(state === sparkState, piiCol)
+      assert(sparkJobs > 0)
+      if (piiCol == "name") {
+        assert(jobs === 0)
+        assert(!failed && state("target").size === 3)
+        assert(state("target").exists(_.contains("\"city\":\"rome\"")), state("target"))
+        assert(state("pii").size === 3 &&
+          state("pii").forall(_.contains("\"person_name\":\"xxxxxxx\"")), state("pii"))
+      }
+    }
+  }
+
+  test("job guard: a one-file PII CSV feed's runOnce, with its compaction") {
+    val tmp = Files.createTempDirectory("ing-guard")
+    writeCsv(tmp, "a.csv", Seq("id,name,score", "3,cat,3.0", "1,ann,1.5", "2,bob,2.5"))
+    val meta = new MetaStore(spark, tmp.resolve("meta").toString).bootstrap()
+    val base = feed(tmp.resolve("src").toString)
+    val f = base.copy(PIITableName = "pii", Columns = base.Columns.map {
+      case c if c.SourceColumnName == "id" => c.copy(ZOrder = 1)
+      case c if c.SourceColumnName == "name" => c.copy(IsPII = 1)
+      case c => c
+    })
+    val pipe = new IngestPipeline(spark, f, meta, tmp.resolve("target").toString,
+      piiPath = Some(tmp.resolve("pii").toString), clock = () => now)
+    val jobs = jobsDuring(new StreamRunner(spark, pipe).runOnce(tmp.resolve("ckpt").toString))
+    assert(pipe.target.read().count() === 3 && pipe.piiTarget.get.read().count() === 3)
+    // the preflight's header read, the stream's fetch of its one batch,
+    // and one fetch per compacted table (7 when both tables were Spark
+    // writes, each compaction a range shuffle)
+    assert(jobs.size <= 4, jobs.mkString("\n"))
   }
 
   test("continuous mode: runContinuousBatches stops after BatchFileCount batches") {

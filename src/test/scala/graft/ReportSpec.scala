@@ -76,6 +76,20 @@ class ReportSpec extends AnyFunSuite {
     assert(verdicts(3L) == "In Progress")
   }
 
+  test("job guard: collecting and persisting a built report does not run its plan again") {
+    val root = java.nio.file.Files.createTempDirectory("rep-jobs").toString
+    val meta = new graft.catalog.MetaStore(spark, root).bootstrap()
+    val built = DailyLogReport.build(logs, src, now, day)
+    val jobs = TestSpark.jobsDuring(spark) {
+      assert(built.collect().length === 4)
+      DailyLogReport.persist(meta, built, day)
+    }
+    // the persist's select and delete; 13 when each reader ran the
+    // report plan again
+    assert(jobs.size <= 3, jobs)
+    assert(meta.report.read().count() === 4)
+  }
+
   test("open window is closed by the injected clock") {
     assert(report(4L).getAs[Timestamp]("Process_End") == now)
     assert(report(4L).getAs[String]("RowCountMatchFlag") == "PASS (Row count match)")

@@ -7,11 +7,15 @@ object TestSpark {
   lazy val spark: SparkSession = Tables.session("graft-test", cpus = "4")
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Spark jobs `body` submits from this thread, by SQL execution
-    * description. Exact, not sampled: the jobs carry a job group (which
-    * concurrent driver fetches inherit), and a sentinel job after
-    * `body` proves every earlier job-start event reached the listener
-    * (the bus delivers in order). */
+  private val JobsDuringKey = "graft.test.jobsDuring"
+
+  /** Spark jobs `body` submits from this thread, or from the threads it
+    * starts (a stream's micro-batch thread), by SQL execution
+    * description. Exact, not sampled: the jobs carry a local property
+    * (which concurrent driver fetches and the threads `body` starts
+    * inherit; a stream replaces the job group with its own, not this),
+    * and a sentinel job after `body` proves every earlier job-start
+    * event reached the listener (the bus delivers in order). */
   def jobsDuring(spark: SparkSession)(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
@@ -21,17 +25,14 @@ object TestSpark {
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(j.properties).map(_.getProperty(k)).orNull
-        prop("spark.jobGroup.id") match {
-          case `group` => seen.add(String.valueOf(prop("spark.job.description")))
-          case g if g == group + "-sentinel" => drained.countDown()
-          case _ => ()
-        }
+        if (prop(JobsDuringKey) == group) seen.add(String.valueOf(prop("spark.job.description")))
+        else if (prop("spark.jobGroup.id") == group + "-sentinel") drained.countDown()
       }
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "jobsDuring")
-      try body finally sc.clearJobGroup()
+      sc.setLocalProperty(JobsDuringKey, group)
+      try body finally sc.setLocalProperty(JobsDuringKey, null)
       sc.setJobGroup(group + "-sentinel", "sentinel")
       try spark.range(1).collect() finally sc.clearJobGroup()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
