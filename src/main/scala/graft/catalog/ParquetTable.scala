@@ -16,26 +16,33 @@ import graft.plans.DriverFetch
 
 /** A parquet-directory-backed mutable table with the DML surface the
   * reference gets from Delta: UPDATE / DELETE / TRUNCATE / MERGE / append
-  * / overwrite (SURVEY §2.9). Mutations are read-transform-rewrite with a
-  * crash-safe directory swap:
+  * / overwrite / OPTIMIZE (SURVEY §2.9;
+  * `modules/log_table_control_table_upsert.py:71-75` UPDATE,
+  * `notebooks/Data Ingestion Helper.py:140` DELETE,
+  * `modules/insert_config.py:172,281,357` TRUNCATE,
+  * `modules/auto_loader_steps.py:481-498` OPTIMIZE ZORDER). Mutations
+  * are read-transform-rewrite; nothing a mutation writes is visible
+  * until a rename publishes it. Single writer per table, which matches
+  * the reference (it serializes writers per table through the
+  * control-table state machine too). Readers always go through [[read]],
+  * which re-opens the directory, so they never hold a stale snapshot.
   *
-  *   write new contents to `<path>.__stage` → rename `<path>` to
-  *   `<path>.__old` → rename stage to `<path>` → delete `.__old`
+  * ==Staging==
+  * A whole-table rewrite stages at `<path>.__stage`. Everything else —
+  * a partition rewrite, and every file the driver writes — stages under
+  * `<path>/_pstage/`, which the leading underscore hides from Spark's
+  * file listing and partition discovery. Every entry point calls
+  * [[recover]] first: it sweeps `_pstage` (a single writer has nothing
+  * in flight then) and rolls back a swap a crash interrupted.
   *
-  * (`modules/log_table_control_table_upsert.py:71-75` UPDATE,
-  *  `notebooks/Data Ingestion Helper.py:140` DELETE,
-  *  `modules/insert_config.py:172,281,357` TRUNCATE.)
-  *
-  * Each rename is atomic per HDFS/posix semantics. A crash between the
-  * two renames leaves the live directory absent but `.__old` intact;
-  * every entry point calls [[recover]] which rolls the swap back by
-  * renaming `.__old` into place — so committed data always survives a
-  * crash at any point (the old `delete dest → rename` sequence had an
-  * unrecoverable window between the delete and the rename). Single
-  * writer per table, which matches the reference (it serializes writers
-  * per table through the control-table state machine too). Readers
-  * always go through [[read]], which re-opens the directory, so they
-  * never hold a stale snapshot across a swap.
+  * ==Publish==
+  * One step publishes a staged rewrite ([[publish]]): park the live
+  * directory (`<path>.__old`, or `_pold/<partition>`) → rename the stage
+  * into its place → `Commits.committed` (`name`, or `name/<partition>`)
+  * → reclaim the parked copy. Each rename is atomic per HDFS/posix
+  * semantics. A crash between the two leaves the live directory absent
+  * and the parked copy intact, and [[recover]] renames it back, so
+  * committed data survives a crash at any point.
   *
   * ==Transaction markers==
   * A swap can additionally publish a `(appId → batchId)` marker, stored
@@ -50,22 +57,18 @@ import graft.plans.DriverFetch
   * underscore keeps the sidecar invisible to parquet readers (same
   * convention as `_SUCCESS`).
   *
-  * ==Driver-side rows==
-  * Small unpartitioned tables whose rows the caller already holds — the
-  * catalog's bookkeeping — also append, overwrite and read rows on the
-  * driver ([[appendRows]], [[overwriteRows]], [[readRows]]): Spark's
-  * own parquet writer and reader without a Spark job, through the same
-  * swap. Batch-sized landings take the same road, chosen by size
-  * through [[DriverFetch]]: an unpartitioned [[append]] of a frame
-  * under its caps goes through [[appendRows]]; a partition landing
-  * whose rows the caller fetched ([[overwritePartitionRows]], used by
-  * [[graft.streaming.LeveledIndex]]'s per-batch runs and small folds)
-  * writes one key-sorted file through the same partition swap, with
-  * the same `_graft_txn` markers and commit, as [[overwritePartition]];
-  * a partitioned [[appendRows]] (the ingest's batch-sized micro-batches
-  * and their PII shadow) writes one file per partition it touches; and
-  * a [[compactPartition]] into one file rewrites a batch-sized
-  * partition z-sorted from the driver.
+  * ==Sized rewrite==
+  * [[compact]], [[compactPartition]] and the leveled fold of
+  * [[graft.streaming.LeveledIndex]] are one [[rewrite]]: one output file
+  * per [[ParquetTable.TargetFileBytes]] of input; a pure compaction
+  * whose input has no more files than that is a no-op; a one-file
+  * output of a batch-sized input ([[DriverFetch]]'s caps) is written
+  * sorted from the driver; anything else is a Spark write. Rows the
+  * caller already holds — the catalog's bookkeeping, batch-sized
+  * landings — are written from the driver by one staged-rows writer
+  * ([[appendRows]], [[overwriteRows]], [[overwritePartitionRows]]):
+  * Spark's own parquet writer without a Spark job, one file per
+  * partition the rows touch.
   */
 final class ParquetTable(
     val spark: SparkSession,
@@ -98,11 +101,11 @@ final class ParquetTable(
     * Same per partition: a copy parked under `_pold` whose live
     * partition dir is absent is restored; one whose live dir exists was
     * superseded and is dropped. Finally sweep `_pstage`: anything under
-    * it (half-written stages, trash parked by [[deletePartitions]]) is
+    * it (half-written stages, files an [[appendRows]] never renamed in,
+    * trash parked by [[deletePartitions]]) is
     * garbage from an interrupted op — single-writer means no other op
     * is mid-flight when recover() runs — and left alone it accumulates
-    * dead bytes forever at 100 TB scale. The `.tmp-` files of an
-    * interrupted [[appendRows]] go the same way. */
+    * dead bytes forever at 100 TB scale. */
   private def recover(): Unit = {
     val f = fs
     if (!f.exists(dest) && f.exists(oldPath) && !f.rename(oldPath, dest))
@@ -129,12 +132,7 @@ final class ParquetTable(
       }
       f.delete(partOldRoot, true)
     }
-    if (partitionCols.nonEmpty && f.exists(partStageRoot))
-      f.delete(partStageRoot, true)
-    // a `.tmp-` file is an [[appendRows]] that never reached its rename
-    if (partitionCols.isEmpty && f.exists(dest))
-      f.listStatus(dest).filter(_.getPath.getName.startsWith(ParquetTable.TmpPrefix))
-        .foreach(st => f.delete(st.getPath, false))
+    if (f.exists(partStageRoot)) f.delete(partStageRoot, true)
     checkLayout(f)
   }
 
@@ -176,17 +174,9 @@ final class ParquetTable(
         !f.listStatus(dest).exists(st => st.isFile && isDataFile(st.getPath)))
       return
     val carried = readTxns(dest)
-    val cur = spark.read.schema(schema).parquet(path)
-    align(cur).write.partitionBy(partitionCols: _*)
+    align(spark.read.schema(schema).parquet(path)).write.partitionBy(partitionCols: _*)
       .mode("overwrite").parquet(stagePath.toString)
-    if (carried.nonEmpty) writeTxns(stagePath, carried)
-    if (f.exists(oldPath)) f.delete(oldPath, true)
-    if (!f.rename(dest, oldPath))
-      throw new java.io.IOException(s"swap set-aside failed for $path")
-    if (!f.rename(stagePath, dest))
-      throw new java.io.IOException(s"atomic swap failed for $path")
-    Commits.committed(name)
-    f.delete(oldPath, true)
+    publish(stagePath, dest, oldPath, name, carried)
   }
 
   private def dirsAtDepth(root: Path, depth: Int): Seq[Path] =
@@ -277,102 +267,102 @@ final class ParquetTable(
     * dropped entirely takes its marker with it (its data is explicitly
     * gone; there is no state left to protect). */
   def overwrite(df: DataFrame, txn: Option[(String, Long)]): Unit =
-    swapIn(txn)(stage => writer(df).mode("overwrite").parquet(stage.toString))
+    swap(None, txn)(stage => writer(df).mode("overwrite").parquet(stage.toString))
 
-  /** The one whole-table swap protocol: `fill` writes the new contents
-    * into the (possibly stale) stage directory, then the markers are
-    * carried forward and the stage is parked → renamed → reclaimed. */
-  private def swapIn(txn: Option[(String, Long)])(fill: Path => Unit): Unit = {
+  /** The one swap: `fill` writes the new contents of the whole table
+    * (`into` None) or of one full partition into its stage; then
+    * [[publish]] carries the markers forward and publishes the stage. */
+  private def swap(into: Option[Seq[(String, String)]], txn: Option[(String, Long)])
+                  (fill: Path => Unit): Unit = {
+    into.foreach(v => require(v.size == partitionCols.size,
+      s"a partition rewrite of $name needs the full partition spec"))
     recover()
-    val f = fs
-    val carried = readTxns(dest) // before any mutation of dest
+    val rel = into.fold("")(partitionRel)
+    val live = under(dest, rel)
+    val carried = readTxns(live) // before any mutation of the live dir
     val partCarried: Seq[(String, Map[String, Long])] =
-      if (partitionCols.isEmpty) Nil
-      else dirsAtDepth(dest, partitionCols.size).flatMap { live =>
-        val marks = readTxns(live)
-        if (marks.isEmpty) None else Some(partitionRelOf(live) -> marks)
+      if (into.isDefined || partitionCols.isEmpty) Nil
+      else dirsAtDepth(dest, partitionCols.size).flatMap { d =>
+        val marks = readTxns(d)
+        if (marks.isEmpty) None else Some(partitionRelOf(d) -> marks)
       }
-    fill(stagePath)
-    val txns = txn.fold(carried)(carried + _)
-    if (txns.nonEmpty) writeTxns(stagePath, txns)
-    partCarried.foreach { case (rel, marks) =>
-      val staged = new Path(stagePath, rel)
+    val stage = if (into.isEmpty) stagePath else new Path(partStageRoot, rel)
+    fill(stage)
+    publish(stage, live, if (into.isEmpty) oldPath else new Path(partOldRoot, rel),
+      label(rel), txn.fold(carried)(carried + _), partCarried)
+  }
+
+  /** The one publish step: write the markers into `stage` (and each
+    * carried partition marker into its staged partition, where that
+    * partition still exists), park `live` at `parked`, rename `stage`
+    * into its place, commit `label`, reclaim the parked copy. */
+  private def publish(stage: Path, live: Path, parked: Path, label: String,
+                      txns: Map[String, Long],
+                      partTxns: Seq[(String, Map[String, Long])] = Nil): Unit = {
+    val f = fs
+    if (txns.nonEmpty) writeTxns(stage, txns)
+    partTxns.foreach { case (rel, marks) =>
+      val staged = new Path(stage, rel)
       if (f.exists(staged)) writeTxns(staged, marks)
     }
-    if (f.exists(oldPath)) f.delete(oldPath, true) // stale garbage only
-    if (f.exists(dest) && !f.rename(dest, oldPath))
-      throw new java.io.IOException(s"swap set-aside failed for $path")
-    if (!f.rename(stagePath, dest))
-      throw new java.io.IOException(s"atomic swap failed for $path")
-    Commits.committed(name)
-    f.delete(oldPath, true)
+    if (f.exists(parked)) f.delete(parked, true) // stale garbage only
+    f.mkdirs(parked.getParent)
+    if (f.exists(live) && !f.rename(live, parked))
+      throw new java.io.IOException(s"swap set-aside failed for $live")
+    f.mkdirs(live.getParent)
+    if (!f.rename(stage, live))
+      throw new java.io.IOException(s"atomic swap failed for $live")
+    Commits.committed(label)
+    f.delete(parked, true)
   }
 
-  // Driver-side rows. Catalog bookkeeping (log lines, the per-feed
-  // control row) is a few rows written once per micro-batch; as a
-  // DataFrame write each costs a Spark job — scheduling, a task, a
-  // commit protocol — for a few hundred bytes.
+  /** `root/rel`, or `root` itself for the whole table's empty `rel`. */
+  private def under(root: Path, rel: String): Path =
+    if (rel.isEmpty) root else new Path(root, rel)
+
+  /** Commit label of the whole table (`rel` empty) or one partition. */
+  private def label(rel: String): String = if (rel.isEmpty) name else s"$name/$rel"
 
   /** Append `rows` (values in [[schema]] order; `Option` fields may be
-    * `None`/`Some`) as ONE parquet file per partition. On an
-    * unpartitioned table the file is written under a `.tmp-` name,
-    * invisible to every reader, and renamed in; [[recover]] sweeps a
-    * temp file an interrupted append left behind. On a partitioned table
-    * the rows are grouped by their partition values, rendered as the
-    * hive directory name renders them; every partition's file is written
-    * under `_pstage/<partition>/` before the first is renamed into its
-    * live directory, so a bad row or an unrenderable value publishes
-    * nothing, and [[recover]] sweeps the files a crash between two
-    * renames left staged. Each rename commits its own partition. */
+    * `None`/`Some`) as ONE parquet file per partition they touch, or one
+    * file on an unpartitioned table. Every file is written under
+    * `_pstage/` (see [[writeStaged]]) before the first is renamed into
+    * its live directory, so a bad row or an unrenderable partition value
+    * publishes nothing, and [[recover]] sweeps the files a crash between
+    * two renames left staged. Each rename commits its own partition. */
   def appendRows(rows: Seq[Row]): Unit = {
     recover()
-    if (rows.nonEmpty) {
-      val f = fs
-      if (partitionCols.isEmpty) {
-        f.mkdirs(dest)
-        val part = writeRowsFile(rows, schema, dest, ParquetTable.TmpPrefix)
-        if (!f.rename(new Path(dest, ParquetTable.TmpPrefix + part), new Path(dest, part)))
-          throw new java.io.IOException(s"append rename failed for $path")
-        Commits.committed(name)
-      } else {
-        val keys = partitionCols.map(c => c -> schema.fieldIndex(c))
-        val data = dataSchema.fieldNames.map(schema.fieldIndex)
-        val staged = rows.groupBy(r => partitionRel(keys.map { case (c, i) =>
-          c -> partitionValue(c, r.get(i)) })).toSeq.sortBy(_._1).map { case (rel, rs) =>
-          val stage = new Path(partStageRoot, rel)
-          f.mkdirs(stage)
-          rel -> writeRowsFile(rs.map(r => Row.fromSeq(data.map(r.get))), dataSchema, stage, "")
-        }
-        staged.foreach { case (rel, part) =>
-          val live = new Path(dest, rel)
-          f.mkdirs(live)
-          if (!f.rename(new Path(new Path(partStageRoot, rel), part), new Path(live, part)))
-            throw new java.io.IOException(s"append rename failed for $live")
-          Commits.committed(s"$name/$rel")
-        }
-        f.delete(partStageRoot, true)
-      }
+    val f = fs
+    writeStaged(rows, partStageRoot).foreach { case (rel, part) =>
+      val live = under(dest, rel)
+      f.mkdirs(live)
+      if (!f.rename(new Path(under(partStageRoot, rel), part), new Path(live, part)))
+        throw new java.io.IOException(s"append rename failed for $live")
+      Commits.committed(label(rel))
     }
+    if (rows.nonEmpty) f.delete(partStageRoot, true)
   }
 
-  /** Replace the table's contents with `rows` through the same
-    * stage → park → rename → reclaim swap as [[overwrite]], carrying
+  /** Replace the table's contents with `rows` (values in [[schema]]
+    * order) through the same swap as [[overwrite]], carrying
     * `_graft_txn` markers forward. */
-  def overwriteRows(rows: Seq[Row]): Unit = {
-    requireUnpartitioned("overwriteRows")
-    swapIn(None) { stage =>
-      val f = fs
-      f.delete(stage, true) // a stale stage from an interrupted swap
-      f.mkdirs(stage)
-      if (rows.nonEmpty) writeRowsFile(rows, schema, stage, "")
+  def overwriteRows(rows: Seq[Row]): Unit = swapRows(rows, Nil, None)
+
+  /** [[overwriteRows]] with each file sorted on `sortKey`, publishing
+    * `txn`. */
+  private def swapRows(rows: Seq[Row], sortKey: Seq[String],
+                       txn: Option[(String, Long)]): Unit =
+    swap(None, txn) { stage =>
+      fs.delete(stage, true) // a stale stage from an interrupted swap
+      fs.mkdirs(stage)
+      writeStaged(rows, stage, sortKey)
     }
-  }
 
   /** The table's rows on the driver, in [[schema]] order (`null` for a
     * missing value, like `read().collect()`). For tables whose size the
     * caller bounds — one row per feed, per status. */
   def readRows(): Seq[Row] = {
-    requireUnpartitioned("readRows")
+    require(partitionCols.isEmpty, s"readRows is for unpartitioned tables; $name is partitioned")
     if (!exists) return Nil
     val files = fs.listStatus(dest).filter(st => st.isFile && isDataFile(st.getPath))
     if (files.isEmpty) return Nil
@@ -389,17 +379,33 @@ final class ParquetTable(
     }
   }
 
-  private def requireUnpartitioned(op: String): Unit =
-    require(partitionCols.isEmpty, s"$op is for unpartitioned tables; $name is partitioned")
+  /** The staged-rows writer: `rows` (values in [[schema]] order) as ONE
+    * file per partition they touch, at `root/<partition>/` — or one file
+    * in `root` on an unpartitioned table — each sorted on `sortKey`.
+    * Rows are grouped by their partition values rendered as the hive
+    * directory name renders them. Returns each file's partition path
+    * (empty when unpartitioned) and part name, in path order. */
+  private def writeStaged(rows: Seq[Row], root: Path,
+                          sortKey: Seq[String] = Nil): Seq[(String, String)] = {
+    val keys = partitionCols.map(c => c -> schema.fieldIndex(c))
+    val data = dataSchema.fieldNames.map(schema.fieldIndex)
+    rows.groupBy(r => if (keys.isEmpty) "" else partitionRel(keys.map { case (c, i) =>
+      c -> partitionValue(c, r.get(i)) })).toSeq.sortBy(_._1).map { case (rel, rs) =>
+      val dir = under(root, rel)
+      fs.mkdirs(dir)
+      val fileRows = if (keys.isEmpty) rs else rs.map(r => Row.fromSeq(data.map(r.get)))
+      rel -> writeRowsFile(fileRows, dataSchema, dir, sortKey)
+    }
+  }
 
-  /** Writes `rows` (values in `fileSchema` order) as one parquet file
-    * `dir/<prefix><part name>` with the writer a Spark write task would
-    * open (`ParquetUtils.prepareWrite` → `OutputWriterFactory`), and
-    * returns the part name. With `sortKey`, the rows are written in
-    * Spark's ascending order of those columns, nulls first — the order
+  /** Writes `rows` (values in `fileSchema` order) as one parquet file in
+    * `dir` with the writer a Spark write task would open
+    * (`ParquetUtils.prepareWrite` → `OutputWriterFactory`), and returns
+    * its part name. With `sortKey`, the rows are written in Spark's
+    * ascending order of those columns, nulls first — the order
     * `sortWithinPartitions` gives. */
   private def writeRowsFile(rows: Seq[Row], fileSchema: StructType, dir: Path,
-                            prefix: String, sortKey: Seq[String] = Nil): String = {
+                            sortKey: Seq[String] = Nil): String = {
     val sqlConf = spark.sessionState.conf
     val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(writeOptions))
     job.setOutputKeyClass(classOf[Void])
@@ -423,7 +429,7 @@ final class ParquetTable(
         val i = fileSchema.fieldIndex(k)
         SortOrder(BoundReference(i, fileSchema(i).dataType, fileSchema(i).nullable), Ascending)
       }))
-    val out = factory.newInstance(new Path(dir, prefix + part).toString, fileSchema, ctx)
+    val out = factory.newInstance(new Path(dir, part).toString, fileSchema, ctx)
     try ordered.foreach(out.write) finally out.close()
     part
   }
@@ -512,15 +518,14 @@ final class ParquetTable(
 
   /** Replace ONE partition's contents (full partition spec). The data
     * frame must carry [[dataSchema]]'s columns (partition values are
-    * implied by the spec). Same crash-safe stage→park→rename→reclaim
-    * dance as the whole-table swap, scoped to the partition dir.
-    * Partition-local `_graft_txn` markers are carried forward (and
-    * extended with `txn` if given) so a compaction or update between
-    * stream batches never resets [[upsertInPartitions]]' dedup state —
-    * the same contract [[overwrite]] keeps for the table-level marker. */
+    * implied by the spec). The same swap as the whole table's, scoped to
+    * the partition dir: partition-local `_graft_txn` markers are carried
+    * forward (and extended with `txn` if given) so a compaction or update
+    * between stream batches never resets [[upsertInPartitions]]' dedup
+    * state. */
   def overwritePartition(values: Seq[(String, String)], df: DataFrame,
                          txn: Option[(String, Long)] = None): Unit =
-    swapPartition(values, txn)(stage =>
+    swap(Some(values), txn)(stage =>
       dataAligned(df).write.mode("overwrite").parquet(stage.toString))
 
   /** [[overwritePartition]] for rows the caller holds (values in
@@ -531,59 +536,15 @@ final class ParquetTable(
     * landing. */
   def overwritePartitionRows(values: Seq[(String, String)], rows: Seq[Row],
                              sortKey: Seq[String], txn: Option[(String, Long)] = None): Unit =
-    swapPartition(values, txn) { stage =>
+    swap(Some(values), txn) { stage =>
       fs.mkdirs(stage)
-      if (rows.nonEmpty) writeRowsFile(rows, dataSchema, stage, "", sortKey)
+      if (rows.nonEmpty) writeRowsFile(rows, dataSchema, stage, sortKey)
     }
 
   /** `df` as the partition files carry it: [[dataSchema]]'s columns,
     * in order, at their types. */
   private[graft] def dataAligned(df: DataFrame): DataFrame =
     ParquetTable.alignTo(dataSchema, df)
-
-  /** The one partition swap protocol: `fill` writes the new contents
-    * into the partition's stage, then the markers are carried forward
-    * and the stage is parked → renamed → reclaimed. */
-  private def swapPartition(values: Seq[(String, String)], txn: Option[(String, Long)])
-                           (fill: Path => Unit): Unit = {
-    require(values.size == partitionCols.size,
-      "overwritePartition needs the full partition spec")
-    recover()
-    val f = fs
-    val rel = partitionRel(values)
-    val stage = new Path(partStageRoot, rel)
-    val parked = new Path(partOldRoot, rel)
-    val live = new Path(dest, rel)
-    val carried = readTxns(live) // before any mutation of the partition
-    fill(stage)
-    val txns = txn.fold(carried)(carried + _)
-    if (txns.nonEmpty) writeTxns(stage, txns)
-    if (f.exists(parked)) f.delete(parked, true)
-    f.mkdirs(parked.getParent)
-    if (f.exists(live) && !f.rename(live, parked))
-      throw new java.io.IOException(s"partition set-aside failed for $live")
-    f.mkdirs(live.getParent)
-    if (!f.rename(stage, live))
-      throw new java.io.IOException(s"partition swap failed for $live")
-    Commits.committed(s"$name/$rel")
-    f.delete(parked, true)
-  }
-
-  /** DELETE within one partition: reads and rewrites ONLY that
-    * partition's files. `pred` must reference data columns only — the
-    * partition columns are fixed by `values`. This is the compensating-
-    * delete shape: pull batch N back out of today's partition without
-    * touching any other day. */
-  def deleteWhereInPartition(values: Seq[(String, String)], pred: Column): Unit = {
-    require(values.size == partitionCols.size,
-      "deleteWhereInPartition needs the full partition spec")
-    recover()
-    val live = new Path(dest, partitionRel(values))
-    if (fs.exists(live)) {
-      val cur = spark.read.schema(dataSchema).parquet(live.toString)
-      overwritePartition(values, cur.filter(!coalesce(pred, lit(false))))
-    }
-  }
 
   /** The literal rendered exactly as the hive directory name renders
     * it. Only two shapes are trusted: a literal already OF the
@@ -679,16 +640,20 @@ final class ParquetTable(
     }
   }
 
-  /** The partition's files with the partition-column values synthesized
-    * back as columns (hive reads do the same from the dir name) — lets
-    * a generic predicate that mentions partition columns evaluate
-    * against a single partition's data. */
-  private def readPartitionWithValues(values: Seq[(String, String)]): DataFrame =
-    values.foldLeft(
-      spark.read.schema(dataSchema).parquet(new Path(dest, partitionRel(values)).toString)) {
-      case (df, (c, v)) =>
-        df.withColumn(c, lit(v).cast(schema(c).dataType))
+  /** Rewrites ONE partition (full spec) as `f` of its rows, with the
+    * partition-column values synthesized back as columns (hive reads do
+    * the same from the dir name) so a generic predicate that mentions
+    * them evaluates against the partition's data. No-op if absent. */
+  private def rewritePinned(values: Seq[(String, String)])(f: DataFrame => DataFrame): Unit = {
+    recover()
+    val live = new Path(dest, partitionRel(values))
+    if (fs.exists(live)) {
+      val cur = values.foldLeft(spark.read.schema(dataSchema).parquet(live.toString)) {
+        case (df, (c, v)) => df.withColumn(c, lit(v).cast(schema(c).dataType))
+      }
+      overwritePartition(values, f(cur).drop(partitionCols: _*))
     }
+  }
 
   /** UPDATE t SET <set> WHERE <pred> — read-modify-rewrite. When `pred`
     * pins every partition column with an equality (`InsertDate = X AND
@@ -696,8 +661,7 @@ final class ParquetTable(
     * membership pin (`InsertDate IN (X, Y)` / its OR spelling) — and
     * `set` leaves the partition columns alone, only the pinned
     * partitions are read and rewritten — Delta's partition pruning for
-    * generic DML, so callers don't have to know about
-    * [[updateInPartition]]. Anything else rewrites the whole table. */
+    * generic DML. Anything else rewrites the whole table. */
   def update(pred: Column, set: Map[String, Column]): Unit = {
     def rewrite(cur: DataFrame): DataFrame =
       cur.select(cur.columns.map { c =>
@@ -709,45 +673,16 @@ final class ParquetTable(
       if (setTouchesPartition) false
       else inPinnedValues(pred) match {
         case Some(values) if partitionCols.size == 1 =>
-          recover()
-          values.foreach { v =>
-            val spec = Seq(partitionCols.head -> v)
-            if (fs.exists(new Path(dest, partitionRel(spec)))) {
-              val cur = readPartitionWithValues(spec)
-              overwritePartition(spec, rewrite(cur).drop(partitionCols: _*))
-            }
-          }
+          values.foreach(v => rewritePinned(Seq(partitionCols.head -> v))(rewrite))
           true
         case _ => pinnedSpec(pred) match {
           case Some((values, _)) if values.size == partitionCols.size =>
-            recover()
-            if (fs.exists(new Path(dest, partitionRel(values)))) {
-              val cur = readPartitionWithValues(values)
-              overwritePartition(values, rewrite(cur).drop(partitionCols: _*))
-            }
+            rewritePinned(values)(rewrite)
             true
           case _ => false
         }
       }
     if (!routed) overwrite(rewrite(read()))
-  }
-
-  /** UPDATE scoped to one partition: reads and rewrites ONLY that
-    * partition's files. `pred` and `set` must reference data columns
-    * only. The 100 TB shape for "fix day X": the other days' files are
-    * never opened. */
-  def updateInPartition(values: Seq[(String, String)], pred: Column,
-                        set: Map[String, Column]): Unit = {
-    require(values.size == partitionCols.size,
-      "updateInPartition needs the full partition spec")
-    recover()
-    val live = new Path(dest, partitionRel(values))
-    if (fs.exists(live)) {
-      val cur = spark.read.schema(dataSchema).parquet(live.toString)
-      overwritePartition(values, cur.select(cur.columns.map { c =>
-        set.get(c).map(v => when(pred, v).otherwise(col(c)).as(c)).getOrElse(col(c))
-      }.toSeq: _*))
-    }
   }
 
   /** DELETE FROM t WHERE <pred> — anti-filter + rewrite, with Delta-
@@ -768,12 +703,7 @@ final class ParquetTable(
       case Some((values, true)) =>
         deletePartitions(values)
       case Some((values, false)) if values.size == partitionCols.size =>
-        recover()
-        if (fs.exists(new Path(dest, partitionRel(values)))) {
-          val cur = readPartitionWithValues(values)
-          overwritePartition(values,
-            cur.filter(!coalesce(pred, lit(false))).drop(partitionCols: _*))
-        }
+        rewritePinned(values)(_.filter(!coalesce(pred, lit(false))))
       case _ =>
         overwrite(read().filter(!coalesce(pred, lit(false))))
     }
@@ -797,73 +727,75 @@ final class ParquetTable(
     overwrite(Merge.merge(read(), source, keys, whenMatchedUpdate,
       whenNotMatchedInsert, insertDefaults, whenNotMatchedBySourceSet), txn)
 
-  /** Total DATA bytes currently stored under the table directory —
-    * `_`/`.`-prefixed sidecars (txn markers, in-flight stages, success
-    * files) are excluded so derived sizing (compaction file counts)
-    * reflects actual data, not bookkeeping. */
-  def tableBytes: Long = {
-    recover()
-    def sum(p: Path): Long = fs.listStatus(p).map { st =>
-      if (!isDataFile(st.getPath)) 0L
-      else if (st.isDirectory) sum(st.getPath)
-      else st.getLen
-    }.sum
-    if (fs.exists(dest)) sum(dest) else 0L
-  }
+  /** DATA files under `dir`, recursively: `_`/`.`-prefixed sidecars (txn
+    * markers, in-flight stages, success files) are not data, so sizing
+    * derived from them reflects the rows, not the bookkeeping. */
+  private def dataFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(st => isDataFile(st.getPath))
+      .flatMap(st => if (st.isDirectory) dataFiles(st.getPath) else Seq(st))
+
+  /** Total DATA bytes currently stored under the table directory. */
+  def tableBytes: Long = { recover(); dataFiles(dest).map(_.getLen).sum }
 
   /** Number of DATA files currently stored under the table directory —
-    * the companion of [[tableBytes]] (same sidecar exclusion: txn
-    * markers, in-flight stages and success files don't count), used by
-    * compaction-cadence probes/specs to assert file counts stay
-    * bounded. An ad-hoc `*.parquet` walk would miscount during a
-    * compaction swap (the staged dir is visible until the rename). */
-  def dataFileCount: Int = {
-    recover()
-    def cnt(p: Path): Int = fs.listStatus(p).map { st =>
-      if (!isDataFile(st.getPath)) 0
-      else if (st.isDirectory) cnt(st.getPath)
-      else 1
-    }.sum
-    if (fs.exists(dest)) cnt(dest) else 0
-  }
+    * the companion of [[tableBytes]], used by compaction-cadence
+    * probes/specs to assert file counts stay bounded. An ad-hoc
+    * `*.parquet` walk would miscount during a compaction swap (the
+    * staged dir is visible until the rename). */
+  def dataFileCount: Int = { recover(); dataFiles(dest).size }
 
   /** OPTIMIZE [ZORDER BY cols] equivalent: compact small files and
     * cluster rows so min/max parquet stats prune on the z columns
-    * (modules/auto_loader_steps.py:481-498). On a cluster the
-    * repartitionByRange gives range-partitioned files whose column stats
-    * are disjoint — the parquet-native analogue of z-ordering.
+    * (modules/auto_loader_steps.py:481-498) — the whole table through
+    * [[rewrite]], sized from the CURRENT table bytes at one file per
+    * `targetFileBytes`, so a 100 TB table compacts to ~800k properly
+    * sized files instead of one task writing one giant file. */
+  def compact(zorderCols: Seq[String] = Nil,
+              targetFileBytes: Long = ParquetTable.TargetFileBytes): Unit =
+    rewrite(read(), tableBytes, zorderCols, None, None, targetFileBytes)
+
+  /** The one sized, sorted rewrite: `input` (`bytes` of data files)
+    * becomes the contents of the partition `into`, or of the whole table,
+    * in one file per `fileBytes` (at least one), publishing `txn`.
     *
-    * `targetPartitions <= 0` (the default) derives the output partition
-    * count from the CURRENT table size — one task/file per
-    * `targetFileBytes` — so a 100 TB table compacts to ~800k properly
-    * sized files instead of one task writing one giant file.
-    *
-    * `remap` rewrites the named columns during the compaction (values
-    * cast to the column's schema type) — the FOLD hook for bookkeeping
-    * partition columns: a table partitioned by a per-batch id
-    * ([[graft.streaming.TieredIndex]]'s `mig`) collapses its historical
-    * partitions into one here, or compaction's output would re-split by
-    * every batch id ever seen and the file count would grow with batch
-    * count instead of staying bounded. */
-  def compact(zorderCols: Seq[String] = Nil, targetPartitions: Int = 0,
-              targetFileBytes: Long = 128L * 1024 * 1024,
-              remap: Map[String, Column] = Map.empty): Unit = {
-    val parts =
-      if (targetPartitions > 0) targetPartitions
-      else math.max(1, math.ceil(tableBytes.toDouble / targetFileBytes).toInt)
-    val cur = remap.foldLeft(read()) { case (df, (c, v)) =>
-      df.withColumn(c, v.cast(schema(c).dataType))
+    *  - Without a sort key, an input of at most that many files is left
+    *    alone: the many-small-files problem compaction exists to fix
+    *    isn't there, and rewriting it after every load would make the
+    *    post-load OPTIMIZE pure overhead. A sort key always rewrites —
+    *    file count says nothing about row clustering (Delta's OPTIMIZE
+    *    ZORDER stance).
+    *  - One output file of a batch-sized input ([[DriverFetch]]'s caps)
+    *    is written from the driver, sorted on `sortKey`: one file per
+    *    partition for the whole table.
+    *  - Otherwise Spark writes it: `coalesce` without a sort key; one
+    *    file sorted in one task (a range shuffle into one partition
+    *    would only add a sampling job and an exchange); more files
+    *    range-partitioned on `sortKey` and sorted within each. A
+    *    whole-table rewrite of a partitioned table sorts with the
+    *    partition columns first: the partitioned writer needs its rows
+    *    in that order and would otherwise add its own sort that
+    *    scrambles the clustering. */
+  private[graft] def rewrite(input: DataFrame, bytes: Long, sortKey: Seq[String],
+                             into: Option[Seq[(String, String)]],
+                             txn: Option[(String, Long)] = None,
+                             fileBytes: Long = ParquetTable.TargetFileBytes): Unit = {
+    val parts = math.max(1, math.ceil(bytes.toDouble / fileBytes).toInt)
+    if (sortKey.isEmpty && input.inputFiles.length <= parts) return
+    val aligned = if (into.isDefined) dataAligned(input) else align(input)
+    val held = if (parts == 1) DriverFetch(s"$name rewrite", Seq(aligned)) else None
+    held match {
+      case Some(Seq(rows)) =>
+        into.fold(swapRows(rows, sortKey, txn))(overwritePartitionRows(_, rows, sortKey, txn))
+      case _ =>
+        val order = ((if (into.isEmpty) partitionCols else Nil) ++ sortKey).map(col)
+        val arranged =
+          if (sortKey.isEmpty) aligned.coalesce(parts)
+          else if (parts == 1) aligned.coalesce(1).sortWithinPartitions(order: _*)
+          else aligned.repartitionByRange(parts, sortKey.map(col): _*)
+            .sortWithinPartitions(order: _*)
+        into.fold(overwrite(arranged, txn))(overwritePartition(_, arranged, txn))
     }
-    // Partitioned writes require rows ordered by the partition columns
-    // within each task; sorting by (partitionCols ++ zorderCols) meets
-    // that requirement so the writer adds no extra (non-stable) sort
-    // that would scramble the z-clustering inside each partition dir.
-    val arranged =
-      if (zorderCols.nonEmpty)
-        cur.repartitionByRange(parts, zorderCols.map(col): _*)
-          .sortWithinPartitions((partitionCols ++ zorderCols).map(col): _*)
-      else cur.coalesce(parts)
-    overwrite(arranged)
   }
 
   /** MERGE that rewrites ONLY the partitions the source touches. The
@@ -982,60 +914,17 @@ final class ParquetTable(
     * partition's own size instead of the table's. */
   def partitionBytes(values: Seq[(String, String)]): Long = {
     recover()
-    val live = new Path(dest, partitionRel(values))
-    if (!fs.exists(live)) 0L
-    else fs.listStatus(live)
-      .filter(st => st.isFile && isDataFile(st.getPath)).map(_.getLen).sum
+    dataFiles(new Path(dest, partitionRel(values))).map(_.getLen).sum
   }
 
   /** OPTIMIZE one partition: compact and z-cluster ONLY that
-    * partition's files (sized from the PARTITION's bytes). The daily
-    * post-load compaction shape — at 100 TB, re-optimizing the whole
-    * InsertDate-partitioned target after loading one day is a
-    * full-table rewrite per day. */
-  def compactPartition(values: Seq[(String, String)],
-                       zorderCols: Seq[String] = Nil,
-                       targetPartitions: Int = 0,
-                       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    require(values.size == partitionCols.size,
-      "compactPartition needs the full partition spec")
-    recover()
-    val live = new Path(dest, partitionRel(values))
-    if (fs.exists(live)) {
-      val files = fs.listStatus(live).filter(st => st.isFile && isDataFile(st.getPath))
-      val bytes = files.map(_.getLen).sum
-      val parts =
-        if (targetPartitions > 0) targetPartitions
-        else math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      // PURE compaction already at (or under) the target file count is
-      // a no-op — the many-small-files problem it exists to fix isn't
-      // present, and paying a full partition rewrite after every load
-      // when the load already wrote `parts` files makes the post-load
-      // OPTIMIZE pure overhead (round-5 finding: +41% on the ingest
-      // path for a no-op). ZORDER is different: file count says nothing
-      // about row clustering (one merge-ordered file still has
-      // interleaved min/max stats on the z-columns), so an explicit
-      // zorder request always rewrites — Delta's OPTIMIZE ZORDER
-      // stance.
-      if (zorderCols.isEmpty && files.length <= parts) return
-      val cur = spark.read.schema(dataSchema).parquet(live.toString)
-      // one output file: a batch-sized partition is rewritten from the
-      // driver, z-sorted; a larger one is sorted in one task — a range
-      // shuffle into one partition would only add a sampling job and an
-      // exchange
-      val held = if (parts == 1) DriverFetch(s"$name compact", Seq(cur)) else None
-      held match {
-        case Some(Seq(rows)) => overwritePartitionRows(values, rows, zorderCols)
-        case _ =>
-          val arranged =
-            if (zorderCols.isEmpty) cur.coalesce(parts)
-            else if (parts == 1) cur.coalesce(1).sortWithinPartitions(zorderCols.map(col): _*)
-            else cur.repartitionByRange(parts, zorderCols.map(col): _*)
-              .sortWithinPartitions(zorderCols.map(col): _*)
-          overwritePartition(values, arranged)
-      }
-    }
-  }
+    * partition's files through [[rewrite]], sized from the PARTITION's
+    * bytes. The daily post-load compaction shape — at 100 TB,
+    * re-optimizing the whole InsertDate-partitioned target after loading
+    * one day is a full-table rewrite per day. */
+  def compactPartition(values: Seq[(String, String)], zorderCols: Seq[String] = Nil): Unit =
+    if (partitionExists(values))
+      rewrite(readPartitionsData(Seq(values)), partitionBytes(values), zorderCols, Some(values))
 
   private def align(df: DataFrame): DataFrame = ParquetTable.alignTo(schema, df)
 }
@@ -1055,9 +944,8 @@ object ParquetTable {
     df.select(cols.toSeq: _*)
   }
 
-  /** Name prefix of an [[ParquetTable.appendRows]] file before its
-    * rename: dot-prefixed, so no reader lists it. */
-  private val TmpPrefix = ".tmp-"
+  /** Output bytes per file of a sized [[ParquetTable.rewrite]]. */
+  private val TargetFileBytes: Long = 128L * 1024 * 1024
 
   /** Write options for a stored SECONDARY INDEX (band buckets, seed
     * postings): 1 MiB row groups instead of the 128 MiB data default.

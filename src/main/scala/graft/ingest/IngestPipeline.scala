@@ -178,13 +178,12 @@ final class IngestPipeline(
     // alone is not enough: it restarts at 0 with every fresh checkpoint,
     // so an unscoped delete would also remove same-BatchId rows loaded
     // by earlier runs; the batch's own InsertDate/ModifiedDateTime
-    // stamps pin it to this run. The InsertDate half is the PARTITION
-    // spec, so the compensating rewrite touches one day's directory.
-    val batchPartition = Seq("InsertDate" -> new Date(now.getTime).toString)
+    // stamps pin it to this run. The InsertDate pin routes the
+    // compensating delete to a rewrite of that one day's directory.
     val thisBatch = col("BatchId") === lit(batchId.toInt + 1) &&
       col("ModifiedDateTime") === lit(now)
     def compensate(): Unit =
-      target.deleteWhereInPartition(batchPartition, thisBatch)
+      target.deleteWhere(col("InsertDate") === lit(new Date(now.getTime).toString) && thisBatch)
 
     val ordered = columns.sortBy(_.ColumnOrder)
     val selectCols = ordered.map(c => col(c.SourceColumnName)) ++

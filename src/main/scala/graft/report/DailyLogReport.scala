@@ -143,10 +143,10 @@ object DailyLogReport {
         col("_metadata.file_modification_time").as("FileModificationTime"))
       .distinct()
 
-  /** Idempotent daily persist (sql:237-277): DELETE today's rows, then
+  /** Idempotent daily persist (sql:237-277): DELETE the day's rows, then
     * INSERT the fresh report into the catalog's daily_log_report. The
-    * report is one row per feed, so the INSERT fetches it to the driver
-    * and appends it as one driver-written file. */
+    * table holds one row per feed per day, so both happen on the driver
+    * as ONE swap: the stored rows minus the day's, plus the report. */
   def persist(meta: graft.catalog.MetaStore, report: DataFrame,
               reportDate: java.sql.Date): Unit = {
     // cast to daily_log_report's column types: the rows go to the
@@ -163,7 +163,8 @@ object DailyLogReport {
       col("Total_Job_Duration_Min").cast("long").as("DurationMinutes"),
       col("RowCountMatchFlag").cast("string").as("Verdict"),
       lit(reportDate).as("ReportDate")), "daily report: one row per feed")
-    meta.report.deleteWhere(col("ReportDate") === lit(reportDate))
-    meta.report.appendRows(rows.toSeq)
+    val day = meta.report.schema.fieldIndex("ReportDate")
+    meta.report.overwriteRows(meta.report.readRows().filterNot(r =>
+      !r.isNullAt(day) && r.getDate(day).toLocalDate == reportDate.toLocalDate) ++ rows)
   }
 }

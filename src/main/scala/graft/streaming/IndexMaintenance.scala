@@ -2,53 +2,15 @@ package graft.streaming
 
 import graft.catalog.ParquetTable
 
-/** Maintenance CADENCE for stored stream-served indexes — the
-  * machinery that keeps a long-running hybrid/BM25/components serve
-  * from degrading as per-batch appends fragment the stage table (every
-  * micro-batch lands one file set; footer/metadata reads grow with
-  * file count — the named residue in the r12 serve-exponent probes).
-  *
-  * [[maybeCompact]] fires [[graft.catalog.ParquetTable.compact]] every
-  * `every` committed batches from inside the caller's foreachBatch, so
-  * compaction is part of the PIPELINE, not an operator's cron job:
-  * the r12 entries documented "compact every N batches in production"
-  * as prose; this makes it code. Safety is already spec-pinned
-  * (StreamingSpec's byte-identity test: compaction changes no served
-  * pair) and the long-run StreamProbe row measures the effect (file
-  * count bounded, serve time flat across a 40-batch run).
-  *
-  * Crash-safety note: compaction is an atomic swap of an equivalent
-  * relation ([[graft.catalog.ParquetTable.overwrite]] stages then
-  * swaps), so a batch REPLAYED after a crash between append and
-  * compact re-appends its rows (the entries' pair recovery is
-  * replay-idempotent by construction) and simply compacts again — the
-  * trigger needs no bookkeeping beyond the batch id Spark already
-  * redelivers. */
+/** Cadence maintenance of stored stream-served indexes, run from
+  * inside the caller's foreachBatch so that maintenance is part of the
+  * PIPELINE, not an operator's cron job. The unbounded indexes (band
+  * buckets, seed postings, BM25 postings, labels, pair logs) fold
+  * through [[LeveledIndex]]'s size-tiered merge, whose cadence cost is
+  * O(rows since the last cadence); a bounded table (a control/status
+  * relation, a TTL'd window whose size saturates) compacts whole with
+  * [[graft.catalog.ParquetTable.compact]]. */
 object IndexMaintenance {
-
-  /** Compact `table` clustered by `zorderCols` when `batchId` closes a
-    * cadence window of `every` batches (ids `every-1`, `2*every-1`, …
-    * — so a 2-batch fixture under the default production cadence never
-    * pays a rewrite, while a long run compacts on schedule). Returns
-    * whether compaction ran. `every <= 0` disables the cadence.
-    * `remap` passes through to [[graft.catalog.ParquetTable.compact]]
-    * (the bookkeeping-partition fold hook).
-    *
-    * Scale note (r15): this is a FULL-TABLE rewrite per cadence —
-    * right for bounded tables (control/status relations, a TTL'd
-    * window whose size saturates), quadratic-over-a-run's-lifetime for
-    * an unbounded stream index. The unbounded indexes (band buckets,
-    * seed postings, BM25 postings, labels, pair logs) maintain
-    * through [[LeveledIndex]]'s size-tiered merge instead, whose
-    * cadence cost is O(rows since last cadence). */
-  def maybeCompact(table: ParquetTable, batchId: Long, every: Int,
-                   zorderCols: Seq[String],
-                   remap: Map[String, org.apache.spark.sql.Column] =
-                     Map.empty): Boolean = {
-    val fire = every > 0 && batchId % every == (every - 1).toLong
-    if (fire) table.compact(zorderCols, remap = remap)
-    fire
-  }
 
   /** Cadence maintenance for the INCREMENTAL-COMPONENTS pair, r15 form
     * — the r14 cadence (fold forwarding chains into the label table

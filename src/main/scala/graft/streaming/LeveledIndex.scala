@@ -1,17 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.catalog.ParquetTable
 import graft.plans.DriverFetch
 
 /** Size-tiered LEVELED maintenance for a stream-maintained secondary
   * index (band buckets, seed postings, BM25 postings, component
-  * labels, pair logs) — the r15 replacement for the cadence FULL-TABLE
-  * compaction ([[IndexMaintenance.maybeCompact]]), whose cost is
-  * O(current table) every cadence and therefore quadratic in the table
-  * over a run's lifetime (measured: maint_sec 3.0 → 6.9 s over 40
+  * labels, pair logs) — the r15 replacement for a cadence FULL-TABLE
+  * compaction ([[ParquetTable.compact]] every few batches), whose cost
+  * is O(current table) every cadence and therefore quadratic in the
+  * table over a run's lifetime (measured: maint_sec 3.0 → 6.9 s over 40
   * batches in the r14 composed-pipeline long-run probe).
   *
   * The structure is the classic size-tiered LSM / Lucene-segment-merge
@@ -40,12 +39,12 @@ import graft.plans.DriverFetch
   * them. Byte-identity of served answers across maintenance is pinned
   * in StreamingSpec alongside the old full-compaction test.
   *
-  * The per-batch landings and the folds whose output fits one file are
-  * written from the driver when their rows are batch-sized
-  * ([[graft.plans.DriverFetch]]): one sorted file through
+  * A per-batch landing of batch-sized rows ([[graft.plans.DriverFetch]])
+  * is written from the driver: one sorted file through
   * [[ParquetTable.overwritePartitionRows]], the same partition swap and
-  * markers as the Spark write they replace, and no write job. Larger
-  * runs keep the Spark write.
+  * markers as the Spark write it replaces, and no write job. A fold is
+  * the table's one sized rewrite ([[ParquetTable.rewrite]]), which
+  * decides how many files it writes and whether the driver writes them.
   *
   * ==Exactly-once merges==
   * A merge is two mutations (write the destination run, delete the
@@ -74,8 +73,7 @@ import graft.plans.DriverFetch
   * makes the LONG-RUN maintenance cost flat-per-cadence in the probe
   * where the full-table rewrite grew linearly. */
 final class LeveledIndex(val table: ParquetTable, sortKey: String,
-                         val every: Int = 8, val fanout: Int = 4,
-                         targetFileBytes: Long = 128L * 1024 * 1024) {
+                         val every: Int = 8, val fanout: Int = 4) {
 
   /** Land batch `bid`'s rows as the level-0 run `mig=bid` — key-sorted
     * (tight footer stats for the next batch's pushed IN filter) and
@@ -112,28 +110,14 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
   def writeBatch(bid: Long, df: DataFrame): Unit = {
     val folded = table.listPartitions().exists { s =>
       val mig = s.head._2.toLong
-      mig < 0 && mig != TieredIndex.Folded && s != LeveledIndex.BaseRun &&
-        -mig % LeveledIndex.LevelBase == bid
+      mig < 0 && s != LeveledIndex.BaseRun && -mig % LeveledIndex.LevelBase == bid
     }
-    if (!folded && !builtThrough.exists(bid <= _))
-      land(Seq("mig" -> bid.toString), df, None, driver = true)(
-        _.sortWithinPartitions(sortKey))
-  }
-
-  /** Write `df` as the run `spec`, key-sorted: from the driver
-    * ([[ParquetTable.overwritePartitionRows]]) when `driver` is allowed
-    * and `df` is batch-sized ([[DriverFetch]]'s caps), else as the
-    * Spark write `distributed(df)`. Both go through the same partition
-    * swap and publish the same markers. */
-  private def land(spec: Seq[(String, String)], df: DataFrame,
-                   txn: Option[(String, Long)], driver: Boolean)
-                  (distributed: DataFrame => DataFrame): Unit = {
-    val held =
-      if (driver) DriverFetch(s"${table.name} run ${spec.head._2}", Seq(table.dataAligned(df)))
-      else None
-    held match {
-      case Some(Seq(rows)) => table.overwritePartitionRows(spec, rows, Seq(sortKey), txn)
-      case _ => table.overwritePartition(spec, distributed(df), txn)
+    if (!folded && !builtThrough.exists(bid <= _)) {
+      val spec = Seq("mig" -> bid.toString)
+      DriverFetch(s"${table.name} run $bid", Seq(table.dataAligned(df))) match {
+        case Some(Seq(rows)) => table.overwritePartitionRows(spec, rows, Seq(sortKey))
+        case _ => table.overwritePartition(spec, df.sortWithinPartitions(sortKey))
+      }
     }
   }
 
@@ -188,9 +172,8 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
 
   /** Cadence maintenance: fold the level-0 runs into one level-1 run,
     * then cascade any level holding ≥ [[fanout]] runs into the next.
-    * Fires on batch ids `every-1, 2·every-1, …` (the
-    * [[IndexMaintenance.maybeCompact]] cadence contract; `every <= 0`
-    * disables). Returns whether the cadence fired. Every level present
+    * Fires on batch ids `every-1, 2·every-1, …` (so a 2-batch fixture
+    * under the default cadence never folds; `every <= 0` disables). Returns whether the cadence fired. Every level present
     * is visited: a replay of a crashed cascade finds its lower levels
     * merged and must still finish the upper one's deletes. */
   def maintain(bid: Long): Boolean = {
@@ -223,11 +206,8 @@ final class LeveledIndex(val table: ParquetTable, sortKey: String,
       // no new run can appear at this level until a later cadence)
       runs.foreach(table.deletePartitions)
     } else if (runs.nonEmpty && (l == 0 || runs.size >= fanout)) {
-      val bytes = runs.map(table.partitionBytes).sum
-      val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      land(destSpec, table.readPartitionsData(runs), Some((LeveledIndex.FoldApp, bid)),
-          driver = parts == 1)(
-        _.repartitionByRange(parts, col(sortKey)).sortWithinPartitions(sortKey))
+      table.rewrite(table.readPartitionsData(runs), runs.map(table.partitionBytes).sum,
+        Seq(sortKey), Some(destSpec), Some((LeveledIndex.FoldApp, bid)))
       runs.foreach(table.deletePartitions)
     }
   }
@@ -250,13 +230,8 @@ object LeveledIndex {
   /** The base run's partition: level 1, seq 0. */
   private val BaseRun = Seq("mig" -> migFor(1, 0L).toString)
 
-  /** Level of a `mig` value: non-negative = level-0 batch run;
-    * [[TieredIndex.Folded]] (the pre-r15 single folded partition) reads
-    * as a level-1 run so legacy tables merge forward seamlessly. */
-  def levelOf(mig: Long): Int =
-    if (mig >= 0) 0
-    else if (mig == TieredIndex.Folded) 1
-    else ((-mig) / LevelBase).toInt
+  /** Level of a `mig` value: non-negative = level-0 batch run. */
+  def levelOf(mig: Long): Int = if (mig >= 0) 0 else ((-mig) / LevelBase).toInt
 
   /** Create the backing mig-partitioned table under `path`: `rowSchema`
     * plus the `mig` run column, small-row-group index write options. */

@@ -41,9 +41,8 @@ import graft.catalog.ParquetTable
   *  - [[maintain]] folds the accumulated per-batch `mig` partitions
   *    through the size-tiered [[LeveledIndex]] merge on the cadence
   *    (without a fold, the file count would grow with batch count
-  *    instead of staying bounded; with the pre-r15 FULL fold into one
-  *    [[TieredIndex.Folded]] partition, every cadence rewrote the
-  *    whole index). The leveled merges carry their own exactly-once
+  *    instead of staying bounded; a FULL fold of the whole index would
+  *    rewrite it every cadence). The leveled merges carry their own exactly-once
   *    protocol (destination-run txn markers — see [[LeveledIndex]]),
   *    and folding stays replay-safe against [[age]] because it runs
   *    strictly AFTER the batch's pending delete committed: a replay
@@ -112,23 +111,14 @@ final class TieredIndex(val pendT: ParquetTable, val idxT: ParquetTable,
 
   private val leveled = new LeveledIndex(idxT, sortKey, compactEvery)
 
-  /** Cadence maintenance of the bulk index. Until r15 this was a
-    * FULL-TABLE compaction folding every historical `mig` partition
-    * into [[TieredIndex.Folded]] — O(current index) every cadence, so
-    * cumulative maintenance cost was quadratic in the index over a
-    * run's lifetime. It now delegates to the size-tiered
-    * [[LeveledIndex]] fold: the cadence pays O(rows aged since the
-    * last cadence), large merges fire geometrically less often, and
-    * run/file counts stay bounded (≤ fanout · levels). A legacy
-    * `Folded` partition reads as a level-1 run and merges forward. */
+  /** Cadence maintenance of the bulk index: the size-tiered
+    * [[LeveledIndex]] fold. The cadence pays O(rows aged since the last
+    * cadence), large merges fire geometrically less often, and run/file
+    * counts stay bounded (≤ fanout · levels). */
   def maintain(bid: Long): Boolean = leveled.maintain(bid)
 }
 
 object TieredIndex {
-  /** The `mig` value compaction folds historical partitions into —
-    * distinct from every real batch id. */
-  val Folded: Long = -1L
-
   /** Create the pending + bulk tables under `root`. `rowSchema` is the
     * band/seed relation schema INCLUDING the event-time column `ts`;
     * the bulk tier stores the same rows minus `ts` unless `bulkSchema`

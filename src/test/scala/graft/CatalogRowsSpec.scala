@@ -215,6 +215,62 @@ class CatalogRowsSpec extends AnyFunSuite {
     assert(commits.isEmpty && log.dataFileCount === 0)
   }
 
+  test("one sized rewrite: a compaction or one-file fold from the driver equals the " +
+       "distributed one — rows per partition, markers, one key-sorted file") {
+    import graft.streaming.LeveledIndex
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = Files.createTempDirectory("rows-rewrite")
+    val kv = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
+    val rows = (0L until 60L).map(i => ((i * 37) % 60, s"v$i", if (i % 3 == 0) "a" else "b"))
+      .toDF("k", "v", "d")
+    /** Each data directory under `root` → its rows (a multiset) and
+      * whether its one file is sorted on `k`. */
+    def layout(root: Path): Map[String, (Map[Seq[Any], Int], Boolean)] =
+      Files.walk(root).iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .toSeq.groupBy(f => root.relativize(f.getParent).toString).map { case (d, fs) =>
+          assert(fs.size === 1, s"$root/$d holds ${fs.size} files")
+          val got = spark.read.parquet(fs.head.toString).collect().toSeq
+          val ks = got.map(_.getLong(0))
+          d -> (got.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size },
+            ks == ks.sorted)
+        }
+    val cases = Seq[(String, Path => Unit)](
+      "unpartitioned compact" -> { root =>
+        val t = ParquetTable(spark, "cu", root.resolve("t").toString, kv)
+        distributed(t.overwrite(rows.drop("d").repartition(4), Some(("app", 1L))))
+        t.compact(Seq("k"))
+      },
+      "partitioned compact" -> { root =>
+        val t = ParquetTable(spark, "cp", root.resolve("t").toString,
+          kv.add(StructField("d", StringType)), Seq("d"))
+        distributed {
+          t.overwrite(rows.repartition(4), Some(("app", 1L)))
+          t.overwritePartition(Seq("d" -> "a"),
+            rows.filter(col("d") === "a").drop("d").repartition(3), Some(("app", 2L)))
+        }
+        t.compact(Seq("k"))
+      },
+      "one-file fold" -> { root =>
+        val idx = LeveledIndex.create(spark, "cf", root.resolve("t").toString, kv, "k",
+          every = 2)
+        distributed {
+          idx.writeBatch(0L, rows.filter(col("d") === "a").drop("d"))
+          idx.writeBatch(1L, rows.filter(col("d") === "b").drop("d"))
+        }
+        assert(idx.maintain(1L))
+      })
+    cases.foreach { case (what, body) =>
+      val (driver, spark1) = (dir.resolve(s"$what-driver"), dir.resolve(s"$what-spark"))
+      body(driver)
+      distributed(body(spark1))
+      val got = layout(driver)
+      assert(got.nonEmpty && got === layout(spark1), what)
+      assert(got.values.forall(_._2), s"$what: a file is not sorted on k")
+      assert(got.values.map(_._1.values.sum).sum === 60, what)
+      assert(markers(driver) === markers(spark1), what)
+    }
+  }
+
   private def partitioned(dir: Path, n: String) = {
     import org.apache.spark.sql.types._
     ParquetTable(spark, n, dir.resolve(n).toString, StructType(Seq(

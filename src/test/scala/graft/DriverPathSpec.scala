@@ -176,6 +176,28 @@ class DriverPathSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  test("source guard: one way per storage operation — no partition-scoped DML " +
+       "twin, cadence compaction, temp-name staging, file-count knob or " +
+       "folded-layout hook in src/main") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no sources under ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles.toSeq.flatMap(f =>
+      if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val banned = Seq("updateInPartition", "deleteWhereInPartition", "maybeCompact",
+      "TmpPrefix", "targetPartitions", "remap =", "TieredIndex.Folded",
+      "repartitionByRange(1")
+    val found = for {
+      f <- files(root)
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      // other writers name their pointer files `.tmp-` on purpose; the
+      // table stages under `_pstage` only
+      word <- banned ++ (if (f.getName == "ParquetTable.scala") Seq(".tmp-") else Nil)
+      i <- Iterator.iterate(text.indexOf(word))(j => text.indexOf(word, j + 1))
+        .takeWhile(_ >= 0)
+    } yield s"${f.getPath}:${text.take(i).count(_ == '\n') + 1}: $word"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("a rejected fetch stops its job: a many-partition input over the byte " +
        "cap ships far fewer task results than it has partitions") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}

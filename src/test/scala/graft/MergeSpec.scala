@@ -175,23 +175,29 @@ class MergeSpec extends AnyFunSuite {
     }
   }
 
-  test("appendRows: an orphaned .tmp- file is invisible to read() and recover() sweeps it") {
+  test("appendRows: an orphaned _pstage file stays invisible to reads and is swept") {
     val dir = Files.createTempDirectory("pt-tmp")
     val pt = ParquetTable(spark, "tm", s"$dir/tm", target.schema)
     pt.overwrite(target)
     pt.appendRows(Seq(Row(4, "d", 40.0, 1)))
     // an append interrupted before its rename: a complete file still
-    // under its temp name (a copy of a real data file, so a reader that
-    // listed it would count its rows)
+    // staged (a copy of a real data file, so a reader that listed it
+    // would count its rows)
     import scala.jdk.CollectionConverters._
     val data = Files.list(dir.resolve("tm")).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
-    val orphan = dir.resolve("tm/.tmp-" + data.getFileName)
-    Files.copy(data, orphan)
+    val orphan = dir.resolve("tm/_pstage/" + data.getFileName)
+    def orphaned(): Unit = {
+      Files.createDirectories(orphan.getParent)
+      Files.copy(data, orphan)
+    }
+    orphaned()
     assert(spark.read.schema(target.schema).parquet(s"$dir/tm").count() === 4)
     assert(pt.read().count() === 4)
-    assert(!Files.exists(orphan), "recover() left the orphaned temp file")
+    assert(!Files.exists(orphan.getParent), "read() left the orphaned staged file")
+    orphaned()
     assert(pt.readRows().size === 4)
+    assert(!Files.exists(orphan.getParent), "readRows() left the orphaned staged file")
   }
 
   test("partitioned ParquetTable: interrupted partition swap recovers") {
@@ -231,8 +237,7 @@ class MergeSpec extends AnyFunSuite {
       .filter(Files.isRegularFile(_))
       .map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
     val before = bFiles()
-    pt.updateInPartition(Seq("d" -> "a"), col("k") === 2L,
-      Map("v" -> lit(99.0)))
+    pt.update(col("d") === "a" && col("k") === 2L, Map("v" -> lit(99.0)))
     assert(bFiles() === before) // d=b files untouched
     val got = pt.read().orderBy("k").collect().map(r => r.getLong(0) -> r.getDouble(1))
     assert(got.toSeq === Seq(1L -> 1.0, 2L -> 99.0, 3L -> 3.0))
@@ -584,7 +589,7 @@ class MergeSpec extends AnyFunSuite {
     assert(state() === Map(1L -> 111.0, 2L -> 112.0))
     // markers survive a markerless partition rewrite between batches
     // (compaction/update must not reset the stream's dedup state)
-    pt.updateInPartition(Seq("d" -> "a"), col("k") === 1L, Map("v" -> lit(111.0)))
+    pt.update(col("d") === "a" && col("k") === 1L, Map("v" -> lit(111.0)))
     assert(pt.lastTxnInPartition(Seq("d" -> "a"), "app") === Some(1L))
   }
 }

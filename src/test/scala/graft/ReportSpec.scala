@@ -84,10 +84,27 @@ class ReportSpec extends AnyFunSuite {
       assert(built.collect().length === 4)
       DailyLogReport.persist(meta, built, day)
     }
-    // the persist's select and delete; 13 when each reader ran the
-    // report plan again
-    assert(jobs.size <= 3, jobs)
+    // the collect and the persist's select; 13 when each reader ran the
+    // report plan again, and 3 while the day's delete rewrote the table
+    // in a job
+    assert(jobs.size <= 2, jobs)
     assert(meta.report.read().count() === 4)
+  }
+
+  test("persist replaces its own day's rows and keeps every other day's") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("rep-days").toString
+    val meta = new graft.catalog.MetaStore(spark, root).bootstrap()
+    val rpt = DailyLogReport.build(logs, src, now, day)
+    val day2 = Date.valueOf("2024-03-02")
+    DailyLogReport.persist(meta, rpt, day)
+    DailyLogReport.persist(meta, rpt, day2)
+    // the day-1 re-run reports two feeds: its four old rows must go
+    DailyLogReport.persist(meta, rpt.filter(col("HeaderID") <= 2L), day)
+    val stored = meta.report.read().select("ReportDate", "HeaderID").collect()
+      .map(r => r.getDate(0).toString -> r.getLong(1)).toSeq.sorted
+    assert(stored === Seq(1L, 2L).map("2024-03-01" -> _) ++
+      Seq(1L, 2L, 3L, 4L).map("2024-03-02" -> _))
   }
 
   test("open window is closed by the injected clock") {

@@ -1073,13 +1073,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("cadence compaction bounds index file count without changing content") {
-    // IndexMaintenance.maybeCompact is the machinery form of the r12
-    // prose "compact every N batches in production": drive 16 append
-    // batches through the cadence (every = 4) and assert it fires on
-    // exactly the window-closing ids, the data-file count stays
-    // BOUNDED (sawtooth, not monotone growth), and the table content
-    // is untouched — compaction is a layout rewrite, never a data op.
-    import graft.streaming.IndexMaintenance
+    // "compact every N batches in production": drive 16 append
+    // batches, compact on the window-closing ids (every = 4), and
+    // assert the data-file count stays BOUNDED (sawtooth, not monotone
+    // growth) and the table content is untouched — compaction is a
+    // layout rewrite, never a data op.
     val tmp = java.nio.file.Files.createTempDirectory("graft-cadence")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("bh",
@@ -1091,16 +1089,13 @@ class StreamingSpec extends AnyFunSuite {
       writeOptions = graft.catalog.ParquetTable.IndexWriteOptions)
       .createIfNotExists()
     def dataFiles(): Int = t.dataFileCount
-    val fired = scala.collection.mutable.ArrayBuffer[Long]()
     val filesSeen = scala.collection.mutable.ArrayBuffer[Int]()
     (0L until 16L).foreach { bid =>
       t.append(Seq((bid, bid * 10), (bid, bid * 10 + 1))
         .toDF("bh", "v").repartition(2))
-      if (IndexMaintenance.maybeCompact(t, bid, every = 4, Seq("bh")))
-        fired += bid
+      if (bid % 4 == 3) t.compact(Seq("bh"))
       filesSeen += dataFiles()
     }
-    assert(fired.toSeq == Seq(3L, 7L, 11L, 15L))
     // bounded: between compactions at most `every` appends × 2 files
     // accumulate on top of the compacted baseline (1 file at this size)
     assert(filesSeen.max <= 1 + 4 * 2, s"file counts: $filesSeen")
@@ -1109,8 +1104,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(t.read().count() == 32)
     assert(t.read().agg(org.apache.spark.sql.functions.sum(col("v")))
       .head().getLong(0) == (0L until 16L).map(b => b * 20 + 1).sum)
-    // disabled cadence never fires
-    assert(!IndexMaintenance.maybeCompact(t, 3L, every = 0, Seq("bh")))
     graft.ingest.FileOps.deleteRecursively(tmp)
   }
 
@@ -1624,19 +1617,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(tier.idxT.read().drop("mig", "sig").distinct().count()
       == pend0 + lateRows)
     assert(tier.pendT.read().count() == pend1 - lateRows)
-    // fold-compaction collapses the historical mig partitions into one
-    // without changing the bulk tier's content
-    val before = tier.bulk().drop("sig").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    tier.idxT.compact(Seq("bh"),
-      remap = Map("mig" -> lit(TieredIndex.Folded)))
-    val after = tier.bulk().drop("sig").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(after == before, "fold-compaction changed the bulk tier")
-    val migs = tier.idxT.read().select("mig").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    assert(migs == Seq(TieredIndex.Folded),
-      s"fold left historical mig partitions behind: $migs")
     graft.ingest.FileOps.deleteRecursively(tmp)
   }
 }
